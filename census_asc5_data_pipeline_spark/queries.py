@@ -11100,10 +11100,10 @@ def q_iceberg_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg merge-on-read MERGE through the registry gate (round-11
     verdict #3 — the Delta ``merge_upsert`` twin, so the write side of
     BOTH formats faces the driver's oracle): materializes a
-    ``bucket(8, okey)``-PARTITIONED Iceberg table from the 1994 orders
+    ``bucket(8, okey)``-PARTITIONED Iceberg table from the 1995 orders
     (the round-11 transform-DML staging path, spec murmur3 buckets),
-    MERGEs a deterministic source — 1994 keys ≡0 (mod 3) update their
-    cents (+100), keys ≡1 delete, and 1995 keys ≡0 (mod 5) insert — as
+    MERGEs a deterministic source — 1995 keys ≡0 (mod 3) update their
+    cents (+100), keys ≡1 delete, and 1996 keys ≡0 (mod 5) insert — as
     ONE merge-on-read snapshot (position-delete manifest + data
     manifest sharing the sequence number), then reads BOTH states back
     (snapshot 1 AS OF; the head through the position deletes) and
@@ -11123,13 +11123,13 @@ def q_iceberg_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
         "bigint"
     )
-    y94 = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1994-01-01"))
-        & (F.col("o_orderdate") < F.lit("1995-01-01"))
-    )
     y95 = orders.filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-01-01"))
+    )
+    y96 = orders.filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01"))
     )
     base = os.path.join(
         tempfile.gettempdir(),
@@ -11138,7 +11138,7 @@ def q_iceberg_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _sh.rmtree(base, ignore_errors=True)
     s1 = iceberg_io.write_iceberg(
-        y94.select(
+        y95.select(
             F.col("o_orderkey").alias("okey"),
             F.col("o_orderpriority").alias("priority"),
             cents.alias("total_cents"),
@@ -11147,7 +11147,7 @@ def q_iceberg_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by=["bucket(8,okey)"],
     )
     source = (
-        y94.filter(F.col("o_orderkey") % 3 < 2)
+        y95.filter(F.col("o_orderkey") % 3 < 2)
         .select(
             F.col("o_orderkey").alias("okey"),
             F.col("o_orderpriority").alias("priority"),
@@ -11157,7 +11157,7 @@ def q_iceberg_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("op"),
         )
         .unionByName(
-            y95.filter(F.col("o_orderkey") % 5 == 0).select(
+            y96.filter(F.col("o_orderkey") % 5 == 0).select(
                 F.col("o_orderkey").alias("okey"),
                 F.col("o_orderpriority").alias("priority"),
                 cents.alias("new_cents"),
@@ -11203,27 +11203,27 @@ WITH c AS (
          CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
   FROM orders
 ),
-y94 AS (
+y95 AS (
   SELECT okey, priority, cents FROM c
-  WHERE o_orderdate >= DATE '1994-01-01'
-    AND o_orderdate < DATE '1995-01-01'
+  WHERE o_orderdate >= DATE '1995-01-01'
+    AND o_orderdate < DATE '1996-01-01'
 ),
 final AS (
   SELECT okey, priority,
          CASE WHEN okey % 3 = 0 THEN cents + 100 ELSE cents END AS cents
-  FROM y94
+  FROM y95
   WHERE okey % 3 <> 1
   UNION ALL
   SELECT okey, priority, cents
   FROM c
-  WHERE o_orderdate >= DATE '1995-01-01'
-    AND o_orderdate < DATE '1996-01-01'
+  WHERE o_orderdate >= DATE '1996-01-01'
+    AND o_orderdate < DATE '1997-01-01'
     AND okey % 5 = 0
 )
 SELECT 'pre_merge' AS version_tag, priority,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
        CAST(SUM(cents) AS BIGINT) AS total_cents_sum
-FROM y94 GROUP BY priority
+FROM y95 GROUP BY priority
 UNION ALL
 SELECT 'post_merge' AS version_tag, priority,
        CAST(COUNT(*) AS BIGINT) AS n_orders,

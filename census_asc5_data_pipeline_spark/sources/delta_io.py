@@ -134,6 +134,16 @@ def _read_last_checkpoint(path: str) -> int | None:
         return None  # corrupt pointer: fall back to full JSON replay
 
 
+def _next_version(path: str) -> int:
+    """The version the next commit claims: one past the newest commit
+    JSON or checkpoint on disk, 0 for a table with neither."""
+    versions = delta_versions(path) if os.path.isdir(_log_dir(path)) else []
+    ckpt = _read_last_checkpoint(path)
+    return 1 + max(
+        versions + ([ckpt] if ckpt is not None else []), default=-1
+    )
+
+
 def _resolve_checkpoint(
     path: str, version: int
 ) -> tuple[str, list[str]] | None:
@@ -660,9 +670,7 @@ def set_domain_metadata(
                 }
             },
         ]
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         try:
             _put_if_absent_commit(path, next_v, lines)
             return next_v
@@ -801,9 +809,7 @@ def set_clustering_columns(
             *([proto_line] if proto_line else []),
             _clustering_domain_action(cols_p),
         ]
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         try:
             _put_if_absent_commit(path, next_v, lines)
             return next_v
@@ -828,9 +834,7 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
     while True:
         protocol, meta, adds, _tx = _replay(spark, path, None)
         _writer_gate(protocol, meta, "ENABLE ROW TRACKING")
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        cur_v = max(versions + ([ckpt] if ckpt is not None else []))
+        cur_v = _next_version(path) - 1
         if _rt_supported(protocol) and _rt_enabled(meta):
             return cur_v
         conf2, _id_col, _cv_col = _rt_mint_conf(
@@ -3417,9 +3421,7 @@ def alter_delta_column_type(
             schemaString=json.dumps(sj),
             configuration=conf,
         )
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         lines = [
             {
                 "commitInfo": {
@@ -3487,9 +3489,7 @@ def set_delta_properties(
                 "schemaString": '{"type":"struct","fields":[]}',
             }
             _check_constraints(cur, fake_meta, "ADD CONSTRAINT")
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         now_ms = int(time.time() * 1000)
         new_meta = dict(meta)
         merged = dict(meta.get("configuration") or {})
@@ -3619,8 +3619,8 @@ def add_delta_columns(
     new = T.StructType.fromDDL(cols) if isinstance(cols, str) else cols
     if not new.fields:
         raise ValueError("ADD COLUMNS needs at least one column")
-    while True:
-        protocol, meta, _adds, _tx = _replay(spark, path, None)
+
+    def build(protocol: dict, meta: dict) -> dict:
         _writer_gate(protocol, meta, "ADD COLUMNS")
         sj = json.loads(meta["schemaString"])
         existing = {f["name"] for f in sj["fields"]}
@@ -3654,32 +3654,16 @@ def add_delta_columns(
             fields.append(fd)
         if mapped:
             conf["delta.columnMapping.maxColumnId"] = str(next_id)
-        new_meta = dict(
+        return dict(
             meta,
             schemaString=json.dumps({"type": "struct", "fields": fields}),
             configuration=conf,
         )
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "ADD COLUMNS",
-                    "operationParameters": {
-                        "columns": [f.name for f in new.fields]
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            {"metaData": new_meta},
-        ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _meta_only_commit(
+        spark, path, build, "ADD COLUMNS",
+        {"columns": [f.name for f in new.fields]},
+    )
 
 
 def _meta_only_commit(
@@ -3694,9 +3678,7 @@ def _meta_only_commit(
     while True:
         protocol, meta, _adds, _tx = _replay(spark, path, None)
         new_meta = build(protocol, meta)
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         lines = [
             {
                 "commitInfo": {
@@ -3938,17 +3920,34 @@ def _put_if_absent_commit(path: str, version: int, lines: list[dict]) -> None:
     EEXIST if another writer won the race — callers retry at N+1."""
     _stamp_ict(path, version, lines)
     os.makedirs(_log_dir(path), exist_ok=True)
-    tmp = os.path.join(_log_dir(path), f".tmp-{uuid.uuid4().hex}.json")
+    _put_if_absent(
+        _commit_file(path, version),
+        "".join(
+            json.dumps(obj, separators=(",", ":")) + "\n" for obj in lines
+        ),
+    )
+    _write_crc(path, version, lines)
+
+
+def _put_if_absent(dest: str, text: str) -> None:
+    """Create ``dest`` holding ``text`` exactly once — the
+    put-if-absent primitive both table formats commit through (Delta
+    log entries here, Iceberg ``v<N>.metadata.json`` in
+    ``iceberg_io._commit_metadata``). The text is written and fsynced
+    to a temp file beside ``dest``, then hard-linked into place:
+    ``os.link`` raises FileExistsError when another writer created
+    ``dest`` first, and a reader never sees a partial file."""
+    tmp = os.path.join(
+        os.path.dirname(dest), f".tmp-{uuid.uuid4().hex}.json"
+    )
     with open(tmp, "w") as fh:
-        for obj in lines:
-            fh.write(json.dumps(obj, separators=(",", ":")) + "\n")
+        fh.write(text)
         fh.flush()
         os.fsync(fh.fileno())
     try:
-        os.link(tmp, _commit_file(path, version))
+        os.link(tmp, dest)
     finally:
         os.remove(tmp)
-    _write_crc(path, version, lines)
 
 
 def _crc_file(path: str, version: int) -> str:
@@ -4694,15 +4693,10 @@ def write_delta(
     now_ms = int(time.time() * 1000)
 
     while True:
-        versions = delta_versions(path) if os.path.isdir(
-            _log_dir(path)
-        ) else []
-        ckpt = _read_last_checkpoint(path)
-        if versions or ckpt is not None:
-            next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
+        if next_v:
             _p, meta, adds, _txs = _replay(spark, path, None)
         else:
-            next_v = 0
             _p, meta, adds = None, {}, {}
         schema_changed = False
         if meta and (_column_mapping(meta) or None) != (
@@ -4891,7 +4885,7 @@ def write_delta(
         _stamp_row_tracking(
             spark,
             path,
-            (_p if (versions or ckpt is not None) else create_protocol)
+            (_p if next_v else create_protocol)
             or {},
             lines,
             add_actions,
@@ -5227,9 +5221,7 @@ def delete_delta_where(
         numAddedChangeFiles=c["cdc"],
     )
     while True:
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         live_now = _live_subset(spark, path, frozenset(planned))
         for p_, dv in planned.items():
             cur = live_now.get(p_)
@@ -6467,9 +6459,7 @@ def optimize_delta(
         )
 
     while True:
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         live_now = _live_subset(spark, path, frozenset(removed_paths))
         gone = [
             p_
@@ -6821,9 +6811,7 @@ def restore_delta(
     while True:
         _p2, meta, cur_adds, _tx2 = _replay(spark, path, None)
         _writer_gate(_p2, meta, "RESTORE")
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+        next_v = _next_version(path)
         lines: list[dict] = [
             {
                 "commitInfo": {

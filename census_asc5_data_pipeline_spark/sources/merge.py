@@ -95,6 +95,21 @@ def _chain(clauses: list[tuple[str, object, dict | None]]):
     return chain
 
 
+def _obs_n(obs) -> int | None:
+    """The ``n`` count an ``Observation`` collected, or None when the
+    metrics are unavailable. AQE's runtime empty-relation propagation
+    can REPLACE the subtree holding a CollectMetrics node when a
+    downstream stage materializes empty (the row-level no-op merge);
+    the query then completes with an EMPTY metrics row. Detect that
+    (schema-less zero-length row, read through the private
+    ``Observation._jo`` handle — pinned by tests/test_merge.py) and
+    report "unavailable" instead of tripping toPyRow's assertion."""
+    jrow = obs._jo.getRow()
+    if jrow.length() == 0:
+        return None
+    return int(obs.get["n"])
+
+
 def _plan_merge(
     scan: DataFrame,
     source: DataFrame,
@@ -168,18 +183,6 @@ def _plan_merge(
         j = scan.alias("t").join(src, F.expr(on), "left").observe(
             obs_tag, F.count(F.lit(1)).alias("n")
         )
-
-        def _obs_n(obs):
-            # AQE's runtime empty-relation propagation can REPLACE the
-            # subtree holding a CollectMetrics node when a downstream
-            # stage materializes empty (the row-level no-op merge);
-            # the query then completes with an EMPTY metrics row.
-            # Detect that (schema-less zero-length row) and report
-            # "unavailable" instead of tripping toPyRow's assertion.
-            jrow = obs._jo.getRow()
-            if jrow.length() == 0:
-                return None
-            return int(obs.get["n"])
 
         def card_check(_s=obs_scan, _t=obs_tag):
             nt, ns = _obs_n(_t), _obs_n(_s)
@@ -794,9 +797,7 @@ def _merge_delta(
             numTargetChangeFilesAdded=c["cdc"],
         )
         while True:
-            versions = d.delta_versions(path)
-            ckpt = d._read_last_checkpoint(path)
-            next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+            next_v = d._next_version(path)
             if identity_updates:
                 # the hwm comparison needs the CURRENT metaData — full
                 # replay here; the non-identity path fetches only the
@@ -908,9 +909,6 @@ def _merge_iceberg(
     evolve_schema=False, branch=None,
 ) -> int | None:
     from census_asc5_data_pipeline_spark.sources import iceberg_io as ice
-    from census_asc5_data_pipeline_spark.sources.avro_io import (
-        write_container_generic,
-    )
 
     cur_v, meta = ice._current_metadata(path)
     # v3 MERGE is lineage-preserving since r16: updated rows carry
@@ -926,7 +924,7 @@ def _merge_iceberg(
         # post-images carry the default, never a wrong NULL
         defaults_ok=True,
     )
-    branch_head = _branch_head(meta, branch)
+    branch_head = ice._branch_head(meta, branch)
     schema, fields = ice._schema_of(meta)
     defaulted = (
         [f for f in fields if f.get("initial-default") is not None]
@@ -1125,27 +1123,6 @@ def _merge_iceberg_commit(
     )
 
 
-def _branch_head(meta: dict, branch: str | None) -> int | None:
-    """Resolve a branch ref to its head snapshot id for DML scans
-    (None = main/current). Validation mirrors
-    :func:`_commit_iceberg_mor`'s, but the scan needs the head BEFORE
-    planning."""
-    if branch is None:
-        return None
-    bref = (meta.get("refs") or {}).get(branch)
-    if bref is None:
-        raise ValueError(
-            f"unknown branch {branch!r} — create_branch first "
-            f"(refs: {sorted(meta.get('refs') or {})})"
-        )
-    if bref.get("type") != "branch":
-        raise ValueError(
-            f"ref {branch!r} is a {bref.get('type')!r}, not a branch "
-            "— only branches accept writes"
-        )
-    return int(bref["snapshot-id"])
-
-
 def _commit_iceberg_mor(
     spark, path, cur_v, meta, pos_df, new_rows, pcols=None,
     evolved_fields=None, branch=None, existing_deletes=None,
@@ -1163,32 +1140,15 @@ def _commit_iceberg_mor(
     snapshot-log) does not move. Returns the snapshot id, or None
     when there is nothing to commit."""
     from census_asc5_data_pipeline_spark.sources import iceberg_io as ice
-    from census_asc5_data_pipeline_spark.sources.avro_io import (
-        write_container_generic,
-    )
 
     import pyarrow.parquet as pq
 
     pcols = pcols or []
-    branch_base: int | None = None
-    if branch is not None:
-        if evolved_fields is not None:
-            raise NotImplementedError(
-                "schema evolution on a BRANCH write is out of scope — "
-                "current-schema-id is table-global"
-            )
-        bref = (meta.get("refs") or {}).get(branch)
-        if bref is None:
-            raise ValueError(
-                f"unknown branch {branch!r} — create_branch first "
-                f"(refs: {sorted(meta.get('refs') or {})})"
-            )
-        if bref.get("type") != "branch":
-            raise ValueError(
-                f"ref {branch!r} is a {bref.get('type')!r}, not a "
-                "branch — only branches accept writes"
-            )
-        branch_base = int(bref["snapshot-id"])
+    if branch is not None and evolved_fields is not None:
+        raise NotImplementedError(
+            "schema evolution on a BRANCH write is out of scope — "
+            "current-schema-id is table-global"
+        )
     fv = int(meta.get("format-version", 2))
     delete_files: list[dict] = []
     dv_entry_schema: dict | None = None
@@ -1341,15 +1301,6 @@ def _commit_iceberg_mor(
         shutil.rmtree(staging, ignore_errors=True)
     if not delete_files and not added_files:
         return None
-    if ice._current_metadata(path)[0] != cur_v:
-        raise ValueError(
-            "concurrent commit landed during MERGE planning — aborting "
-            "without committing"
-        )
-    now_ms = int(time.time() * 1000)
-    new_v = cur_v + 1
-    snap_id = new_v
-    seq = int(meta.get("last-sequence-number", cur_v)) + 1
     specs = meta.get("partition-specs") or (
         [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
     )
@@ -1370,105 +1321,14 @@ def _commit_iceberg_mor(
             }
             new_specs = specs + [unpart]
         delete_spec_id = unpart["spec-id"]
-    lineage_first: int | None = None
-    lineage_next: int | None = None
-    if fv >= 3 and added_files:
-        # fresh first_row_id blocks above next-row-id (spec: assigned
-        # to every added data file; rows with a materialized _row_id
-        # — the updated images — simply never consult theirs)
-        lineage_first = int(meta.get("next-row-id", 0) or 0)
-        lineage_next = lineage_first
-        for dd in added_files:
-            dd["first_row_id"] = lineage_next
-            lineage_next += int(dd["record_count"])
-    data_entry_schema = ice._entry_schema_for(
-        [(pf["name"], pf["result_type"]) for pf in pcols]
-    )
-    if fv >= 3:
-        data_entry_schema["fields"][2]["type"]["fields"].append(
-            {"name": "first_row_id", "type": ["null", "long"],
-             "default": None}
-        )
-    schemas_by_content = {
-        0: data_entry_schema,
+    entry_schemas = {
+        0: ice._entry_schema_for(
+            [(pf["name"], pf["result_type"]) for pf in pcols],
+            row_lineage=fv >= 3,
+        ),
         1: dv_entry_schema or ice._entry_schema_for([]),
     }
-    spec_by_content = {0: default_spec_id, 1: delete_spec_id}
-    manifests: list[dict] = []
-    for content, files_ in ((0, added_files), (1, delete_files)):
-        if not files_:
-            continue
-        man_path = os.path.join(
-            ice._meta_dir(path),
-            f"manifest-merge{content}-{snap_id}-{uuid.uuid4().hex}.avro",
-        )
-        with open(man_path, "wb") as fh:
-            write_container_generic(
-                fh,
-                schemas_by_content[content],
-                [
-                    {"status": 1, "snapshot_id": snap_id, "data_file": dd}
-                    for dd in files_
-                ],
-            )
-        manifests.append(
-            {
-                "manifest_path": os.path.abspath(man_path),
-                "manifest_length": os.path.getsize(man_path),
-                "partition_spec_id": spec_by_content[content],
-                "content": content,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(files_),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    dd["record_count"] for dd in files_
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    cur_snap_id = (
-        branch_base if branch is not None
-        else meta.get("current-snapshot-id")
-    )
-    prev_manifests: list[dict] = []
-    snap = next(
-        (
-            s
-            for s in meta.get("snapshots", [])
-            if s["snapshot-id"] == cur_snap_id
-        ),
-        None,
-    )
-    if snap is not None and "manifest-list" in snap:
-        _s, prev_manifests = ice.read_container_generic(
-            ice._local(snap["manifest-list"])
-        )
-    # v3: a replacement DV supersedes the old entry in the SAME
-    # snapshot — drop it from the re-listed prior manifests
-    prev_manifests = ice._drop_superseded_dv_entries(
-        path, prev_manifests, dv_superseded
-    )
-    ml_path = os.path.join(
-        ice._meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-    )
-    ml_rows = [
-        {
-            k: m.get(k, 0)
-            for k in (
-                f["name"]
-                for f in ice._MANIFEST_FILE_SCHEMA["fields"]
-            )
-        }
-        for m in prev_manifests
-    ] + manifests
-    with open(ml_path, "wb") as fh:
-        write_container_generic(
-            fh, ice._MANIFEST_FILE_SCHEMA, ml_rows
-        )
+    spec_ids = {0: default_spec_id, 1: delete_spec_id}
     new_sid = meta.get("current-schema-id", 0)
     evolved_schemas = None
     if evolved_fields is not None:
@@ -1488,15 +1348,44 @@ def _commit_iceberg_mor(
                 "fields": evolved_fields,
             }
         ]
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": os.path.abspath(ml_path),
-        "summary": ice._snapshot_summary(
+    planned_v = cur_v
+
+    def build(cur_v: int, meta: dict) -> dict:
+        # the positions retire rows of the planned version's live set
+        if cur_v != planned_v:
+            raise ValueError(
+                "concurrent commit landed during MERGE planning — "
+                "aborting without committing"
+            )
+        snap_id = cur_v + 1
+        seq = int(meta.get("last-sequence-number", cur_v)) + 1
+        # fresh first_row_id blocks above next-row-id (spec: assigned
+        # to every added data file; rows with a materialized _row_id
+        # — the updated images — simply never consult theirs)
+        lineage = (
+            ice._assign_row_ids(meta, added_files)
+            if fv >= 3 and added_files
+            else None
+        )
+        manifests = [
+            ice._write_manifest(
+                path, f"manifest-merge{content}", snap_id, seq,
+                entry_schemas[content], files_, content=content,
+                spec_id=spec_ids[content],
+            )
+            for content, files_ in ((0, added_files), (1, delete_files))
+            if files_
+        ]
+        # v3: a replacement DV supersedes the old entry in the SAME
+        # snapshot — it drops from the re-listed prior manifests
+        parent, ml_path, ml_rows = ice._write_manifest_list(
+            path, meta, snap_id, manifests, branch=branch,
+            superseded=dv_superseded,
+        )
+        summary = ice._snapshot_summary(
             "overwrite",
             ml_rows,
-            ice._parent_summary(meta, cur_snap_id),
+            ice._parent_summary(meta, parent),
             added_data_files=len(added_files),
             added_records=sum(
                 int(dd["record_count"]) for dd in added_files
@@ -1509,43 +1398,27 @@ def _commit_iceberg_mor(
                 int(dd.get("file_size_in_bytes", 0) or 0)
                 for dd in added_files + delete_files
             ),
-        ),
-        "schema-id": new_sid,
-    }
-    if lineage_first is not None:
-        snapshot["first-row-id"] = int(lineage_first)
-    if cur_snap_id is not None and cur_snap_id != -1:
-        snapshot["parent-snapshot-id"] = int(cur_snap_id)
-    new_meta = dict(meta)
-    if lineage_next is not None:
-        new_meta["next-row-id"] = int(lineage_next)
-    if evolved_schemas is not None:
-        # the schema widens ATOMICALLY with the row changes (the
-        # Delta evolve_schema twin): new schema-id, name-stable old
-        # field ids, fresh ids for additions
-        new_meta["schemas"] = evolved_schemas
-        new_meta["current-schema-id"] = new_sid
-        new_meta["last-column-id"] = max(
-            f["id"] for f in evolved_fields
         )
-        new_meta.pop("schema", None)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["snapshots"] = meta.get("snapshots", []) + [snapshot]
-    if branch is not None:
-        # branch DML advances the ref only; main lineage stays put
-        new_refs = dict(meta.get("refs") or {})
-        new_refs[branch] = {**new_refs[branch], "snapshot-id": snap_id}
-        new_meta["refs"] = new_refs
-    else:
-        new_meta["current-snapshot-id"] = snap_id
-        new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-        ]
-    if new_specs != specs:
-        new_meta["partition-specs"] = new_specs
-    ice._write_metadata_version(path, new_v, new_meta)
-    return snap_id
+        new_meta = ice._add_snapshot(
+            meta, snap_id, seq, int(time.time() * 1000), ml_path,
+            summary, parent, branch=branch, schema_id=new_sid,
+            lineage=lineage,
+        )
+        if evolved_schemas is not None:
+            # the schema widens ATOMICALLY with the row changes (the
+            # Delta evolve_schema twin): new schema-id, name-stable old
+            # field ids, fresh ids for additions
+            new_meta["schemas"] = evolved_schemas
+            new_meta["current-schema-id"] = new_sid
+            new_meta["last-column-id"] = max(
+                f["id"] for f in evolved_fields
+            )
+            new_meta.pop("schema", None)
+        if new_specs != specs:
+            new_meta["partition-specs"] = new_specs
+        return new_meta
+
+    return ice._commit_metadata(path, build)
 
 
 # --------------------------------------------------------- SQL layer
@@ -2159,9 +2032,7 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
             numAddedChangeFiles=c["cdc"],
         )
         while True:
-            versions = d.delta_versions(path)
-            ckpt = d._read_last_checkpoint(path)
-            next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+            next_v = d._next_version(path)
             live_now = d._live_subset(spark, path, frozenset(planned))
             for p_, dv in planned.items():
                 cur = live_now.get(p_)
@@ -2195,7 +2066,7 @@ def _update_iceberg(spark, path, predicate, sets, branch=None) -> int | None:
     fv = ice._format_version_gate(
         meta, "UPDATE", write=True, v3_write_ok=True, defaults_ok=True,
     )
-    branch_head = _branch_head(meta, branch)
+    branch_head = ice._branch_head(meta, branch)
     schema, fields = ice._schema_of(meta)
     defaulted = (
         [f for f in fields if f.get("initial-default") is not None]

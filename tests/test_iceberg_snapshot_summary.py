@@ -171,7 +171,7 @@ def test_foreign_operation_only_summary_still_reads(spark, tmp_path):
     v, meta = ice._current_metadata(p)
     for s in meta.get("snapshots", []):
         s["summary"] = {"operation": s["summary"]["operation"]}
-    ice._write_metadata_version(p, v + 1, meta)
+    ice._commit_metadata(p, lambda _v, _m: meta)
     assert ice.read_iceberg(spark, p).count() == 5
     # and the NEXT engine commit re-derives exact totals from the
     # manifest list (only total-files-size, which must chain, is

@@ -38,7 +38,7 @@ def _mk_v3(spark, path: str, mutate=None) -> None:
         s["first-row-id"] = 0
     if mutate:
         mutate(meta)
-    ice._write_metadata_version(path, cur_v + 1, meta)
+    ice._commit_metadata(path, lambda _v, _m: meta)
 
 
 def test_v3_with_v2_features_reads(spark, tmp_path):
@@ -144,7 +144,7 @@ def test_v3_initial_default_materializes_on_read(spark, tmp_path):
     meta2["format-version"] = 3
     meta2["next-row-id"] = 6
     _add_default(meta2)
-    ice._write_metadata_version(p, cur_v + 1, meta2)
+    ice._commit_metadata(p, lambda _v, _m: meta2)
     rows = {
         r.id: r.tag for r in ice.read_iceberg(spark, p).collect()
     }
@@ -255,12 +255,14 @@ def _mk_v3_dv_table(spark, path: str):
         "content_offset": int(blob_meta["offset"]),
         "content_size_in_bytes": int(blob_meta["length"]),
     }
-    ice._commit_delete_snapshot(path, meta, cur_v, [dv_entry], schema)
+    ice._commit_delete_snapshot(
+        path, cur_v, [dv_entry], schema, "concurrent commit"
+    )
     cur_v2, meta2 = ice._current_metadata(path)
     meta3 = dict(meta2)
     meta3["format-version"] = 3
     meta3["next-row-id"] = 10
-    ice._write_metadata_version(path, cur_v2 + 1, meta3)
+    ice._commit_metadata(path, lambda _v, _m: meta3)
 
 
 def test_v3_deletion_vectors_read_on_scan_path(spark, tmp_path):
@@ -384,7 +386,7 @@ def _mk_v3_lineage_table(spark, path: str, materialized: bool = False):
             s["first-row-id"] = 100
         snaps.append(s)
     meta2["snapshots"] = snaps
-    ice._write_metadata_version(path, cur_v + 1, meta2)
+    ice._commit_metadata(path, lambda _v, _m: meta2)
 
 
 def test_v3_row_lineage_read_through(spark, tmp_path):
@@ -668,7 +670,7 @@ def test_v3_dml_over_initial_default_columns(spark, tmp_path):
     cur_v, meta = ice._current_metadata(p)
     meta2 = dict(meta)
     _add_default(meta2)  # tag string, initial-default 'legacy'
-    ice._write_metadata_version(p, cur_v + 1, meta2)
+    ice._commit_metadata(p, lambda _v, _m: meta2)
     # read composes defaults + lineage
     rows = {
         r.id: (r.tag, r._row_id)
@@ -811,7 +813,7 @@ def test_v3_write_default_fills_appends(spark, tmp_path):
         {"id": 99, "name": "tag", "required": False, "type": "string",
          "initial-default": "legacy", "write-default": "filled"}
     ]
-    ice._write_metadata_version(p, cur_v + 1, meta2)
+    ice._commit_metadata(p, lambda _v, _m: meta2)
     # append WITHOUT tag: write-default fills it
     ice.write_iceberg(
         spark.range(3, 5).coalesce(1).select(F.col("id")), p

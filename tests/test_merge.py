@@ -1343,3 +1343,49 @@ def test_merge_evolve_schema_on_column_mapped_table(spark, tmp_path):
     # follow-up DML over the evolved mapped schema
     d.delete_delta_where(spark, t, "id = 10", mode="cow")
     assert d.read_delta(spark, t).count() == 4
+
+
+def test_nonempty_merge_counts_ride_observe(spark, tmp_path, monkeypatch):
+    """The cardinality check reads its two observe() counts through
+    the private ``Observation._jo.getRow()`` handle (``merge._obs_n``).
+    A non-empty Delta MERGE must get BOTH counts from that fast path,
+    never the probe-job fallback, so a pyspark upgrade that renames
+    or empties the handle fails here instead of silently adding a
+    Spark job to every MERGE."""
+    from census_asc5_data_pipeline_spark.sources import merge as m
+    from census_asc5_data_pipeline_spark.sources.delta_io import (
+        read_delta,
+        write_delta,
+    )
+
+    path = str(tmp_path / "t")
+    write_delta(
+        _mk(spark, [(i, float(i)) for i in range(6)], "id bigint, v double"),
+        path,
+    )
+    seen: list = []
+    real = m._obs_n
+
+    def spy(obs):
+        n = real(obs)
+        seen.append(n)
+        return n
+
+    monkeypatch.setattr(m, "_obs_n", spy)
+    m.merge_into(
+        spark,
+        "delta",
+        path,
+        _mk(spark, [(1, 10.0), (2, 20.0), (9, 90.0)], "id bigint, v double"),
+        "t.id = s.id",
+        matched=[("update", None, {"v": "s.v"})],
+        not_matched={"id": "s.id", "v": "s.v"},
+    )
+    # (tagged, scan) counts: both collected, and equal — no fan-out
+    assert len(seen) == 2 and None not in seen, seen
+    assert seen[0] == seen[1] > 0
+    got = sorted((r.id, r.v) for r in read_delta(spark, path).collect())
+    assert got == [
+        (0, 0.0), (1, 10.0), (2, 20.0), (3, 3.0), (4, 4.0), (5, 5.0),
+        (9, 90.0),
+    ]
