@@ -61,6 +61,7 @@ of scope.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -3015,7 +3016,9 @@ def write_iceberg(
             summary, parent, branch=branch, lineage=lineage,
         )
 
-    return _commit_metadata(path, build, create=not exists)
+    return _commit_metadata(
+        path, build, create=not exists, staged=data_files
+    )
 
 
 def register_iceberg_views(
@@ -3465,7 +3468,11 @@ def _discard_new_manifests(meta: dict, new_meta: dict) -> None:
 
 
 def _commit_metadata(
-    path: str, build, op: str | None = None, create: bool = False
+    path: str,
+    build,
+    op: str | None = None,
+    create: bool = False,
+    staged: list[dict] | tuple = (),
 ) -> int:
     """THE Iceberg commit path — every metadata version is published
     here. Reads the head (:func:`_head`), calls ``build(cur_v, meta)
@@ -3478,7 +3485,9 @@ def _commit_metadata(
     ``build`` again, so a metadata-only change always lands on the
     newest state and no commit is ever silently overwritten; a
     ``build`` that planned against an older live set raises instead
-    of rebuilding. ``op`` names the verb for
+    of rebuilding; the data, delete and Puffin files the commit
+    staged (``staged``: its data_file dicts) are then deleted too, as
+    nothing references them. ``op`` names the verb for
     the write gate of the metadata-only verbs. v3 passes it: ``build``
     starts from ``dict(meta)``, which carries format-version and
     next-row-id forward, so no lineage duty arises, and field dicts
@@ -3508,7 +3517,13 @@ def _commit_metadata(
             _format_version_gate(
                 meta, op, write=True, v3_write_ok=True, defaults_ok=True
             )
-        new_meta = build(cur_v, meta)
+        try:
+            new_meta = build(cur_v, meta)
+        except Exception:
+            for f in {_local(d["file_path"]) for d in staged}:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(f)
+            raise
         if new_meta is None:
             return cur_v
         claimed = cur_v + 1
@@ -4854,7 +4869,7 @@ def rewrite_data_files(
         "partitions_compacted": len(todo),
         "files_before": len(live),
         "files_after": len(all_files),
-        "snapshot_id": _commit_metadata(path, build),
+        "snapshot_id": _commit_metadata(path, build, staged=new_files),
     }
 
 
@@ -5113,7 +5128,7 @@ def _commit_delete_snapshot(
             summary, parent, branch=branch,
         )
 
-    return _commit_metadata(path, build)
+    return _commit_metadata(path, build, staged=delete_files)
 
 
 def _stage_dv_files(

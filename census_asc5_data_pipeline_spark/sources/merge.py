@@ -110,6 +110,154 @@ def _obs_n(obs) -> int | None:
     return int(obs.get["n"])
 
 
+_KEY_REF = r"([A-Za-z_]\w*)\s*\.\s*(`(?:[^`]|``)+`|[A-Za-z_]\w*)"
+_EQUI_RE = re.compile(rf"^{_KEY_REF}\s*==?\s*{_KEY_REF}$")
+# top-level keywords whose precedence a plain AND split cannot honour
+_NO_SPLIT_RE = re.compile(r"(OR|NOT|BETWEEN|CASE)\b", re.IGNORECASE)
+_AND_RE = re.compile(r"AND\b", re.IGNORECASE)
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _top_level(text: str):
+    """``(index, char, paren depth)`` of every character of ``text``
+    outside quoted strings and backticked identifiers."""
+    depth, q, i = 0, None, 0
+    while i < len(text):
+        ch = text[i]
+        if q:
+            if ch == "\\" and q != "`":
+                i += 1
+            elif ch == q:
+                q = None
+        elif ch in "'\"`":
+            q = ch
+        else:
+            depth += ch == "("
+            yield i, ch, depth
+            depth -= ch == ")"
+        i += 1
+
+
+def _strip_parens(text: str) -> str:
+    """``text`` without redundant enclosing parentheses."""
+    text = text.strip()
+    while text.startswith("(") and text.endswith(")") and not any(
+        ch == ")" and depth == 1 and i < len(text) - 1
+        for i, ch, depth in _top_level(text)
+    ):
+        text = text[1:-1].strip()
+    return text
+
+
+def _top_conjuncts(on: str) -> list[str]:
+    """The top-level ``AND`` conjuncts of ``on``, or ``[]`` when a
+    top-level OR / NOT / BETWEEN / CASE makes a plain split unsound
+    (``a AND b OR c`` is not a conjunction of ``a``)."""
+    text = _strip_parens(on)
+    out, last = [], 0
+    for i, _ch, depth in _top_level(text):
+        if depth or (i and (text[i - 1].isalnum() or text[i - 1] == "_")):
+            continue
+        if _NO_SPLIT_RE.match(text, i):
+            return []
+        if _AND_RE.match(text, i):
+            out.append(text[last:i])
+            last = i + 3
+    out.append(text[last:])
+    return [_strip_parens(c) for c in out]
+
+
+def _boundable(tt: T.DataType, st: T.DataType) -> bool:
+    """Whether ``min``/``max`` of a source key of type ``st`` bound
+    the target values of type ``tt`` it can equal, in a domain both
+    skipping evaluators compare exactly. Floats (NaN = NaN joins)
+    and timestamps (collected in the driver's local zone) are left
+    out, as are non-binary string collations."""
+    if isinstance(tt, _INTEGRAL) and isinstance(st, _INTEGRAL):
+        return True
+    if tt != st:
+        return False
+    if isinstance(tt, T.StringType):
+        return getattr(tt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+    return isinstance(tt, (T.DateType, T.DecimalType, T.BooleanType))
+
+
+def _equi_keys(
+    on: str,
+    target_fields: list[T.StructField],
+    source_fields: list[T.StructField],
+) -> list[tuple[str, str]]:
+    """``(target column, source column)`` for every top-level ``AND``
+    conjunct of ``on`` shaped ``t.a = s.b`` (either order; ``<=>``
+    never qualifies) whose types :func:`_boundable` accepts. Names
+    resolve case-insensitively to the schemas' own spelling."""
+
+    def resolve(name: str, fields) -> T.StructField | None:
+        name = name[1:-1].replace("``", "`") if name[0] == "`" else name
+        hits = [f for f in fields if f.name.lower() == name.lower()]
+        return hits[0] if len(hits) == 1 else None
+
+    out: list[tuple[str, str]] = []
+    for conj in _top_conjuncts(on):
+        m = _EQUI_RE.match(conj)
+        if not m:
+            continue
+        sides = {
+            m.group(1).lower(): m.group(2), m.group(3).lower(): m.group(4)
+        }
+        if set(sides) != {"t", "s"}:
+            continue
+        tf = resolve(sides["t"], target_fields)
+        sf = resolve(sides["s"], source_fields)
+        if tf is not None and sf is not None and _boundable(
+            tf.dataType, sf.dataType
+        ):
+            out.append((tf.name, sf.name))
+    return out
+
+
+def _merge_candidates(
+    source: DataFrame,
+    on: str,
+    nmbs: list[MatchedClause],
+    target_fields: list[T.StructField],
+    live: list[dict],
+    has_stats,
+    prune,
+) -> list[dict]:
+    """The live files a MERGE must scan: those whose min/max metadata
+    admit a value of every equi-joined target key inside the source
+    key's ``[min, max]``. A target row outside that interval can
+    equal no source row, so it is neither matched, nor an insert
+    blocker, nor rewritten. ``has_stats(col)`` says whether any live
+    file carries bounds for a target column; ``prune(atoms)`` is the
+    format's evaluator over ``live``. Every live file stays when a
+    WHEN NOT MATCHED BY SOURCE clause exists (it acts on rows in
+    every file) or no stats-backed equi-conjunct exists; the bounds
+    aggregate is then not run. A source with no non-NULL key value
+    can match nothing: no file is a candidate."""
+    if nmbs or not live:
+        return live
+    pairs = [
+        (t, s)
+        for t, s in _equi_keys(on, target_fields, source.schema.fields)
+        if has_stats(t)
+    ]
+    if not pairs:
+        return live
+    keys = [F.col("`" + s.replace("`", "``") + "`") for _t, s in pairs]
+    row = source.agg(
+        *[agg(k) for k in keys for agg in (F.min, F.max)]
+    ).collect()[0]
+    atoms: list[tuple] = []
+    for i, (t, _s) in enumerate(pairs):
+        lo, hi = row[2 * i], row[2 * i + 1]
+        if lo is None:
+            return []
+        atoms += [(t, ">=", lo), (t, "<=", hi)]
+    return prune(atoms)
+
+
 def _plan_merge(
     scan: DataFrame,
     source: DataFrame,
@@ -323,7 +471,23 @@ def merge_into(
     the target are ADDED to the table schema in the same commit
     (nullable; pre-existing rows read NULL) — without it schema
     enforcement keeps drift out. Returns the committed
-    version/snapshot id, or None when the merge is a no-op."""
+    version/snapshot id, or None when the merge is a no-op.
+
+    Both formats scan only the live files the source's join keys can
+    reach. Every top-level ``AND`` conjunct of ``on`` shaped
+    ``t.a = s.b`` (either order) whose sides have the same type —
+    integral, string, date, decimal or boolean; any two integral
+    types also qualify — contributes ``a >= min(s.b) AND a <= max(s.b)``,
+    one aggregate over the (persisted) source, and files whose
+    min/max stats or identity partition values exclude that range
+    are neither read, matched nor rewritten. A source with no
+    non-NULL key scans no file and inserts every row. Pruning does
+    not apply, and the aggregate is not run, when a WHEN NOT MATCHED
+    BY SOURCE clause exists (it acts on rows in every file), when no
+    conjunct qualifies (``<=>``, expressions such as ``s.k + 1``,
+    mixed types, floats, timestamps, or a top-level OR / NOT /
+    BETWEEN / CASE in ``on``), or when no live file carries stats for
+    the key."""
     matched = matched or []
     nmbs = not_matched_by_source or []
     if not matched and not nmbs and not_matched is None:
@@ -497,16 +661,39 @@ def _merge_delta(
             schema = T.StructType(schema.fields + extra_fields)
     if not adds and not_matched is None:
         return None
+    from census_asc5_data_pipeline_spark.sources import delta_stats
+
+    live = list(adds.values())
+
+    def has_stats(col: str) -> bool:
+        phys = (physical_of or {}).get(col, col)
+        for a in live:
+            st = a.get("stats")
+            try:
+                st = json.loads(st) if isinstance(st, str) else st
+            except ValueError:
+                continue
+            if isinstance(st, dict) and phys in (st.get("minValues") or {}):
+                return True
+        return col in pcols
+
+    cand = _merge_candidates(
+        source, on, nmbs, list(schema.fields), live, has_stats,
+        lambda atoms: delta_stats.skip_files(
+            live, atoms, schema, pcols, physical_of,
+            session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
+        ),
+    )
     scan = d._scan_adds(
         spark,
         path,
         schema,
         pcols,
-        [(None, a) for a in adds.values()],
+        [(None, a) for a in cand],
         keep_pos=True,
         physical_of=physical_of,
         extra_long_cols=rt_extra,
-    ) if adds else spark.createDataFrame(
+    ) if cand else spark.createDataFrame(
         [],
         T.StructType(
             schema.fields
@@ -518,8 +705,8 @@ def _merge_delta(
     )
     if rt_preserve:
         scan = (
-            d._rt_stable_cols(spark, scan, list(adds.values()), meta)
-            if adds
+            d._rt_stable_cols(spark, scan, cand, meta)
+            if cand
             else scan.withColumn(
                 "_row_id", F.lit(None).cast("long")
             ).withColumn("__rt_cv", F.lit(None).cast("long"))
@@ -527,26 +714,25 @@ def _merge_delta(
     tagged, inserts, card_check = _plan_merge(
         scan, source, on, matched, nmbs, not_matched, list(schema.fields)
     )
-    # statement-scoped inserts persist (r17): the insert anti-join is
-    # referenced by the n_ins count, the identity allocation pin, the
-    # staging union write AND the CDC union — each a separate action
-    # that would re-run the anti-join (re-scanning the target) on an
-    # uncached frame. Bounded by the (already persisted) source size;
-    # released in the finally regardless of commit outcome.
+    cdf = (meta.get("configuration") or {}).get(
+        "delta.enableChangeDataFeed"
+    ) == "true"
     # the commit body is a closure (r17) so the statement-scoped
-    # inserts cache below is released on EVERY exit path — no-op
-    # returns, cardinality/constraint raises, the commit itself —
-    # without threading two dozen locals through a helper signature.
+    # caches below are released on EVERY exit path — no-op returns,
+    # cardinality/constraint raises, the commit itself — without
+    # threading two dozen locals through a helper signature.
     # ``inserts`` binds as a default arg because the identity path
     # rebinds it inside the closure.
     def _commit_body(inserts=inserts):
+        nonlocal ins_cache
         # per-(action, file) matched-row counts ride the SAME shuffle the
         # old distinct() took (r15: operationMetrics) — touched files AND
         # numTargetRowsUpdated/Deleted from one job, which is also the
-        # action the cardinality observe() pair rides (r17) AND the
-        # materialization of the statement-scoped `acted` cache every
-        # later acted-row consumer (DV retire, post-images, CDC
-        # delete/update images) reads instead of re-scanning the target
+        # action the cardinality observe() pair rides (r17) AND, in DV
+        # mode or with CDF, the materialization of the statement-scoped
+        # `acted` cache every later acted-row consumer (DV retire,
+        # post-images, CDC delete/update images) reads instead of
+        # re-scanning the candidates
         act_rows = (
             acted.groupBy(
                 F.col("__action"), F.col("t.__base").alias("__base")
@@ -561,7 +747,24 @@ def _merge_delta(
         touched = sorted({r["__base"] for r in act_rows})
         n_upd = sum(int(r["n"]) for r in act_rows if r["__action"] in upd_tags)
         n_del = sum(int(r["n"]) for r in act_rows if r["__action"] in del_tags)
-        n_ins = inserts.count() if inserts is not None else 0
+        # the insert count rides an observe() on the staging write's
+        # insert branch (n_ins None until then) unless a decision before
+        # that write needs it: the no-op return when no file is
+        # touched, identity allocation, generated-column checks and the
+        # CDF insert images
+        count_first = inserts is not None and bool(
+            not touched or ident_names or gens or cdf
+        )
+        if count_first or inserts is not None and d._table_constraints(meta):
+            # statement-scoped inserts persist (r17): read again by the
+            # staging write after the count or the constraint aggregate
+            # (and by the identity allocation and the CDC union) — each
+            # re-running the anti-join on an uncached frame. Bounded by
+            # the (already persisted) source; released in the finally.
+            inserts = ins_cache = inserts.persist()
+        n_ins = (
+            inserts.count() if count_first else 0 if inserts is None else None
+        )
         if not touched and not n_ins and not extra_fields:
             # row-level no-op AND no schema widening: nothing to commit.
             # With evolve_schema extra columns the widened metaData still
@@ -617,7 +820,7 @@ def _merge_delta(
                     meta_commit, identity_updates
                 )
             lines.append({"metaData": meta_commit})
-        adds_by_base = d._adds_by_base(adds)
+        adds_by_base = d._adds_by_base({a["path"]: a for a in cand})
         planned: dict[str, dict | None] = {}
         staged_rows: DataFrame | None = None
         if mode == "dv":
@@ -703,8 +906,16 @@ def _merge_delta(
                     inserts = inserts.withColumn(
                         name, F.expr(expr).cast(dtype)
                     )
-        if inserts is not None and n_ins:
+        obs_ins = None
+        if inserts is not None and n_ins != 0:
             staged_ins = inserts
+            if n_ins is None:
+                from pyspark.sql import Observation
+
+                obs_ins = Observation()
+                staged_ins = staged_ins.observe(
+                    obs_ins, F.count(F.lit(1)).alias("n")
+                )
             if rt_preserve:
                 # fresh rows materialize NULL — they take the new file's
                 # baseRowId + position on read (kept off the CDF images)
@@ -725,9 +936,11 @@ def _merge_delta(
                 field_ids=d._mapping_ids(meta),
             )
             lines.extend(staged_add_lines)
-        if (meta.get("configuration") or {}).get(
-            "delta.enableChangeDataFeed"
-        ) == "true":
+        if obs_ins is not None:
+            n_ins = _obs_n(obs_ins)
+            if n_ins is None:  # metrics dropped by AQE (empty branch)
+                n_ins = inserts.count()
+        if cdf:
             cdc_parts = []
             tcols = [
                 F.col(f"t.{f.name}").alias(f.name) for f in schema.fields
@@ -839,33 +1052,36 @@ def _merge_delta(
                 continue
 
     ins_cache = None
-    if inserts is not None:
-        inserts = ins_cache = inserts.persist()
-    if not adds:
-        # an EMPTY target cannot match any source row: the cardinality
+    if not cand:
+        # no candidate file (an EMPTY target, or none whose stats admit
+        # a source key) cannot match any source row: the cardinality
         # rule is vacuously satisfied and nothing can be acted on —
         # skip the probe fallback AND the acted-rows machinery (r17)
         card_check = None
-    # statement-scoped acted-rows persist (r17): the DV retire /
-    # post-image staging and the CDC delete/update images each re-ran
-    # the full target-scan join for the same acted subset. Bounded by
-    # the matched-row count; materialized by the metrics collect,
-    # released in the finally.
     del_tags = _delete_tags(matched, nmbs)
     upd_tags = _update_tags(matched, nmbs)
     act_tags = del_tags + upd_tags
     acted = (
-        tagged.where(F.col("__action").isin(act_tags)).persist()
-        if act_tags and adds
+        tagged.where(F.col("__action").isin(act_tags))
+        if act_tags and cand
         else None
     )
+    # statement-scoped acted-rows persist (r17): the DV retire /
+    # post-image staging and the CDC delete/update images each re-ran
+    # the candidate-scan join for the same acted subset. CoW without
+    # CDF reads it once (the metrics collect), so it is not cached.
+    # Bounded by the matched-row count; materialized by the metrics
+    # collect, released in the finally.
+    acted_cache = None
+    if acted is not None and (mode == "dv" or cdf):
+        acted = acted_cache = acted.persist()
     try:
         return _commit_body()
     finally:
         if ins_cache is not None:
             ins_cache.unpersist()
-        if acted is not None:
-            acted.unpersist()
+        if acted_cache is not None:
+            acted_cache.unpersist()
 
 
 def _spec_pcols(meta: dict, fields: list[dict], verb: str) -> list[dict]:
@@ -970,8 +1186,29 @@ def _merge_iceberg(
             evolved_fields = list(fields) + new_ice
             schema = T.StructType(list(schema.fields) + extra_sp)
     data_files, delete_fs = ice._snapshot_files(path, meta, branch_head)
+    # source-key pruning through _update_iceberg's evaluator. Only the
+    # per-file bounds pass runs: it folds identity partition values in
+    # as point intervals, so it drops every file a manifest-summary
+    # skip would, and has_stats reads every live entry anyway
+    ident_src = {pf["source"] for pf in pcols if pf["transform"] == "identity"}
+    fid_of = {f["name"]: int(f["id"]) for f in fields}
+
+    def has_stats(col: str) -> bool:
+        fid = fid_of.get(col)
+        return col in ident_src or any(
+            fid in ice.iceberg_bounds.kv_map(dd.get("lower_bounds"))
+            for dd in data_files
+        )
+
+    cand = _merge_candidates(
+        source, on, nmbs, list(schema.fields), data_files, has_stats,
+        lambda atoms: ice._skip_by_bounds(
+            data_files, atoms, fields, meta,
+            session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
+        ),
+    )
     abs_of_base: dict[str, str] = {}
-    for dd in data_files:
+    for dd in cand:
         ap = os.path.abspath(ice._local(dd["file_path"]))
         base = os.path.basename(ap)
         if base in abs_of_base and abs_of_base[base] != ap:
@@ -985,20 +1222,20 @@ def _merge_iceberg(
         if evolved_fields
         else schema
     )
-    if data_files:
+    if cand:
         if defaulted:
             scan = ice._scan_with_defaults(
-                spark, old_schema, fields, data_files, delete_fs,
+                spark, old_schema, fields, cand, delete_fs,
                 defaulted, keep_pos=True, lineage=True,
             ).drop("_last_updated_sequence_number")
         elif fv >= 3:
             scan = ice._lineage_scan(
-                spark, old_schema, fields, data_files, delete_fs,
+                spark, old_schema, fields, cand, delete_fs,
                 keep_pos=True,
             ).drop("_last_updated_sequence_number")
         else:
             scan = ice._scan_with_deletes(
-                spark, old_schema, fields, data_files, delete_fs,
+                spark, old_schema, fields, cand, delete_fs,
                 keep_pos=True,
             )
         for f in extra_sp:
@@ -1023,10 +1260,11 @@ def _merge_iceberg(
     tagged, inserts, card_check = _plan_merge(
         scan, source, on, matched, nmbs, not_matched, list(schema.fields)
     )
-    if not data_files:
-        # an EMPTY target cannot match any source row: the cardinality
-        # rule is vacuously satisfied (r17 — skips the probe fallback
-        # that AQE's empty-relation handling would otherwise force)
+    if not cand:
+        # no candidate file cannot match any source row: the
+        # cardinality rule is vacuously satisfied (r17 — skips the probe
+        # fallback that AQE's empty-relation handling would otherwise
+        # force)
         card_check = None
     # statement-scoped inserts persist (r17): the insert anti-join is
     # referenced by both the required-field validation aggregate and
@@ -1418,7 +1656,9 @@ def _commit_iceberg_mor(
             new_meta["partition-specs"] = new_specs
         return new_meta
 
-    return ice._commit_metadata(path, build)
+    return ice._commit_metadata(
+        path, build, staged=added_files + delete_files
+    )
 
 
 # --------------------------------------------------------- SQL layer

@@ -18,6 +18,7 @@ import os
 import pyspark.sql.functions as F
 
 from census_asc5_data_pipeline_spark.sources import delta_io as d
+from census_asc5_data_pipeline_spark.sources import merge as merge_mod
 from census_asc5_data_pipeline_spark.sources.merge import (
     merge_into,
     update_where,
@@ -122,7 +123,7 @@ def test_update_metrics_both_modes(spark, tmp_path):
         ), mode
 
 
-def test_merge_metrics_both_modes(spark, tmp_path):
+def test_merge_metrics_both_modes(spark, tmp_path, monkeypatch):
     for mode, name in (("cow", "a"), ("dv", "b")):
         p = str(tmp_path / name)
         _mk(spark, p, n=10)  # ids 0..9
@@ -160,6 +161,43 @@ def test_merge_metrics_both_modes(spark, tmp_path):
         out = d.read_delta(spark, p)
         assert out.count() == 12, mode  # 10 - 1 + 3
         assert out.filter("k = 999").count() == 5, mode
+        # a MERGE that touches a file takes its insert count from the
+        # staging write's observe(), not from a count job of its own
+        seen: list = []
+        real_obs_n = merge_mod._obs_n
+        monkeypatch.setattr(
+            merge_mod, "_obs_n", lambda o: seen.append(1) or real_obs_n(o)
+        )
+        # every source key matches: touched, zero rows inserted
+        v = merge_into(
+            spark, "delta", p,
+            spark.range(8, 10).select(F.col("id"), F.lit(5).alias("k")),
+            "t.id = s.id",
+            matched=[("update", None, {"k": "s.k"})],
+            not_matched={"id": "s.id", "k": "s.k"},
+            mode=mode,
+        )
+        m = _metrics(spark, p, v)
+        assert m["numTargetRowsInserted"] == "0", mode
+        assert int(m["numTargetRowsUpdated"]) == 2, mode
+        # 12 matches; of 13..19 only the even keys pass the insert clause
+        v = merge_into(
+            spark, "delta", p,
+            spark.range(12, 20).select(F.col("id"), F.lit(6).alias("k")),
+            "t.id = s.id",
+            matched=[("update", None, {"k": "s.k"})],
+            not_matched=[("s.id % 2 = 0", {"id": "s.id", "k": "s.k"})],
+            mode=mode,
+        )
+        m = _metrics(spark, p, v)
+        assert int(m["numTargetRowsInserted"]) == 3, mode
+        assert int(m["numTargetRowsUpdated"]) == 1, mode
+        # (tagged, scan, inserts) per MERGE
+        assert len(seen) == 6, (mode, seen)
+        monkeypatch.undo()
+        assert sorted(
+            r.id for r in d.read_delta(spark, p).where("k = 6").collect()
+        ) == [12, 14, 16, 18], mode
 
 
 def test_optimize_and_restore_metrics(spark, tmp_path):

@@ -95,6 +95,38 @@ def _avros_on_disk(path: str) -> set[str]:
     }
 
 
+def _referenced_files(path: str) -> set[str]:
+    """Every data, delete and Puffin file a manifest of any snapshot
+    in the head lists."""
+    _v, meta = ice._current_metadata(path)
+    out: set[str] = set()
+    for s in meta["snapshots"]:
+        _sch, rows = ice.read_container_generic(ice._local(s["manifest-list"]))
+        for m in rows:
+            _sch, entries = ice.read_container_generic(
+                ice._local(m["manifest_path"])
+            )
+            out |= {
+                os.path.abspath(ice._local(e["data_file"]["file_path"]))
+                for e in entries
+            }
+    return out
+
+
+def _files_on_disk(path: str) -> set[str]:
+    """The parquet files under ``data/`` and the Puffin files under
+    ``metadata/``."""
+    out: set[str] = set()
+    for sub, ext in (("data", ".parquet"), ("metadata", ".puffin")):
+        for root, _dirs, names in os.walk(os.path.join(path, sub)):
+            out |= {
+                os.path.abspath(os.path.join(root, n))
+                for n in names
+                if n.endswith(ext) and not n.startswith(".")
+            }
+    return out
+
+
 def test_concurrent_property_sets_keep_both_keys(spark, tmp_path, monkeypatch):
     """The lost update: two SET TBLPROPERTIES planned on the same
     head. The loser's claim hits EEXIST, re-reads, and rebuilds on
@@ -211,8 +243,10 @@ def test_rewrite_racing_append_aborts(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ice, "_put_if_absent", real)
     assert ice._current_metadata(p)[0] == 4
     assert _ids(spark, p) == list(range(15)) + [50, 51, 52]
-    # the aborted rewrite's manifest and manifest list are gone too
+    # the aborted rewrite's manifest and manifest list are gone too,
+    # and so are the compacted data files it staged
     assert _avros_on_disk(p) == _referenced_avros(p)
+    assert _files_on_disk(p) == _referenced_files(p)
 
 
 def test_stale_hint_never_hides_newest_version(spark, tmp_path):
@@ -259,3 +293,5 @@ def test_conflicting_mor_updates_one_aborts(spark, tmp_path, monkeypatch):
         (r.id, r.k) for r in ice.read_iceberg(spark, p).collect()
     )
     assert rows == [(i, i % 3 + (bump if i < 5 else 0)) for i in range(10)]
+    # the loser's staged position-delete and update-image files are gone
+    assert _files_on_disk(p) == _referenced_files(p)

@@ -1347,8 +1347,9 @@ def test_merge_evolve_schema_on_column_mapped_table(spark, tmp_path):
 
 def test_nonempty_merge_counts_ride_observe(spark, tmp_path, monkeypatch):
     """The cardinality check reads its two observe() counts through
-    the private ``Observation._jo.getRow()`` handle (``merge._obs_n``).
-    A non-empty Delta MERGE must get BOTH counts from that fast path,
+    the private ``Observation._jo.getRow()`` handle (``merge._obs_n``),
+    and so does the insert count of a MERGE that touches a file.
+    A non-empty Delta MERGE must get all three from that fast path,
     never the probe-job fallback, so a pyspark upgrade that renames
     or empties the handle fails here instead of silently adding a
     Spark job to every MERGE."""
@@ -1381,11 +1382,206 @@ def test_nonempty_merge_counts_ride_observe(spark, tmp_path, monkeypatch):
         matched=[("update", None, {"v": "s.v"})],
         not_matched={"id": "s.id", "v": "s.v"},
     )
-    # (tagged, scan) counts: both collected, and equal — no fan-out
-    assert len(seen) == 2 and None not in seen, seen
+    # (tagged, scan) counts: both collected, and equal — no fan-out;
+    # then the insert count, read from the staging write's observe()
+    assert len(seen) == 3 and None not in seen, seen
     assert seen[0] == seen[1] > 0
+    assert seen[2] == 1
     got = sorted((r.id, r.v) for r in read_delta(spark, path).collect())
     assert got == [
         (0, 0.0), (1, 10.0), (2, 20.0), (3, 3.0), (4, 4.0), (5, 5.0),
         (9, 90.0),
     ]
+
+
+# ------------------------------------------- source-key file pruning
+
+
+def _eight_file_table(spark, fmt, path, conf=None):
+    """80 rows, even ids 0..158, one file per 10 ids."""
+    import pyspark.sql.functions as F
+
+    from census_asc5_data_pipeline_spark.sources import delta_io as d
+    from census_asc5_data_pipeline_spark.sources import iceberg_io as ice
+
+    df = (
+        spark.range(0, 160, 2)
+        .repartitionByRange(8, "id")
+        # nullable id: the all-NULL-key source inserts NULL ids
+        .select(
+            F.expr("nullif(id, -1)").alias("id"), (F.col("id") % 5).alias("v")
+        )
+    )
+    if fmt == "delta":
+        d.write_delta(df, path, configuration=conf)
+        assert len(d._replay(spark, path, None)[2]) == 8
+    else:
+        ice.write_iceberg(df, path)
+        _v, meta = ice._current_metadata(path)
+        assert len(ice._snapshot_files(path, meta, None)[0]) == 8
+
+
+def _read(spark, fmt, path):
+    from census_asc5_data_pipeline_spark.sources import delta_io as d
+    from census_asc5_data_pipeline_spark.sources import iceberg_io as ice
+
+    df = (d.read_delta if fmt == "delta" else ice.read_iceberg)(spark, path)
+    return sorted(
+        (tuple(r) for r in df.select(*sorted(df.columns)).collect()),
+        key=lambda r: [(x is None, 0 if x is None else x) for x in r],
+    )
+
+
+def _merge_pruned_and_not(spark, tmp_path, monkeypatch, fmt, source, on,
+                          conf=None, **kw):
+    """Run one MERGE on two fresh copies of the 8-file table, with
+    and without source-key pruning. Returns (rows, rows unpruned,
+    files scanned, files scanned unpruned); a MERGE that scans no
+    file reports 0."""
+    from census_asc5_data_pipeline_spark.sources import delta_io as d
+    from census_asc5_data_pipeline_spark.sources import iceberg_io as ice
+    from census_asc5_data_pipeline_spark.sources import merge as m
+
+    scanned: list[int] = []
+
+    def spy(real, idx):
+        def wrapped(*a, **k):
+            scanned.append(len(a[idx]))
+            return real(*a, **k)
+
+        return wrapped
+
+    if fmt == "delta":
+        monkeypatch.setattr(d, "_scan_adds", spy(d._scan_adds, 4))
+    else:
+        monkeypatch.setattr(
+            ice, "_scan_with_deletes", spy(ice._scan_with_deletes, 3)
+        )
+    out = []
+    for name, prune in (("pruned", True), ("unpruned", False)):
+        path = str(tmp_path / f"{fmt}_{name}")
+        _eight_file_table(spark, fmt, path, conf)
+        scanned.clear()
+        with monkeypatch.context() as mp:
+            if not prune:
+                mp.setattr(
+                    m, "_merge_candidates", lambda *a: a[4]  # live
+                )
+            m.merge_into(spark, fmt, path, source, on, **kw)
+        n = sum(scanned)
+        out.append((_read(spark, fmt, path), n))
+    (rows, n), (rows0, n0) = out
+    return rows, rows0, n, n0
+
+
+_UPSERT = dict(
+    matched=[("delete", "s.op = 'D'"), ("update", None, {"v": "s.v"})],
+    not_matched={"id": "s.id", "v": "s.v"},
+)
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_merge_scans_only_files_the_source_keys_reach(
+    spark, tmp_path, monkeypatch, fmt
+):
+    """Source keys 21..24 fall inside one file's [20, 38] range: the
+    tagging join, the insert anti-join and the rewrite scan that one
+    file, and the table ends as an unpruned MERGE leaves it."""
+    src = _mk(
+        spark,
+        [(21, 9, "I"), (22, 9, "U"), (24, 9, "D")],
+        "id bigint, v bigint, op string",
+    )
+    rows, rows0, n, n0 = _merge_pruned_and_not(
+        spark, tmp_path, monkeypatch, fmt, src, "t.id = s.id", **_UPSERT
+    )
+    assert (n, n0) == (1, 8)
+    assert rows == rows0
+    by_id = dict(rows)
+    assert by_id[21] == 9 and by_id[22] == 9 and 24 not in by_id
+    assert len(rows) == 80
+
+
+def test_merge_not_matched_by_source_still_reaches_every_file(
+    spark, tmp_path, monkeypatch
+):
+    """WHEN NOT MATCHED BY SOURCE acts on target rows outside the
+    source key range, so nothing is pruned."""
+    src = _mk(spark, [(22, 9, "U")], "id bigint, v bigint, op string")
+    rows, rows0, n, n0 = _merge_pruned_and_not(
+        spark, tmp_path, monkeypatch, "delta", src, "t.id = s.id",
+        matched=[("update", None, {"v": "s.v"})],
+        not_matched_by_source=[("delete", "t.id >= 150")],
+    )
+    assert n == n0 == 8
+    assert rows == rows0
+    assert max(i for i, _v in rows) == 148 and dict(rows)[22] == 9
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_merge_all_null_source_keys_insert_everything(
+    spark, tmp_path, monkeypatch, fmt
+):
+    """min() of an all-NULL key is NULL: no target row can match, no
+    file is scanned, and every source row goes through the insert."""
+    src = _mk(
+        spark,
+        [(None, 7, "I"), (None, 8, "U")],
+        "id bigint, v bigint, op string",
+    )
+    rows, rows0, n, n0 = _merge_pruned_and_not(
+        spark, tmp_path, monkeypatch, fmt, src, "t.id = s.id", **_UPSERT
+    )
+    assert (n, n0) == (0, 8)
+    assert rows == rows0
+    assert sorted(v for i, v in rows if i is None) == [7, 8]
+
+
+@pytest.mark.parametrize(
+    "on, cols, conf",
+    [
+        ("t.id = s.id + 1", "id bigint", None),
+        ("t.id = s.id", "id string", None),
+        ("t.id <=> s.id", "id bigint", None),
+        ("t.id = s.id OR t.v = s.v", "id bigint", None),
+        # no min/max stats for any column: pruning has nothing to use
+        (
+            "t.id = s.id",
+            "id bigint",
+            {"delta.dataSkippingNumIndexedCols": "0"},
+        ),
+    ],
+)
+def test_merge_ineligible_on_does_not_prune(
+    spark, tmp_path, monkeypatch, on, cols, conf
+):
+    """An expression key, a string key against an int key, the
+    null-safe ``<=>``, a top-level OR and a table without key stats
+    all keep every live file, with unchanged results."""
+    keys = ["21", "22"] if "string" in cols else [21, 22]
+    src = _mk(
+        spark, [(k, 9, "U") for k in keys], f"{cols}, v bigint, op string"
+    )
+    rows, rows0, n, n0 = _merge_pruned_and_not(
+        spark, tmp_path, monkeypatch, "delta", src, on, conf=conf,
+        matched=[("update", None, {"v": "s.v"})],
+    )
+    assert n == n0 == 8
+    assert rows == rows0
+
+
+def test_merge_evolve_schema_pruned_to_nothing_still_widens(
+    spark, tmp_path, monkeypatch
+):
+    """A MERGE whose source keys reach no file scans nothing, but the
+    evolve_schema widening still commits (the no-op decision uses the
+    unpruned live set)."""
+    src = _mk(spark, [(1001, 9, "n")], "id bigint, v bigint, note string")
+    rows, rows0, n, n0 = _merge_pruned_and_not(
+        spark, tmp_path, monkeypatch, "delta", src, "t.id = s.id",
+        matched=[("update", None, {"v": "s.v"})],
+        evolve_schema=True,
+    )
+    assert (n, n0) == (0, 8)
+    assert rows == rows0
+    assert len(rows) == 80 and all(len(r) == 3 for r in rows)
