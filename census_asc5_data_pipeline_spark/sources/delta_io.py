@@ -49,11 +49,19 @@ How this reader maps it to Spark — scale notes:
 
 The writer emits protocol (1, 2), metaData with the Spark schema
 JSON (Delta's ``schemaString`` IS Spark's ``StructType.json()``),
-and add/remove actions; commits are put-if-absent (``os.link`` —
-fails on an existing version, the protocol's optimistic-concurrency
-primitive) so two racing writers can't both claim a version.
-``create_checkpoint`` writes the compacted parquet + pointer so logs
-can be vacuumed.
+and add/remove actions. Every log version is published through ONE
+function, :func:`_commit_delta` (the twin of
+``iceberg_io._commit_metadata``). Its commit point is the
+put-if-absent link of ``_delta_log/<v>.json`` (``os.link`` fails on
+an existing version — the protocol's optimistic-concurrency
+primitive), so two racing writers can't both claim a version. Each
+verb hands it a ``build(v)`` that runs against the version it is
+about to claim — metadata verbs replay ``v - 1``, DML re-checks the
+files it planned against — and that runs again at the next version
+when the claim is lost. ``staged`` holds only the files the commit
+wrote (new data, cdc and deletion-vector files): a build that aborts
+deletes them. ``create_checkpoint`` writes the compacted parquet +
+pointer so logs can be vacuumed.
 """
 
 from __future__ import annotations
@@ -626,56 +634,31 @@ def set_domain_metadata(
             "only the owning feature's writer may modify it"
         )
     now_ms = int(time.time() * 1000)
-    while True:
-        protocol, meta, _adds, _tx = _replay(spark, path, None)
-        _writer_gate(protocol, meta, "SET DOMAIN METADATA")
-        feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if "domainMetadata" not in feats_w:
-            imp_r, imp_w = _implied_features(protocol)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": max(
-                        int(protocol.get("minReaderVersion", 1)), 1
-                    ),
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": sorted(imp_r)}
-                        if int(protocol.get("minReaderVersion", 1)) >= 3
-                        else {}
-                    ),
-                    "writerFeatures": sorted(
-                        imp_w | {"domainMetadata"}
-                    ),
-                }
-            }
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET DOMAIN METADATA",
-                    "operationParameters": {
-                        "domain": domain,
-                        "removed": removed,
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": str(configuration),
-                    "removed": bool(removed),
-                }
-            },
-        ]
-        next_v = _next_version(path)
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+    return _meta_only_commit(
+        spark, path, "SET DOMAIN METADATA",
+        lambda protocol, _meta, _adds, _v: [
+            _commit_info(
+                "SET DOMAIN METADATA",
+                {"domain": domain, "removed": removed},
+                now_ms,
+            ),
+            _protocol_with(protocol, writer={"domainMetadata"}),
+            _domain_action(domain, str(configuration), bool(removed)),
+        ],
+    )
+
+
+def _domain_action(
+    domain: str, configuration: str, removed: bool = False
+) -> dict:
+    """A ``domainMetadata`` action (spec §Domain Metadata)."""
+    return {
+        "domainMetadata": {
+            "domain": domain,
+            "configuration": configuration,
+            "removed": removed,
+        }
+    }
 
 
 def clustering_columns(spark: SparkSession, path: str) -> list[str]:
@@ -714,15 +697,10 @@ def _clustering_domain_action(cols_physical: list[str]) -> dict:
     (already physical-named) clustering columns — delta-spark's
     configuration shape: ``clusteringColumns`` as a list of
     column-name PATHS (each a list of parts)."""
-    return {
-        "domainMetadata": {
-            "domain": "delta.clustering",
-            "configuration": json.dumps(
-                {"clusteringColumns": [[c] for c in cols_physical]}
-            ),
-            "removed": False,
-        }
-    }
+    return _domain_action(
+        "delta.clustering",
+        json.dumps({"clusteringColumns": [[c] for c in cols_physical]}),
+    )
 
 
 def _validate_cluster_by(
@@ -766,55 +744,30 @@ def set_clustering_columns(
     unclustered data); the next :func:`optimize_delta` reclusters on
     the new columns. Returns the committed version."""
     now_ms = int(time.time() * 1000)
-    while True:
-        protocol, meta, _adds, _tx = _replay(spark, path, None)
-        _writer_gate(protocol, meta, "CLUSTER BY")
+
+    def build(protocol, meta, _adds, _v):
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         pcols = list(meta.get("partitionColumns") or [])
         cols_l = _validate_cluster_by(cols, schema, pcols)
         physical_of = _column_mapping(meta) or {}
-        cols_p = [physical_of.get(c, c) for c in cols_l]
         feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if not ({"clustering", "clusteringW"} & feats_w) or (
+        # a table declaring clusteringW already has the feature
+        upgrade = not ({"clustering", "clusteringW"} & feats_w) or (
             "domainMetadata" not in feats_w
-        ):
-            imp_r, imp_w = _implied_features(protocol)
-            mrv = max(int(protocol.get("minReaderVersion", 1)), 1)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": mrv,
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": sorted(imp_r)}
-                        if mrv >= 3
-                        else {}
-                    ),
-                    "writerFeatures": sorted(
-                        imp_w | {"clustering", "domainMetadata"}
-                    ),
-                }
-            }
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "CLUSTER BY",
-                    "operationParameters": {
-                        "clusterBy": json.dumps(cols_l)
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
-            _clustering_domain_action(cols_p),
+        )
+        return [
+            _commit_info(
+                "CLUSTER BY", {"clusterBy": json.dumps(cols_l)}, now_ms
+            ),
+            _protocol_with(
+                protocol, writer={"clustering", "domainMetadata"}
+            ) if upgrade else None,
+            _clustering_domain_action(
+                [physical_of.get(c, c) for c in cols_l]
+            ),
         ]
-        next_v = _next_version(path)
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _meta_only_commit(spark, path, "CLUSTER BY", build)
 
 
 def enable_row_tracking(spark: SparkSession, path: str) -> int:
@@ -831,66 +784,21 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
     commit on. Returns the committed version (or the current one
     when tracking is already enabled)."""
     now_ms = int(time.time() * 1000)
-    while True:
-        protocol, meta, adds, _tx = _replay(spark, path, None)
-        _writer_gate(protocol, meta, "ENABLE ROW TRACKING")
-        cur_v = _next_version(path) - 1
+
+    def build(protocol, meta, adds, v):
         if _rt_supported(protocol) and _rt_enabled(meta):
-            return cur_v
+            return None
         conf2, _id_col, _cv_col = _rt_mint_conf(
             meta.get("configuration") or {}
         )
         conf2["delta.enableRowTracking"] = "true"
-        feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if not ({"rowTracking", "domainMetadata"} <= feats_w):
-            imp_r, imp_w = _implied_features(protocol)
-            mrv = max(int(protocol.get("minReaderVersion", 1)), 1)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": mrv,
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": sorted(imp_r)}
-                        if mrv >= 3
-                        else {}
-                    ),
-                    "writerFeatures": sorted(
-                        imp_w | {"rowTracking", "domainMetadata"}
-                    ),
-                }
-            }
-        doms = replay_domains(spark, path)
-        hwm = -1
-        raw = doms.get("delta.rowTracking")
-        if raw:
-            try:
-                hwm = int(json.loads(raw).get("rowIdHighWaterMark", -1))
-            except (ValueError, TypeError):
-                pass
-        lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "ENABLE ROW TRACKING",
-                    "operationParameters": {},
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
-            {
-                "metaData": {
-                    "id": meta.get("id"),
-                    "format": meta.get("format")
-                    or {"provider": "parquet", "options": {}},
-                    "schemaString": meta["schemaString"],
-                    "partitionColumns": list(
-                        meta.get("partitionColumns") or []
-                    ),
-                    "configuration": conf2,
-                    "createdTime": meta.get("createdTime"),
-                }
-            },
+        hwm = _rt_hwm(spark, path, v - 1)
+        lines = [
+            _commit_info("ENABLE ROW TRACKING", {}, now_ms),
+            _protocol_with(
+                protocol, writer={"rowTracking", "domainMetadata"}
+            ),
+            _meta_action(meta, configuration=conf2),
         ]
         for p_ in sorted(adds):
             a = adds[p_]
@@ -914,25 +822,13 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
             # backfill only names them — but the original version is
             # unknowable from the add alone, so the spec lets the
             # assigning commit stand in
-            new_add["defaultRowCommitVersion"] = cur_v + 1
+            new_add["defaultRowCommitVersion"] = v
             hwm += n
             lines.append({"add": new_add})
-        lines.append(
-            {
-                "domainMetadata": {
-                    "domain": "delta.rowTracking",
-                    "configuration": json.dumps(
-                        {"rowIdHighWaterMark": int(hwm)}
-                    ),
-                    "removed": False,
-                }
-            }
-        )
-        try:
-            _put_if_absent_commit(path, cur_v + 1, lines)
-            return cur_v + 1
-        except FileExistsError:
-            continue
+        lines.append(_rt_domain_action(hwm))
+        return lines
+
+    return _meta_only_commit(spark, path, "ENABLE ROW TRACKING", build)
 
 
 def _reader_gate(protocol: dict, meta: dict, path: str) -> None:
@@ -2263,15 +2159,6 @@ def _check_constraints(
             )
 
 
-def _partition_cast(value: str | None, dtype: T.DataType):
-    """Spec: partitionValues serializes every value as a string (null
-    as JSON null / hive default marker); cast back via Spark so the
-    string→type rules match the connector's."""
-    if value is None or value == _HIVE_NULL:
-        return F.lit(None).cast(dtype)
-    return F.lit(value).cast(dtype)
-
-
 def _commit_timestamp_ms(path: str, v: int) -> int:
     """A commit's timestamp: ``commitInfo.inCommitTimestamp`` when
     the table stamps it (r15 — PROTOCOL.md §In-Commit Timestamps:
@@ -2595,6 +2482,37 @@ def _rt_mint_conf(conf: dict) -> tuple[dict, str, str]:
     return conf, id_col, cv_col
 
 
+def _rt_preserve_plan(
+    protocol: dict, meta: dict
+) -> tuple[dict, dict | None, str | None, str | None]:
+    """Row-tracking preservation for a rewrite (r16): once ids are
+    stable (rowTracking supported AND enabled), rewritten rows carry
+    their id / commit version through the materialized columns.
+    Returns (meta, meta_line, id_col, cv_col): a foreign enabled table
+    without materialized names gets them minted into ``meta`` and a
+    ``meta_line`` committing them in the SAME commit (delta-spark
+    behavior; else None); the names are None when ids are not
+    stable."""
+    if not (_rt_supported(protocol) and _rt_enabled(meta)):
+        return meta, None, None, None
+    conf0 = meta.get("configuration") or {}
+    conf2, mat_id, mat_cv = _rt_mint_conf(conf0)
+    if conf2 == conf0:
+        return meta, None, mat_id, mat_cv
+    meta = dict(meta, configuration=conf2)
+    return meta, _meta_action(meta), mat_id, mat_cv
+
+
+def _rt_hwm(spark: SparkSession, path: str, version: int) -> int:
+    """The ``delta.rowTracking`` domain's rowIdHighWaterMark at
+    ``version`` (-1 when unset or unreadable)."""
+    raw = replay_domains(spark, path, version).get("delta.rowTracking")
+    try:
+        return int(json.loads(raw).get("rowIdHighWaterMark", -1))
+    except (ValueError, TypeError):
+        return -1
+
+
 def _rt_add_num_records(path: str, add: dict) -> int:
     """An add action's row count — from its ``stats`` when present,
     else the staged file's parquet footer (stats-disabled tables):
@@ -2629,27 +2547,20 @@ def _stamp_row_tracking(
     a contiguous ``baseRowId`` block above the ``delta.rowTracking``
     domain's high-water mark, stamp ``defaultRowCommitVersion`` with
     the version being committed, and advance the domain in the SAME
-    commit. ``fresh_adds`` are the add LINES the caller staged new —
-    preserved re-adds (DV retire, RESTORE, shallow clone) keep their
-    ids by dict copy and are never passed. Re-entrant under the
-    put-if-absent retry: the stamp recomputes from the hwm that
-    actually precedes the commit. No-op unless the protocol (the
-    lines' own protocol action wins — creation/backfill) declares
-    rowTracking."""
+    commit. ``fresh_adds`` are the add LINES naming files the commit
+    staged (:func:`_commit_delta` picks them by its ``staged`` list)
+    — preserved re-adds (DV retire, RESTORE, shallow clone) keep
+    their ids by dict copy and are never passed. Re-entrant under the
+    put-if-absent retry: the stamp recomputes from the hwm at
+    ``next_v - 1``, the version that actually precedes the commit.
+    No-op unless the protocol (the lines' own protocol action wins —
+    creation/backfill) declares rowTracking."""
     proto = next(
         (ln["protocol"] for ln in lines if "protocol" in ln), protocol
     )
-    if not _rt_supported(proto or {}):
+    if not fresh_adds or not _rt_supported(proto or {}):
         return
-    hwm = -1
-    if next_v > 0:
-        doms = replay_domains(spark, path)
-        raw = doms.get("delta.rowTracking")
-        if raw:
-            try:
-                hwm = int(json.loads(raw).get("rowIdHighWaterMark", -1))
-            except (ValueError, TypeError):
-                hwm = -1
+    hwm = _rt_hwm(spark, path, next_v - 1) if next_v > 0 else -1
     # a pre-seeded domain action in this commit (backfill) wins
     for ln in lines:
         dm = ln.get("domainMetadata")
@@ -2667,8 +2578,6 @@ def _stamp_row_tracking(
                 )
             except (ValueError, TypeError):
                 pass
-    if not fresh_adds:
-        return
     for ln in fresh_adds:
         a = ln["add"]
         n = _rt_add_num_records(path, a)
@@ -2682,16 +2591,13 @@ def _stamp_row_tracking(
         if (ln.get("domainMetadata") or {}).get("domain")
         != "delta.rowTracking"
     ]
-    lines.append(
-        {
-            "domainMetadata": {
-                "domain": "delta.rowTracking",
-                "configuration": json.dumps(
-                    {"rowIdHighWaterMark": int(hwm)}
-                ),
-                "removed": False,
-            }
-        }
+    lines.append(_rt_domain_action(hwm))
+
+
+def _rt_domain_action(hwm: int) -> dict:
+    """The ``delta.rowTracking`` domainMetadata action at ``hwm``."""
+    return _domain_action(
+        "delta.rowTracking", json.dumps({"rowIdHighWaterMark": int(hwm)})
     )
 
 
@@ -3363,9 +3269,9 @@ def alter_delta_column_type(
             f"ALTER COLUMN TYPE to nested type {new_type!r} is out "
             "of scope"
         )
-    while True:
-        protocol, meta, _adds, _tx = _replay(spark, path, None)
-        _writer_gate(protocol, meta, "ALTER COLUMN TYPE")
+    now_ms = int(time.time() * 1000)
+
+    def build(protocol, meta, _adds, _v):
         sj = json.loads(meta["schemaString"])
         field = next(
             (f for f in sj["fields"] if f["name"] == column), None
@@ -3403,46 +3309,23 @@ def alter_delta_column_type(
         field["metadata"] = md
         conf = dict(meta.get("configuration") or {})
         conf["delta.enableTypeWidening"] = "true"
-        feats_r = set(protocol.get("readerFeatures") or [])
-        feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if "typeWidening" not in feats_w or "typeWidening" not in feats_r:
-            imp_r, imp_w = _implied_features(protocol)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(imp_r | {"typeWidening"}),
-                    "writerFeatures": sorted(imp_w | {"typeWidening"}),
-                }
-            }
-        new_meta = dict(
-            meta,
-            schemaString=json.dumps(sj),
-            configuration=conf,
-        )
-        next_v = _next_version(path)
-        lines = [
+        return [
+            _commit_info(
+                "ALTER COLUMN TYPE",
+                {"column": column, "fromType": old_t, "toType": new_t},
+                now_ms,
+            ),
+            _protocol_with(
+                protocol, reader={"typeWidening"}, writer={"typeWidening"}
+            ),
             {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "ALTER COLUMN TYPE",
-                    "operationParameters": {
-                        "column": column,
-                        "fromType": old_t,
-                        "toType": new_t,
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
+                "metaData": dict(
+                    meta, schemaString=json.dumps(sj), configuration=conf
+                )
             },
-            *([proto_line] if proto_line else []),
-            {"metaData": new_meta},
         ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _meta_only_commit(spark, path, "ALTER COLUMN TYPE", build)
 
 
 def set_delta_properties(
@@ -3458,9 +3341,8 @@ def set_delta_properties(
     CONSTRAINT: the existing rows are scanned and the commit refuses
     if any violate (delta-spark behavior — a constraint must hold for
     the whole table, not just future writes)."""
-    while True:
-        _p, meta, _adds, _tx = _replay(spark, path, None)
-        _writer_gate(_p, meta, "SET TBLPROPERTIES")
+
+    def build(_p, meta, adds, v):
         if (
             str(
                 props.get("delta.enableRowTracking", "")
@@ -3482,21 +3364,20 @@ def set_delta_properties(
             and str(k).startswith("delta.constraints.")
             and (meta.get("configuration") or {}).get(str(k)) != str(v)
         ]
-        if new_checks and _adds:
-            cur = read_delta(spark, path)
+        if new_checks and adds:
+            cur = read_delta(spark, path, version=v - 1)
             fake_meta = {
                 "configuration": {str(k): v for k, v in new_checks},
                 "schemaString": '{"type":"struct","fields":[]}',
             }
             _check_constraints(cur, fake_meta, "ADD CONSTRAINT")
-        next_v = _next_version(path)
         now_ms = int(time.time() * 1000)
         new_meta = dict(meta)
         merged = dict(meta.get("configuration") or {})
         cur_mode = merged.get("delta.columnMapping.mode", "none")
-        for k, v in props.items():
+        for k, val in props.items():
             if str(k) == "delta.columnMapping.mode" and (
-                "none" if v is None else str(v)
+                "none" if val is None else str(val)
             ) != str(cur_mode):
                 # the mapping mode is structural, not a knob: data
                 # files are written under the mode's naming — removing
@@ -3507,15 +3388,15 @@ def set_delta_properties(
                 # Either direction needs a table migration, so refuse.
                 raise ValueError(
                     "delta.columnMapping.mode cannot change on an "
-                    f"existing table ({cur_mode!r} -> {v!r}) — the "
+                    f"existing table ({cur_mode!r} -> {val!r}) — the "
                     "data files are written under the current mode's "
                     "naming; set it at CREATE TABLE "
                     "(write_delta(configuration=...)) instead"
                 )
-            if v is None:  # UNSET TBLPROPERTIES (the iceberg twin)
+            if val is None:  # UNSET TBLPROPERTIES (the iceberg twin)
                 merged.pop(str(k), None)
             else:
-                merged[str(k)] = str(v)
+                merged[str(k)] = str(val)
         new_meta["configuration"] = merged
         proto_line: dict | None = None
         pol = props.get("delta.checkpointPolicy")
@@ -3528,18 +3409,9 @@ def set_delta_properties(
             # (PROTOCOL.md §V2 Checkpoint): the SAME commit that sets
             # the policy upgrades the protocol so legacy readers
             # refuse instead of ignoring the UUID-named checkpoint
-            feats_r = set(_p.get("readerFeatures") or [])
-            feats_w = set(_p.get("writerFeatures") or [])
-            if "v2Checkpoint" not in feats_r or "v2Checkpoint" not in feats_w:
-                imp_r, imp_w = _implied_features(_p)
-                proto_line = {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(imp_r | {"v2Checkpoint"}),
-                        "writerFeatures": sorted(imp_w | {"v2Checkpoint"}),
-                    }
-                }
+            proto_line = _protocol_with(
+                _p, reader={"v2Checkpoint"}, writer={"v2Checkpoint"}
+            )
         ict_on = (
             str(props.get("delta.enableInCommitTimestamps", "")).lower()
             == "true"
@@ -3557,49 +3429,25 @@ def set_delta_properties(
             # provenance properties naming where the clock switched —
             # time travel below the enablement version keeps using
             # file timestamps, per spec
-            merged["delta.inCommitTimestampEnablementVersion"] = str(
-                next_v
-            )
+            merged["delta.inCommitTimestampEnablementVersion"] = str(v)
             merged["delta.inCommitTimestampEnablementTimestamp"] = str(
                 now_ms
             )
-            feats_w = set(_p.get("writerFeatures") or [])
-            if "inCommitTimestamp" not in feats_w and proto_line is None:
-                imp_r, imp_w = _implied_features(_p)
-                mr = int(_p.get("minReaderVersion", 1))
-                proto_line = {
-                    "protocol": {
-                        "minReaderVersion": mr,
-                        "minWriterVersion": 7,
-                        **(
-                            {"readerFeatures": sorted(imp_r)}
-                            if mr >= 3
-                            else {}
-                        ),
-                        "writerFeatures": sorted(
-                            imp_w | {"inCommitTimestamp"}
-                        ),
-                    }
-                }
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps(props, sort_keys=True)
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
+            if proto_line is None:
+                proto_line = _protocol_with(
+                    _p, writer={"inCommitTimestamp"}
+                )
+        return [
+            _commit_info(
+                "SET TBLPROPERTIES",
+                {"properties": json.dumps(props, sort_keys=True)},
+                now_ms,
+            ),
+            proto_line,
             {"metaData": new_meta},
         ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _meta_only_commit(spark, path, "SET TBLPROPERTIES", build)
 
 
 def add_delta_columns(
@@ -3619,9 +3467,9 @@ def add_delta_columns(
     new = T.StructType.fromDDL(cols) if isinstance(cols, str) else cols
     if not new.fields:
         raise ValueError("ADD COLUMNS needs at least one column")
+    now_ms = int(time.time() * 1000)
 
-    def build(protocol: dict, meta: dict) -> dict:
-        _writer_gate(protocol, meta, "ADD COLUMNS")
+    def build(_p, meta, _adds, _v):
         sj = json.loads(meta["schemaString"])
         existing = {f["name"] for f in sj["fields"]}
         dup = [f.name for f in new.fields if f.name in existing]
@@ -3654,47 +3502,48 @@ def add_delta_columns(
             fields.append(fd)
         if mapped:
             conf["delta.columnMapping.maxColumnId"] = str(next_id)
-        return dict(
-            meta,
-            schemaString=json.dumps({"type": "struct", "fields": fields}),
-            configuration=conf,
-        )
+        return [
+            _commit_info(
+                "ADD COLUMNS",
+                {"columns": [f.name for f in new.fields]},
+                now_ms,
+            ),
+            {
+                "metaData": dict(
+                    meta,
+                    schemaString=json.dumps(
+                        {"type": "struct", "fields": fields}
+                    ),
+                    configuration=conf,
+                )
+            },
+        ]
 
-    return _meta_only_commit(
-        spark, path, build, "ADD COLUMNS",
-        {"columns": [f.name for f in new.fields]},
-    )
+    return _meta_only_commit(spark, path, "ADD COLUMNS", build)
 
 
 def _meta_only_commit(
-    spark: SparkSession, path: str, build, operation: str, params: dict
+    spark: SparkSession, path: str, operation: str, build
 ) -> int:
-    """Commit a metaData-only change (the ADD/RENAME/DROP COLUMNS and
-    SET TBLPROPERTIES shape): one commitInfo + metaData commit at the
-    next version, put-if-absent. ``build(protocol, meta) -> new_meta``
-    re-runs against a FRESH replay on every collision retry, so a
-    concurrent property/schema commit is never clobbered with a
-    stale base."""
-    while True:
-        protocol, meta, _adds, _tx = _replay(spark, path, None)
-        new_meta = build(protocol, meta)
-        next_v = _next_version(path)
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": operation,
-                    "operationParameters": params,
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            {"metaData": new_meta},
-        ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+    """The metadata verbs' commit (SET TBLPROPERTIES, ADD/RENAME/DROP
+    COLUMNS, ALTER COLUMN TYPE, CLUSTER BY, domain metadata, row
+    tracking enablement, RESTORE) through :func:`_commit_delta`: replay
+    the table at ``v - 1`` — the version just below the one being
+    claimed, so a concurrent commit is never clobbered with a stale
+    base — run the writer gate for ``operation``, then
+    ``build(protocol, meta, adds, v)`` returns the commit's lines
+    (commitInfo first; a None entry, a :func:`_protocol_with` upgrade
+    the table does not need, is dropped) or None to commit nothing."""
+
+    def at(v: int):
+        protocol, meta, adds, _tx = _replay(spark, path, v - 1)
+        _writer_gate(protocol, meta, operation)
+        lines = build(protocol, meta, adds, v)
+        if lines is None:
+            return None
+        return protocol, meta, [ln for ln in lines if ln is not None]
+
+    return _commit_delta(spark, path, at)
 
 
 def _constraint_references(meta: dict, col: str) -> list[str]:
@@ -3723,9 +3572,9 @@ def rename_delta_column(
     delta.columnMapping.mode=name for renames for the same reason).
     partitionColumns entries rename in the same commit. Returns the
     committed version."""
+    now_ms = int(time.time() * 1000)
 
-    def build(protocol: dict, meta: dict) -> dict:
-        _writer_gate(protocol, meta, "RENAME COLUMN")
+    def build(_p, meta, _adds, _v):
         if _column_mapping(meta) is None:
             raise NotImplementedError(
                 "RENAME COLUMN requires delta.columnMapping.mode=name "
@@ -3754,11 +3603,12 @@ def rename_delta_column(
             new_meta["partitionColumns"] = [
                 new if c == old else c for c in pcols
             ]
-        return new_meta
+        return [
+            _commit_info("RENAME COLUMN", {"from": old, "to": new}, now_ms),
+            {"metaData": new_meta},
+        ]
 
-    return _meta_only_commit(
-        spark, path, build, "RENAME COLUMN", {"from": old, "to": new}
-    )
+    return _meta_only_commit(spark, path, "RENAME COLUMN", build)
 
 
 def drop_delta_columns(
@@ -3770,9 +3620,9 @@ def drop_delta_columns(
     keep the physical column bytes (reclaimed only by a rewrite);
     scans project it away. Partition columns and constraint-referenced
     columns refuse. Returns the committed version."""
+    now_ms = int(time.time() * 1000)
 
-    def build(protocol: dict, meta: dict) -> dict:
-        _writer_gate(protocol, meta, "DROP COLUMNS")
+    def build(_p, meta, _adds, _v):
         if _column_mapping(meta) is None:
             raise NotImplementedError(
                 "DROP COLUMN requires delta.columnMapping.mode=name — "
@@ -3798,11 +3648,12 @@ def drop_delta_columns(
                     f"{refs} — drop the constraint(s) first"
                 )
         sj["fields"] = [f for f in sj["fields"] if f["name"] not in cols]
-        return dict(meta, schemaString=json.dumps(sj))
+        return [
+            _commit_info("DROP COLUMNS", {"columns": list(cols)}, now_ms),
+            {"metaData": dict(meta, schemaString=json.dumps(sj))},
+        ]
 
-    return _meta_only_commit(
-        spark, path, build, "DROP COLUMNS", {"columns": list(cols)}
-    )
+    return _meta_only_commit(spark, path, "DROP COLUMNS", build)
 
 
 def delta_tail_fold(
@@ -3914,10 +3765,174 @@ def _stamp_ict(path: str, version: int, lines: list[dict]) -> None:
     )
 
 
+def _commit_info(op: str, params: dict, ts: int) -> dict:
+    """The ``commitInfo`` action every engine commit leads with."""
+    return {
+        "commitInfo": {
+            "timestamp": ts,
+            "operation": op,
+            "operationParameters": params,
+            "engineInfo": "census_asc5_data_pipeline_spark delta_io",
+        }
+    }
+
+
+def _protocol_with(
+    protocol: dict, reader: set[str] = frozenset(),
+    writer: set[str] = frozenset(),
+) -> dict | None:
+    """The ``protocol`` action that adds the ``reader`` / ``writer``
+    table features to ``protocol``, or None when it declares them
+    all. The upgrade goes to writer 7 (reader 3 when a reader feature
+    is added) and carries every feature the old legacy versions
+    implied (:func:`_implied_features`) — e.g. a (2,5) column-mapped
+    table's columnMapping must survive it."""
+    if set(reader) <= set(protocol.get("readerFeatures") or []) and set(
+        writer
+    ) <= set(protocol.get("writerFeatures") or []):
+        return None
+    imp_r, imp_w = _implied_features(protocol)
+    mrv = 3 if reader else max(int(protocol.get("minReaderVersion", 1)), 1)
+    return {
+        "protocol": {
+            "minReaderVersion": mrv,
+            "minWriterVersion": 7,
+            **(
+                {"readerFeatures": sorted(imp_r | set(reader))}
+                if mrv >= 3
+                else {}
+            ),
+            "writerFeatures": sorted(imp_w | set(writer)),
+        }
+    }
+
+
+def _meta_action(meta: dict, **changes) -> dict:
+    """A full ``metaData`` action carrying ``meta``'s six spec fields,
+    with ``changes`` applied."""
+    return {
+        "metaData": {
+            "id": meta.get("id"),
+            "format": meta.get("format")
+            or {"provider": "parquet", "options": {}},
+            "schemaString": meta.get("schemaString"),
+            "partitionColumns": list(meta.get("partitionColumns") or []),
+            "configuration": meta.get("configuration") or {},
+            "createdTime": meta.get("createdTime"),
+            **changes,
+        }
+    }
+
+
+def _staged_paths(actions: list[dict]) -> list[str]:
+    """The file paths of freshly staged add / cdc actions — the
+    ``staged`` list :func:`_commit_delta` takes."""
+    return [next(iter(a.values()))["path"] for a in actions]
+
+
+def _check_planned(
+    spark: SparkSession,
+    path: str,
+    planned: dict[str, dict | None],
+    verb: str,
+    live: dict[str, dict] | None = None,
+) -> None:
+    """The DML commit-time re-check: every file the commit removes
+    (``planned``: path → the deletionVector it was planned against)
+    must still be live with that DV. ``live`` is the current live set
+    when the caller already replayed; else only the planned adds are
+    fetched (:func:`_live_subset`)."""
+    if live is None:
+        live = _live_subset(spark, path, frozenset(planned))
+    for p_, dv in planned.items():
+        cur = live.get(p_)
+        if cur is None or cur.get("deletionVector") != dv:
+            raise ValueError(
+                f"concurrent commit changed {p_!r} since this {verb} "
+                "was planned — aborting without committing (re-run "
+                "against the new state)"
+            )
+
+
+def _check_identity_basis(
+    meta: dict, basis: dict[str, int | None], verb: str
+) -> None:
+    """Abort when another writer allocated identity values since this
+    write was planned: committing ours would reuse the same range
+    (duplicate keys)."""
+    if {n: h for n, _d, _s, _st, h, _a in _identity_columns(meta)} != basis:
+        raise ValueError(
+            "concurrent identity allocation detected (high water mark "
+            f"moved since this {verb} was planned) — re-run it"
+        )
+
+
+def _commit_delta(
+    spark: SparkSession, path: str, build, *, staged=()
+) -> int:
+    """THE Delta commit path — every log version is published here
+    (the twin of :func:`iceberg_io._commit_metadata`). The commit
+    point is the put-if-absent link of ``_delta_log/<v>.json``
+    (:func:`_put_if_absent_commit`): version ``v`` is claimed exactly
+    once, and a writer that loses the claim reads the next version
+    and calls ``build`` again.
+
+    ``build(v)`` runs against the version it is about to claim: a
+    build that replays reads ``v - 1``, so a commit landing between
+    its replay and its claim makes the claim fail instead of being
+    overwritten, and a build planned against an older live set raises
+    (``concurrent commit changed …``). It returns None (commit
+    nothing; returns ``v - 1``) or ``(protocol, meta, lines)``: the
+    actions to publish and the protocol / metaData they were built
+    against, which the row-tracking stamp and the
+    ``delta.checkpointInterval`` cadence read unless ``lines`` carry
+    their own.
+
+    ``staged`` lists only the files this commit WROTE — new data, cdc
+    and deletion-vector files, paths as the log writes them. A build
+    that raises deletes them, as no commit references them. It is
+    never derived from the commit's ``add`` actions: a DV re-add, a
+    shallow clone and a RESTORE add live files they did not write.
+    The adds naming staged files are the fresh rows that take
+    row-tracking ids at ``v``. After the commit lands, a version the
+    interval divides writes a checkpoint. Returns the committed
+    version."""
+    fresh_paths = set(staged)
+    while True:
+        v = _next_version(path)
+        try:
+            built = build(v)
+        except Exception:
+            for p_ in fresh_paths:
+                try:
+                    os.remove(_data_file_path(path, p_))
+                except FileNotFoundError:
+                    pass
+            raise
+        if built is None:
+            return v - 1
+        protocol, meta, lines = built
+        fresh = [
+            ln for ln in lines
+            if "add" in ln and ln["add"]["path"] in fresh_paths
+        ]
+        _stamp_row_tracking(spark, path, protocol, lines, fresh, v)
+        try:
+            _put_if_absent_commit(path, v, lines)
+        except FileExistsError:
+            continue
+        meta = next(
+            (ln["metaData"] for ln in lines if "metaData" in ln), meta
+        )
+        _maybe_auto_checkpoint(spark, path, v, meta.get("configuration"))
+        return v
+
+
 def _put_if_absent_commit(path: str, version: int, lines: list[dict]) -> None:
     """The protocol's optimistic-concurrency primitive: version N's
     commit file must be created exactly once. os.link fails with
-    EEXIST if another writer won the race — callers retry at N+1."""
+    EEXIST if another writer won the race — :func:`_commit_delta`,
+    its only caller, then retries at N+1."""
     _stamp_ict(path, version, lines)
     os.makedirs(_log_dir(path), exist_ok=True)
     _put_if_absent(
@@ -4692,10 +4707,9 @@ def write_delta(
         return None
     now_ms = int(time.time() * 1000)
 
-    while True:
-        next_v = _next_version(path)
+    def build(next_v: int):
         if next_v:
-            _p, meta, adds, _txs = _replay(spark, path, None)
+            _p, meta, adds, _txs = _replay(spark, path, next_v - 1)
         else:
             _p, meta, adds = None, {}, {}
         schema_changed = False
@@ -4739,21 +4753,15 @@ def write_delta(
                         "fresh column-mapping assignments"
                     )
                 schema_changed = True
+        # COPY INTO rides this writer with its own operation tag +
+        # loaded-file list (r13): the commitInfo record IS its
+        # idempotency ledger
         lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    # COPY INTO rides this writer with its own
-                    # operation tag + loaded-file list (r13): the
-                    # commitInfo record IS its idempotency ledger
-                    "operation": commit_operation,
-                    "operationParameters": {
-                        "mode": mode.upper(),
-                        **(commit_params or {}),
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
+            _commit_info(
+                commit_operation,
+                {"mode": mode.upper(), **(commit_params or {})},
+                now_ms,
+            )
         ]
         if txn is not None:
             lines.append(
@@ -4813,19 +4821,7 @@ def write_delta(
                     )
                 )
         if identity_updates and meta:
-            # another writer may have allocated identity values since
-            # this write was planned — committing ours would reuse
-            # the same range (duplicate keys); abort instead
-            cur_basis = {
-                n: h
-                for n, _d, _s, _st, h, _a in _identity_columns(meta)
-            }
-            if cur_basis != identity_basis:
-                raise ValueError(
-                    "concurrent identity allocation detected (high "
-                    "water mark moved since this write was planned) "
-                    "— re-run the write"
-                )
+            _check_identity_basis(meta, identity_basis, "write")
         if next_v == 0 or not meta or schema_changed:
             if create_schema_json is not None and next_v == 0:
                 s_json = json.dumps(create_schema_json)
@@ -4840,57 +4836,32 @@ def write_delta(
                     {"schemaString": s_json}, identity_updates
                 )["schemaString"]
             lines.append(
-                {
-                    "metaData": {
-                        # keep the table id stable across a schema
-                        # overwrite — it's the same table
-                        "id": meta.get("id") or str(uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": s_json,
-                        "partitionColumns": pcols,
-                        "configuration": (
-                            replace_conf
-                            if schema_changed and replace_conf
-                            else meta.get("configuration") or create_conf
-                        ),
-                        "createdTime": meta.get("createdTime") or now_ms,
-                    }
-                }
+                _meta_action(
+                    meta,
+                    # keep the table id stable across a schema
+                    # overwrite — it's the same table
+                    id=meta.get("id") or str(uuid.uuid4()),
+                    schemaString=s_json,
+                    partitionColumns=pcols,
+                    configuration=(
+                        replace_conf
+                        if schema_changed and replace_conf
+                        else meta.get("configuration") or create_conf
+                    ),
+                    createdTime=meta.get("createdTime") or now_ms,
+                )
             )
         elif identity_updates:
             # identity allocation advances delta.identity.
             # highWaterMark in the SAME commit as the rows (spec
             # writer requirement)
-            stamped = _stamp_identity_hwm(meta, identity_updates)
             lines.append(
-                {
-                    "metaData": {
-                        "id": stamped.get("id"),
-                        "format": stamped.get("format")
-                        or {"provider": "parquet", "options": {}},
-                        "schemaString": stamped["schemaString"],
-                        "partitionColumns": list(
-                            stamped.get("partitionColumns") or []
-                        ),
-                        "configuration": stamped.get("configuration")
-                        or {},
-                        "createdTime": stamped.get("createdTime"),
-                    }
-                }
+                _meta_action(_stamp_identity_hwm(meta, identity_updates))
             )
         if mode == "overwrite":
             for p in sorted(adds):
                 lines.append({"remove": _remove_action(adds[p], now_ms)})
         lines.extend(add_actions)
-        _stamp_row_tracking(
-            spark,
-            path,
-            (_p if next_v else create_protocol)
-            or {},
-            lines,
-            add_actions,
-            next_v,
-        )
         c = _commit_counts(lines)
         _stamp_op_metrics(
             lines,
@@ -4906,15 +4877,11 @@ def write_delta(
                 else {}
             ),
         )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            _maybe_auto_checkpoint(
-                spark, path, next_v,
-                meta.get("configuration") or create_conf,
-            )
-            return next_v
-        except FileExistsError:
-            continue  # another writer claimed next_v: re-replay, retry
+        return _p or {}, meta, lines
+
+    return _commit_delta(
+        spark, path, build, staged=_staged_paths(add_actions)
+    )
 
 
 def _dv_retire(
@@ -4927,11 +4894,13 @@ def _dv_retire(
     lines: list[dict],
     planned: dict[str, dict | None],
     now_ms: int,
+    staged: list[str],
 ) -> int:
     """DV-retire every scan row matching ``pred``: write the merged
-    roaring sidecars, append the protocol-upgrade (when needed) and
-    the remove + DV-re-add actions to ``lines``, record the expected
-    pre-commit DV state in ``planned``. Shared by
+    roaring sidecars (their path appended to ``staged``), append the
+    protocol-upgrade (when needed) and the remove + DV-re-add actions
+    to ``lines``, record the expected pre-commit DV state in
+    ``planned``. Shared by
     :func:`delete_delta_where` (mode='dv') and
     :func:`merge.update_where` (DV-mode UPDATE = retire old positions
     + append updated rows in the same commit). Returns the number of
@@ -4941,6 +4910,7 @@ def _dv_retire(
     matched positions through the driver — O(matched rows), the
     documented DV trade."""
     from census_asc5_data_pipeline_spark.sources.deletion_vectors import (
+        dv_relative_path,
         read_dv_positions,
         write_dv_file,
     )
@@ -4965,32 +4935,14 @@ def _dv_retire(
             set(prev) | {int(p) for p in r["pos"]}
         )
     descs = write_dv_file(path, merged)
-    feats_r = set(protocol.get("readerFeatures") or [])
-    feats_w = set(protocol.get("writerFeatures") or [])
-    if (
-        int(protocol.get("minReaderVersion", 1)) < 3
-        or "deletionVectors" not in feats_r
-    ):
-        # upgrading to the feature-list protocol must carry EVERY
-        # feature the old legacy versions implied (PROTOCOL.md
-        # §Protocol Evolution) — e.g. a (2,5) column-mapped table's
-        # columnMapping must survive the upgrade or readers resolve
-        # logical names against physical files
-        imp_r, imp_w = _implied_features(protocol)
-        lines.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(
-                        imp_r | {"deletionVectors"}
-                    ),
-                    "writerFeatures": sorted(
-                        imp_w | {"deletionVectors"}
-                    ),
-                }
-            }
-        )
+    staged.append(
+        dv_relative_path(next(iter(descs.values()))["pathOrInlineDv"])
+    )
+    upgrade = _protocol_with(
+        protocol, reader={"deletionVectors"}, writer={"deletionVectors"}
+    )
+    if upgrade:
+        lines.append(upgrade)
     for base in sorted(merged):
         a = adds_by_base[base]
         planned[a["path"]] = a.get("deletionVector")
@@ -5087,27 +5039,8 @@ def delete_delta_where(
     # every survivor's stable id/commit-version via the materialized
     # columns, and the scan exposes ``_row_id`` so the DELETE
     # predicate itself may target stable ids
-    rt_preserve = _rt_supported(protocol) and _rt_enabled(meta)
-    rt_meta_line: dict | None = None
-    mat_id = mat_cv = None
-    rt_extra: list[str] = []
-    if rt_preserve:
-        conf0 = meta.get("configuration") or {}
-        conf2, mat_id, mat_cv = _rt_mint_conf(conf0)
-        if conf2 != conf0:
-            meta = dict(meta, configuration=conf2)
-            rt_meta_line = {
-                "metaData": {
-                    "id": meta.get("id"),
-                    "format": meta.get("format")
-                    or {"provider": "parquet", "options": {}},
-                    "schemaString": meta["schemaString"],
-                    "partitionColumns": pcols,
-                    "configuration": conf2,
-                    "createdTime": meta.get("createdTime"),
-                }
-            }
-        rt_extra = [mat_id, mat_cv]
+    meta, rt_meta_line, mat_id, mat_cv = _rt_preserve_plan(protocol, meta)
+    rt_preserve = mat_id is not None
     scan = _scan_adds(
         spark,
         path,
@@ -5116,7 +5049,7 @@ def delete_delta_where(
         [(None, a) for a in cand],
         keep_pos=True,
         physical_of=physical_of,
-        extra_long_cols=rt_extra,
+        extra_long_cols=[mat_id, mat_cv] if rt_preserve else [],
     )
     if rt_preserve:
         scan = _rt_stable_cols(spark, scan, cand, meta)
@@ -5124,26 +5057,18 @@ def delete_delta_where(
     adds_by_base = _adds_by_base(adds)
     now_ms = int(time.time() * 1000)
     lines: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {
-                    "predicate": predicate,
-                    "mode": mode,
-                },
-                "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-            }
-        }
+        _commit_info(
+            "DELETE", {"predicate": predicate, "mode": mode}, now_ms
+        )
     ]
     if rt_meta_line:
         lines.append(rt_meta_line)
     planned: dict[str, dict | None] = {}  # path -> expected current DV
-    new_adds: list[dict] = []
+    staged: list[str] = []  # files this commit wrote
     if mode == "dv":
         n_deleted = _dv_retire(
             spark, path, protocol, scan, pred, adds_by_base, lines,
-            planned, now_ms,
+            planned, now_ms, staged,
         )
         if not n_deleted:
             return None
@@ -5182,6 +5107,7 @@ def delete_delta_where(
             stats_cols=_stats_cols_of(meta),
             field_ids=_mapping_ids(meta),
         )
+        staged += _staged_paths(new_adds)
         for base in sorted(touched):
             a = adds_by_base[base]
             planned[a["path"]] = a.get("deletionVector")
@@ -5201,10 +5127,12 @@ def delete_delta_where(
             .select([F.col(f.name) for f in schema.fields])
             .withColumn("_change_type", F.lit("delete"))
         )
-        lines.extend(_stage_cdc_mapped(
+        cdc = _stage_cdc_mapped(
             deleted, path, pcols, physical_of,
             field_ids=_mapping_ids(meta),
-        ))
+        )
+        staged += _staged_paths(cdc)
+        lines.extend(cdc)
 
     c = _commit_counts(lines)
     _stamp_op_metrics(
@@ -5220,28 +5148,12 @@ def delete_delta_where(
         numDeletionVectorsAdded=c["dv_adds"] if mode == "dv" else None,
         numAddedChangeFiles=c["cdc"],
     )
-    while True:
-        next_v = _next_version(path)
-        live_now = _live_subset(spark, path, frozenset(planned))
-        for p_, dv in planned.items():
-            cur = live_now.get(p_)
-            if cur is None or cur.get("deletionVector") != dv:
-                raise ValueError(
-                    f"concurrent commit changed {p_!r} since this "
-                    "DELETE was planned — aborting without committing "
-                    "(re-run against the new state)"
-                )
-        _stamp_row_tracking(
-            spark, path, protocol, lines, new_adds, next_v
-        )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            _maybe_auto_checkpoint(
-                spark, path, next_v, meta.get("configuration")
-            )
-            return next_v
-        except FileExistsError:
-            continue
+
+    def build(_v: int):
+        _check_planned(spark, path, planned, "DELETE")
+        return protocol, meta, lines
+
+    return _commit_delta(spark, path, build, staged=staged)
 
 
 def commit_operation_metrics(path: str, version: int) -> dict:
@@ -6225,28 +6137,10 @@ def optimize_delta(
     # compaction must carry every surviving row's id/commit-version
     # into the rewritten files via the materialized columns — the
     # read path coalesces them over the new files' fresh base ids
-    rt_preserve = _rt_supported(_p) and _rt_enabled(meta)
-    rt_meta_line: dict | None = None
-    mat_id = mat_cv = None
+    meta, rt_meta_line, mat_id, mat_cv = _rt_preserve_plan(_p, meta)
+    rt_preserve = mat_id is not None
     read_schema = data_schema
     if rt_preserve:
-        conf0 = meta.get("configuration") or {}
-        conf2, mat_id, mat_cv = _rt_mint_conf(conf0)
-        if conf2 != conf0:
-            # a foreign enabled table without materialized names:
-            # mint them in the SAME commit (delta-spark behavior)
-            meta = dict(meta, configuration=conf2)
-            rt_meta_line = {
-                "metaData": {
-                    "id": meta.get("id"),
-                    "format": meta.get("format")
-                    or {"provider": "parquet", "options": {}},
-                    "schemaString": meta["schemaString"],
-                    "partitionColumns": pcols,
-                    "configuration": conf2,
-                    "createdTime": meta.get("createdTime"),
-                }
-            }
         missing_rt = sorted(
             a["path"]
             for a in adds.values()
@@ -6295,9 +6189,7 @@ def optimize_delta(
         }
     now_ms = int(time.time() * 1000)
     new_adds: list[dict] = []
-    removed_paths: list[str] = []
     removed_adds: dict[str, dict] = {}
-    planned_dv: dict[str, dict | None] = {}
     for key, (files, want_files) in sorted(todo.items()):
         paths = [_data_file_path(path, a["path"]) for a in files]
         src = spark.read.schema(read_schema).parquet(*paths)
@@ -6452,78 +6344,45 @@ def optimize_delta(
                 )
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        removed_paths.extend(a["path"] for a in files)
         removed_adds.update({a["path"]: a for a in files})
-        planned_dv.update(
-            {a["path"]: a.get("deletionVector") for a in files}
-        )
 
-    while True:
-        next_v = _next_version(path)
-        live_now = _live_subset(spark, path, frozenset(removed_paths))
-        gone = [
-            p_
-            for p_ in removed_paths
-            if p_ not in live_now
-            or live_now[p_].get("deletionVector") != planned_dv.get(p_)
-        ]
-        if gone:
-            raise ValueError(
-                f"concurrent commit changed {len(gone)} file(s) this "
-                "OPTIMIZE would rewrite — aborting without committing "
-                "(re-run to compact the new state)"
-            )
-        lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetFileBytes": int(target_file_bytes),
-                        **(
-                            (
-                                {"clusterBy": json.dumps(list(zorder_by))}
-                                if cluster_mode
-                                else {"zOrderBy": json.dumps(list(zorder_by))}
-                            )
-                            if zorder_by
-                            else {}
-                        ),
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
-        ]
-        if rt_meta_line:
-            lines.append(rt_meta_line)
-        for p_ in removed_paths:
-            lines.append(
-                {
-                    "remove": _remove_action(
-                        removed_adds[p_], now_ms, data_change=False
-                    )
-                }
-            )
-        lines.extend(new_adds)
-        _stamp_row_tracking(spark, path, _p, lines, new_adds, next_v)
-        c = _commit_counts(lines)
-        _stamp_op_metrics(
-            lines,
-            numAddedFiles=c["adds"],
-            numRemovedFiles=c["removes"],
-            numAddedBytes=c["add_bytes"],
-            numRemovedBytes=c["remove_bytes"],
+    params: dict = {"targetFileBytes": int(target_file_bytes)}
+    if zorder_by:
+        params["clusterBy" if cluster_mode else "zOrderBy"] = json.dumps(
+            list(zorder_by)
         )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            break
-        except FileExistsError:
-            continue
+    lines: list[dict] = [
+        _commit_info("OPTIMIZE", params, now_ms),
+        *([rt_meta_line] if rt_meta_line else []),
+        *(
+            {"remove": _remove_action(a, now_ms, data_change=False)}
+            for a in removed_adds.values()
+        ),
+        *new_adds,
+    ]
+    c = _commit_counts(lines)
+    _stamp_op_metrics(
+        lines,
+        numAddedFiles=c["adds"],
+        numRemovedFiles=c["removes"],
+        numAddedBytes=c["add_bytes"],
+        numRemovedBytes=c["remove_bytes"],
+    )
+    planned = {
+        p_: a.get("deletionVector") for p_, a in removed_adds.items()
+    }
+
+    def build(_v: int):
+        _check_planned(spark, path, planned, "OPTIMIZE")
+        return _p, meta, lines
+
     return {
         "partitions_compacted": len(todo),
         "files_before": files_total,
-        "files_after": files_total - len(removed_paths) + len(new_adds),
-        "version": next_v,
+        "files_after": files_total - len(removed_adds) + len(new_adds),
+        "version": _commit_delta(
+            spark, path, build, staged=_staged_paths(new_adds)
+        ),
     }
 
 
@@ -6687,9 +6546,7 @@ def clone_delta(
     if timestamp_ms is not None:
         version = version_as_of_timestamp_delta(src, timestamp_ms)
     protocol, meta, adds, _txns = _replay(spark, src, version)
-    if os.path.isdir(_log_dir(dst)) and (
-        delta_versions(dst) or _read_last_checkpoint(dst) is not None
-    ):
+    if _next_version(dst):
         raise ValueError(f"CLONE target {dst!r} already exists")
     now_ms = int(time.time() * 1000)
     out_adds: list[dict] = []
@@ -6750,37 +6607,14 @@ def clone_delta(
                     )
                     shutil.copy2(os.path.join(src, dv_rel), dv_dst)
         out_adds.append({"add": a})
+    params: dict = {"source": os.path.abspath(src), "shallow": bool(shallow)}
+    if version is not None:
+        params["sourceVersion"] = int(version)
     lines: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": os.path.abspath(src),
-                    "shallow": bool(shallow),
-                    **(
-                        {"sourceVersion": int(version)}
-                        if version is not None
-                        else {}
-                    ),
-                },
-                "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-            }
-        },
+        _commit_info("CLONE", params, now_ms),
         {"protocol": dict(protocol)},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),  # a different table
-                "format": meta.get("format")
-                or {"provider": "parquet", "options": {}},
-                "schemaString": meta["schemaString"],
-                "partitionColumns": list(
-                    meta.get("partitionColumns") or []
-                ),
-                "configuration": meta.get("configuration") or {},
-                "createdTime": now_ms,
-            }
-        },
+        # a different table: a new id
+        _meta_action(meta, id=str(uuid.uuid4()), createdTime=now_ms),
     ] + out_adds
     c = _commit_counts(lines)
     _stamp_op_metrics(
@@ -6790,8 +6624,16 @@ def clone_delta(
         numCopiedFiles=0 if shallow else c["adds"],
     )
     os.makedirs(dst, exist_ok=True)
-    _put_if_absent_commit(dst, 0, lines)
-    return 0
+
+    def build(v: int):
+        # a racing creator claimed version 0: the target now exists
+        if v:
+            raise ValueError(f"CLONE target {dst!r} already exists")
+        return protocol, meta, lines
+
+    # the deep copies keep their source-relative names, so a racing
+    # clone of the same source may own them too: nothing is staged
+    return _commit_delta(spark, dst, build)
 
 
 def restore_delta(
@@ -6808,20 +6650,9 @@ def restore_delta(
     the new version."""
     _p, _m, target_adds, _tx = _replay(spark, path, version)
     now_ms = int(time.time() * 1000)
-    while True:
-        _p2, meta, cur_adds, _tx2 = _replay(spark, path, None)
-        _writer_gate(_p2, meta, "RESTORE")
-        next_v = _next_version(path)
-        lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "RESTORE",
-                    "operationParameters": {"version": int(version)},
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
-        ]
+
+    def build(_p2, _meta, cur_adds, _v):
+        lines = [_commit_info("RESTORE", {"version": int(version)}, now_ms)]
         for p_ in cur_adds:
             if p_ not in target_adds:
                 lines.append(
@@ -6852,11 +6683,9 @@ def restore_delta(
                 int(a.get("size", 0) or 0) for a in target_adds.values()
             ),
         )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+        return lines
+
+    return _meta_only_commit(spark, path, "RESTORE", build)
 
 
 def register_delta_views(

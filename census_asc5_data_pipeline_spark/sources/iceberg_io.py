@@ -1002,26 +1002,6 @@ def _snapshot_files(
     return data_out, del_out
 
 
-def _live_files(
-    path: str,
-    meta: dict,
-    snapshot_id: int | None,
-    spark: SparkSession | None = None,
-) -> list[dict]:
-    """data_file dicts of the snapshot — the deletes-incapable
-    surfaces' view (compaction, change feed fallback): raises if the
-    snapshot carries row-level delete files, because returning the
-    raw data rows would resurrect deleted rows. read_iceberg handles
-    deletes via :func:`_scan_with_deletes`."""
-    data, deletes = _snapshot_files(path, meta, snapshot_id, spark)
-    if deletes:
-        raise NotImplementedError(
-            "snapshot carries v2 row-level delete files; this surface "
-            "cannot apply them — use read_iceberg (merge-on-read)"
-        )
-    return data
-
-
 def _parse_name_mapping(meta: dict) -> dict[str, int] | None:
     """``schema.name-mapping.default`` (table-spec §Column Projection;
     round-13 verdict #5) parsed to {file_column_name: field_id}: the

@@ -599,17 +599,8 @@ def _merge_delta(
     # the foreign-tracking-table merge case) and every rewritten or
     # updated row carries its id forward through the materialized
     # columns; inserts materialize NULL and take fresh base ids
-    rt_preserve = d._rt_supported(protocol) and d._rt_enabled(meta)
-    rt_conf_changed = False
-    mat_id = mat_cv = None
-    rt_extra: list[str] = []
-    if rt_preserve:
-        conf0 = meta.get("configuration") or {}
-        conf2, mat_id, mat_cv = d._rt_mint_conf(conf0)
-        if conf2 != conf0:
-            meta = dict(meta, configuration=conf2)
-            rt_conf_changed = True
-        rt_extra = [mat_id, mat_cv]
+    meta, rt_meta_line, mat_id, mat_cv = d._rt_preserve_plan(protocol, meta)
+    rt_preserve = mat_id is not None
     extra_fields: list[T.StructField] = []
     evolve_conf: dict[str, str] | None = None
     if evolve_schema:
@@ -692,7 +683,7 @@ def _merge_delta(
         [(None, a) for a in cand],
         keep_pos=True,
         physical_of=physical_of,
-        extra_long_cols=rt_extra,
+        extra_long_cols=[mat_id, mat_cv] if rt_preserve else [],
     ) if cand else spark.createDataFrame(
         [],
         T.StructType(
@@ -794,17 +785,8 @@ def _merge_delta(
                 [F.col(f"`{f.name}`") for f in schema.fields]
             )
         now_ms = int(time.time() * 1000)
-        lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "MERGE",
-                    "operationParameters": {"predicate": on},
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
-        ]
-        if extra_fields or identity_updates or rt_conf_changed:
+        lines = [d._commit_info("MERGE", {"predicate": on}, now_ms)]
+        if extra_fields or identity_updates or rt_meta_line:
             # schema evolution, the advanced identity high water mark
             # and/or freshly-minted materialized row-id column names
             # commit atomically with the row changes in ONE metaData
@@ -822,6 +804,7 @@ def _merge_delta(
             lines.append({"metaData": meta_commit})
         adds_by_base = d._adds_by_base({a["path"]: a for a in cand})
         planned: dict[str, dict | None] = {}
+        staged: list[str] = []  # files this commit wrote
         staged_rows: DataFrame | None = None
         if mode == "dv":
             # DV-retire every acted-on row (update pre-images AND deletes)
@@ -835,6 +818,7 @@ def _merge_delta(
                         F.col("t.__ri").alias("__ri"),
                     ),
                     F.lit(True), adds_by_base, lines, planned, now_ms,
+                    staged,
                 )
             if upd_tags and acted is not None:
                 # updated post-images keep their stable id; the commit
@@ -927,7 +911,6 @@ def _merge_delta(
                 if staged_rows is None
                 else staged_rows.unionByName(staged_ins)
             )
-        staged_add_lines: list[dict] = []
         if staged_rows is not None:
             d._check_constraints(staged_rows, meta, "MERGE", extra=ins_checks)
             staged_add_lines = d._stage_adds_mapped(
@@ -935,6 +918,7 @@ def _merge_delta(
                 stats_cols=d._stats_cols_of(meta),
                 field_ids=d._mapping_ids(meta),
             )
+            staged += d._staged_paths(staged_add_lines)
             lines.extend(staged_add_lines)
         if obs_ins is not None:
             n_ins = _obs_n(obs_ins)
@@ -977,12 +961,12 @@ def _merge_delta(
                 cdc = cdc_parts[0]
                 for p_ in cdc_parts[1:]:
                     cdc = cdc.unionByName(p_)
-                lines.extend(
-                    d._stage_cdc_mapped(
-                        cdc, path, pcols, physical_of,
-                        field_ids=d._mapping_ids(meta),
-                    )
+                cdc_lines = d._stage_cdc_mapped(
+                    cdc, path, pcols, physical_of,
+                    field_ids=d._mapping_ids(meta),
                 )
+                staged += d._staged_paths(cdc_lines)
+                lines.extend(cdc_lines)
         c = d._commit_counts(lines)
         dv_pairs = c["dv_adds"] if mode == "dv" else 0
         copied = None
@@ -1009,47 +993,20 @@ def _merge_delta(
             numTargetDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
             numTargetChangeFilesAdded=c["cdc"],
         )
-        while True:
-            next_v = d._next_version(path)
+
+        def build(v: int):
             if identity_updates:
-                # the hwm comparison needs the CURRENT metaData — full
-                # replay here; the non-identity path fetches only the
+                # the hwm comparison needs the metaData at v - 1 — a
+                # full replay; the non-identity path fetches only the
                 # planned adds
-                _p2, _m2, live_now, _t2 = d._replay(spark, path, None)
+                _p2, m2, live, _t2 = d._replay(spark, path, v - 1)
+                d._check_planned(spark, path, planned, "MERGE", live)
+                d._check_identity_basis(m2, identity_basis, "MERGE")
             else:
-                live_now = d._live_subset(spark, path, frozenset(planned))
-            for p_, dv in planned.items():
-                cur = live_now.get(p_)
-                if cur is None or cur.get("deletionVector") != dv:
-                    raise ValueError(
-                        f"concurrent commit changed {p_!r} since this MERGE "
-                        "was planned — aborting without committing"
-                    )
-            if identity_updates:
-                # the write_delta concurrent-allocation abort, verbatim:
-                # committing a range another writer also allocated would
-                # duplicate keys
-                cur_basis = {
-                    n: h
-                    for n, _d, _s, _st, h, _a in d._identity_columns(_m2)
-                }
-                if cur_basis != identity_basis:
-                    raise ValueError(
-                        "concurrent identity allocation detected (high "
-                        "water mark moved since this MERGE was planned) "
-                        "— re-run the merge"
-                    )
-            d._stamp_row_tracking(
-                spark, path, protocol, lines, staged_add_lines, next_v
-            )
-            try:
-                d._put_if_absent_commit(path, next_v, lines)
-                d._maybe_auto_checkpoint(
-                    spark, path, next_v, meta.get("configuration")
-                )
-                return next_v
-            except FileExistsError:
-                continue
+                d._check_planned(spark, path, planned, "MERGE")
+            return protocol, meta, lines
+
+        return d._commit_delta(spark, path, build, staged=staged)
 
     ins_cache = None
     if not cand:
@@ -2070,27 +2027,8 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
     pcols = list(meta.get("partitionColumns") or [])
     # row tracking (r16): preserve stable ids through the rewrite and
     # expose _row_id to the WHERE predicate (the _merge_delta shape)
-    rt_preserve = d._rt_supported(protocol) and d._rt_enabled(meta)
-    rt_meta_line = None
-    mat_id = mat_cv = None
-    rt_extra: list[str] = []
-    if rt_preserve:
-        conf0 = meta.get("configuration") or {}
-        conf2, mat_id, mat_cv = d._rt_mint_conf(conf0)
-        if conf2 != conf0:
-            meta = dict(meta, configuration=conf2)
-            rt_meta_line = {
-                "metaData": {
-                    "id": meta.get("id"),
-                    "format": meta.get("format")
-                    or {"provider": "parquet", "options": {}},
-                    "schemaString": meta["schemaString"],
-                    "partitionColumns": pcols,
-                    "configuration": conf2,
-                    "createdTime": meta.get("createdTime"),
-                }
-            }
-        rt_extra = [mat_id, mat_cv]
+    meta, rt_meta_line, mat_id, mat_cv = d._rt_preserve_plan(protocol, meta)
+    rt_preserve = mat_id is not None
     gens = d._generated_columns(meta)
     bad_gen = {n for n, _e, _t in gens} & set(sets)
     if bad_gen:
@@ -2137,7 +2075,7 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
         [(None, a) for a in cand],
         keep_pos=True,
         physical_of=physical_of,
-        extra_long_cols=rt_extra,
+        extra_long_cols=[mat_id, mat_cv] if rt_preserve else [],
     )
     if rt_preserve:
         scan = d._rt_stable_cols(spark, scan, cand, meta)
@@ -2150,20 +2088,11 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
     matched = scan.filter(pred).persist()
     adds_by_base = d._adds_by_base(adds)
     now_ms = int(time.time() * 1000)
-    lines: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-            }
-        }
-    ]
+    lines = [d._commit_info("UPDATE", {"predicate": predicate}, now_ms)]
     if rt_meta_line:
         lines.append(rt_meta_line)
     planned: dict[str, dict | None] = {}
-    staged_add_lines: list[dict] = []
+    staged: list[str] = []  # files this commit wrote
     try:
         updated = d._regenerate(
             matched.select(
@@ -2186,7 +2115,7 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
             # delta-spark DV UPDATE commit shape
             n_upd = d._dv_retire(
                 spark, path, protocol, matched, F.lit(True), adds_by_base,
-                lines, planned, now_ms,
+                lines, planned, now_ms, staged,
             )
             if not n_upd:
                 return None
@@ -2195,6 +2124,7 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
                 stats_cols=d._stats_cols_of(meta),
                 field_ids=d._mapping_ids(meta),
             )
+            staged += d._staged_paths(staged_add_lines)
             lines.extend(staged_add_lines)
         else:
             # per-file matched-row counts ride the SAME shuffle the old
@@ -2236,6 +2166,7 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
                 stats_cols=d._stats_cols_of(meta),
                 field_ids=d._mapping_ids(meta),
             )
+            staged += d._staged_paths(staged_add_lines)
             lines.extend(staged_add_lines)
             for base in sorted(touched):
                 a = adds_by_base[base]
@@ -2250,12 +2181,12 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
             post = updated.select(
                 [F.col(f"`{f.name}`") for f in schema.fields]
             ).withColumn("_change_type", F.lit("update_postimage"))
-            lines.extend(
-                d._stage_cdc_mapped(
-                    pre.unionByName(post), path, pcols, physical_of,
-                    field_ids=d._mapping_ids(meta),
-                )
+            cdc_lines = d._stage_cdc_mapped(
+                pre.unionByName(post), path, pcols, physical_of,
+                field_ids=d._mapping_ids(meta),
             )
+            staged += d._staged_paths(cdc_lines)
+            lines.extend(cdc_lines)
         c = d._commit_counts(lines)
         dv_pairs = c["dv_adds"] if mode == "dv" else 0
         d._stamp_op_metrics(
@@ -2271,28 +2202,12 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
             numDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
             numAddedChangeFiles=c["cdc"],
         )
-        while True:
-            next_v = d._next_version(path)
-            live_now = d._live_subset(spark, path, frozenset(planned))
-            for p_, dv in planned.items():
-                cur = live_now.get(p_)
-                if cur is None or cur.get("deletionVector") != dv:
-                    raise ValueError(
-                        f"concurrent commit changed {p_!r} since this "
-                        "UPDATE was planned — aborting without committing"
-                    )
-            d._stamp_row_tracking(
-                spark, path, protocol, lines, staged_add_lines, next_v
-            )
-            try:
-                d._put_if_absent_commit(path, next_v, lines)
-                d._maybe_auto_checkpoint(
-                    spark, path, next_v, meta.get("configuration")
-                )
-                return next_v
-            except FileExistsError:
-                continue
 
+        def build(_v: int):
+            d._check_planned(spark, path, planned, "UPDATE")
+            return protocol, meta, lines
+
+        return d._commit_delta(spark, path, build, staged=staged)
     finally:
         matched.unpersist()
 

@@ -1,0 +1,330 @@
+"""Concurrent Delta writers through the one commit path
+(``delta_io._commit_delta``): every log version is claimed with a
+put-if-absent link, so no commit is ever silently overwritten.
+
+- metadata verbs rebuild on the replay at ``v - 1`` and retry, so a
+  commit that lands between their replay and their claim is kept;
+- appends re-plan on the newest version and retry;
+- DML and OPTIMIZE commits planned against the live set abort with
+  ``ValueError("concurrent commit changed …")`` and delete the data,
+  cdc and deletion-vector files they staged — never a file a live
+  ``add`` names;
+- the claim primitive is called from exactly one place per format.
+"""
+
+from __future__ import annotations
+
+import ast
+import json
+import os
+import threading
+from pathlib import Path
+
+import pytest
+
+from census_asc5_data_pipeline_spark.sources import delta_io as d
+from census_asc5_data_pipeline_spark.sources.deletion_vectors import (
+    dv_relative_path,
+)
+from census_asc5_data_pipeline_spark.sources.merge import (
+    merge_into,
+    update_where,
+)
+
+
+def _df(spark, lo: int, hi: int):
+    return spark.createDataFrame(
+        [(i, float(i)) for i in range(lo, hi)], "k long, v double"
+    ).coalesce(1)
+
+
+def _commits(path: str) -> dict[int, list[dict]]:
+    out = {}
+    for v in d.delta_versions(path):
+        with open(d._commit_file(path, v)) as fh:
+            out[v] = [json.loads(ln) for ln in fh if ln.strip()]
+    return out
+
+
+def _race_after_first_replay(monkeypatch, racer) -> None:
+    """The next ``_replay`` call returns its state, then ``racer``
+    commits before the caller can use it."""
+    real = d._replay
+    state = {"armed": True}
+
+    def replay(spark, path, version):
+        out = real(spark, path, version)
+        if state["armed"]:
+            state["armed"] = False
+            racer()
+        return out
+
+    monkeypatch.setattr(d, "_replay", replay)
+
+
+def test_property_set_racing_replay_keeps_both_keys(
+    spark, tmp_path, monkeypatch
+):
+    """The lost update: a SET TBLPROPERTIES lands between another
+    SET TBLPROPERTIES's replay and its claim. The loser rebuilds on
+    the winner's version — both keys survive, versions 1 and 2."""
+    p = str(tmp_path / "t")
+    d.write_delta(_df(spark, 0, 5), p)  # v0
+    _race_after_first_replay(
+        monkeypatch, lambda: d.set_delta_properties(spark, p, {"b": "2"})
+    )
+    assert d.set_delta_properties(spark, p, {"a": "1"}) == 2
+    assert d.delta_versions(p) == [0, 1, 2]
+    conf = d._replay(spark, p, None)[1]["configuration"]
+    assert {"a": "1", "b": "2"}.items() <= conf.items()
+
+
+def test_domain_set_racing_replay_keeps_protocol(
+    spark, tmp_path, monkeypatch
+):
+    """A domain commit planned before a protocol upgrade landed must
+    not publish the old protocol over it."""
+    p = str(tmp_path / "t")
+    d.write_delta(_df(spark, 0, 5), p)  # v0
+    _race_after_first_replay(
+        monkeypatch,
+        lambda: d.set_delta_properties(
+            spark, p, {"b": "2", "delta.checkpointPolicy": "v2"}
+        ),
+    )
+    assert d.set_domain_metadata(spark, p, "app.x", "cfg") == 2
+    assert d.delta_versions(p) == [0, 1, 2]
+    protocol, meta, _a, _t = d._replay(spark, p, None)
+    assert "v2Checkpoint" in protocol["readerFeatures"]
+    assert {"v2Checkpoint", "domainMetadata"} <= set(
+        protocol["writerFeatures"]
+    )
+    assert meta["configuration"]["b"] == "2"
+    assert d.replay_domains(spark, p) == {"app.x": "cfg"}
+
+
+def test_add_columns_racing_replay_keeps_property(
+    spark, tmp_path, monkeypatch
+):
+    """ADD COLUMNS planned on a stale metaData must not drop the
+    property another writer set in between."""
+    p = str(tmp_path / "t")
+    d.write_delta(_df(spark, 0, 5), p)  # v0
+    _race_after_first_replay(
+        monkeypatch, lambda: d.set_delta_properties(spark, p, {"b": "2"})
+    )
+    assert d.add_delta_columns(spark, p, "note string") == 2
+    assert d.delta_versions(p) == [0, 1, 2]
+    meta = d._replay(spark, p, None)[1]
+    assert meta["configuration"]["b"] == "2"
+    assert [f["name"] for f in json.loads(meta["schemaString"])["fields"]] == [
+        "k", "v", "note",
+    ]
+
+
+def test_concurrent_appends_all_land(spark, tmp_path, monkeypatch):
+    """Four appends that all read the same next version: one claims
+    it, the others re-plan and retry — four versions, every row."""
+    p = str(tmp_path / "t")
+    d.write_delta(_df(spark, 0, 5), p)  # v0
+    barrier = threading.Barrier(4, timeout=120)
+    first = threading.local()
+    real = d._next_version
+
+    def next_version(path):
+        if not getattr(first, "done", False):
+            first.done = True
+            barrier.wait()
+        return real(path)
+
+    monkeypatch.setattr(d, "_next_version", next_version)
+    out: list = [None] * 4
+
+    def run(i, lo):
+        try:
+            out[i] = d.write_delta(_df(spark, lo, lo + 5), p)
+        except Exception as e:  # noqa: BLE001 — reported to the test
+            out[i] = e
+
+    threads = [
+        threading.Thread(target=run, args=(i, lo))
+        for i, lo in enumerate((10, 20, 30, 40))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+        assert not t.is_alive(), "writer thread hung"
+    monkeypatch.setattr(d, "_next_version", real)
+    assert sorted(o for o in out if isinstance(o, int)) == [1, 2, 3, 4], out
+    assert sorted(r.k for r in d.read_delta(spark, p).collect()) == sorted(
+        i for lo in (0, 10, 20, 30, 40) for i in range(lo, lo + 5)
+    )
+
+
+def _files_on_disk(path: str) -> set[str]:
+    """Every data (parquet, incl. ``_change_data/``) and
+    deletion-vector file under the table root."""
+    out = set()
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [x for x in dirs if x != "_delta_log"]
+        for n in names:
+            if n.endswith((".parquet", ".bin")) and not n.startswith("."):
+                out.add(os.path.relpath(os.path.join(root, n), path))
+    return out
+
+
+def _referenced(spark, path: str, live_only: bool = False) -> set[str]:
+    """Files any commit's add / cdc names (with the DV files its adds
+    carry); ``live_only`` restricts to the current live adds."""
+    adds = (
+        list(d._replay(spark, path, None)[2].values())
+        if live_only
+        else [
+            a[k]
+            for acts in _commits(path).values()
+            for a in acts
+            for k in ("add", "cdc")
+            if k in a
+        ]
+    )
+    out = set()
+    for a in adds:
+        out.add(a["path"])
+        dv = a.get("deletionVector")
+        if dv and dv.get("storageType") == "u":
+            out.add(dv_relative_path(dv["pathOrInlineDv"]))
+    return out
+
+
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "delete_cow", "delete_dv", "update_cow", "update_dv", "merge",
+        "optimize",
+    ],
+)
+def test_aborted_commit_deletes_what_it_staged(
+    spark, tmp_path, monkeypatch, verb
+):
+    """A DML / OPTIMIZE commit aborted by a concurrent overwrite of
+    the files it planned against deletes its staged data, cdc and DV
+    files, and never a file a live add names (a DV-mode re-add names
+    a live data file)."""
+    p = str(tmp_path / "t")
+    d.write_delta(
+        _df(spark, 0, 10), p,
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    d.write_delta(_df(spark, 10, 20), p)
+    d.delete_delta_where(spark, p, "k = 11", mode="dv")  # a live DV
+    real = d._put_if_absent_commit
+    state = {"raced": False}
+
+    def racing_put(path, v, lines):
+        if not state["raced"] and any("remove" in a for a in lines):
+            state["raced"] = True
+            d.write_delta(_df(spark, 100, 103), p, mode="overwrite")
+        return real(path, v, lines)
+
+    monkeypatch.setattr(d, "_put_if_absent_commit", racing_put)
+    mode = verb.split("_")[-1]
+    with pytest.raises(ValueError, match="concurrent commit changed"):
+        if verb.startswith("delete"):
+            d.delete_delta_where(spark, p, "k IN (3, 12)", mode=mode)
+        elif verb.startswith("update"):
+            update_where(
+                spark, "delta", p, "k IN (3, 12)", {"v": "v + 1"},
+                mode=mode,
+            )
+        elif verb == "merge":
+            merge_into(
+                spark, "delta", p,
+                spark.createDataFrame(
+                    [(3, 30.0), (50, 5.0)], "k long, v double"
+                ),
+                "t.k = s.k",
+                matched=[("update", None, {"v": "s.v"})],
+                not_matched={"k": "s.k", "v": "s.v"},
+            )
+        else:
+            d.optimize_delta(spark, p)
+    monkeypatch.setattr(d, "_put_if_absent_commit", real)
+    assert state["raced"]
+    assert _files_on_disk(p) == _referenced(spark, p)
+    assert _referenced(spark, p, live_only=True) <= _files_on_disk(p)
+    assert sorted(r.k for r in d.read_delta(spark, p).collect()) == [
+        100, 101, 102,
+    ]
+
+
+def test_aborted_dv_delete_keeps_live_files(spark, tmp_path, monkeypatch):
+    """A DV-mode DELETE aborted by a concurrent DV-mode DELETE on the
+    same file: the loser's staged DV file goes, while every file a
+    live add names — the data file both DELETEs re-add and the
+    winner's DV file — stays, and the table still reads."""
+    p = str(tmp_path / "t")
+    d.write_delta(_df(spark, 0, 10), p)
+    real = d._put_if_absent_commit
+    state = {"raced": False}
+
+    def racing_put(path, v, lines):
+        if not state["raced"] and any("remove" in a for a in lines):
+            state["raced"] = True
+            d.delete_delta_where(spark, p, "k = 1", mode="dv")
+        return real(path, v, lines)
+
+    monkeypatch.setattr(d, "_put_if_absent_commit", racing_put)
+    with pytest.raises(ValueError, match="concurrent commit changed"):
+        d.delete_delta_where(spark, p, "k = 2", mode="dv")
+    monkeypatch.setattr(d, "_put_if_absent_commit", real)
+    assert _files_on_disk(p) == _referenced(spark, p)
+    assert _referenced(spark, p, live_only=True) <= _files_on_disk(p)
+    assert sorted(r.k for r in d.read_delta(spark, p).collect()) == [
+        0, 2, 3, 4, 5, 6, 7, 8, 9,
+    ]
+
+
+def _call_sites(name: str) -> list[tuple[str, str]]:
+    """(module, innermost enclosing function) of every call to
+    ``name`` in the package source, one entry per call."""
+    pkg = Path(d.__file__).resolve().parents[1]
+    out: list[tuple[str, str]] = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, module: str):
+            self.module, self.stack = module, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            if name in (
+                getattr(node.func, "id", None),
+                getattr(node.func, "attr", None),
+            ):
+                out.append((self.module, self.stack[-1]))
+            self.generic_visit(node)
+
+    for f in sorted(pkg.rglob("*.py")):
+        Calls(f.stem).visit(ast.parse(f.read_text()))
+    return sorted(out)
+
+
+def test_one_claim_site_per_format():
+    """Each format claims versions in exactly one function, so
+    neither regrows a hand-rolled commit loop: Delta's
+    ``_put_if_absent_commit`` only in ``_commit_delta``, and the
+    shared link primitive only there (via ``_put_if_absent_commit``)
+    and in Iceberg's ``_commit_metadata``."""
+    assert _call_sites("_put_if_absent_commit") == [
+        ("delta_io", "_commit_delta")
+    ]
+    assert _call_sites("_put_if_absent") == [
+        ("delta_io", "_put_if_absent_commit"),
+        ("iceberg_io", "_commit_metadata"),
+    ]

@@ -532,6 +532,28 @@ def test_checkpoint_interval_auto_checkpoints(spark, tmp_path):
     assert sorted(r.id for r in read_delta(spark, p).collect()) == [
         2, 3, 4,
     ]
+    # OPTIMIZE and metadata commits keep the cadence too
+    from census_asc5_data_pipeline_spark.sources.delta_io import (
+        optimize_delta,
+        set_delta_properties,
+    )
+
+    write_delta(_mk(spark, [(5, 5.0)], "id bigint, v double"), p)  # v5
+    assert optimize_delta(spark, p)["version"] == 6
+    assert _os.path.exists(
+        _os.path.join(log, f"{6:020d}.checkpoint.parquet")
+    )
+    write_delta(_mk(spark, [(6, 6.0)], "id bigint, v double"), p)  # v7
+    assert set_delta_properties(spark, p, {"owner": "ops"}) == 8
+    assert _os.path.exists(
+        _os.path.join(log, f"{8:020d}.checkpoint.parquet")
+    )
+    assert _json.load(open(_os.path.join(log, "_last_checkpoint")))[
+        "version"
+    ] == 8
+    assert sorted(r.id for r in read_delta(spark, p).collect()) == [
+        2, 3, 4, 5, 6,
+    ]
 
 
 def test_unset_tblproperties_and_v2_stream_meta(spark, tmp_path):

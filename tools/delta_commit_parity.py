@@ -1,0 +1,203 @@
+"""Delta commit parity between two checkouts of the engine.
+
+Runs every Delta commit verb once — write (create / append /
+overwrite), DELETE / UPDATE / MERGE in CoW and DV mode, OPTIMIZE, SET
+TBLPROPERTIES, domain metadata, ADD / RENAME / DROP COLUMNS, ALTER
+COLUMN TYPE, CLUSTER BY, RESTORE, row-tracking enablement, shallow
+and deep CLONE — on a plain table and on a column-mapped +
+row-tracking + CDF table, then writes each commit's parsed actions
+with timestamps, file names and UUIDs masked, plus the checkpoint
+files on disk. uuid4 is seeded per verb so both checkouts name (and
+order) their files alike.
+
+    python tools/delta_commit_parity.py run <repo_root> <work_dir> <out.json>
+    python tools/delta_commit_parity.py compare <a.json> <b.json>
+
+Run ``run`` once per checkout (e.g. the parent from ``git archive``),
+then ``compare`` prints every commit whose actions differ and the
+checkpoint files each side wrote.
+"""
+import json
+import os
+import random
+import re
+import shutil
+import sys
+import uuid
+
+# deterministic file names and ids, so two runs name (and order)
+# their files alike
+_rng = random.Random(7)
+uuid.uuid4 = lambda: uuid.UUID(int=_rng.getrandbits(128), version=4)
+
+if sys.argv[1] == "compare":
+    a, b = (json.load(open(f)) for f in sys.argv[2:4])
+    n_diff = 0
+    for table in sorted(set(a) | set(b)):
+        ca, cb = a[table]["commits"], b[table]["commits"]
+        bad = sorted(
+            {v for v in set(ca) | set(cb) if ca.get(v) != cb.get(v)},
+            key=int,
+        )
+        n_diff += len(bad)
+        print(f"{table}: {len(ca)} vs {len(cb)} commits, differing: {bad}")
+        for v in bad:
+            print(f"  v{v}:\n    a: {ca.get(v)}\n    b: {cb.get(v)}")
+        ka, kb = a[table]["checkpoints"], b[table]["checkpoints"]
+        if ka != kb:
+            print(f"  checkpoint files a={ka} b={kb}")
+    print("commits that differ:", n_diff)
+    sys.exit(0)
+
+root, work, out = sys.argv[2:5]
+sys.path.insert(0, root)
+os.chdir(root)
+
+from pyspark.sql import SparkSession  # noqa: E402
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .appName("parity")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+
+from census_asc5_data_pipeline_spark.sources import delta_io as d  # noqa
+from census_asc5_data_pipeline_spark.sources import merge as m  # noqa
+
+shutil.rmtree(work, ignore_errors=True)
+os.makedirs(work)
+
+TS_KEYS = {
+    "timestamp", "modificationTime", "deletionTimestamp", "createdTime",
+    "inCommitTimestamp", "lastUpdated",
+}
+UUID = re.compile(
+    r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+)
+HEX = re.compile(r"[0-9a-f]{32}")
+
+
+def mask(x, key=None):
+    if isinstance(x, dict):
+        return {
+            k: ("<ts>" if k in TS_KEYS else mask(v, k))
+            for k, v in x.items()
+        }
+    if isinstance(x, list):
+        return [mask(v) for v in x]
+    if isinstance(x, str):
+        if key == "pathOrInlineDv":
+            return "<dv>"
+        if key == "delta.inCommitTimestampEnablementTimestamp":
+            return "<ts>"
+        if key in ("source",):
+            return "<src>"
+        x = x.replace(work, "<work>")
+        return HEX.sub("<hex>", UUID.sub("<uuid>", x))
+    return x
+
+
+def dump(path):
+    log = os.path.join(path, "_delta_log")
+    commits = {}
+    for v in d.delta_versions(path):
+        with open(os.path.join(log, f"{v:020d}.json")) as fh:
+            commits[v] = [
+                mask(json.loads(ln)) for ln in fh if ln.strip()
+            ]
+    ckpts = sorted(f for f in os.listdir(log) if "checkpoint" in f)
+    return {"commits": commits, "checkpoints": ckpts}
+
+
+_step = [0]
+
+
+def S(fn, *a, **k):
+    """Run one verb with the uuid stream reseeded, so a verb's file
+    names do not depend on how many ids earlier verbs drew."""
+    _step[0] += 1
+    _rng.seed(_step[0])
+    return fn(*a, **k)
+
+
+def df(rows, ddl="k long, v double, g int"):
+    return spark.createDataFrame(rows, ddl).coalesce(1)
+
+
+def scenario(tag, conf):
+    p = os.path.join(work, tag)
+    S(
+        d.write_delta, df([(i, float(i), i % 2) for i in range(20)]), p,
+        configuration=conf,
+    )
+    S(d.write_delta, df([(i, float(i), i % 2) for i in range(20, 30)]), p)
+    S(d.delete_delta_where, spark, p, "k < 3", mode="cow")
+    S(d.delete_delta_where, spark, p, "k = 5", mode="dv")
+    for k, mode in ((6, "cow"), (7, "dv")):
+        S(
+            m.update_where, spark, "delta", p, f"k = {k}",
+            {"v": "v + 100"}, mode=mode,
+        )
+    src = df([(8, 80.0, 0), (100, 1.0, 0)])
+    for mode in ("cow", "dv"):
+        S(
+            m.merge_into, spark, "delta", p, src, "t.k = s.k",
+            matched=[("update", None, {"v": "s.v"})],
+            not_matched={"k": "s.k", "v": "s.v", "g": "s.g"},
+            mode=mode,
+        )
+        src = df([(9, 90.0, 1), (101, 1.0, 1)])
+    S(d.optimize_delta, spark, p)
+    S(
+        d.write_delta, df([(i, 0.0, 0) for i in range(3)]), p,
+        mode="overwrite",
+    )
+    S(
+        d.set_delta_properties, spark, p,
+        {"a": "1", "delta.checkpointInterval": "4"},
+    )
+    S(d.set_domain_metadata, spark, p, "my.domain", '{"x": 1}')
+    S(d.add_delta_columns, spark, p, "note string")
+    S(d.alter_delta_column_type, spark, p, "g", "bigint")
+    if conf:
+        S(d.rename_delta_column, spark, p, "note", "memo")
+        S(d.drop_delta_columns, spark, p, ["memo"])
+    S(d.set_clustering_columns, spark, p, ["k"])
+    S(d.restore_delta, spark, p, 3)
+    if not conf:
+        S(d.enable_row_tracking, spark, p)
+    S(
+        d.set_delta_properties, spark, p,
+        {"delta.enableInCommitTimestamps": "true"},
+    )
+    sch = d.read_delta(spark, p).schema
+    row = tuple({"k": 50, "v": 5.0, "g": 1}.get(f.name) for f in sch)
+    S(d.write_delta, spark.createDataFrame([row], sch), p)
+    out_ = {tag: dump(p)}
+    for shallow in (True, False):
+        c = os.path.join(work, f"{tag}_clone_{shallow}")
+        S(d.clone_delta, spark, p, c, shallow=shallow, version=2)
+        out_[f"{tag}_clone_{shallow}"] = dump(c)
+    return out_
+
+
+res = {}
+res.update(scenario("plain", None))
+res.update(
+    scenario(
+        "mapped_rt",
+        {
+            "delta.columnMapping.mode": "name",
+            "delta.enableRowTracking": "true",
+            "delta.enableChangeDataFeed": "true",
+        },
+    )
+)
+with open(out, "w") as fh:
+    json.dump(res, fh, indent=1, sort_keys=True)
+print("versions:", {k: len(v["commits"]) for k, v in res.items()})
+spark.stop()
