@@ -23,6 +23,26 @@ What the log is:
   plus the JSON tail): last action per file path wins; live files =
   adds without a later remove.
 
+The log plane has one primitive per job; every reader and writer of
+the log goes through them:
+
+- :func:`_commit_actions` — the parsed actions of one commit JSON (a
+  generator). Only ``_ict_of_commit`` (bounded head scan) and
+  ``_commit_timestamp_ms`` (skips undecodable lines) open a commit
+  file themselves.
+- :func:`_read_tail` — the fold of a JSON tail into (protocol,
+  metaData, txns, per-commit (removes, adds)), raising on a missing
+  commit; :func:`_replay` and the distributed plane share it.
+- :func:`_distributed_base` (+ :func:`_tail_overlay`) — the shared
+  start of the distributed plane (:func:`_replay_pruned_spark`,
+  :func:`_live_adds_df`): threshold gate, checkpoint plan, non-file
+  rows, tail merge and the touched-path overlay.
+- :func:`_checkpoint_manifest` — the V2 manifest + sidecar resolver
+  behind :func:`_checkpoint_actions` and :func:`_ckpt_file_action_plan`.
+- :func:`_write_checkpoint` — the one checkpoint writer behind
+  :func:`create_checkpoint` (classic, multipart and V2 layouts), with
+  ``_last_checkpoint`` flipped only by :func:`_publish_last_checkpoint`.
+
 How this reader maps it to Spark — scale notes:
 
 - The log is METADATA scale (O(files) tiny rows): replayed
@@ -117,6 +137,25 @@ def _checkpoint_file(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"{version:020d}.checkpoint.parquet")
 
 
+def _json_lines(fp: str):
+    """The parsed objects of a newline-delimited JSON file (a commit
+    or a V2 checkpoint manifest), blank lines skipped."""
+    with open(fp) as fh:
+        for line in fh:
+            line = line.strip()
+            if line:
+                yield json.loads(line)
+
+
+def _commit_actions(path: str, version: int):
+    """The actions of commit ``version``, in file order — the one
+    reader of a commit JSON (only ``_ict_of_commit``'s bounded head
+    scan and ``_commit_timestamp_ms``'s tolerant scan open one
+    themselves). A generator: a reader that breaks early stops
+    reading the file there."""
+    return _json_lines(_commit_file(path, version))
+
+
 def delta_versions(path: str) -> list[int]:
     """All commit versions present as JSON files, ascending."""
     d = _log_dir(path)
@@ -207,28 +246,17 @@ def _resolve_checkpoint(
     return None
 
 
-def _checkpoint_actions(
-    spark: SparkSession, path: str, version: int
-) -> list[dict] | None:
-    """Every action dict the checkpoint at ``version`` carries, with
-    V2 sidecars resolved: a V2 manifest (json or parquet) holds
-    protocol/metaData/txn inline plus ``sidecar`` actions pointing
-    into ``_delta_log/_sidecars/``; the sidecar parquets hold the
-    add/remove file actions (when any sidecar is present, ALL file
-    actions live in sidecars, per spec). Classic and multipart forms
-    return their rows directly. None = no checkpoint at ``version``
-    (corrupt/incomplete ones raise instead — a silently skipped
-    checkpoint would replay an incomplete history)."""
-    res = _resolve_checkpoint(path, version)
-    if res is None:
-        return None
-    kind, files = res
-    if kind == "v2" and files[0].endswith(".json"):
-        rows = [
-            json.loads(line)
-            for line in open(files[0])
-            if line.strip()
-        ]
+def _checkpoint_manifest(
+    spark: SparkSession, path: str, version: int, files: list[str]
+) -> tuple[list[dict], list[str]]:
+    """(actions, sidecar paths) of the checkpoint ``files`` at
+    ``version``: a V2 json manifest parses line by line, any parquet
+    form through one Spark read. ``sidecar`` actions resolve to
+    paths under ``_delta_log/_sidecars/`` (which must exist) and
+    ``checkpointMetadata`` must name ``version``; neither appears in
+    the returned actions."""
+    if files[0].endswith(".json"):
+        rows = list(_json_lines(files[0]))
     else:
         rows = [
             r.asDict(recursive=True)
@@ -262,6 +290,25 @@ def _checkpoint_actions(
             raise FileNotFoundError(
                 f"v2 checkpoint sidecar missing: {s!r}"
             )
+    return out, sidecars
+
+
+def _checkpoint_actions(
+    spark: SparkSession, path: str, version: int
+) -> list[dict] | None:
+    """Every action dict the checkpoint at ``version`` carries, with
+    V2 sidecars resolved: a V2 manifest (json or parquet) holds
+    protocol/metaData/txn inline plus ``sidecar`` actions pointing
+    into ``_delta_log/_sidecars/``; the sidecar parquets hold the
+    add/remove file actions (when any sidecar is present, ALL file
+    actions live in sidecars, per spec). Classic and multipart forms
+    return their rows directly. None = no checkpoint at ``version``
+    (corrupt/incomplete ones raise instead — a silently skipped
+    checkpoint would replay an incomplete history)."""
+    res = _resolve_checkpoint(path, version)
+    if res is None:
+        return None
+    out, sidecars = _checkpoint_manifest(spark, path, version, res[1])
     if sidecars:
         out.extend(
             r.asDict(recursive=True)
@@ -421,6 +468,101 @@ def _apply_remove(adds: dict[str, dict], rm: dict) -> None:
     adds.pop(rm["path"], None)
 
 
+def _apply_commit(
+    adds: dict[str, dict], removes: list[dict], new: list[dict]
+) -> None:
+    """Fold one commit's file actions into ``adds``: its removes
+    BEFORE its adds — a foreign writer may list add(path, newDV)
+    before remove(path, oldDV) in the same commit, and line order must
+    not silently drop the fresh add (reconciliation is keyed by
+    (path, dv uniqueId), see _apply_remove)."""
+    for rm in removes:
+        _apply_remove(adds, rm)
+    for a in new:
+        adds[a["path"]] = a
+
+
+def _latest_version(path: str, versions: list[int], ckpt: int | None) -> int:
+    """The newest version on disk. The checkpoint can be NEWER than
+    every surviving json (its own commit json expired): latest = max
+    of BOTH, not max(jsons) — else the read silently time-travels
+    (r16)."""
+    if not versions and ckpt is None:
+        raise FileNotFoundError(f"empty Delta log at {path!r}")
+    return max(versions + ([ckpt] if ckpt is not None else []))
+
+
+def _fold_txn(txns: dict[str, int], app: str, version) -> None:
+    txns[app] = max(txns.get(app, -1), int(version))
+
+
+def _fold_checkpoint_rows(
+    rows: list[dict],
+) -> tuple[dict, dict, dict[str, int], dict[str, dict]]:
+    """(protocol, metaData, txns, adds by path) of checkpoint action
+    rows, each action with its null fields dropped (a parquet
+    checkpoint row carries every column of its struct). Remove rows
+    are skipped: they are expired-file tombstones kept for VACUUM, and
+    a file removed then RE-ADDED within retention appears as both a
+    tombstone and a live add — the add is what is live."""
+    protocol: dict = {}
+    meta: dict = {}
+    txns: dict[str, int] = {}
+    adds: dict[str, dict] = {}
+
+    def _set(a: dict) -> dict:
+        return {k: v for k, v in a.items() if v is not None}
+
+    for d in rows:
+        if d.get("protocol"):
+            protocol = _set(d["protocol"])
+        if d.get("metaData"):
+            meta = _set(d["metaData"])
+        if d.get("add"):
+            a = _set(d["add"])
+            adds[a["path"]] = a
+        if d.get("txn"):
+            _fold_txn(txns, d["txn"]["appId"], d["txn"]["version"])
+    return protocol, meta, txns, adds
+
+
+def _read_tail(
+    path: str, versions: list[int], start: int, target: int
+) -> tuple[dict, dict, dict[str, int], list[tuple[list[dict], list[dict]]]]:
+    """The JSON tail ``start..target``: (newest protocol, newest
+    metaData, txn versions by appId, one (removes, adds) pair per
+    commit in version order). Empty protocol / metaData = the tail
+    sets none. Raises when a commit in the range is not on disk."""
+    have = set(versions)
+    missing = [v for v in range(start, target + 1) if v not in have]
+    if missing:
+        raise FileNotFoundError(
+            f"Delta log at {path!r} is missing commit(s) {missing} "
+            f"needed to reconstruct version {target}"
+        )
+    protocol: dict = {}
+    meta: dict = {}
+    txns: dict[str, int] = {}
+    commits: list[tuple[list[dict], list[dict]]] = []
+    for v in range(start, target + 1):
+        removes: list[dict] = []
+        adds: list[dict] = []
+        for action in _commit_actions(path, v):
+            if "protocol" in action:
+                protocol = action["protocol"]
+            elif "metaData" in action:
+                meta = action["metaData"]
+            elif "add" in action:
+                adds.append(action["add"])
+            elif "remove" in action:
+                removes.append(action["remove"])
+            elif "txn" in action:
+                t = action["txn"]
+                _fold_txn(txns, t["appId"], t["version"])
+        commits.append((removes, adds))
+    return protocol, meta, txns, commits
+
+
 def _replay(
     spark: SparkSession, path: str, version: int | None
 ) -> tuple[dict, dict, dict[str, dict], dict[str, int]]:
@@ -431,12 +573,7 @@ def _replay(
     versions = delta_versions(path)
     ckpt = _read_last_checkpoint(path)
     if version is None:
-        if not versions and ckpt is None:
-            raise FileNotFoundError(f"empty Delta log at {path!r}")
-        # the checkpoint can be NEWER than every surviving json (its
-        # own commit json expired): latest = max of BOTH, not
-        # max(jsons) — else the read silently time-travels (r16)
-        version = max(versions + ([ckpt] if ckpt is not None else []))
+        version = _latest_version(path, versions, ckpt)
     protocol: dict = {}
     meta: dict = {}
     adds: dict[str, dict] = {}
@@ -448,79 +585,16 @@ def _replay(
         else None
     )
     if cp is not None:
-        # removes FIRST, adds after: a checkpoint's remove rows are
-        # expired-file tombstones, and a file removed then RE-ADDED
-        # within retention appears as both a tombstone and a live add
-        # — row order must not decide which wins
-        cp_removes: list[dict] = []
-        cp_adds: list[dict] = []
-        for d in cp:
-            if d.get("protocol"):
-                protocol = {
-                    k: v for k, v in d["protocol"].items() if v is not None
-                }
-            if d.get("metaData"):
-                meta = {
-                    k: v for k, v in d["metaData"].items() if v is not None
-                }
-            if d.get("add"):
-                a = {k: v for k, v in d["add"].items() if v is not None}
-                cp_adds.append(a)
-            if d.get("remove"):
-                cp_removes.append(
-                    {
-                        k: v
-                        for k, v in d["remove"].items()
-                        if v is not None
-                    }
-                )
-            if d.get("txn"):
-                t = d["txn"]
-                txns[t["appId"]] = max(
-                    txns.get(t["appId"], -1), int(t["version"])
-                )
-        for rm in cp_removes:
-            _apply_remove(adds, rm)
-        for a in cp_adds:
-            adds[a["path"]] = a
+        protocol, meta, txns, adds = _fold_checkpoint_rows(cp)
         start = ckpt + 1
-    missing = [v for v in range(start, version + 1) if v not in versions]
-    if missing:
-        raise FileNotFoundError(
-            f"Delta log at {path!r} is missing commit(s) {missing} "
-            f"needed to reconstruct version {version}"
-        )
-    for v in range(start, version + 1):
-        # buffer each commit and apply its removes BEFORE its adds:
-        # a foreign writer may list add(path, newDV) before
-        # remove(path, oldDV) in the same commit, and line order must
-        # not silently drop the fresh add (reconciliation is keyed by
-        # (path, dv uniqueId), see _apply_remove)
-        commit_removes: list[dict] = []
-        commit_adds: list[dict] = []
-        with open(_commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    protocol = action["protocol"]
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "add" in action:
-                    commit_adds.append(action["add"])
-                elif "remove" in action:
-                    commit_removes.append(action["remove"])
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
-                    )
-        for rm in commit_removes:
-            _apply_remove(adds, rm)
-        for a in commit_adds:
-            adds[a["path"]] = a
+    t_proto, t_meta, t_txns, commits = _read_tail(
+        path, versions, start, version
+    )
+    for removes, new in commits:
+        _apply_commit(adds, removes, new)
+    protocol, meta = t_proto or protocol, t_meta or meta
+    for app, tv in t_txns.items():
+        _fold_txn(txns, app, tv)
     if not meta:
         raise ValueError(f"Delta log at {path!r} has no metaData action")
     _reader_gate(protocol, meta, path)
@@ -545,12 +619,7 @@ def replay_domains(
     versions = delta_versions(path)
     ckpt = _read_last_checkpoint(path)
     if version is None:
-        if not versions and ckpt is None:
-            raise FileNotFoundError(f"empty Delta log at {path!r}")
-        # the checkpoint can be NEWER than every surviving json (its
-        # own commit json expired): latest = max of BOTH, not
-        # max(jsons) — else the read silently time-travels (r16)
-        version = max(versions + ([ckpt] if ckpt is not None else []))
+        version = _latest_version(path, versions, ckpt)
     domains: dict[str, dict] = {}
 
     def _apply(d: dict | None) -> None:
@@ -570,11 +639,7 @@ def replay_domains(
             if kind == "v2" and files[0].endswith(".json"):
                 # domainMetadata is a non-file action: INLINE in a v2
                 # manifest, never in sidecars (spec)
-                rows = [
-                    json.loads(line)
-                    for line in open(files[0])
-                    if line.strip()
-                ]
+                rows = list(_json_lines(files[0]))
             else:
                 for f in files:
                     if not f.endswith(".parquet"):
@@ -598,14 +663,9 @@ def replay_domains(
             f"needed to reconstruct domain metadata at {version}"
         )
     for v in range(start, version + 1):
-        with open(_commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "domainMetadata" in action:
-                    _apply(action["domainMetadata"])
+        for action in _commit_actions(path, v):
+            if "domainMetadata" in action:
+                _apply(action["domainMetadata"])
     return {
         d: str(v.get("configuration") or "")
         for d, v in sorted(domains.items())
@@ -939,46 +999,89 @@ def _ckpt_file_action_plan(
     kind, files = res
     if kind in ("classic", "multipart"):
         return None, files
-    if files[0].endswith(".json"):
-        rows = [
-            json.loads(line) for line in open(files[0]) if line.strip()
-        ]
-    else:
-        rows = [
-            r.asDict(recursive=True)
-            for r in spark.read.parquet(*files).collect()
-        ]
-    sidecars: list[str] = []
-    metas: list[dict] = []
-    for d in rows:
-        sc = d.get("sidecar")
-        if sc:
-            p = sc.get("path") or ""
-            sidecars.append(
-                p
-                if os.path.isabs(p)
-                else os.path.join(
-                    _log_dir(path), "_sidecars", os.path.basename(p)
-                )
-            )
-        elif d.get("checkpointMetadata") is not None:
-            cm = d["checkpointMetadata"]
-            if cm and int(cm.get("version", version)) != version:
-                raise ValueError(
-                    f"v2 checkpoint manifest at version {version} "
-                    f"declares checkpointMetadata.version "
-                    f"{cm.get('version')} — corrupt checkpoint"
-                )
-        else:
-            metas.append(d)
+    metas, sidecars = _checkpoint_manifest(spark, path, version, files)
     if not sidecars:
         return None
-    for s in sidecars:
-        if not os.path.exists(s):
-            raise FileNotFoundError(
-                f"v2 checkpoint sidecar missing: {s!r}"
-            )
     return metas, sidecars
+
+
+def _distributed_base(
+    spark: SparkSession, path: str, version: int | None
+) -> tuple[
+    dict, dict, dict[str, int], list[str],
+    list[tuple[list[dict], list[dict]]],
+] | None:
+    """The shared start of the distributed metadata plane:
+    (protocol, metaData, txns, parquet files holding the checkpoint's
+    file actions, the JSON tail's per-commit (removes, adds)) at
+    ``version`` (None = the newest commit JSON). None whenever the
+    plane doesn't apply: no checkpoint at/below the target, fewer
+    actions than ``_SPARK_PRUNE_THRESHOLD``, or a checkpoint form
+    :func:`_ckpt_file_action_plan` leaves to the driver. The tail
+    replays driver-side (it is small by the checkpointing contract);
+    the checkpoint's protocol/metaData/txn rows come from a tiny
+    filtered scan (classic/multipart) or the V2 manifest's inline
+    rows."""
+    ckpt = _read_last_checkpoint(path)
+    if ckpt is None:
+        return None
+    versions = delta_versions(path)
+    target = (
+        version
+        if version is not None
+        else (max(versions) if versions else ckpt)
+    )
+    if ckpt > target:
+        return None
+    n_actions = _last_checkpoint_size(path)
+    if n_actions is None or n_actions < _SPARK_PRUNE_THRESHOLD:
+        return None
+    plan = _ckpt_file_action_plan(spark, path, ckpt)
+    if plan is None:
+        return None
+    meta_rows, add_files = plan
+    t_proto, t_meta, txns, tail = _read_tail(
+        path, versions, ckpt + 1, target
+    )
+    if meta_rows is None:
+        meta_rows = [
+            r.asDict(recursive=True)
+            for r in spark.read.parquet(*add_files)
+            .where("add IS NULL AND remove IS NULL")
+            .collect()
+        ]
+    protocol, meta, cp_txns, _adds = _fold_checkpoint_rows(meta_rows)
+    protocol, meta = t_proto or protocol, t_meta or meta
+    for app, tv in cp_txns.items():
+        _fold_txn(txns, app, tv)
+    if not meta:
+        raise ValueError(f"Delta log at {path!r} has no metaData action")
+    return protocol, meta, txns, add_files, tail
+
+
+def _tail_overlay(
+    adds_df: DataFrame, tail: list[tuple[list[dict], list[dict]]]
+) -> tuple[dict[str, dict], DataFrame]:
+    """(live adds of the paths the JSON tail touches, ``adds_df``
+    without those paths). The touched paths' checkpoint rows are
+    collected and the tail replays over them driver-side — exact
+    :func:`_replay` semantics; the untouched rows never leave Spark."""
+    touched: set[str] = set()
+    for removes, adds_ in tail:
+        touched.update(r["path"] for r in removes if "path" in r)
+        touched.update(a["path"] for a in adds_)
+    overlay: dict[str, dict] = {}
+    if not touched:
+        return overlay, adds_df
+    tl = sorted(touched)
+    for r in adds_df.where(F.col("path").isin(tl)).collect():
+        a = {
+            k: v for k, v in r.asDict(recursive=True).items() if v is not None
+        }
+        overlay[a["path"]] = a
+    for removes, adds_ in tail:
+        _apply_commit(overlay, removes, adds_)
+    return overlay, adds_df.where(~F.col("path").isin(tl))
 
 
 def _replay_pruned_spark(
@@ -998,9 +1101,8 @@ def _replay_pruned_spark(
     (:func:`delta_stats.add_survives`) in executors, so the prune set
     is identical to the driver path by construction — only surviving
     adds are collected. Returns None whenever the path doesn't apply
-    (no checkpoint at/below the target, fewer actions than
-    ``_SPARK_PRUNE_THRESHOLD``, nothing prunable) and the caller
-    falls back to :func:`_replay` + :func:`delta_stats.skip_files`.
+    (see :func:`_distributed_base`, or nothing prunable) and the
+    caller falls back to :func:`_replay` + :func:`delta_stats.skip_files`.
 
     ``keep_paths`` (r14, the DML twin): restrict the live set to
     exactly these add paths instead of (or in addition to) the
@@ -1008,92 +1110,10 @@ def _replay_pruned_spark(
     DML candidate plane fetch only the adds they will act on, never
     the whole million-add table.
     """
-    ckpt = _read_last_checkpoint(path)
-    if ckpt is None:
+    base = _distributed_base(spark, path, version)
+    if base is None:
         return None
-    versions = delta_versions(path)
-    target = (
-        version
-        if version is not None
-        else (max(versions) if versions else ckpt)
-    )
-    if ckpt > target:
-        return None
-    n_actions = _last_checkpoint_size(path)
-    if n_actions is None or n_actions < _SPARK_PRUNE_THRESHOLD:
-        return None
-    plan = _ckpt_file_action_plan(spark, path, ckpt)
-    if plan is None:
-        return None
-    meta_rows, add_files = plan
-
-    # ---- JSON tail, driver-side (small): protocol/meta overrides,
-    # txn fences, and per-commit (removes, adds) buffers in order
-    missing = [v for v in range(ckpt + 1, target + 1) if v not in versions]
-    if missing:
-        raise FileNotFoundError(
-            f"Delta log at {path!r} is missing commit(s) {missing} "
-            f"needed to reconstruct version {target}"
-        )
-    tail_proto: dict = {}
-    tail_meta: dict = {}
-    txns: dict[str, int] = {}
-    tail_commits: list[tuple[list[dict], list[dict]]] = []
-    for v in range(ckpt + 1, target + 1):
-        commit_removes: list[dict] = []
-        commit_adds: list[dict] = []
-        with open(_commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    tail_proto = action["protocol"]
-                elif "metaData" in action:
-                    tail_meta = action["metaData"]
-                elif "add" in action:
-                    commit_adds.append(action["add"])
-                elif "remove" in action:
-                    commit_removes.append(action["remove"])
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
-                    )
-        tail_commits.append((commit_removes, commit_adds))
-
-    # ---- checkpoint-side protocol/metaData/txn (tiny filtered scan
-    # for classic/multipart; inline manifest rows for V2)
-    if meta_rows is None:
-        meta_rows = [
-            r.asDict(recursive=True)
-            for r in spark.read.parquet(*add_files)
-            .where("add IS NULL AND remove IS NULL")
-            .collect()
-        ]
-    protocol: dict = {}
-    meta: dict = {}
-    for d in meta_rows:
-        if d.get("protocol"):
-            protocol = {
-                k: v for k, v in d["protocol"].items() if v is not None
-            }
-        if d.get("metaData"):
-            meta = {
-                k: v for k, v in d["metaData"].items() if v is not None
-            }
-        if d.get("txn"):
-            t = d["txn"]
-            txns[t["appId"]] = max(
-                txns.get(t["appId"], -1), int(t["version"])
-            )
-    if tail_proto:
-        protocol = tail_proto
-    if tail_meta:
-        meta = tail_meta
-    if not meta:
-        raise ValueError(f"Delta log at {path!r} has no metaData action")
+    protocol, meta, txns, add_files, tail = base
     _reader_gate(protocol, meta, path)
 
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -1120,40 +1140,14 @@ def _replay_pruned_spark(
     if lits is None and not partition_filter and keep_paths is None:
         return None  # nothing prunes — the driver path costs the same
 
-    # ---- overlay: paths the tail touches replay driver-side over
-    # their checkpoint base rows (exact _replay semantics)
-    touched: set[str] = set()
-    for removes, adds_ in tail_commits:
-        touched.update(r["path"] for r in removes if "path" in r)
-        touched.update(a["path"] for a in adds_)
-    adds_df = (
+    overlay, remaining = _tail_overlay(
         spark.read.parquet(*add_files)
         .where("add IS NOT NULL")
-        .select("add.*")
+        .select("add.*"),
+        tail,
     )
-    overlay: dict[str, dict] = {}
-    if touched:
-        tl = sorted(touched)
-        for r in adds_df.where(F.col("path").isin(tl)).collect():
-            a = {
-                k: v
-                for k, v in r.asDict(recursive=True).items()
-                if v is not None
-            }
-            overlay[a["path"]] = a
-    for removes, adds_ in tail_commits:
-        for rm in removes:
-            _apply_remove(overlay, rm)
-        for a in adds_:
-            overlay[a["path"]] = a
-
     # ---- distributed prune of the untouched checkpoint adds: the
     # SAME evaluator, running in executors over Arrow batches
-    remaining = (
-        adds_df.where(~F.col("path").isin(sorted(touched)))
-        if touched
-        else adds_df
-    )
     if keep_paths is not None:
         # path-set restriction pushes into the checkpoint scan
         remaining = remaining.where(
@@ -1301,144 +1295,26 @@ def _live_adds_df(
     checkpoint compaction of a million-add table streams prior adds
     from parquet to parquet; only tail-touched paths (exact
     ``_replay`` overlay semantics) and the tiny protocol/meta/txn
-    rows pass through Python. None = no prior checkpoint /below
-    threshold / unhandled form — caller uses the driver path."""
-    ckpt = _read_last_checkpoint(path)
-    if ckpt is None or ckpt > target:
+    rows pass through Python. None = the plane doesn't apply (see
+    :func:`_distributed_base`) — caller uses the driver path."""
+    base = _distributed_base(spark, path, target)
+    if base is None:
         return None
-    n_actions = _last_checkpoint_size(path)
-    if n_actions is None or n_actions < _SPARK_PRUNE_THRESHOLD:
-        return None
-    plan = _ckpt_file_action_plan(spark, path, ckpt)
-    if plan is None:
-        return None
-    meta_rows, add_files = plan
-    versions = delta_versions(path)
-    missing = [
-        v for v in range(ckpt + 1, target + 1) if v not in versions
-    ]
-    if missing:
-        raise FileNotFoundError(
-            f"Delta log at {path!r} is missing commit(s) {missing} "
-            f"needed to reconstruct version {target}"
-        )
-    tail_proto: dict = {}
-    tail_meta: dict = {}
-    txns: dict[str, int] = {}
-    tail_commits: list[tuple[list[dict], list[dict]]] = []
-    for v in range(ckpt + 1, target + 1):
-        commit_removes: list[dict] = []
-        commit_adds: list[dict] = []
-        with open(_commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    tail_proto = action["protocol"]
-                elif "metaData" in action:
-                    tail_meta = action["metaData"]
-                elif "add" in action:
-                    commit_adds.append(action["add"])
-                elif "remove" in action:
-                    commit_removes.append(action["remove"])
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
-                    )
-        tail_commits.append((commit_removes, commit_adds))
-    if meta_rows is None:
-        meta_rows = [
-            r.asDict(recursive=True)
-            for r in spark.read.parquet(*add_files)
-            .where("add IS NULL AND remove IS NULL")
-            .collect()
-        ]
-    protocol: dict = {}
-    meta: dict = {}
-    for mrow in meta_rows:
-        if mrow.get("protocol"):
-            protocol = {
-                k: v for k, v in mrow["protocol"].items() if v is not None
-            }
-        if mrow.get("metaData"):
-            meta = {
-                k: v for k, v in mrow["metaData"].items() if v is not None
-            }
-        if mrow.get("txn"):
-            t = mrow["txn"]
-            txns[t["appId"]] = max(
-                txns.get(t["appId"], -1), int(t["version"])
-            )
-    if tail_proto:
-        protocol = tail_proto
-    if tail_meta:
-        meta = tail_meta
-    if not meta:
-        raise ValueError(f"Delta log at {path!r} has no metaData action")
-
-    touched: set[str] = set()
-    for removes, adds_ in tail_commits:
-        touched.update(r["path"] for r in removes if "path" in r)
-        touched.update(a["path"] for a in adds_)
-    adds_df = _normalize_add_df(
-        spark.read.parquet(*add_files)
-        .where("add IS NOT NULL")
-        .select("add.*")
-    )
-    overlay: dict[str, dict] = {}
-    if touched:
-        tl = sorted(touched)
-        for r in adds_df.where(F.col("path").isin(tl)).collect():
-            a = {
-                k: v
-                for k, v in r.asDict(recursive=True).items()
-                if v is not None
-            }
-            overlay[a["path"]] = a
-    for removes, adds_ in tail_commits:
-        for rm in removes:
-            _apply_remove(overlay, rm)
-        for a in adds_:
-            overlay[a["path"]] = a
-    live_df = (
-        adds_df.where(~F.col("path").isin(sorted(touched)))
-        if touched
-        else adds_df
+    protocol, meta, txns, add_files, tail = base
+    overlay, live_df = _tail_overlay(
+        _normalize_add_df(
+            spark.read.parquet(*add_files)
+            .where("add IS NOT NULL")
+            .select("add.*")
+        ),
+        tail,
     )
     if overlay:
-        add_t = _add_struct_type()
-
-        def _dv_tuple(a):
-            dv = a.get("deletionVector")
-            if not dv:
-                return None
-            return (
-                dv.get("storageType"),
-                dv.get("pathOrInlineDv"),
-                dv.get("offset"),
-                dv.get("sizeInBytes"),
-                dv.get("cardinality"),
-            )
-
-        rows = [
-            (
-                a["path"],
-                a.get("partitionValues") or {},
-                a.get("size"),
-                a.get("modificationTime"),
-                bool(a.get("dataChange", True)),
-                a.get("stats"),
-                a.get("baseRowId"),
-                a.get("defaultRowCommitVersion"),
-                _dv_tuple(a),
-            )
-            for a in overlay.values()
-        ]
         live_df = live_df.unionByName(
-            spark.createDataFrame(rows, add_t)
+            spark.createDataFrame(
+                [_ckpt_add_row(a) for a in overlay.values()],
+                _add_struct_type(),
+            )
         )
     return protocol, meta, txns, live_df
 
@@ -1653,15 +1529,17 @@ def _implied_features(protocol: dict) -> tuple[set[str], set[str]]:
     (PROTOCOL.md §Protocol Evolution) — the upgrade-to-(3,7) paths
     must carry these forward or a feature the old version numbers
     guaranteed (e.g. columnMapping on a (2,5) table) silently drops
-    out of the feature lists."""
+    out of the feature lists. Each half expands on its own: writer 7
+    lists its features, so a (2,7) table adds only the columnMapping
+    its reader 2 implies, and a (1,7) table nothing."""
     r = set(protocol.get("readerFeatures") or [])
     w = set(protocol.get("writerFeatures") or [])
     mrv = int(protocol.get("minReaderVersion", 1))
     mwv = int(protocol.get("minWriterVersion", 2))
-    if mrv >= 3 and mwv >= 7:
-        return r, w  # already feature-list form
-    if mrv >= 2:
+    if mrv == 2:
         r |= {"columnMapping"}
+    if mwv >= 7:
+        return r, w  # the writer half is already in feature-list form
     if mwv >= 2:
         w |= {"appendOnly", "invariants"}
     if mwv >= 3:
@@ -2942,21 +2820,13 @@ def read_delta_changes(
         )
     tagged: list[tuple[int | None, dict]] = []
     for v in want:
-        with open(_commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                # dataChange=false adds are REARRANGEMENTS (OPTIMIZE
-                # compaction): the rows already flowed through an
-                # earlier commit — emitting them again would duplicate
-                # the change feed (the spec's CDF reads the flag the
-                # same way)
-                if "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    tagged.append((v, action["add"]))
+        for action in _commit_actions(path, v):
+            # dataChange=false adds are REARRANGEMENTS (OPTIMIZE
+            # compaction): the rows already flowed through an earlier
+            # commit — emitting them again would duplicate the change
+            # feed (the spec's CDF reads the flag the same way)
+            if "add" in action and action["add"].get("dataChange", True):
+                tagged.append((v, action["add"]))
     out_schema = T.StructType(
         _strip_meta(schema).fields
         + [T.StructField("_commit_version", T.LongType())]
@@ -3088,24 +2958,17 @@ def read_delta_cdf(
         ins: list[dict] = []
         dels: list[dict] = []
         md: dict | None = None
-        with open(_commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    md = action["metaData"]
-                elif "cdc" in action:
-                    cdcs.append(action["cdc"])
-                elif "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    ins.append(action["add"])
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    dels.append(action["remove"])
+        for action in _commit_actions(path, v):
+            if "metaData" in action:
+                md = action["metaData"]
+            elif "cdc" in action:
+                cdcs.append(action["cdc"])
+            elif "add" in action and action["add"].get("dataChange", True):
+                ins.append(action["add"])
+            elif "remove" in action and action["remove"].get(
+                "dataChange", True
+            ):
+                dels.append(action["remove"])
         if md is not None:
             # the commit's own actions are written under its metaData
             # (atomic schema change + rewrite)
@@ -4606,15 +4469,10 @@ def write_delta(
                 # creation declares the feature-list protocol with
                 # the legacy requirements expanded (r15; provenance
                 # properties are omitted — enablement IS version 0)
-                legacy = {"minReaderVersion": 1, "minWriterVersion": w}
-                _ir, iw = _implied_features(legacy)
-                create_protocol = {
-                    "minReaderVersion": 1,
-                    "minWriterVersion": 7,
-                    "writerFeatures": sorted(
-                        iw | {"inCommitTimestamp"}
-                    ),
-                }
+                create_protocol = _protocol_with(
+                    {"minReaderVersion": 1, "minWriterVersion": w},
+                    writer={"inCommitTimestamp"},
+                )["protocol"]
             elif w > 2:
                 create_protocol = {
                     "minReaderVersion": 1,
@@ -4653,33 +4511,17 @@ def write_delta(
         if feature_adds:
             # expand whatever protocol the other interpreted
             # configuration produced into feature-list form and add
-            # the true table features on top
+            # the true table features on top (a reader feature forces
+            # the feature-list reader protocol: legacy reader
+            # capabilities expand into the list alongside it)
             legacy = create_protocol or {
                 "minReaderVersion": 1,
                 "minWriterVersion": 2,
             }
-            if "writerFeatures" in legacy:
-                rfeats = set(legacy.get("readerFeatures") or [])
-                wfeats = set(legacy["writerFeatures"])
-            else:
-                rfeats, wfeats = _implied_features(legacy)
-            mrv = int(legacy.get("minReaderVersion", 1))
-            if reader_adds:
-                # a reader feature forces the feature-list reader
-                # protocol: legacy reader capabilities expand into
-                # the list alongside it
-                mrv = 3
-                rfeats |= reader_adds
-            create_protocol = {
-                "minReaderVersion": mrv,
-                "minWriterVersion": 7,
-                **(
-                    {"readerFeatures": sorted(rfeats)}
-                    if mrv >= 3
-                    else {}
-                ),
-                "writerFeatures": sorted(wfeats | feature_adds),
-            }
+            create_protocol = (
+                _protocol_with(legacy, reader=reader_adds, writer=feature_adds)
+                or {"protocol": legacy}
+            )["protocol"]
     add_actions = _stage_adds_mapped(
         df,
         path,
@@ -4781,29 +4623,13 @@ def write_delta(
             # protocol upgrades to (3,7) + timestampNtz on BOTH
             # lists in the SAME commit (PROTOCOL.md — a legacy
             # reader would misparse the type)
-            cur_p = _p or {"minReaderVersion": 1, "minWriterVersion": 2}
-            if "timestampNtz" not in set(
-                cur_p.get("writerFeatures") or []
-            ):
-                if "writerFeatures" in cur_p:
-                    up_r = set(cur_p.get("readerFeatures") or [])
-                    up_w = set(cur_p["writerFeatures"])
-                else:
-                    up_r, up_w = _implied_features(cur_p)
-                lines.append(
-                    {
-                        "protocol": {
-                            "minReaderVersion": 3,
-                            "minWriterVersion": 7,
-                            "readerFeatures": sorted(
-                                up_r | {"timestampNtz"}
-                            ),
-                            "writerFeatures": sorted(
-                                up_w | {"timestampNtz"}
-                            ),
-                        }
-                    }
-                )
+            ntz = _protocol_with(
+                _p or {"minReaderVersion": 1, "minWriterVersion": 2},
+                reader={"timestampNtz"},
+                writer={"timestampNtz"},
+            )
+            if ntz is not None:
+                lines.append(ntz)
         if next_v == 0:
             lines.append(
                 {
@@ -5163,12 +4989,10 @@ def commit_operation_metrics(path: str, version: int) -> dict:
     recounting the data (r16: delta_sink_fold's per-batch count job
     re-read the whole micro-batch through the Python stream source)."""
     try:
-        with open(_commit_file(path, version)) as fh:
-            for line in fh:
-                obj = json.loads(line)
-                ci = obj.get("commitInfo")
-                if ci is not None:
-                    return dict(ci.get("operationMetrics") or {})
+        for action in _commit_actions(path, version):
+            ci = action.get("commitInfo")
+            if ci is not None:
+                return dict(ci.get("operationMetrics") or {})
     except (OSError, ValueError):
         return {}
     return {}
@@ -5318,309 +5142,231 @@ _CKPT_SCHEMA = T.StructType(
 )
 
 
-# target action rows per multipart checkpoint part file
+# target action rows per multipart checkpoint part / V2 sidecar shard
 _CKPT_PART_ROWS = 100_000
 
 
-def _write_checkpoint_multipart(
+def _ckpt_add_row(a: dict) -> dict:
+    """A live add as a row of ``_CKPT_SCHEMA``'s add struct — the one
+    add mapping of every checkpoint form and of the distributed
+    plane's overlay rows."""
+    add_t = _add_struct_type()
+    row = {f.name: a.get(f.name) for f in add_t.fields}
+    row["partitionValues"] = row["partitionValues"] or {}
+    row["dataChange"] = bool(a.get("dataChange", True))
+    dv = a.get("deletionVector")
+    row["deletionVector"] = (
+        {f.name: dv.get(f.name) for f in add_t["deletionVector"].dataType}
+        if dv
+        else None
+    )
+    return row
+
+
+def _ckpt_header(
+    protocol: dict, meta: dict, txns: dict[str, int], domains: dict[str, str]
+) -> list[dict]:
+    """The non-file actions every checkpoint form carries: protocol,
+    metaData, the txn fences (without them a vacuumed log would
+    forget sink app versions and a replayed micro-batch would
+    re-append) and the live domains (r15 — spec: a checkpoint must
+    preserve domain metadata, or vacuum loses it)."""
+    return [
+        {
+            "protocol": {
+                "minReaderVersion": int(protocol.get("minReaderVersion", 1)),
+                "minWriterVersion": int(protocol.get("minWriterVersion", 2)),
+                **{
+                    k: protocol[k]
+                    for k in ("readerFeatures", "writerFeatures")
+                    if protocol.get(k) is not None
+                },
+            }
+        },
+        _meta_action(meta),
+    ] + [
+        {"txn": {"appId": app, "version": int(tv), "lastUpdated": None}}
+        for app, tv in sorted(txns.items())
+    ] + [
+        {
+            "domainMetadata": {
+                "domain": dom, "configuration": conf, "removed": False,
+            }
+        }
+        for dom, conf in sorted(domains.items())
+    ]
+
+
+def _publish_parts(df: DataFrame, tmp: str, dest_of) -> list[str]:
+    """Write ``df`` as parquet under ``tmp``, move part ``i`` of ``n``
+    to ``dest_of(i, n)`` and drop ``tmp``; returns the destinations in
+    part order."""
+    df.write.mode("overwrite").parquet(tmp)
+    parts = sorted(
+        f
+        for f in os.listdir(tmp)
+        if f.endswith(".parquet") and not f.startswith(".")
+    )
+    dests = []
+    for i, part in enumerate(parts, start=1):
+        dests.append(dest_of(i, len(parts)))
+        os.replace(os.path.join(tmp, part), dests[-1])
+    shutil.rmtree(tmp, ignore_errors=True)
+    return dests
+
+
+def _publish_last_checkpoint(path: str, doc: dict) -> None:
+    """Flip ``_last_checkpoint`` to ``doc`` (tmp + ``os.replace``).
+    Called only once the checkpoint's own files are in place, so a
+    crash mid-write leaves the previous checkpoint current."""
+    tmp = os.path.join(_log_dir(path), f".lc-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    os.replace(tmp, os.path.join(_log_dir(path), "_last_checkpoint"))
+
+
+def _write_checkpoint(
     spark: SparkSession,
     path: str,
     v: int,
     protocol: dict,
     meta: dict,
     txns: dict[str, int],
-    live_df: DataFrame,
-    domains: dict[str, str] | None = None,
+    adds: dict[str, dict] | None,
+    live_df: DataFrame | None,
+    policy: str | None,
 ) -> int:
-    """Classic MULTIPART checkpoint (%020d.checkpoint.%010d.%010d.
-    parquet) written DISTRIBUTED: the add rows stream from the prior
-    checkpoint's parquet into the new parts without ever becoming
-    driver dicts; protocol/metaData/txn rows ride in the first
-    part's partition. `_last_checkpoint` carries version/size/parts
-    (delta-spark's pointer shape; `_resolve_checkpoint` validates the
-    part set on read)."""
-    n_adds = live_df.count()
-    header_rows = [
-        (
-            {
-                "minReaderVersion": int(
-                    protocol.get("minReaderVersion", 1)
-                ),
-                "minWriterVersion": int(
-                    protocol.get("minWriterVersion", 2)
-                ),
-                "readerFeatures": protocol.get("readerFeatures"),
-                "writerFeatures": protocol.get("writerFeatures"),
-            },
-            None,
-            None,
-            None,
-            None,
-            None,
-        ),
-        (
-            None,
-            {
-                "id": meta.get("id"),
-                "format": meta.get("format")
-                or {"provider": "parquet", "options": {}},
-                "schemaString": meta["schemaString"],
-                "partitionColumns": list(
-                    meta.get("partitionColumns") or []
-                ),
-                "configuration": meta.get("configuration") or {},
-                "createdTime": meta.get("createdTime"),
-            },
-            None,
-            None,
-            None,
-            None,
-        ),
-    ] + [
-        (None, None, None, None,
-         {"appId": app, "version": int(tv), "lastUpdated": None},
-         None)
-        for app, tv in sorted(txns.items())
-    ] + [
-        (None, None, None, None, None,
-         {"domain": dom, "configuration": conf, "removed": False})
-        for dom, conf in sorted((domains or {}).items())
-    ]
-    header_df = spark.createDataFrame(header_rows, _CKPT_SCHEMA)
-    null_of = {
-        f.name: F.lit(None).cast(f.dataType).alias(f.name)
-        for f in _CKPT_SCHEMA.fields
-    }
-    full_adds = live_df.select(
-        null_of["protocol"],
-        null_of["metaData"],
-        F.struct(
-            *[
-                F.col(sf.name)
-                for sf in _add_struct_type().fields
-            ]
-        ).alias("add"),
-        null_of["remove"],
-        null_of["txn"],
-        null_of["domainMetadata"],
+    """The one checkpoint WRITE behind :func:`create_checkpoint`. The
+    live adds come as driver dicts (``adds``, from :func:`_replay`) or
+    as ``live_df`` (the distributed plane, r14: they stream from the
+    prior checkpoint's parquet into the new files and never become
+    driver dicts). The policy and gates resolve once and the actions
+    build once; only the file layout branches:
+
+    - ``classic`` from the driver: one ``%020d.checkpoint.parquet``;
+    - ``classic`` from the distributed plane: MULTIPART
+      ``%020d.checkpoint.%010d.%010d.parquet``, the non-file rows
+      riding in one part's partition; ``_last_checkpoint`` carries
+      ``parts`` (delta-spark's pointer shape; :func:`_resolve_checkpoint`
+      validates the part set on read);
+    - ``v2`` (PROTOCOL.md §V2 Checkpoint, the mirror of
+      :func:`_checkpoint_actions`' read path): the adds stage as
+      parquet sidecar(s) under ``_delta_log/_sidecars/`` and the
+      UUID-named ``%020d.checkpoint.<uuid>.json`` manifest carries
+      checkpointMetadata + the non-file actions inline plus one
+      sidecar pointer per shard — per spec, when any sidecar exists
+      ALL file actions live in sidecars.
+
+    Multipart parts and V2 sidecars shard at ``_CKPT_PART_ROWS`` adds
+    (capped at 64 files, r15 verdict #5), so a 100 TB table's
+    checkpoint is neither a single-writer nor a single-reader
+    bottleneck. Every file lands via tmp + atomic rename;
+    ``_last_checkpoint`` flips last."""
+    # unknown writerFeatures may imply log actions _replay does not
+    # model; a checkpoint written here would silently drop them —
+    # same refusal as any other write (domains and baseRowId/
+    # defaultRowCommitVersion round-trip through every checkpoint
+    # form; rowTracking/clustering are fully writable since r16)
+    _writer_gate(protocol, meta, "CHECKPOINT")
+    domains = replay_domains(spark, path, v)
+    pol = policy or (meta.get("configuration") or {}).get(
+        "delta.checkpointPolicy", "classic"
     )
-    nparts = max(1, min(64, (n_adds // _CKPT_PART_ROWS) + 1))
-    tmp = _checkpoint_file(path, v) + f".mp-tmp-{uuid.uuid4().hex}"
-    (
-        header_df.unionByName(full_adds)
-        .repartition(nparts)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    parts = sorted(
-        f
-        for f in os.listdir(tmp)
-        if f.endswith(".parquet") and not f.startswith(".")
-    )
-    total = len(parts)
-    for idx, part in enumerate(parts, start=1):
-        os.replace(
-            os.path.join(tmp, part),
-            os.path.join(
-                _log_dir(path),
-                f"{v:020d}.checkpoint.{idx:010d}.{total:010d}.parquet",
-            ),
+    if pol not in ("classic", "v2"):
+        raise ValueError(f"checkpoint policy {pol!r} — classic|v2")
+    if pol == "v2" and "v2Checkpoint" not in set(
+        protocol.get("readerFeatures") or []
+    ):
+        raise ValueError(
+            "v2 checkpoints need the v2Checkpoint table feature — "
+            "SET TBLPROPERTIES ('delta.checkpointPolicy'='v2') "
+            "upgrades the protocol in the same commit"
         )
-    shutil.rmtree(tmp, ignore_errors=True)
-    lc_tmp = os.path.join(_log_dir(path), f".lc-{uuid.uuid4().hex}")
-    with open(lc_tmp, "w") as fh:
-        json.dump(
-            {
-                "version": v,
-                "size": int(n_adds) + len(header_rows),
-                "parts": total,
-            },
-            fh,
-        )
-    os.replace(
-        lc_tmp, os.path.join(_log_dir(path), "_last_checkpoint")
-    )
-    return v
-
-
-def _create_checkpoint_v2(
-    spark: SparkSession,
-    path: str,
-    v: int,
-    protocol: dict,
-    meta: dict,
-    adds: dict | None,
-    txns: dict,
-    live_df: DataFrame | None = None,
-    domains: dict[str, str] | None = None,
-) -> int:
-    """The V2 checkpoint WRITE (PROTOCOL.md §V2 Checkpoint; the
-    mirror of :func:`_checkpoint_actions`' read path): the add
-    actions stage as parquet sidecar(s) under ``_delta_log/
-    _sidecars/`` and the UUID-named ``%020d.checkpoint.<uuid>.json``
-    manifest carries checkpointMetadata + protocol + metaData + txn
-    fences inline plus one sidecar pointer per shard — per spec,
-    when any sidecar exists ALL file actions live in sidecars. All
-    files write via tmp + atomic rename; ``_last_checkpoint`` flips
-    last, so a crash mid-write leaves the previous checkpoint
-    current.
-
-    Sharding (r15 verdict #5): above ``_CKPT_PART_ROWS`` adds the
-    sidecar splits into multiple parquets — one file per ~100k adds,
-    capped at 64 — so a 100 TB table's checkpoint is neither a
-    single-writer nor a single-reader bottleneck (the read path
-    already scans all sidecars as one multi-path parquet load).
-    ``live_df`` (the distributed plane, r14): the adds stream from
-    the PRIOR checkpoint's parquet straight into the shards — the
-    multipart classic writer's parquet→parquet kernel — and never
-    become driver dicts."""
-    side_dir = os.path.join(_log_dir(path), "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
-    add_field = next(f for f in _CKPT_SCHEMA.fields if f.name == "add")
+    header = _ckpt_header(protocol, meta, txns, domains)
     if live_df is not None:
         n_adds = live_df.count()
-        side_src = live_df.select(
-            F.struct(
-                *[F.col(sf.name) for sf in _add_struct_type().fields]
-            ).alias("add")
-        )
+        add_col = F.struct(
+            *[F.col(sf.name) for sf in _add_struct_type().fields]
+        ).alias("add")
     else:
-        side_rows = [
-            (
-                {
-                    "path": a["path"],
-                    "partitionValues": a.get("partitionValues") or {},
-                    "size": a.get("size"),
-                    "modificationTime": a.get("modificationTime"),
-                    "dataChange": bool(a.get("dataChange", True)),
-                    "stats": a.get("stats"),
-                    "baseRowId": a.get("baseRowId"),
-                    "defaultRowCommitVersion": a.get(
-                        "defaultRowCommitVersion"
-                    ),
-                    "deletionVector": (
-                        {
-                            "storageType": a["deletionVector"].get(
-                                "storageType"
-                            ),
-                            "pathOrInlineDv": a["deletionVector"].get(
-                                "pathOrInlineDv"
-                            ),
-                            "offset": a["deletionVector"].get("offset"),
-                            "sizeInBytes": a["deletionVector"].get(
-                                "sizeInBytes"
-                            ),
-                            "cardinality": a["deletionVector"].get(
-                                "cardinality"
-                            ),
-                        }
-                        if a.get("deletionVector")
-                        else None
-                    ),
-                },
-            )
+        add_rows = [
+            {"add": _ckpt_add_row(a)}
             for a in sorted(adds.values(), key=lambda a: a["path"])
         ]
-        n_adds = len(side_rows)
-        side_src = spark.createDataFrame(
-            side_rows, T.StructType([add_field])
-        )
+        n_adds = len(add_rows)
     nparts = max(1, min(64, (n_adds // _CKPT_PART_ROWS) + 1))
-    tmp = os.path.join(side_dir, f".tmp-{uuid.uuid4().hex}")
-    (
-        side_src.repartition(nparts)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    side_files: list[tuple[str, str]] = []  # (name, full path)
-    for part in sorted(
-        f
-        for f in os.listdir(tmp)
-        if f.endswith(".parquet") and not f.startswith(".")
-    ):
-        side_name = f"{uuid.uuid4().hex}.parquet"
-        side_path = os.path.join(side_dir, side_name)
-        os.replace(os.path.join(tmp, part), side_path)
-        side_files.append((side_name, side_path))
-    shutil.rmtree(tmp, ignore_errors=True)
-    now_ms = int(time.time() * 1000)
-    lines: list[dict] = [
-        {"checkpointMetadata": {"version": v, "tags": {}}},
-        {
-            "protocol": {
-                "minReaderVersion": int(
-                    protocol.get("minReaderVersion", 1)
-                ),
-                "minWriterVersion": int(
-                    protocol.get("minWriterVersion", 2)
-                ),
-                **(
-                    {"readerFeatures": protocol["readerFeatures"]}
-                    if protocol.get("readerFeatures") is not None
-                    else {}
-                ),
-                **(
-                    {"writerFeatures": protocol["writerFeatures"]}
-                    if protocol.get("writerFeatures") is not None
-                    else {}
-                ),
+    log = _log_dir(path)
+    if pol == "v2":
+        side_dir = os.path.join(log, "_sidecars")
+        os.makedirs(side_dir, exist_ok=True)
+        side_src = (
+            live_df.select(add_col)
+            if live_df is not None
+            else spark.createDataFrame(
+                add_rows, T.StructType([_CKPT_SCHEMA["add"]])
+            )
+        )
+        sides = _publish_parts(
+            side_src.repartition(nparts),
+            os.path.join(side_dir, f".tmp-{uuid.uuid4().hex}"),
+            lambda i, n: os.path.join(
+                side_dir, f"{uuid.uuid4().hex}.parquet"
+            ),
+        )
+        now_ms = int(time.time() * 1000)
+        lines = [
+            {"checkpointMetadata": {"version": v, "tags": {}}}
+        ] + header + [
+            {
+                "sidecar": {
+                    "path": os.path.basename(sp),
+                    "sizeInBytes": os.path.getsize(sp),
+                    "modificationTime": now_ms,
+                }
             }
-        },
-        {
-            "metaData": {
-                "id": meta.get("id"),
-                "format": meta.get("format")
-                or {"provider": "parquet", "options": {}},
-                "schemaString": meta["schemaString"],
-                "partitionColumns": list(
-                    meta.get("partitionColumns") or []
-                ),
-                "configuration": meta.get("configuration") or {},
-                "createdTime": meta.get("createdTime"),
-            }
-        },
-    ] + [
-        {"txn": {"appId": app, "version": int(tv), "lastUpdated": None}}
-        for app, tv in sorted(txns.items())
-    ] + [
-        # non-file actions stay INLINE in the manifest (spec);
-        # domains must survive the checkpoint or vacuum loses them
-        {
-            "domainMetadata": {
-                "domain": dom,
-                "configuration": conf,
-                "removed": False,
-            }
+            for sp in sides
+        ]
+        man_tmp = os.path.join(log, f".tmp-ckpt-{uuid.uuid4().hex}.json")
+        with open(man_tmp, "w") as fh:
+            for obj in lines:
+                fh.write(json.dumps(obj, separators=(",", ":")) + "\n")
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(
+            man_tmp,
+            os.path.join(log, f"{v:020d}.checkpoint.{uuid.uuid4()}.json"),
+        )
+        pointer = {"version": v, "size": len(lines) + n_adds}
+    elif live_df is None:
+        rows = header + add_rows
+        _publish_parts(
+            spark.createDataFrame(rows, _CKPT_SCHEMA).coalesce(1),
+            _checkpoint_file(path, v) + f".tmp-{uuid.uuid4().hex}",
+            lambda i, n: _checkpoint_file(path, v),
+        )
+        pointer = {"version": v, "size": len(rows)}
+    else:
+        full_adds = live_df.select(
+            *[
+                add_col
+                if f.name == "add"
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in _CKPT_SCHEMA.fields
+            ]
+        )
+        parts = _publish_parts(
+            spark.createDataFrame(header, _CKPT_SCHEMA)
+            .unionByName(full_adds)
+            .repartition(nparts),
+            _checkpoint_file(path, v) + f".mp-tmp-{uuid.uuid4().hex}",
+            lambda i, n: os.path.join(
+                log, f"{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
+            ),
+        )
+        pointer = {
+            "version": v, "size": n_adds + len(header), "parts": len(parts),
         }
-        for dom, conf in sorted((domains or {}).items())
-    ] + [
-        {
-            "sidecar": {
-                "path": side_name,
-                "sizeInBytes": os.path.getsize(side_path),
-                "modificationTime": now_ms,
-            }
-        }
-        for side_name, side_path in side_files
-    ]
-    man_tmp = os.path.join(
-        _log_dir(path), f".tmp-ckpt-{uuid.uuid4().hex}.json"
-    )
-    with open(man_tmp, "w") as fh:
-        for obj in lines:
-            fh.write(json.dumps(obj, separators=(",", ":")) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(
-        man_tmp,
-        os.path.join(
-            _log_dir(path), f"{v:020d}.checkpoint.{uuid.uuid4()}.json"
-        ),
-    )
-    lc_tmp = os.path.join(_log_dir(path), f".lc-{uuid.uuid4().hex}")
-    with open(lc_tmp, "w") as fh:
-        json.dump({"version": v, "size": len(lines) + int(n_adds)}, fh)
-    os.replace(lc_tmp, os.path.join(_log_dir(path), "_last_checkpoint"))
+    _publish_last_checkpoint(path, pointer)
     return v
 
 
@@ -5645,164 +5391,20 @@ def create_checkpoint(
     if not versions:
         raise FileNotFoundError(f"nothing to checkpoint at {path!r}")
     v = max(versions) if version is None else version
-    if policy in (None, "classic", "v2"):
-        # WRITE half of the distributed metadata plane (r14): above
-        # the threshold, compact prior-checkpoint + tail with the
-        # adds streaming parquet→parquet — never through the driver
-        # (classic → multipart; v2 → sharded sidecars, r15)
-        dist = _live_adds_df(spark, path, v)
-        if dist is not None:
-            protocol, meta, txns, live_df = dist
-            _writer_gate(protocol, meta, "CHECKPOINT")
-            domains = replay_domains(spark, path, v)
-            pol = policy or (meta.get("configuration") or {}).get(
-                "delta.checkpointPolicy", "classic"
-            )
-            if pol == "classic":
-                return _write_checkpoint_multipart(
-                    spark, path, v, protocol, meta, txns, live_df,
-                    domains=domains,
-                )
-            if pol == "v2":
-                # sharded sidecars stream from the prior checkpoint's
-                # parquet without driver dicts (r15 verdict #5)
-                if "v2Checkpoint" not in set(
-                    protocol.get("readerFeatures") or []
-                ):
-                    raise ValueError(
-                        "v2 checkpoints need the v2Checkpoint table "
-                        "feature — SET TBLPROPERTIES "
-                        "('delta.checkpointPolicy'='v2') upgrades the "
-                        "protocol in the same commit"
-                    )
-                return _create_checkpoint_v2(
-                    spark, path, v, protocol, meta, None, txns,
-                    live_df=live_df, domains=domains,
-                )
-    protocol, meta, adds, txns = _replay(spark, path, v)
-    # unknown writerFeatures may imply log actions _replay does not
-    # model; a checkpoint written here would silently drop them —
-    # same refusal as any other write (domains and baseRowId/
-    # defaultRowCommitVersion round-trip through every checkpoint
-    # form; rowTracking/clustering are fully writable since r16)
-    _writer_gate(protocol, meta, "CHECKPOINT")
-    domains = replay_domains(spark, path, v)
-    pol = policy or (meta.get("configuration") or {}).get(
-        "delta.checkpointPolicy", "classic"
-    )
-    if pol not in ("classic", "v2"):
-        raise ValueError(f"checkpoint policy {pol!r} — classic|v2")
-    if pol == "v2":
-        if "v2Checkpoint" not in set(
-            protocol.get("readerFeatures") or []
-        ):
-            raise ValueError(
-                "v2 checkpoints need the v2Checkpoint table feature — "
-                "SET TBLPROPERTIES ('delta.checkpointPolicy'='v2') "
-                "upgrades the protocol in the same commit"
-            )
-        return _create_checkpoint_v2(spark, path, v, protocol, meta,
-                                     adds, txns, domains=domains)
-    def _dv_row(a: dict) -> dict | None:
-        dv = a.get("deletionVector")
-        if not dv:
-            return None
-        return {
-            "storageType": dv.get("storageType"),
-            "pathOrInlineDv": dv.get("pathOrInlineDv"),
-            "offset": dv.get("offset"),
-            "sizeInBytes": dv.get("sizeInBytes"),
-            "cardinality": dv.get("cardinality"),
-        }
-
-    rows = [
-        (
-            {
-                "minReaderVersion": int(protocol.get("minReaderVersion", 1)),
-                "minWriterVersion": int(protocol.get("minWriterVersion", 2)),
-                "readerFeatures": protocol.get("readerFeatures"),
-                "writerFeatures": protocol.get("writerFeatures"),
-            },
-            None,
-            None,
-            None,
-            None,
-            None,
-        ),
-        (
-            None,
-            {
-                "id": meta.get("id"),
-                "format": meta.get("format")
-                or {"provider": "parquet", "options": {}},
-                "schemaString": meta["schemaString"],
-                "partitionColumns": list(
-                    meta.get("partitionColumns") or []
-                ),
-                "configuration": meta.get("configuration") or {},
-                "createdTime": meta.get("createdTime"),
-            },
-            None,
-            None,
-            None,
-            None,
-        ),
-    ] + [
-        (
-            None,
-            None,
-            {
-                "path": a["path"],
-                "partitionValues": a.get("partitionValues") or {},
-                "size": a.get("size"),
-                "modificationTime": a.get("modificationTime"),
-                "dataChange": bool(a.get("dataChange", True)),
-                "stats": a.get("stats"),
-                "baseRowId": a.get("baseRowId"),
-                "defaultRowCommitVersion": a.get(
-                    "defaultRowCommitVersion"
-                ),
-                "deletionVector": _dv_row(a),
-            },
-            None,
-            None,
-            None,
+    # WRITE half of the distributed metadata plane (r14): above the
+    # threshold, compact prior-checkpoint + tail with the adds
+    # streaming parquet→parquet — never through the driver (classic
+    # → multipart; v2 → sharded sidecars, r15)
+    dist = _live_adds_df(spark, path, v)
+    if dist is not None:
+        protocol, meta, txns, live_df = dist
+        return _write_checkpoint(
+            spark, path, v, protocol, meta, txns, None, live_df, policy
         )
-        for a in adds.values()
-    ] + [
-        # txn fences persist through checkpoints: without these rows a
-        # vacuumed log would forget sink app versions and a replayed
-        # micro-batch would re-append
-        (None, None, None, None,
-         {"appId": app, "version": int(v), "lastUpdated": None},
-         None)
-        for app, v in sorted(txns.items())
-    ] + [
-        # live domains persist too (r15 — spec: a checkpoint must
-        # preserve domain metadata)
-        (None, None, None, None, None,
-         {"domain": dom, "configuration": conf, "removed": False})
-        for dom, conf in sorted(domains.items())
-    ]
-    tmp = _checkpoint_file(path, v) + f".tmp-{uuid.uuid4().hex}"
-    (
-        spark.createDataFrame(rows, _CKPT_SCHEMA)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(tmp)
+    protocol, meta, adds, txns = _replay(spark, path, v)
+    return _write_checkpoint(
+        spark, path, v, protocol, meta, txns, adds, None, policy
     )
-    part = next(
-        f
-        for f in os.listdir(tmp)
-        if f.endswith(".parquet") and not f.startswith(".")
-    )
-    os.replace(os.path.join(tmp, part), _checkpoint_file(path, v))
-    shutil.rmtree(tmp, ignore_errors=True)
-    lc_tmp = os.path.join(_log_dir(path), f".lc-{uuid.uuid4().hex}")
-    with open(lc_tmp, "w") as fh:
-        json.dump({"version": v, "size": len(rows)}, fh)
-    os.replace(lc_tmp, os.path.join(_log_dir(path), "_last_checkpoint"))
-    return v
 
 
 def vacuum_delta(
@@ -5925,13 +5527,8 @@ def vacuum_delta(
         # change-data files (spec §Add CDC File) live as long as their
         # commit is retained: read_delta_cdf needs them for exactly the
         # versions whose JSON survives
-        cf = _commit_file(path, v)
-        if os.path.exists(cf):
-            for line in open(cf):
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
+        if os.path.exists(_commit_file(path, v)):
+            for action in _commit_actions(path, v):
                 if "cdc" in action:
                     live.add(
                         os.path.normpath(
@@ -6397,16 +5994,14 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
     IS the history."""
     rows = []
     for v in delta_versions(path):
-        ci = {}
-        with open(_commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    ci = action["commitInfo"]
-                    break
+        ci = next(
+            (
+                a["commitInfo"]
+                for a in _commit_actions(path, v)
+                if "commitInfo" in a
+            ),
+            {},
+        )
         rows.append(
             (
                 v,

@@ -66,6 +66,25 @@ def _id_type_sig(fields: list[dict]) -> list[tuple[int, str]] | None:
     return sorted(sig)
 
 
+def _check_schema(reader, v: int, meta: dict) -> None:
+    """Refuse a commit ``v`` whose metaData changes the schema the
+    stream ``reader`` was built with — except a PURE RENAME on a
+    mapped table, which keeps every (columnMapping.id, type): the
+    physical binding is untouched, so the stream continues under its
+    construction-time names (r15)."""
+    md_fields = json.loads(meta["schemaString"])["fields"]
+    if [(f["name"], f["type"]) for f in md_fields] != [
+        (f["name"], f["type"]) for f in reader.fields
+    ] and (
+        reader._id_sig is None or _id_type_sig(md_fields) != reader._id_sig
+    ):
+        raise ValueError(
+            f"version {v} changes the table schema mid-stream (not a "
+            "pure rename) — this source reads with the construction-"
+            "time schema; restart the query past the schema change"
+        )
+
+
 def _log_meta(path: str):
     """(spark_schema_json_fields, partition_cols, physical_of) from the
     log — driver-side, no SparkSession needed (the data source API
@@ -82,14 +101,9 @@ def _log_meta(path: str):
     # scan the JSON tail for the newest metaData; a checkpointed table
     # whose early JSON was vacuumed falls back to the checkpoint parquet
     for v in versions:
-        with open(delta_io._commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    meta = action["metaData"]
+        for action in delta_io._commit_actions(path, v):
+            if "metaData" in action:
+                meta = action["metaData"]
     if not meta and ckpt is not None:
         # classic, multipart and V2 (sidecar) checkpoints all resolve
         # through _resolve_checkpoint; metaData is always INLINE in a
@@ -100,11 +114,7 @@ def _log_meta(path: str):
         if res is not None:
             kind, files = res
             if kind == "v2" and files[0].endswith(".json"):
-                rows = [
-                    json.loads(line)
-                    for line in open(files[0])
-                    if line.strip()
-                ]
+                rows = list(delta_io._json_lines(files[0]))
             else:
                 rows = []
                 for f in files:
@@ -419,17 +429,10 @@ class DeltaTailStreamReader(_RateLimitMixin, DataSourceStreamReader):
         from census_asc5_data_pipeline_spark.sources import delta_io
 
         n = b = 0
-        with open(delta_io._commit_file(self.path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    n += 1
-                    b += int(action["add"].get("size", 0))
+        for action in delta_io._commit_actions(self.path, v):
+            if "add" in action and action["add"].get("dataChange", True):
+                n += 1
+                b += int(action["add"].get("size", 0))
         return n, b
 
     def latestOffset(self):
@@ -457,55 +460,27 @@ class DeltaTailStreamReader(_RateLimitMixin, DataSourceStreamReader):
             )
         parts = []
         for v in want:
-            with open(delta_io._commit_file(self.path, v)) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        md_fields = json.loads(
-                            action["metaData"]["schemaString"]
-                        )["fields"]
-                        if [
-                            (f["name"], f["type"]) for f in md_fields
-                        ] != [
-                            (f["name"], f["type"]) for f in self.fields
-                        ] and (
-                            # a PURE RENAME on a mapped table keeps
-                            # every (columnMapping.id, type) — the
-                            # physical binding is untouched, so the
-                            # stream continues under its
-                            # construction-time names (r15)
-                            self._id_sig is None
-                            or _id_type_sig(md_fields) != self._id_sig
-                        ):
-                            raise ValueError(
-                                f"version {v} changes the table schema "
-                                "mid-stream (not a pure rename) — this "
-                                "source reads with the construction-"
-                                "time schema; restart the query past "
-                                "the schema change"
-                            )
-                        continue
-                    if "add" in action and action["add"].get(
-                        "dataChange", True
-                    ):
-                        a = action["add"]
-                        parts.append(
-                            _FilePart(
-                                delta_io._data_file_path(
-                                    self.path, a["path"]
-                                ),
-                                v,
-                                a.get("partitionValues") or {},
-                                self.pcols,
-                                self.fields,
-                                table=self.path,
-                                dv=a.get("deletionVector"),
-                                phys=self.physical_of,
-                            )
+            for action in delta_io._commit_actions(self.path, v):
+                if "metaData" in action:
+                    _check_schema(self, v, action["metaData"])
+                elif "add" in action and action["add"].get(
+                    "dataChange", True
+                ):
+                    a = action["add"]
+                    parts.append(
+                        _FilePart(
+                            delta_io._data_file_path(
+                                self.path, a["path"]
+                            ),
+                            v,
+                            a.get("partitionValues") or {},
+                            self.pcols,
+                            self.fields,
+                            table=self.path,
+                            dv=a.get("deletionVector"),
+                            phys=self.physical_of,
                         )
+                    )
         # the engine requires >= 1 partition per batch; an empty range
         # (fence-only or metadata commits) yields one no-op partition
         if not parts:
@@ -669,26 +644,19 @@ class DeltaCdfStreamReader(_RateLimitMixin, DataSourceStreamReader):
 
         cdcs = adds = removes = 0
         cdc_b = add_b = rm_b = 0
-        with open(delta_io._commit_file(self.path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "cdc" in action:
-                    cdcs += 1
-                    cdc_b += int(action["cdc"].get("size", 0))
-                elif "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    adds += 1
-                    add_b += int(action["add"].get("size", 0))
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    removes += 1
-                    # size is spec-optional on removes
-                    rm_b += int(action["remove"].get("size") or 0)
+        for action in delta_io._commit_actions(self.path, v):
+            if "cdc" in action:
+                cdcs += 1
+                cdc_b += int(action["cdc"].get("size", 0))
+            elif "add" in action and action["add"].get("dataChange", True):
+                adds += 1
+                add_b += int(action["add"].get("size", 0))
+            elif "remove" in action and action["remove"].get(
+                "dataChange", True
+            ):
+                removes += 1
+                # size is spec-optional on removes
+                rm_b += int(action["remove"].get("size") or 0)
         # cdc actions are the ONLY change source when present (spec)
         if cdcs:
             return cdcs, cdc_b
@@ -717,46 +685,19 @@ class DeltaCdfStreamReader(_RateLimitMixin, DataSourceStreamReader):
         parts = []
         for v in want:
             cdcs, ins, dels = [], [], []
-            with open(delta_io._commit_file(self.path, v)) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        md_fields = json.loads(
-                            action["metaData"]["schemaString"]
-                        )["fields"]
-                        if [
-                            (f["name"], f["type"]) for f in md_fields
-                        ] != [
-                            (f["name"], f["type"]) for f in self.fields
-                        ] and (
-                            # a PURE RENAME on a mapped table keeps
-                            # every (columnMapping.id, type) — the
-                            # physical binding is untouched, so the
-                            # stream continues under its
-                            # construction-time names (r15)
-                            self._id_sig is None
-                            or _id_type_sig(md_fields) != self._id_sig
-                        ):
-                            raise ValueError(
-                                f"version {v} changes the table schema "
-                                "mid-stream (not a pure rename) — this "
-                                "source reads with the construction-"
-                                "time schema; restart the query past "
-                                "the schema change"
-                            )
-                    elif "cdc" in action:
-                        cdcs.append(action["cdc"])
-                    elif "add" in action and action["add"].get(
-                        "dataChange", True
-                    ):
-                        ins.append(action["add"])
-                    elif "remove" in action and action["remove"].get(
-                        "dataChange", True
-                    ):
-                        dels.append(action["remove"])
+            for action in delta_io._commit_actions(self.path, v):
+                if "metaData" in action:
+                    _check_schema(self, v, action["metaData"])
+                elif "cdc" in action:
+                    cdcs.append(action["cdc"])
+                elif "add" in action and action["add"].get(
+                    "dataChange", True
+                ):
+                    ins.append(action["add"])
+                elif "remove" in action and action["remove"].get(
+                    "dataChange", True
+                ):
+                    dels.append(action["remove"])
             if not cdcs and dels and self.pcols:
                 # spec-optional partitionValues: deriving delete images
                 # without them would attach NULL partition columns

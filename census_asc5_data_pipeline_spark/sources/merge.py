@@ -2726,26 +2726,21 @@ def copy_into(
     except (OSError, ValueError, TypeError):
         pass
     for v in d.delta_versions(path):
-        with open(d._commit_file(path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                ci = action.get("commitInfo")
-                if ci is None:
-                    continue
-                if ci.get("operation") == "COPY INTO":
-                    try:
-                        loaded.update(
-                            json.loads(
-                                (ci.get("operationParameters") or {})
-                                .get("files", "[]")
-                            )
+        for action in d._commit_actions(path, v):
+            ci = action.get("commitInfo")
+            if ci is None:
+                continue
+            if ci.get("operation") == "COPY INTO":
+                try:
+                    loaded.update(
+                        json.loads(
+                            (ci.get("operationParameters") or {})
+                            .get("files", "[]")
                         )
-                    except (TypeError, ValueError):
-                        pass
-                break
+                    )
+                except (TypeError, ValueError):
+                    pass
+            break
     src = os.path.abspath(src)
     cands = sorted(
         p

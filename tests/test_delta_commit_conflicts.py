@@ -9,7 +9,9 @@ put-if-absent link, so no commit is ever silently overwritten.
   ``ValueError("concurrent commit changed …")`` and delete the data,
   cdc and deletion-vector files they staged — never a file a live
   ``add`` names;
-- the claim primitive is called from exactly one place per format.
+- the claim primitive is called from exactly one place per format;
+- the Delta log plane opens a commit JSON and writes the
+  ``_last_checkpoint`` pointer in one place each.
 """
 
 from __future__ import annotations
@@ -328,3 +330,99 @@ def test_one_claim_site_per_format():
         ("delta_io", "_put_if_absent_commit"),
         ("iceberg_io", "_commit_metadata"),
     ]
+
+
+_LOG_PLANE_MODULES = ("delta_io", "delta_stream_source", "merge")
+
+
+def _functions(module: str):
+    """(name, node) of every function in a package module, nested
+    ones included."""
+    src = (Path(d.__file__).parent / f"{module}.py").read_text()
+    return [
+        (n.name, n)
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+
+def _own_nodes(fn):
+    """The nodes of ``fn``'s body, not descending into nested
+    functions (they are checked on their own)."""
+    todo = list(fn.body)
+    while todo:
+        n = todo.pop()
+        yield n
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            todo.extend(ast.iter_child_nodes(n))
+
+
+def _callee(node) -> str | None:
+    if isinstance(node, ast.Call):
+        return getattr(node.func, "id", None) or getattr(
+            node.func, "attr", None
+        )
+    return None
+
+
+def test_one_commit_reader_and_pointer_writer():
+    """The Delta log plane reads a commit JSON in one place and flips
+    ``_last_checkpoint`` in one place. A function opens a commit file
+    when it passes ``_commit_file(...)`` — directly or through a
+    local name bound to it — to ``open`` or ``_json_lines``; only
+    ``_commit_actions`` does, plus ``_ict_of_commit`` (bounded head
+    scan) and ``_commit_timestamp_ms`` (skips undecodable lines). A
+    function writes the pointer when it names ``"_last_checkpoint"``
+    and writes a file (``open(..., "w")``, ``os.replace``,
+    ``json.dump``); only ``_publish_last_checkpoint`` does."""
+    openers, writers = [], []
+    for module in _LOG_PLANE_MODULES:
+        for name, fn in _functions(module):
+            nodes = list(_own_nodes(fn))
+            bound = {
+                t.id
+                for n in nodes
+                if isinstance(n, ast.Assign)
+                and _callee(n.value) == "_commit_file"
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+
+            def _names_commit(arg) -> bool:
+                return any(
+                    _callee(x) == "_commit_file"
+                    or (isinstance(x, ast.Name) and x.id in bound)
+                    for x in ast.walk(arg)
+                )
+
+            if any(
+                _callee(n) in ("open", "_json_lines")
+                and n.args
+                and _names_commit(n.args[0])
+                for n in nodes
+            ):
+                openers.append((module, name))
+            names_pointer = any(
+                isinstance(n, ast.Constant) and n.value == "_last_checkpoint"
+                for n in nodes
+            )
+            writes = any(
+                _callee(n) in ("replace", "dump")
+                or (
+                    _callee(n) == "open"
+                    and any(
+                        isinstance(a, ast.Constant)
+                        and str(a.value)[:1] in ("w", "a")
+                        for a in n.args[1:]
+                    )
+                )
+                for n in nodes
+            )
+            if names_pointer and writes:
+                writers.append((module, name))
+    assert sorted(openers) == [
+        ("delta_io", "_commit_actions"),
+        ("delta_io", "_commit_timestamp_ms"),
+        ("delta_io", "_ict_of_commit"),
+    ]
+    assert writers == [("delta_io", "_publish_last_checkpoint")]

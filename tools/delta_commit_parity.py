@@ -6,16 +6,23 @@ TBLPROPERTIES, domain metadata, ADD / RENAME / DROP COLUMNS, ALTER
 COLUMN TYPE, CLUSTER BY, RESTORE, row-tracking enablement, shallow
 and deep CLONE — on a plain table and on a column-mapped +
 row-tracking + CDF table, then writes each commit's parsed actions
-with timestamps, file names and UUIDs masked, plus the checkpoint
-files on disk. uuid4 is seeded per verb so both checkouts name (and
-order) their files alike.
+with timestamps, file names and UUIDs masked. Four more tables write
+the checkpoint forms the auto-checkpoint never reaches: multipart
+(the distributed plane, forced by patching ``_SPARK_PRUNE_THRESHOLD``
+to 0), V2 from the driver, and V2 sharded into sidecars (a small
+``_CKPT_PART_ROWS``) from the driver and from the distributed plane.
+Every checkpoint is dumped as its masked, sorted action multiset —
+read with pyarrow from the parts, the manifest and the sidecars —
+next to the ``_last_checkpoint`` pointer. uuid4 is seeded per verb so
+both checkouts name (and order) their files alike.
 
     python tools/delta_commit_parity.py run <repo_root> <work_dir> <out.json>
     python tools/delta_commit_parity.py compare <a.json> <b.json>
 
 Run ``run`` once per checkout (e.g. the parent from ``git archive``),
-then ``compare`` prints every commit whose actions differ and the
-checkpoint files each side wrote.
+then ``compare`` prints every commit and every checkpoint whose
+actions differ, and the pointer and checkpoint files when they
+differ.
 """
 import json
 import os
@@ -32,21 +39,30 @@ uuid.uuid4 = lambda: uuid.UUID(int=_rng.getrandbits(128), version=4)
 
 if sys.argv[1] == "compare":
     a, b = (json.load(open(f)) for f in sys.argv[2:4])
-    n_diff = 0
+    n_diff = n_ckpt_diff = 0
     for table in sorted(set(a) | set(b)):
-        ca, cb = a[table]["commits"], b[table]["commits"]
-        bad = sorted(
-            {v for v in set(ca) | set(cb) if ca.get(v) != cb.get(v)},
-            key=int,
-        )
-        n_diff += len(bad)
-        print(f"{table}: {len(ca)} vs {len(cb)} commits, differing: {bad}")
-        for v in bad:
-            print(f"  v{v}:\n    a: {ca.get(v)}\n    b: {cb.get(v)}")
-        ka, kb = a[table]["checkpoints"], b[table]["checkpoints"]
-        if ka != kb:
-            print(f"  checkpoint files a={ka} b={kb}")
+        ta, tb = a.get(table, {}), b.get(table, {})
+        for kind in ("commits", "checkpoint_actions"):
+            ca, cb = ta.get(kind, {}), tb.get(kind, {})
+            bad = sorted(
+                {v for v in set(ca) | set(cb) if ca.get(v) != cb.get(v)},
+                key=int,
+            )
+            if kind == "commits":
+                n_diff += len(bad)
+            else:
+                n_ckpt_diff += len(bad)
+            print(
+                f"{table}: {len(ca)} vs {len(cb)} {kind}, differing: {bad}"
+            )
+            for v in bad:
+                print(f"  v{v}:\n    a: {ca.get(v)}\n    b: {cb.get(v)}")
+        for kind in ("checkpoints", "last_checkpoint"):
+            if ta.get(kind) != tb.get(kind):
+                n_ckpt_diff += kind == "last_checkpoint"
+                print(f"  {kind} a={ta.get(kind)} b={tb.get(kind)}")
     print("commits that differ:", n_diff)
+    print("checkpoints (actions or pointer) that differ:", n_ckpt_diff)
     sys.exit(0)
 
 root, work, out = sys.argv[2:5]
@@ -101,6 +117,51 @@ def mask(x, key=None):
     return x
 
 
+def _plain(x):
+    """A pyarrow row value as plain JSON: null fields dropped, map
+    columns (lists of key/value pairs) as dicts."""
+    if isinstance(x, dict):
+        return {k: _plain(v) for k, v in x.items() if v is not None}
+    if isinstance(x, list):
+        if x and all(isinstance(e, tuple) and len(e) == 2 for e in x):
+            return {k: _plain(v) for k, v in x}
+        return [_plain(v) for v in x]
+    return x
+
+
+def _rows(fp):
+    if fp.endswith(".json"):
+        with open(fp) as fh:
+            return [json.loads(ln) for ln in fh if ln.strip()]
+    import pyarrow.parquet as pq
+
+    return [_plain(r) for r in pq.read_table(fp).to_pylist()]
+
+
+def checkpoint_actions(log, files):
+    """The masked, sorted actions of one checkpoint's files, sidecar
+    rows included (a sidecar's byte size follows its row order, which
+    may change, so it is masked)."""
+    acts = []
+    for f in files:
+        for r in _rows(os.path.join(log, f)):
+            sc = r.get("sidecar")
+            if sc:
+                acts.extend(
+                    _rows(
+                        os.path.join(
+                            log, "_sidecars", os.path.basename(sc["path"])
+                        )
+                    )
+                )
+                sc = dict(sc, sizeInBytes="<size>")
+                r = dict(r, sidecar=sc)
+            acts.append(r)
+    return sorted(
+        (mask(a) for a in acts), key=lambda a: json.dumps(a, sort_keys=True)
+    )
+
+
 def dump(path):
     log = os.path.join(path, "_delta_log")
     commits = {}
@@ -109,8 +170,19 @@ def dump(path):
             commits[v] = [
                 mask(json.loads(ln)) for ln in fh if ln.strip()
             ]
-    ckpts = sorted(f for f in os.listdir(log) if "checkpoint" in f)
-    return {"commits": commits, "checkpoints": ckpts}
+    ckpts = sorted(f for f in os.listdir(log) if ".checkpoint." in f)
+    by_version = {}
+    for f in ckpts:
+        by_version.setdefault(int(f[:20]), []).append(f)
+    lc = os.path.join(log, "_last_checkpoint")
+    return {
+        "commits": commits,
+        "checkpoints": [mask(f) for f in ckpts],
+        "checkpoint_actions": {
+            v: checkpoint_actions(log, fs) for v, fs in by_version.items()
+        },
+        "last_checkpoint": json.load(open(lc)) if os.path.exists(lc) else None,
+    }
 
 
 _step = [0]
@@ -185,6 +257,36 @@ def scenario(tag, conf):
     return out_
 
 
+def ckpt_scenario(tag, policy, distributed, part_rows=None):
+    """A table whose last checkpoint is ``policy`` (classic|v2) from
+    the driver, or from the distributed plane (a prior checkpoint,
+    then two more commits, then ``_SPARK_PRUNE_THRESHOLD`` = 0), with
+    adds, removes, a DV, a txn fence and a domain to carry."""
+    p = os.path.join(work, tag)
+    for i in range(4):
+        rows = [(j, float(j), j % 2) for j in range(i * 5, i * 5 + 5)]
+        S(d.write_delta, df(rows), p)
+    S(d.write_delta, df([(90, 9.0, 0)]), p, txn=("app", 3))
+    S(d.set_domain_metadata, spark, p, "my.domain", '{"x": 1}')
+    if policy == "v2":
+        S(d.set_delta_properties, spark, p, {"delta.checkpointPolicy": "v2"})
+    S(d.delete_delta_where, spark, p, "k = 1", mode="dv")
+    S(d.delete_delta_where, spark, p, "k = 6", mode="cow")
+    threshold, rows = d._SPARK_PRUNE_THRESHOLD, d._CKPT_PART_ROWS
+    if part_rows is not None:
+        d._CKPT_PART_ROWS = part_rows
+    try:
+        if distributed:
+            S(d.create_checkpoint, spark, p)
+            S(d.write_delta, df([(91, 9.0, 1)]), p, txn=("app", 4))
+            S(d.delete_delta_where, spark, p, "k = 11", mode="dv")
+            d._SPARK_PRUNE_THRESHOLD = 0
+        S(d.create_checkpoint, spark, p)
+    finally:
+        d._SPARK_PRUNE_THRESHOLD, d._CKPT_PART_ROWS = threshold, rows
+    return {tag: dump(p)}
+
+
 res = {}
 res.update(scenario("plain", None))
 res.update(
@@ -197,7 +299,12 @@ res.update(
         },
     )
 )
+res.update(ckpt_scenario("ckpt_multipart", "classic", True))
+res.update(ckpt_scenario("ckpt_v2_driver", "v2", False))
+res.update(ckpt_scenario("ckpt_v2_sharded_driver", "v2", False, 2))
+res.update(ckpt_scenario("ckpt_v2_sharded_dist", "v2", True, 2))
 with open(out, "w") as fh:
     json.dump(res, fh, indent=1, sort_keys=True)
 print("versions:", {k: len(v["commits"]) for k, v in res.items()})
+print("checkpoint files:", {k: v["checkpoints"] for k, v in res.items()})
 spark.stop()
