@@ -64,8 +64,15 @@ How this reader maps it to Spark — scale notes:
   decoded by :mod:`deletion_vectors` (driver-side when small,
   executor-fan-out above a cardinality threshold). Any OTHER reader
   feature (v2 checkpoints, type widening...) still fails LOUDLY
-  instead of silently mis-reading. ``delete_delta_where`` writes
-  row-level deletes both ways: copy-on-write rewrite or a DV commit.
+  instead of silently mis-reading.
+- Row-level DML has one path, :func:`_row_level_delta`: DELETE
+  (:func:`delete_delta_where`) is its case without a post-image,
+  UPDATE (``merge.update_where``) its case with the SET image. It
+  prunes candidates by stats, scans them once with row positions,
+  and either rewrites the touched files (copy-on-write) or retires
+  the matched positions behind a deletion vector, then stages the
+  CDF images and commits once. MERGE (``merge._merge_delta``) keeps
+  its own plan over the same primitives.
 
 The writer emits protocol (1, 2), metaData with the Spark schema
 JSON (Delta's ``schemaString`` IS Spark's ``StructType.json()``),
@@ -656,7 +663,7 @@ def replay_domains(
             for r in rows:
                 _apply(r.get("domainMetadata"))
         start = ckpt + 1
-    missing = [v for v in range(start, version + 1) if v not in versions]
+    missing = sorted(set(range(start, version + 1)) - set(versions))
     if missing:
         raise FileNotFoundError(
             f"Delta log at {path!r} is missing commit(s) {missing} "
@@ -2811,7 +2818,7 @@ def read_delta_changes(
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     pcols = list(meta.get("partitionColumns") or [])
     want = [v for v in range(since_version + 1, last + 1)]
-    missing = [v for v in want if v not in versions]
+    missing = sorted(set(want) - set(versions))
     if missing:
         raise FileNotFoundError(
             f"commit JSON for version(s) {missing} not on disk — the "
@@ -2907,7 +2914,7 @@ def read_delta_cdf(
     _protocol, meta, _adds, _txns = _replay(spark, path, last)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     want = [v for v in range(since_version + 1, last + 1)]
-    missing = [v for v in want if v not in versions]
+    missing = sorted(set(want) - set(versions))
     if missing:
         raise FileNotFoundError(
             f"commit JSON for version(s) {missing} not on disk — the "
@@ -4714,27 +4721,24 @@ def _dv_retire(
     spark: SparkSession,
     path: str,
     protocol: dict,
-    scan: DataFrame,
-    pred,
+    matched: DataFrame,
     adds_by_base: dict[str, dict],
     lines: list[dict],
     planned: dict[str, dict | None],
     now_ms: int,
     staged: list[str],
 ) -> int:
-    """DV-retire every scan row matching ``pred``: write the merged
-    roaring sidecars (their path appended to ``staged``), append the
-    protocol-upgrade (when needed) and the remove + DV-re-add actions
-    to ``lines``, record the expected pre-commit DV state in
-    ``planned``. Shared by
-    :func:`delete_delta_where` (mode='dv') and
-    :func:`merge.update_where` (DV-mode UPDATE = retire old positions
-    + append updated rows in the same commit). Returns the number of
-    retired rows — 0 (falsy) when nothing matched, so callers skip
-    the commit; the count feeds operationMetrics (numDeletedRows /
-    numUpdatedRows) with no extra job, since the scan already passes
-    matched positions through the driver — O(matched rows), the
-    documented DV trade."""
+    """DV-retire every row of ``matched`` (a keep_pos scan's rows):
+    write the merged roaring sidecars (their path appended to
+    ``staged``), append the protocol-upgrade (when needed) and the
+    remove + DV-re-add actions to ``lines``, record the expected
+    pre-commit DV state in ``planned``. Shared by
+    :func:`_row_level_delta` (DV-mode DELETE and UPDATE) and
+    ``merge._merge_delta``. Returns the number of retired rows — 0
+    (falsy) when nothing matched, so callers skip the commit; the
+    count feeds operationMetrics (numDeletedRows / numUpdatedRows)
+    with no extra job, since the matched positions already pass
+    through the driver — O(matched rows), the documented DV trade."""
     from census_asc5_data_pipeline_spark.sources.deletion_vectors import (
         dv_relative_path,
         read_dv_positions,
@@ -4742,8 +4746,7 @@ def _dv_retire(
     )
 
     hits = (
-        scan.filter(pred)
-        .groupBy("__base")
+        matched.groupBy("__base")
         .agg(F.collect_list("__ri").alias("pos"))
         .collect()
     )
@@ -4790,19 +4793,20 @@ def delete_delta_where(
     mode: str = "cow",
 ) -> int | None:
     """Row-level ``DELETE FROM <table> WHERE <predicate>`` — the
-    :func:`iceberg_io.delete_iceberg_where` twin, restoring write-
-    surface symmetry between the two formats (round-8 verdict #4).
-    ``predicate`` is a Spark SQL boolean expression over the table's
-    columns (partition columns included). Returns the committed
-    version, or None when nothing matched (no commit is written).
+    :func:`iceberg_io.delete_iceberg_positions` twin, and the case of
+    :func:`_row_level_delta` with no post-image (UPDATE is the case
+    with one). ``predicate`` is a Spark SQL boolean expression over
+    the table's columns (partition columns and, on a row-tracking
+    table, ``_row_id`` included). Returns the committed version, or
+    None when nothing matched (no commit is written).
 
     ``mode='cow'`` (copy-on-write, delta-spark's pre-DV DELETE): the
     files containing matching rows are rewritten WITHOUT those rows
     in ONE distributed job (survivors re-partitioned by the table's
     partition columns), and the commit removes the touched files and
     adds the rewrites atomically (``dataChange=true`` both ways).
-    Untouched files are never read or rewritten — the cost is
-    O(touched files), not O(table).
+    Files whose stats prove no row matches are never read or
+    rewritten — the cost is O(touched files), not O(table).
 
     ``mode='dv'`` (merge-on-read, delta-spark's DEFAULT since DVs):
     no data file is rewritten at all — matching row positions are
@@ -4812,45 +4816,61 @@ def delete_delta_where(
     touched file with its DV descriptor (merged with any existing DV)
     after tombstoning the DV-less add. The same commit upgrades the
     protocol to reader 3 / writer 7 with the ``deletionVectors``
-    feature when needed. Cost is O(matched rows); the read path
-    (:func:`_scan_adds`) applies DVs as a position anti-join.
-    Matched positions do pass through the driver to reach the single
-    sidecar writer — O(matched rows) driver memory, the documented
-    trade of DV-mode deletes at spec level (rewrite-heavy deletes
-    should use ``mode='cow'``, which stays fully distributed).
+    feature when needed. Matched positions pass through the driver to
+    reach the single sidecar writer — O(matched rows) driver memory,
+    the documented trade of DV-mode deletes (rewrite-heavy deletes
+    should use ``mode='cow'``, which stays fully distributed); the
+    read path (:func:`_scan_adds`) applies DVs as a position
+    anti-join.
 
     The change feed sees the delete as the touched files re-emitted
     minus their deleted rows at the delete version (see
-    :func:`read_delta_changes`).
-    """
+    :func:`read_delta_changes`); with the change data feed on, the
+    commit also stages the deleted rows as ``delete`` change rows
+    (see :func:`read_delta_cdf`)."""
+    return _row_level_delta(spark, path, predicate, mode)
+
+
+def _row_level_delta(
+    spark: SparkSession,
+    path: str,
+    predicate: str,
+    mode: str,
+    image=None,
+) -> int | None:
+    """The one row-level DML commit: DELETE (``image`` None) and
+    UPDATE (``merge.update_where``) share every step — stats
+    candidates (from the distributed plane above
+    ``_SPARK_PRUNE_THRESHOLD``, so only surviving adds reach the
+    driver), one keep_pos scan of the candidates, the matched rows,
+    then either a CoW rewrite of each touched file (its survivors,
+    or its rows with the SET applied) or a DV retire of the matched
+    positions plus the post-images appended as new files, the CDF
+    images, operationMetrics and one :func:`_commit_delta`.
+
+    ``image(meta, schema)`` validates an UPDATE against the replayed
+    table and returns ``post(frame, pred, extra)``: ``frame``'s
+    post-image over the schema columns with the SET applied where
+    ``pred`` holds (every row when ``pred`` is None), ``extra``
+    (the row-tracking pair) appended."""
     if mode not in ("cow", "dv"):
         raise ValueError(f"unsupported mode {mode!r} (cow|dv)")
-    # stats-based candidate pruning (r13): files whose min/max/null
-    # stats PROVE no row matches cannot be touched — they are neither
-    # read nor rewritten, so the delete's cost is O(candidate files),
-    # not O(table), exactly like delta-spark's data-skipping DML.
-    # Above _SPARK_PRUNE_THRESHOLD the candidates come from the
-    # DISTRIBUTED plane (r14): only surviving adds ever reach the
-    # driver — a point delete on a million-add table collects a
-    # handful of dicts, and every downstream structure
-    # (adds_by_base, removes, planned) is candidate-sized
+    op = "DELETE" if image is None else "UPDATE"
     pruned = _replay_pruned_spark(spark, path, None, None, predicate)
     if pruned is not None:
         protocol, meta, cand, _tx = pruned
-        _writer_gate(protocol, meta, "DELETE")
-        physical_of = _column_mapping(meta)
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        pcols = list(meta.get("partitionColumns") or [])
         adds = {a["path"]: a for a in cand}
     else:
         protocol, meta, adds, _tx = _replay(spark, path, None)
-        _writer_gate(protocol, meta, "DELETE")
-        physical_of = _column_mapping(meta)
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        pcols = list(meta.get("partitionColumns") or [])
-        if not adds:
-            return None
         cand = list(adds.values())
+    _writer_gate(protocol, meta, op)
+    physical_of = _column_mapping(meta)
+    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    pcols = list(meta.get("partitionColumns") or [])
+    post = image(meta, schema) if image is not None else None
+    if pruned is None and cand:
+        # stats-based candidate pruning (r13): files whose min/max/null
+        # stats PROVE no row matches are neither read nor rewritten
         atoms = delta_stats.parse_skip_predicate(predicate)
         if atoms is not None:
             cand = delta_stats.skip_files(
@@ -4861,12 +4881,11 @@ def delete_delta_where(
             )
     if not cand:
         return None
-    # row tracking (r16): on an ENABLED table the rewrite preserves
-    # every survivor's stable id/commit-version via the materialized
-    # columns, and the scan exposes ``_row_id`` so the DELETE
-    # predicate itself may target stable ids
+    # row tracking (r16): on an ENABLED table every written row keeps
+    # its stable id through the materialized columns (a changed row's
+    # commit version resets to this commit's), and the scan exposes
+    # ``_row_id`` so the predicate itself may target stable ids
     meta, rt_meta_line, mat_id, mat_cv = _rt_preserve_plan(protocol, meta)
-    rt_preserve = mat_id is not None
     scan = _scan_adds(
         spark,
         path,
@@ -4875,111 +4894,150 @@ def delete_delta_where(
         [(None, a) for a in cand],
         keep_pos=True,
         physical_of=physical_of,
-        extra_long_cols=[mat_id, mat_cv] if rt_preserve else [],
+        extra_long_cols=[mat_id, mat_cv] if mat_id else [],
     )
-    if rt_preserve:
+    if mat_id:
         scan = _rt_stable_cols(spark, scan, cand, meta)
+
+    def rt(cv):
+        return (
+            [F.col("_row_id").alias(mat_id), cv.cast("long").alias(mat_cv)]
+            if mat_id
+            else []
+        )
+
     pred = F.coalesce(F.expr(predicate), F.lit(False))
+    matched = scan.filter(pred)
+    if post is not None:
+        # statement-scoped persist (r17): an UPDATE's matched rows feed
+        # the constraint aggregate, the hit counts or DV retire and the
+        # image and CDF staging, each of which re-scanned every
+        # candidate on an uncached frame. Bounded by the match count;
+        # released in the finally (a DELETE reads them once, or twice
+        # with CDF, where caching costs a job)
+        matched = matched.persist()
     adds_by_base = _adds_by_base(adds)
     now_ms = int(time.time() * 1000)
-    lines: list[dict] = [
-        _commit_info(
-            "DELETE", {"predicate": predicate, "mode": mode}, now_ms
-        )
-    ]
+    params = {"predicate": predicate}
+    if post is None:
+        params["mode"] = mode
+    lines: list[dict] = [_commit_info(op, params, now_ms)]
     if rt_meta_line:
         lines.append(rt_meta_line)
     planned: dict[str, dict | None] = {}  # path -> expected current DV
     staged: list[str] = []  # files this commit wrote
-    if mode == "dv":
-        n_deleted = _dv_retire(
-            spark, path, protocol, scan, pred, adds_by_base, lines,
-            planned, now_ms, staged,
-        )
-        if not n_deleted:
-            return None
-    else:  # copy-on-write
-        # per-file matched-row counts ride the SAME shuffle the old
-        # distinct() took (r15: operationMetrics) — touched files AND
-        # numDeletedRows from one job
-        hit_counts = {
-            r["__base"]: int(r["n"])
-            for r in scan.filter(pred)
-            .groupBy("__base")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        touched = sorted(hit_counts)
-        if not touched:
-            return None
-        n_deleted = sum(hit_counts.values())
-        survivors = (
-            scan.filter(F.col("__base").isin(touched))
-            .filter(~pred)
-            .select(
-                [F.col(f.name) for f in schema.fields]
-                + (
-                    [
-                        F.col("_row_id").alias(mat_id),
-                        F.col("__rt_cv").alias(mat_cv),
-                    ]
-                    if rt_preserve
-                    else []
+    removes: list[dict] = []
+    try:
+        images = None
+        if post is not None:
+            images = post(matched, None, rt(F.lit(None)))
+            _check_constraints(images, meta, op)
+        if mode == "dv":
+            n_rows = _dv_retire(
+                spark, path, protocol, matched, adds_by_base, lines,
+                planned, now_ms, staged,
+            )
+            if not n_rows:
+                return None
+            rewrite = images
+        else:
+            # per-file matched-row counts ride the SAME shuffle the old
+            # distinct() took (r15: operationMetrics) — touched files
+            # and the row metric from one job
+            hit_counts = {
+                r["__base"]: int(r["n"])
+                for r in matched.groupBy("__base")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            if not hit_counts:
+                return None
+            n_rows = sum(hit_counts.values())
+            touched = sorted(hit_counts)
+            rows = scan.filter(F.col("__base").isin(touched))
+            rewrite = (
+                rows.filter(~pred).select(
+                    [F.col(f.name) for f in schema.fields]
+                    + rt(F.col("__rt_cv"))
+                )
+                if post is None
+                else post(
+                    rows, pred,
+                    rt(F.when(pred, F.lit(None)).otherwise(F.col("__rt_cv"))),
                 )
             )
-        )
-        new_adds = _stage_adds_mapped(
-            survivors, path, pcols, physical_of,
-            stats_cols=_stats_cols_of(meta),
-            field_ids=_mapping_ids(meta),
+            for base in touched:
+                a = adds_by_base[base]
+                planned[a["path"]] = a.get("deletionVector")
+                removes.append({"remove": _remove_action(a, now_ms)})
+        new_adds = (
+            _stage_adds_mapped(
+                rewrite, path, pcols, physical_of,
+                stats_cols=_stats_cols_of(meta),
+                field_ids=_mapping_ids(meta),
+            )
+            if rewrite is not None
+            else []
         )
         staged += _staged_paths(new_adds)
-        for base in sorted(touched):
-            a = adds_by_base[base]
-            planned[a["path"]] = a.get("deletionVector")
-            lines.append({"remove": _remove_action(a, now_ms)})
-        lines.extend(new_adds)
-
-    if (meta.get("configuration") or {}).get(
-        "delta.enableChangeDataFeed"
-    ) == "true":
-        # CDF on: the commit also stages the DELETED rows' images as a
-        # change-data file (spec §Add CDC File) — read_delta_cdf then
-        # emits exactly these instead of deriving retract/re-insert
-        # noise from the remove/add pairs. O(deleted rows) extra
-        # write, the price the spec sets for per-row delete images.
-        deleted = (
-            scan.filter(pred)
-            .select([F.col(f.name) for f in schema.fields])
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        cdc = _stage_cdc_mapped(
-            deleted, path, pcols, physical_of,
-            field_ids=_mapping_ids(meta),
-        )
-        staged += _staged_paths(cdc)
-        lines.extend(cdc)
-
-    c = _commit_counts(lines)
-    _stamp_op_metrics(
-        lines,
+        # an UPDATE lists its rewrites ahead of the files they
+        # replace, a DELETE after them
+        lines += new_adds + removes if post is not None else removes + new_adds
+        if (meta.get("configuration") or {}).get(
+            "delta.enableChangeDataFeed"
+        ) == "true":
+            # CDF on: the commit also stages the changed rows' images
+            # as change-data files (spec §Add CDC File) — read_delta_cdf
+            # then emits exactly these instead of deriving retract /
+            # re-insert noise from the remove/add pairs
+            changes = matched.select(
+                [F.col(f.name) for f in schema.fields]
+            ).withColumn(
+                "_change_type",
+                F.lit("delete" if post is None else "update_preimage"),
+            )
+            if images is not None:
+                changes = changes.unionByName(
+                    images.select(
+                        [F.col(f"`{f.name}`") for f in schema.fields]
+                    ).withColumn("_change_type", F.lit("update_postimage"))
+                )
+            cdc = _stage_cdc_mapped(
+                changes, path, pcols, physical_of,
+                field_ids=_mapping_ids(meta),
+            )
+            staged += _staged_paths(cdc)
+            lines.extend(cdc)
+        c = _commit_counts(lines)
         # a DV remove+re-add pair masks rows in the SAME data file —
         # delta-spark counts neither side as a file added/removed
-        numRemovedFiles=c["removes"] - (c["dv_adds"] if mode == "dv" else 0),
-        numAddedFiles=c["adds"] - (c["dv_adds"] if mode == "dv" else 0),
-        numDeletedRows=n_deleted,
-        # CoW rewrites carry the survivors — those ARE the copied
-        # rows; DV mode copies nothing (positions masked in place)
-        numCopiedRows=c["add_rows"] if mode == "cow" else 0,
-        numDeletionVectorsAdded=c["dv_adds"] if mode == "dv" else None,
-        numAddedChangeFiles=c["cdc"],
-    )
+        dv_pairs = c["dv_adds"] if mode == "dv" else 0
+        _stamp_op_metrics(
+            lines,
+            numRemovedFiles=c["removes"] - dv_pairs,
+            numAddedFiles=c["adds"] - dv_pairs,
+            **{f"num{'Deleted' if post is None else 'Updated'}Rows": n_rows},
+            # the unchanged rows a CoW rewrite carries; DV mode copies
+            # nothing (positions are masked in place)
+            numCopiedRows=(
+                0
+                if mode == "dv"
+                else None
+                if c["add_rows"] is None
+                else max(0, c["add_rows"] - (0 if post is None else n_rows))
+            ),
+            numDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
+            numAddedChangeFiles=c["cdc"],
+        )
 
-    def build(_v: int):
-        _check_planned(spark, path, planned, "DELETE")
-        return protocol, meta, lines
+        def build(_v: int):
+            _check_planned(spark, path, planned, op)
+            return protocol, meta, lines
 
-    return _commit_delta(spark, path, build, staged=staged)
+        return _commit_delta(spark, path, build, staged=staged)
+    finally:
+        if matched.is_cached:
+            matched.unpersist()
 
 
 def commit_operation_metrics(path: str, version: int) -> dict:

@@ -39,8 +39,16 @@ Spark mapping — scale notes:
 - v2 MERGE-ON-READ (r8): ``read_iceberg`` applies position deletes
   (anti-join on ``_metadata.row_index`` + file) and equality deletes
   (null-safe anti-join on the equality columns, strict sequence
-  ordering), and ``delete_iceberg_where`` writes equality-delete
-  snapshots — row-level DELETE costs O(keys), never O(table).
+  ordering) — row-level DML costs O(changed rows), never O(table).
+- Row-level DML commits ONE kind of snapshot,
+  :func:`_commit_row_level`: DELETE (:func:`delete_iceberg_positions`,
+  :func:`delete_iceberg_where`) adds delete files only, UPDATE and
+  MERGE (``merge``) add their post-images as data files too. DELETE
+  and UPDATE plan through :func:`_dml_candidates`; they and MERGE
+  scan through :func:`_row_level_scan`. Every parquet file a write
+  adds — data, position deletes, equality deletes — is staged by
+  :func:`_stage_files`; v3 deletion vectors by
+  :func:`_stage_dv_files`.
 - Feature gates fail LOUDLY instead of mis-reading: format-version
   > 2, non-parquet data files, unsupported transforms in a
   ``partition_filter``, deletes on surfaces that cannot apply them
@@ -71,6 +79,7 @@ import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from census_asc5_data_pipeline_spark.sources import iceberg_bounds
@@ -253,6 +262,48 @@ def _transform_result_type(transform: str, ice_src_type: str) -> str:
     return "int"  # bucket / year / month / day
 
 
+def _partition_specs(meta: dict) -> list[dict]:
+    """The table's partition specs (a v1 table's single
+    ``partition-spec`` as spec 0)."""
+    return meta.get("partition-specs") or [
+        {"spec-id": 0, "fields": meta.get("partition-spec", [])}
+    ]
+
+
+def _default_spec(meta: dict) -> dict:
+    """The spec new data lays out under (``default-spec-id``; older
+    specs stay listed for their files — r13 partition evolution)."""
+    sid = int(meta.get("default-spec-id", 0))
+    for s in _partition_specs(meta):
+        if int(s.get("spec-id", 0)) == sid:
+            return s
+    raise ValueError(f"default-spec-id {sid} names no partition spec")
+
+
+def _spec_pcols(meta: dict, fields: list[dict]) -> list[dict]:
+    """The default spec's fields as [{name, source, transform,
+    src_type, result_type}] — what :func:`_stage_files` lays data out
+    by and what the manifest's partition struct and field summaries
+    are typed by. Every transform the writer supports (identity,
+    bucket[N], truncate[W], year/month/day/hour, void) stages through
+    :func:`_stage_partition_expr`'s kernels."""
+    by_id = {f["id"]: f for f in fields}
+    out = []
+    for f in _default_spec(meta).get("fields", []):
+        tr = f.get("transform", "identity")
+        src = by_id[f["source-id"]]
+        out.append(
+            {
+                "name": f["name"],
+                "source": src["name"],
+                "transform": tr,
+                "src_type": src["type"],
+                "result_type": _transform_result_type(tr, src["type"]),
+            }
+        )
+    return out
+
+
 def _eval_transform(transform: str, ice_src_type: str, literal: str):
     """Apply a partition transform to a FILTER LITERAL driver-side
     (planning-time pruning; round-7 verdict elective #4). Returns the
@@ -309,10 +360,10 @@ def _stage_partition_expr(tr: str, src: str, src_t: str):
     """The staging Column evaluating partition transform ``tr`` over
     source column ``src`` (iceberg type ``src_t``) — the spec kernels
     (bucket = murmur3_x86_32 per Appendix B, truncate = floor-mod /
-    prefix, year/month/day = epoch offsets). Shared by
-    :func:`write_iceberg`'s append staging and the row-level DML
-    staging in ``merge._commit_iceberg_mor`` (round-11: MERGE/UPDATE
-    over transform-partitioned tables)."""
+    prefix, year/month/day = epoch offsets). :func:`_stage_files`
+    lays every data write out by it — appends and the row-level DML
+    post-images alike (round-11: MERGE/UPDATE over
+    transform-partitioned tables)."""
     from pyspark.sql import functions as F
 
     if tr == "identity":
@@ -1146,9 +1197,7 @@ def _manifest_summary_pruner(
 
     dtypes = {f["name"]: _ice_type_to_spark(f["type"]) for f in fields}
     fields_by_id = {f["id"]: f for f in fields}
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
+    specs = _partition_specs(meta)
     specs_by_id = {int(s.get("spec-id", 0)): s for s in specs}
     lits_by_col: dict[str, list[tuple]] = {}
     for col, op, v in atoms:
@@ -1231,9 +1280,7 @@ def _skip_by_bounds(
         f["name"]: _ice_type_to_spark(f["type"]) for f in fields
     }
     fields_by_id = {f["id"]: f for f in fields}
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
+    specs = _partition_specs(meta)
     # identity partition field name -> source column name, per spec
     ident_of: dict[str, str] = {}
     for s in specs:
@@ -1375,9 +1422,7 @@ def read_iceberg(
             "field-id scan and the delete scan don't compose yet"
         )
     if partition_filter:
-        specs = meta.get("partition-specs") or (
-            [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-        )
+        specs = _partition_specs(meta)
         all_names = {
             f["name"] for s in specs for f in s.get("fields", [])
         }
@@ -2547,6 +2592,115 @@ def _entry_schema_for(
     return sch
 
 
+_STAGED_PREFIX = {0: "part", 1: "pos-delete", 2: "delete"}
+
+
+def _stage_files(
+    path: str,
+    df: DataFrame,
+    content: int = 0,
+    fields: list[dict] | None = None,
+    pcols: list[dict] = (),
+    partition: dict | None = None,
+    keep_empty: bool = False,
+    check=None,
+    extra: dict | None = None,
+) -> list[dict]:
+    """The one Iceberg file stager: write ``df`` as parquet into a
+    private ``data/.staging-<uuid>`` directory, move every part into
+    ``data/`` under a fresh unique basename (the merge-on-read and
+    change-feed basename maps need global uniqueness) and return the
+    parts' manifest entries. Content 0 parts are
+    ``part-<uuid>.parquet`` data files: ``fields`` stamps their
+    parquet field ids and footer column metrics (value/null counts +
+    Appendix-D bounds by field id); ``pcols`` (:func:`_spec_pcols`)
+    lays the rows out by derived ``__pt_`` transform columns — the
+    source column stays IN the file, per spec — and reads each part's
+    partition record back from its directory, while ``partition``
+    files every part under one known record (a compaction group).
+    Content 1 (``pos-delete-<uuid>.parquet``, rows (file_path, pos))
+    and 2 (``delete-<uuid>.parquet``, equality keys) parts are
+    unpartitioned. Empty parts are dropped unless ``keep_empty``;
+    ``check`` runs after the Spark write, before any file moves;
+    ``extra`` is merged into every entry."""
+    import pyarrow.parquet as pq
+
+    staging = os.path.join(path, "data", f".staging-{uuid.uuid4().hex}")
+    out = _with_field_ids(df, fields) if fields is not None else df
+    for pf in pcols:
+        out = out.withColumn(
+            f"__pt_{pf['name']}",
+            _stage_partition_expr(
+                pf["transform"], pf["source"], pf["src_type"]
+            ),
+        )
+    w = out.write.mode("overwrite")
+    if pcols:
+        w = w.partitionBy(*[f"__pt_{pf['name']}" for pf in pcols])
+    result_type = {pf["name"]: pf["result_type"] for pf in pcols}
+    fixed_dirs = [
+        f"{c}={urllib.parse.quote(str(v))}"
+        for c, v in (partition or {}).items()
+        if v is not None
+    ]
+    entries: list[dict] = []
+    try:
+        w.parquet(staging)
+        if check is not None:
+            check()
+        for root, subdirs, fnames in os.walk(staging):
+            subdirs.sort()
+            for fn in sorted(fnames):
+                if not fn.endswith(".parquet") or fn.startswith("."):
+                    continue
+                src = os.path.join(root, fn)
+                n_rows = int(pq.ParquetFile(src).metadata.num_rows)
+                if not n_rows and not keep_empty:
+                    continue
+                if partition is not None:
+                    part_rec, dirs = partition, fixed_dirs
+                else:
+                    part_rec, dirs = dict.fromkeys(result_type), []
+                    rel = os.path.relpath(root, staging)
+                    for comp in rel.split(os.sep) if rel != "." else []:
+                        k, _, raw = comp.partition("=")
+                        name = k.removeprefix("__pt_")
+                        dirs.append(f"{name}={raw}")
+                        v = urllib.parse.unquote(raw)
+                        if v == "__HIVE_DEFAULT_PARTITION__":
+                            v = None
+                        elif result_type.get(name) in ("int", "long"):
+                            v = int(v)
+                        part_rec[name] = v
+                dst = os.path.join(
+                    path,
+                    "data",
+                    *dirs,
+                    f"{_STAGED_PREFIX[content]}-{uuid.uuid4().hex}.parquet",
+                )
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                shutil.move(src, dst)
+                entries.append(
+                    {
+                        "content": content,
+                        "file_path": os.path.abspath(dst),
+                        "file_format": "PARQUET",
+                        "partition": part_rec,
+                        "record_count": n_rows,
+                        "file_size_in_bytes": os.path.getsize(dst),
+                        **(
+                            iceberg_bounds.file_column_metrics(dst, fields)
+                            if fields is not None
+                            else {}
+                        ),
+                        **(extra or {}),
+                    }
+                )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return entries
+
+
 def write_iceberg(
     df: DataFrame,
     path: str,
@@ -2653,19 +2807,6 @@ def write_iceberg(
         )
     ice_by_name = {f["name"]: f for f in ice_fields}
 
-    def _pcol_ice_of(pfs: list[dict]) -> list[tuple[str, str]]:
-        return [
-            (
-                pf["name"],
-                _transform_result_type(
-                    pf["transform"], ice_by_name[pf["source"]]["type"]
-                ),
-            )
-            for pf in pfs
-        ]
-
-    pcol_ice = _pcol_ice_of(part_fields)
-
     exists = bool(os.path.isdir(_meta_dir(path)) and _metadata_files(path))
     # what the commit lays over the head it lands on: nothing for a
     # plain write, the new schema for a schema-replacing overwrite,
@@ -2757,21 +2898,13 @@ def write_iceberg(
         # writes follow the table's DEFAULT spec (r13 partition
         # evolution: older specs remain in partition-specs for their
         # files; new data lays out under default-spec-id)
-        _specs_all = meta.get("partition-specs") or [
-            {"spec-id": 0, "fields": meta.get("partition-spec", [])}
-        ]
-        prev_spec = next(
-            s
-            for s in _specs_all
-            if s.get("spec-id", 0) == meta.get("default-spec-id", 0)
-        )
         prev_pfs = [
             {
                 "name": f["name"],
                 "transform": f.get("transform", "identity"),
                 "source": id_to_name.get(f["source-id"], "?"),
             }
-            for f in prev_spec.get("fields", [])
+            for f in _default_spec(meta).get("fields", [])
         ]
         for pf in prev_pfs:
             if pf["source"] not in ice_by_name:
@@ -2785,7 +2918,6 @@ def write_iceberg(
                 f"partition_by {part_fields} != table spec {prev_pfs}"
             )
         part_fields = prev_pfs
-        pcol_ice = _pcol_ice_of(part_fields)
     else:
         cur_v, meta = 0, {}
         # a v3 table may be BORN v3 since r16
@@ -2826,21 +2958,6 @@ def write_iceberg(
             "metadata-log": [],
         }
 
-    # stage data files; clone partition sources so the parquet keeps
-    # every column (spec requirement delta/hive don't have)
-    from pyspark.sql import functions as F
-
-    staging = os.path.join(path, "data", f".staging-{uuid.uuid4().hex}")
-    # field-id stamps (spec requirement) make rename/drop resolution
-    # work on this engine's own files
-    out_df = _with_field_ids(df, ice_fields)
-    writer_cols = []
-    for pf in part_fields:
-        e = _stage_partition_expr(
-            pf["transform"], pf["source"], ice_by_name[pf["source"]]["type"]
-        )
-        out_df = out_df.withColumn(f"__pt_{pf['name']}", e)
-        writer_cols.append(f"__pt_{pf['name']}")
     # the table's DEFAULT sort order (r13, spec §Sorting): a local
     # in-task sort clusters rows so every file's column bounds are
     # tight — write-side clustering composes with manifest-bounds
@@ -2850,73 +2967,28 @@ def write_iceberg(
         _default_sort_order(meta)[0] if exists and sort_exprs else 0
     )
     if sort_exprs:
-        out_df = out_df.sortWithinPartitions(*sort_exprs)
-    w = out_df.write.mode("overwrite")
-    if writer_cols:
-        w = w.partitionBy(*writer_cols)
-    w.parquet(staging)
-
-    import pyarrow.parquet as pq
-
-    data_files = []
-    try:
-        for root, _dirs, fnames in os.walk(staging):
-            for fn in sorted(fnames):
-                if not fn.endswith(".parquet") or fn.startswith("."):
-                    continue
-                src = os.path.join(root, fn)
-                rel = os.path.relpath(src, staging)
-                pv: dict[str, str | None] = {}
-                for comp in rel.split(os.sep)[:-1]:
-                    if "=" in comp:
-                        k, _, v = comp.partition("=")
-                        v = urllib.parse.unquote(v)
-                        pv[k.removeprefix("__pt_")] = (
-                            None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                        )
-                # per-FILE uuid rename: one task writing several
-                # partition dirs reuses its part/task stem, and the
-                # merge-on-read + change-feed basename maps require
-                # global uniqueness (the delta_io._stage_adds rule)
-                dst_rel = os.path.join(
-                    os.path.dirname(rel.replace("__pt_", "")),
-                    f"part-{uuid.uuid4().hex}.parquet",
-                )
-                dst = os.path.join(path, "data", dst_rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.move(src, dst)
-                n_rows = pq.ParquetFile(dst).metadata.num_rows
-                part_rec = {}
-                for name, ice_t in pcol_ice:
-                    raw = pv.get(name)
-                    if raw is None:
-                        part_rec[name] = None
-                    elif ice_t in ("int", "long"):
-                        part_rec[name] = int(raw)
-                    else:
-                        part_rec[name] = raw
-                data_files.append(
-                    {
-                        "content": 0,
-                        "file_path": os.path.abspath(dst),
-                        "file_format": "PARQUET",
-                        "partition": part_rec,
-                        "record_count": int(n_rows),
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        # column metrics from the footer (r13): value/
-                        # null counts + Appendix-D bounds by field id
-                        **iceberg_bounds.file_column_metrics(
-                            dst, ice_fields
-                        ),
-                        **(
-                            {"sort_order_id": _so_id}
-                            if _so_id
-                            else {}
-                        ),
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        df = df.sortWithinPartitions(*sort_exprs)
+    pcols = []
+    for pf in part_fields:
+        src_t = ice_by_name[pf["source"]]["type"]
+        pcols.append(
+            dict(
+                pf,
+                src_type=src_t,
+                result_type=_transform_result_type(pf["transform"], src_t),
+            )
+        )
+    pcol_ice = [(pf["name"], pf["result_type"]) for pf in pcols]
+    # field-id stamps (spec requirement) make rename/drop resolution
+    # work on this engine's own files
+    data_files = _stage_files(
+        path,
+        df,
+        fields=ice_fields,
+        pcols=pcols,
+        keep_empty=True,
+        extra={"sort_order_id": _so_id} if _so_id else None,
+    )
 
     os.makedirs(_meta_dir(path), exist_ok=True)
     entry_schema = _entry_schema_for(pcol_ice, row_lineage=fv_tbl >= 3)
@@ -3687,14 +3759,7 @@ def partition_by_entries(meta: dict) -> list[str]:
     can compose incremental changes over the current spec."""
     _schema, fields = _schema_of(meta)
     by_id = {f["id"]: f for f in fields}
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
-    spec = next(
-        s
-        for s in specs
-        if s.get("spec-id", 0) == meta.get("default-spec-id", 0)
-    )
+    spec = _default_spec(meta)
     out: list[str] = []
     for f in spec.get("fields", []):
         src = by_id[f["source-id"]]["name"]
@@ -3737,15 +3802,8 @@ def update_partition_spec(
                     f"partition source column {pf['source']!r} not in the "
                     f"table schema (have {sorted(by_name)})"
                 )
-        specs = list(
-            meta.get("partition-specs")
-            or [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-        )
-        cur_spec = next(
-            s
-            for s in specs
-            if s.get("spec-id", 0) == meta.get("default-spec-id", 0)
-        )
+        specs = list(_partition_specs(meta))
+        cur_spec = _default_spec(meta)
         next_field_id = max(
             [999]
             + [
@@ -4088,10 +4146,10 @@ def add_iceberg_columns(path: str, cols: str | T.StructType) -> int:
     ids name-stable, fresh ids for the new columns (from
     ``last-column-id``), ``required=false`` (pre-existing data files
     scan NULL). No snapshot is created — schema evolution is a
-    metadata-only commit, the same shape
-    :func:`merge._commit_iceberg_mor` writes when
-    ``evolve_schema=True`` widens during a MERGE. ``cols`` is a Spark
-    DDL string or StructType. Returns the new metadata version."""
+    metadata-only commit, the same shape :func:`_commit_row_level`
+    writes when ``evolve_schema=True`` widens during a MERGE.
+    ``cols`` is a Spark DDL string or StructType. Returns the new
+    metadata version."""
     new = T.StructType.fromDDL(cols) if isinstance(cols, str) else cols
     if not new.fields:
         raise ValueError("ADD COLUMNS needs at least one column")
@@ -4154,11 +4212,10 @@ def _new_schema_version(path: str, mutate) -> int:
 
 
 def _partition_source_ids(meta: dict) -> set[int]:
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
     return {
-        f["source-id"] for s in specs for f in s.get("fields", [])
+        f["source-id"]
+        for s in _partition_specs(meta)
+        for f in s.get("fields", [])
     }
 
 
@@ -4606,14 +4663,7 @@ def rewrite_data_files(
         meta, "rewrite_data_files", write=True, v3_write_ok=True
     )
     schema, fields = _schema_of(meta)
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
-    spec = next(
-        s
-        for s in specs
-        if s.get("spec-id", 0) == meta.get("default-spec-id", 0)
-    )
+    spec = _default_spec(meta)
     for f in spec.get("fields", []):
         if f.get("transform", "identity") != "identity":
             raise NotImplementedError(
@@ -4692,10 +4742,6 @@ def rewrite_data_files(
     for key, (files, want) in sorted(
         todo.items(), key=lambda kv: repr(kv[0])
     ):
-        paths = [_local(d["file_path"]) for d in files]
-        staging = os.path.join(
-            path, "data", f".staging-{uuid.uuid4().hex}"
-        )
         if fv >= 3:
             # carried rows keep their identity: the coalesced lineage
             # pair writes back as materialized columns (unchanged
@@ -4706,59 +4752,20 @@ def rewrite_data_files(
                 spark, schema, fields, files, delete_fs
             )
         else:
-            src = spark.read.schema(schema).parquet(*paths)
-        src = _with_field_ids(src, fields)
+            src = spark.read.schema(schema).parquet(
+                *[_local(d["file_path"]) for d in files]
+            )
         if zorder_by:
             from census_asc5_data_pipeline_spark.sources.bucketing import (
                 zorder_cluster,
             )
 
-            (
-                zorder_cluster(src, list(zorder_by), int(want))
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
+            src = zorder_cluster(src, list(zorder_by), int(want))
         else:
-            (
-                src.coalesce(int(want))
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-        pv = dict(zip(pcols, key))
-        subdir = "/".join(
-            f"{c}={urllib.parse.quote(str(pv[c]))}"
-            for c in pcols
-            if pv[c] is not None
+            src = src.coalesce(int(want))
+        new_files += _stage_files(
+            path, src, fields=fields, partition=dict(zip(pcols, key))
         )
-        import pyarrow.parquet as pq
-
-        try:
-            for fn in sorted(os.listdir(staging)):
-                if not fn.endswith(".parquet") or fn.startswith("."):
-                    continue
-                if not pq.ParquetFile(
-                    os.path.join(staging, fn)
-                ).metadata.num_rows:
-                    continue  # range partitioner can emit empty parts
-                rel = os.path.join(subdir, fn) if subdir else fn
-                dst = os.path.join(path, "data", rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.move(os.path.join(staging, fn), dst)
-                new_files.append(
-                    {
-                        "content": 0,
-                        "file_path": os.path.abspath(dst),
-                        "file_format": "PARQUET",
-                        "partition": pv,
-                        "record_count": int(
-                            pq.ParquetFile(dst).metadata.num_rows
-                        ),
-                        "file_size_in_bytes": os.path.getsize(dst),
-                        **iceberg_bounds.file_column_metrics(dst, fields),
-                    }
-                )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
 
     kept = [
         {
@@ -4860,19 +4867,19 @@ def delete_iceberg_where(
     merge-on-read write half; :func:`_scan_with_deletes` is the read
     half): ``keys_df``'s columns name the equality fields and its
     rows the values to delete — ``DELETE FROM t WHERE (k1, k2) IN
-    (...)`` at spec level. The commit stages the keys as a parquet
-    delete file (content=2, ``equality_ids`` = the fields' ids in the
-    CURRENT schema), lists it in a content=1 delete manifest at a NEW
-    sequence number, and re-lists every prior manifest — so the spec's
-    strict ordering gives exactly the right semantics for free: data
-    at earlier sequence numbers is affected, data appended later is
-    not, and prior snapshots stay byte-identical for AS-OF reads.
+    (...)`` at spec level. The keys stage as a parquet delete file
+    (content=2, ``equality_ids`` = the fields' ids in the CURRENT
+    schema) listed in a delete manifest at a NEW sequence number
+    (:func:`_commit_row_level`), with every prior manifest re-listed
+    — so the spec's strict ordering gives exactly the right semantics
+    for free: data at earlier sequence numbers is affected, data
+    appended later is not, and prior snapshots stay byte-identical
+    for AS-OF reads.
 
     No data file is rewritten (that's the point of merge-on-read at
     100 TB: a delete touching 0.1% of rows costs O(delete keys), not
     O(table)); :func:`expire_snapshots` retains delete files of
     retained snapshots. Returns the snapshot id."""
-    spark = keys_df.sparkSession
     cur_v, meta = _current_metadata(path)
     # equality deletes stay FILES in v3 (DVs replace only position
     # deletes) and add no data files, so no lineage duty arises
@@ -4896,84 +4903,14 @@ def delete_iceberg_where(
                 f"is {f['type']!r}"
             )
         eq_ids.append(f["id"])
-
-    import pyarrow.parquet as pq
-
-    staging = os.path.join(path, "data", f".staging-{uuid.uuid4().hex}")
-    keys_df.coalesce(1).write.mode("overwrite").parquet(staging)
-    delete_files: list[dict] = []
-    try:
-        for fn in sorted(os.listdir(staging)):
-            if not fn.endswith(".parquet") or fn.startswith("."):
-                continue
-            dst = os.path.join(
-                path, "data", f"delete-{uuid.uuid4().hex}.parquet"
-            )
-            shutil.move(os.path.join(staging, fn), dst)
-            delete_files.append(
-                {
-                    "content": 2,
-                    "file_path": os.path.abspath(dst),
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": int(
-                        pq.ParquetFile(dst).metadata.num_rows
-                    ),
-                    "file_size_in_bytes": os.path.getsize(dst),
-                    "equality_ids": eq_ids,
-                }
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-    entry_schema = _entry_schema_for([])
-    entry_schema["fields"][2]["type"]["fields"].append(
-        {
-            "name": "equality_ids",
-            "type": ["null", {"type": "array", "items": "int"}],
-        }
-    )
-    return _commit_delete_snapshot(
-        path, cur_v, delete_files, entry_schema,
-        "concurrent commit landed during DELETE — aborting without "
-        "committing",
+    return _commit_row_level(
+        path, cur_v, meta, "DELETE",
+        delete_files=_stage_files(
+            path, keys_df.coalesce(1), content=2, keep_empty=True,
+            extra={"equality_ids": eq_ids},
+        ),
         branch=branch,
     )
-
-
-def _default_spec_pcol_ice(meta: dict) -> list[tuple[str, str]]:
-    """(partition field name, result ice type) pairs of the table's
-    default spec — the summary-computation shape. Empty on any
-    metadata surprise (summaries are optional)."""
-    try:
-        _sch, fields = _schema_of(meta, allow_renames=True)
-        by_id = {f["id"]: f for f in fields}
-        specs = meta.get("partition-specs") or [
-            {"spec-id": 0, "fields": meta.get("partition-spec", [])}
-        ]
-        sid = int(meta.get("default-spec-id", 0))
-        spec = next(
-            (s for s in specs if int(s.get("spec-id", 0)) == sid), None
-        )
-        if spec is None:
-            return []
-        out = []
-        for pf in spec.get("fields", []):
-            src = by_id.get(pf["source-id"])
-            if src is None:
-                return []
-            out.append(
-                (
-                    pf["name"],
-                    _transform_result_type(
-                        pf.get("transform", "identity"),
-                        str(src["type"]),
-                    ),
-                )
-            )
-        return out
-    except Exception:
-        return []
 
 
 def _drop_superseded_dv_entries(
@@ -5046,78 +4983,13 @@ def _drop_superseded_dv_entries(
     return out
 
 
-def _commit_delete_snapshot(
-    path: str,
-    planned_v: int,
-    delete_files: list[dict],
-    entry_schema: dict,
-    conflict: str,
-    branch: str | None = None,
-    superseded: list[tuple[str, int]] | None = None,
-) -> int:
-    """Shared commit tail of :func:`delete_iceberg_where` /
-    :func:`delete_iceberg_positions`: list the staged delete files in
-    a content=1 DELETE manifest at a NEW sequence number, re-list
-    every prior manifest (the spec's strict ordering does the rest:
-    earlier-sequence data is affected, later appends are not), append
-    the snapshot, bump the metadata version. The deletes were planned
-    against version ``planned_v``: if another commit claimed the next
-    version first, ``conflict`` is raised and nothing commits.
-    ``branch`` (r13 WAP): inherit from and advance the branch head
-    instead of main. Returns the snapshot id."""
-
-    def build(cur_v: int, meta: dict) -> dict:
-        if cur_v != planned_v:
-            raise ValueError(conflict)
-        snap_id = cur_v + 1
-        seq = int(meta.get("last-sequence-number", cur_v)) + 1
-        manifest = _write_manifest(
-            path, "manifest-del", snap_id, seq, entry_schema,
-            delete_files, content=1,  # DELETE manifest
-            spec_id=int(meta.get("default-spec-id", 0)),
-            partitions=_partition_summaries(
-                delete_files, _default_spec_pcol_ice(meta)
-            ),
-        )
-        parent, ml_path, ml_rows = _write_manifest_list(
-            path, meta, snap_id, [manifest], branch=branch,
-            superseded=superseded,
-        )
-        summary = _snapshot_summary(
-            "delete",
-            ml_rows,
-            _parent_summary(meta, parent),
-            added_delete_files=len(delete_files),
-            added_position_deletes=sum(
-                int(d["record_count"]) for d in delete_files
-            ),
-            # NO deleted-records: the spec reserves that key for
-            # records in removed DATA files; a MoR position delete
-            # removes no data file, and stamping the logical count
-            # here double-counts for consumers aggregating
-            # deleted-records (r15 ADVICE — matches spark-iceberg's
-            # SnapshotSummary, which reports only
-            # added-delete-files / added-position-deletes)
-            added_files_size=sum(
-                int(d.get("file_size_in_bytes", 0) or 0)
-                for d in delete_files
-            ),
-        )
-        return _add_snapshot(
-            meta, snap_id, seq, int(time.time() * 1000), ml_path,
-            summary, parent, branch=branch,
-        )
-
-    return _commit_metadata(path, build, staged=delete_files)
-
-
 def _stage_dv_files(
     path: str,
     meta: dict,
     cur_v: int,
     hits: list[tuple[str, list[int]]],
     existing_deletes: list[dict],
-) -> tuple[list[dict], dict, list[tuple[str, int]]]:
+) -> tuple[list[dict], list[tuple[str, int]]]:
     """v3 writers MUST express position deletes as DELETION VECTORS,
     not parquet delete files (table spec §Deletion vectors): one
     Puffin file, one deletion-vector-v1 blob per touched data file,
@@ -5130,10 +5002,9 @@ def _stage_dv_files(
     positions and the new ones, and the old entry is superseded —
     the commit must drop it from the re-listed prior manifests
     (:func:`_drop_superseded_dv_entries`) in the same snapshot.
-    Returns (delete-file entries, their extended manifest-entry
-    schema, superseded (puffin path, content_offset) keys). Shared by
-    DELETE (:func:`delete_iceberg_positions`) and the v3 MoR
-    UPDATE/MERGE commit (merge.py)."""
+    Returns (delete-file entries, superseded (puffin path,
+    content_offset) keys); the staging half of
+    :func:`_commit_row_level` on v3."""
     from census_asc5_data_pipeline_spark.sources.deletion_vectors import (
         read_iceberg_dv,
         write_iceberg_dv_blob,
@@ -5187,15 +5058,6 @@ def _stage_dv_files(
     ]
     pf = os.path.join(_meta_dir(path), f"dv-{uuid.uuid4().hex}.puffin")
     blob_metas = write_puffin(pf, blobs)
-    dv_schema = _entry_schema_for([])
-    dv_schema["fields"][2]["type"]["fields"] += [
-        {"name": "referenced_data_file",
-         "type": ["null", "string"], "default": None},
-        {"name": "content_offset", "type": ["null", "long"],
-         "default": None},
-        {"name": "content_size_in_bytes",
-         "type": ["null", "long"], "default": None},
-    ]
     dv_files = [
         {
             "content": 1,
@@ -5210,32 +5072,32 @@ def _stage_dv_files(
         }
         for (abs_p, pos), bm in zip(ordered, blob_metas)
     ]
-    return dv_files, dv_schema, superseded
+    return dv_files, superseded
 
 
 def delete_iceberg_positions(
     spark: SparkSession, path: str, where: str,
     branch: str | None = None,
 ) -> int | None:
-    """Row-level DELETE as a v2 POSITION-DELETE snapshot — the other
-    merge-on-read write mode (:func:`delete_iceberg_where` writes
-    equality deletes; this writes content=1 files of (file_path, pos)
-    pairs, the shape engines emit for ``DELETE FROM t WHERE <pred>``
-    over arbitrary predicates). The matching rows' positions come from
-    a ``_metadata.row_index`` scan of the LIVE rows — existing delete
-    files are applied first via :func:`_scan_with_deletes`, so an
-    already-deleted row is never re-listed — and are committed sorted
-    by (file_path, pos) per spec. The read path
-    (:func:`_scan_with_deletes`) and change feed
+    """Row-level ``DELETE FROM t WHERE <where>`` as a merge-on-read
+    snapshot — the case of the row-level commit with no post-image
+    (:func:`merge.update_where` is the case with one; both plan
+    through :func:`_dml_candidates` and :func:`_row_level_scan` and
+    commit through :func:`_commit_row_level`). The matching rows'
+    positions come from a ``_metadata.row_index`` scan of the LIVE
+    rows of the candidate files — existing deletes are applied first,
+    so an already-deleted row is never re-listed — and commit as
+    ``pos-delete-*.parquet`` files of (file_path, pos) sorted per
+    spec on v2, or as Puffin deletion vectors on v3
+    (:func:`delete_iceberg_where` writes equality deletes instead).
+    The read path (:func:`_scan_with_deletes`) and change feed
     (:func:`read_iceberg_changes`, which recovers the deleted rows'
-    FULL images) already consume these.
+    FULL images) consume both.
 
     Costs one distributed predicate scan + an O(matched rows) delete
     file; no data file is rewritten (merge-on-read: a 0.1% delete on
     100 TB writes ~positions, not ~table). Returns the new snapshot
     id, or None if nothing matched (no empty snapshot is committed)."""
-    from pyspark.sql import functions as F
-
     cur_v, meta = _current_metadata(path)
     fv = _format_version_gate(
         meta, "DELETE", write=True, v3_write_ok=True,
@@ -5243,135 +5105,362 @@ def delete_iceberg_positions(
         # over an initial-default column must match pre-schema rows
         defaults_ok=True,
     )
-    branch_head = _branch_head(meta, branch)
     schema, fields = _schema_of(meta)
-    # candidate pruning (r14, the _update_iceberg discipline):
-    # partition atoms skip whole data manifests via the manifest-list
-    # summaries, bounds skip files — already-matchless files are
-    # never scanned or position-addressed; the full predicate still
-    # applies row-wise so results are exact
-    from census_asc5_data_pipeline_spark.sources import (
-        delta_stats as _dsk,
+    cand, delete_fs = _dml_candidates(spark, path, meta, fields, where, branch)
+    if not cand:
+        return None
+    scan, abs_of_base = _row_level_scan(
+        spark, schema, fields, cand, delete_fs, fv, lineage=False
+    )
+    return _commit_row_level(
+        path, cur_v, meta, "DELETE",
+        _positions(spark, scan.where(where), abs_of_base, fv),
+        branch=branch, existing_deletes=delete_fs,
     )
 
-    atoms = _dsk.parse_skip_predicate(where)
+
+def _dml_candidates(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    fields: list[dict],
+    predicate: str,
+    branch: str | None = None,
+) -> tuple[list[dict], list[dict]]:
+    """(candidate data files, live delete files) of a row-level
+    ``predicate`` on ``branch``'s head (main when None): partition
+    atoms skip whole DATA manifests through the manifest-list field
+    summaries before any Avro decodes (delete manifests always
+    decode), then per-file bounds skip the files whose metrics prove
+    no row matches. The full predicate still applies row-wise, so
+    results are exact."""
+    from census_asc5_data_pipeline_spark.sources import delta_stats
+
+    atoms = delta_stats.parse_skip_predicate(predicate)
     tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    pruner = (
-        _manifest_summary_pruner(meta, fields, atoms, session_tz=tz)
-        if atoms is not None
-        else None
-    )
     data_files, delete_fs = _snapshot_files(
-        path, meta, branch_head, spark=spark, manifest_pruner=pruner
+        path, meta, _branch_head(meta, branch), spark=spark,
+        manifest_pruner=(
+            _manifest_summary_pruner(meta, fields, atoms, session_tz=tz)
+            if atoms is not None
+            else None
+        ),
     )
     if atoms is not None and data_files:
         data_files = _skip_by_bounds(
             data_files, atoms, fields, meta, session_tz=tz
         )
-    if not data_files:
-        return None
+    return data_files, delete_fs
+
+
+def _row_level_scan(
+    spark: SparkSession,
+    schema: T.StructType,
+    fields: list[dict],
+    files: list[dict],
+    delete_fs: list[dict],
+    fv: int,
+    lineage: bool,
+) -> tuple[DataFrame, dict[str, str]]:
+    """The keep_pos scan (``__base``, ``__ri``) a row-level verb plans
+    over its candidate data ``files`` — live rows only, initial-default
+    columns materialized (r16), and with ``lineage`` (v3 UPDATE /
+    MERGE) the ``_row_id`` their post-images keep — plus the basename
+    → absolute path map that turns ``__base`` back into the file a
+    position delete names. A basename shared by two paths raises: the
+    delete would address the wrong file. No files: an empty frame of
+    the same shape."""
     abs_of_base: dict[str, str] = {}
-    for d in data_files:
+    for d in files:
         ap = os.path.abspath(_local(d["file_path"]))
         base = os.path.basename(ap)
-        if base in abs_of_base and abs_of_base[base] != ap:
+        if abs_of_base.setdefault(base, ap) != ap:
             raise ValueError(
                 f"duplicate data-file basename {base!r} — cannot "
                 "address positions unambiguously"
             )
-        abs_of_base[base] = ap
     defaulted = (
         [f for f in fields if f.get("initial-default") is not None]
         if fv >= 3
         else []
     )
-    if defaulted:
+    if not files:
+        scan = spark.createDataFrame(
+            [],
+            T.StructType(
+                schema.fields
+                + ([T.StructField("_row_id", T.LongType())] if lineage else [])
+                + [
+                    T.StructField("__base", T.StringType()),
+                    T.StructField("__ri", T.LongType()),
+                ]
+            ),
+        )
+    elif defaulted:
         scan = _scan_with_defaults(
-            spark, schema, fields, data_files, delete_fs, defaulted,
-            keep_pos=True,
+            spark, schema, fields, files, delete_fs, defaulted,
+            keep_pos=True, lineage=lineage,
+        )
+    elif lineage:
+        scan = _lineage_scan(
+            spark, schema, fields, files, delete_fs, keep_pos=True
         )
     else:
         scan = _scan_with_deletes(
-            spark, schema, fields, data_files, delete_fs, keep_pos=True
+            spark, schema, fields, files, delete_fs, keep_pos=True
         )
+    if lineage:
+        # a null materialized sequence number inherits the new file's
+        # on read — "last updated" semantics for the post-images
+        scan = scan.drop("_last_updated_sequence_number")
+    return scan, abs_of_base
+
+
+def _positions(
+    spark: SparkSession,
+    rows: DataFrame,
+    abs_of_base: dict[str, str],
+    fv: int,
+) -> DataFrame:
+    """(file_path, pos) of ``rows`` (``__base``, ``__ri`` of a
+    :func:`_row_level_scan`) — what :func:`_commit_row_level`
+    retires. Each v2 parquet position-delete FILE must be sorted by
+    (file_path, pos): cluster per file with a HASH exchange — not
+    repartitionByRange, whose boundary-sampling pass re-executes the
+    subtree (and double-counts the cardinality observe() a MERGE
+    rides on it) — and sort within partitions; AQE coalesces a small
+    delete back to one file, a 100 TB-scale one spreads over many.
+    v3 skips the shuffle: the DV grouping is its own aggregate and
+    :func:`_stage_dv_files` sorts per blob."""
     base_df = F.broadcast(
         spark.createDataFrame(
             sorted(abs_of_base.items()), "__base string, __abs string"
         )
     )
-    if fv >= 3:
-        hit_rows = (
-            scan.where(where)
-            .join(base_df, "__base")
-            .groupBy("__abs")
-            .agg(F.collect_list("__ri").alias("pos"))
+    pos = (
+        rows.select("__base", "__ri")
+        .join(base_df, "__base")
+        .select(F.col("__abs").alias("file_path"), F.col("__ri").alias("pos"))
+    )
+    if fv < 3:
+        pos = pos.repartition("file_path").sortWithinPartitions(
+            "file_path", "pos"
+        )
+    return pos
+
+
+def _delete_entry_schema(files: list[dict]) -> dict:
+    """The manifest-entry schema of a delete manifest: the
+    unpartitioned entry plus ``equality_ids`` for equality deletes
+    and the DV reference fields for v3 deletion vectors."""
+    sch = _entry_schema_for([])
+    cols = sch["fields"][2]["type"]["fields"]
+    if any("equality_ids" in d for d in files):
+        cols.append(
+            {
+                "name": "equality_ids",
+                "type": ["null", {"type": "array", "items": "int"}],
+            }
+        )
+    if any(_is_dv_entry(d) for d in files):
+        cols += [
+            {"name": "referenced_data_file",
+             "type": ["null", "string"], "default": None},
+            {"name": "content_offset", "type": ["null", "long"],
+             "default": None},
+            {"name": "content_size_in_bytes",
+             "type": ["null", "long"], "default": None},
+        ]
+    return sch
+
+
+def _commit_row_level(
+    path: str,
+    cur_v: int,
+    meta: dict,
+    operation: str,
+    positions: DataFrame | None = None,
+    new_rows: DataFrame | None = None,
+    *,
+    delete_files: list[dict] = (),
+    evolved_fields: list[dict] | None = None,
+    branch: str | None = None,
+    existing_deletes: list[dict] = (),
+    precommit_check=None,
+) -> int | None:
+    """ONE row-level snapshot — DELETE (``positions``, or the
+    equality ``delete_files`` the caller staged), UPDATE and MERGE
+    (``positions`` plus ``new_rows``). ``positions`` (file_path, pos —
+    :func:`_positions`) stage as Puffin deletion vectors on v3
+    (:func:`_stage_dv_files`; a file already masked gets a replacement
+    DV) and as ``pos-delete-*.parquet`` files on v2; ``new_rows``
+    stage as data files under the default spec, validated against
+    required fields first. ``precommit_check`` (MERGE's cardinality
+    rule, whose observe() rides the position scan) runs before any
+    file moves.
+
+    A delete file spans partitions, so its manifest lists under an
+    unpartitioned spec, registered when the table has none — under a
+    partitioned spec a reader would apply it only within its own
+    (empty) partition. The data manifest carries partition field
+    summaries. Both manifests share the new sequence number: position
+    deletes name explicit OLD paths, so the same-sequence new data is
+    untouched (delete_seq >= data_seq). The snapshot operation is
+    ``delete`` when no data file is added, else ``overwrite``.
+    ``evolved_fields`` widens the schema in the same commit.
+    ``branch`` (r13 WAP): the parent and inherited manifests come
+    from the branch head, ``refs[branch]`` advances, main does not
+    move. Planned against version ``cur_v``: a concurrent commit
+    aborts it. Returns the snapshot id, or None when nothing
+    staged."""
+    if branch is not None and evolved_fields is not None:
+        raise NotImplementedError(
+            "schema evolution on a BRANCH write is out of scope — "
+            "current-schema-id is table-global"
+        )
+    fv = int(meta.get("format-version", 2))
+    fields = (
+        evolved_fields
+        if evolved_fields is not None
+        else _schema_of(meta, allow_renames=True)[1]
+    )
+    pcols = _spec_pcols(meta, fields)
+    delete_files = list(delete_files)
+    superseded: list[tuple[str, int]] = []
+    if positions is not None and fv >= 3:
+        hits = (
+            positions.groupBy("file_path")
+            .agg(F.collect_list("pos").alias("pos"))
             .collect()
         )
-        if not hit_rows:
-            return None
-        dv_files, dv_schema, superseded = _stage_dv_files(
-            path, meta, cur_v,
-            [(r["__abs"], list(r["pos"])) for r in hit_rows],
-            delete_fs,
-        )
-        return _commit_delete_snapshot(
-            path, cur_v, dv_files, dv_schema,
-            "concurrent commit landed during DV planning — aborting "
-            "without committing (positions may be stale)",
-            branch=branch, superseded=superseded,
-        )
-    pos_df = (
-        scan.where(where)
-        .join(base_df, "__base")
-        .select(
-            F.col("__abs").alias("file_path"),
-            F.col("__ri").alias("pos"),
-        )
-        # range-partition + in-partition sort: each delete FILE stays
-        # sorted by (file_path, pos) per spec, a 100 TB-scale delete
-        # spreads over many files, and AQE coalesces a small delete
-        # back to one
-        .repartitionByRange("file_path", "pos")
-        .sortWithinPartitions("file_path", "pos")
-    )
-
-    import pyarrow.parquet as pq
-
-    staging = os.path.join(path, "data", f".staging-{uuid.uuid4().hex}")
-    delete_files: list[dict] = []
-    try:
-        pos_df.write.mode("overwrite").parquet(staging)
-        for fn in sorted(os.listdir(staging)):
-            if not fn.endswith(".parquet") or fn.startswith("."):
-                continue
-            nrows = int(
-                pq.ParquetFile(os.path.join(staging, fn)).metadata.num_rows
+        if precommit_check is not None:
+            precommit_check()
+        if hits:
+            dv_files, superseded = _stage_dv_files(
+                path, meta, cur_v,
+                [(r["file_path"], list(r["pos"])) for r in hits],
+                existing_deletes,
             )
-            if nrows == 0:
-                continue
-            dst = os.path.join(
-                path, "data", f"pos-delete-{uuid.uuid4().hex}.parquet"
-            )
-            shutil.move(os.path.join(staging, fn), dst)
-            delete_files.append(
-                {
-                    "content": 1,
-                    "file_path": os.path.abspath(dst),
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": nrows,
-                    "file_size_in_bytes": os.path.getsize(dst),
-                }
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    if not delete_files:
+            delete_files += dv_files
+    elif positions is not None:
+        delete_files += _stage_files(
+            path, positions, content=1, check=precommit_check
+        )
+    added_files: list[dict] = []
+    if new_rows is not None:
+        _check_required(new_rows, fields, operation)
+        added_files = _stage_files(path, new_rows, fields=fields, pcols=pcols)
+    if not delete_files and not added_files:
         return None
-    return _commit_delete_snapshot(
-        path, cur_v, delete_files, _entry_schema_for([]),
-        "concurrent commit landed during position-delete planning — "
-        "aborting without committing (positions may be stale)",
-        branch=branch,
+    pcol_ice = [(pf["name"], pf["result_type"]) for pf in pcols]
+    schema_id = meta.get("current-schema-id", 0)
+    if evolved_fields is not None:
+        prev_schemas = meta.get("schemas") or (
+            [dict(meta["schema"], **{"schema-id": 0})]
+            if "schema" in meta
+            else []
+        )
+        schema_id = (
+            max((sc.get("schema-id", 0) for sc in prev_schemas), default=0)
+            + 1
+        )
+        evolved = {
+            "schemas": prev_schemas
+            + [{"type": "struct", "schema-id": schema_id,
+                "fields": evolved_fields}],
+            "current-schema-id": schema_id,
+            "last-column-id": max(f["id"] for f in evolved_fields),
+        }
+
+    def build(v: int, meta: dict) -> dict:
+        # the positions retire rows of the planned version's live set
+        if v != cur_v:
+            raise ValueError(
+                f"concurrent commit landed during {operation} planning "
+                "— aborting without committing"
+            )
+        snap_id = v + 1
+        seq = int(meta.get("last-sequence-number", v)) + 1
+        specs = _partition_specs(meta)
+        new_spec = None
+        manifests = []
+        lineage = None
+        if added_files:
+            # fresh first_row_id blocks above next-row-id (spec:
+            # assigned to every added data file; rows with a
+            # materialized _row_id — updated images — never consult
+            # theirs)
+            lineage = _assign_row_ids(meta, added_files) if fv >= 3 else None
+            manifests.append(
+                _write_manifest(
+                    path, "manifest", snap_id, seq,
+                    _entry_schema_for(pcol_ice, row_lineage=fv >= 3),
+                    added_files,
+                    spec_id=int(meta.get("default-spec-id", 0)),
+                    partitions=_partition_summaries(added_files, pcol_ice),
+                )
+            )
+        if delete_files:
+            unpart = next(
+                (s for s in specs if not s.get("fields")), None
+            ) if pcols else _default_spec(meta)
+            if unpart is None:
+                new_spec = unpart = {
+                    "spec-id": max(int(s.get("spec-id", 0)) for s in specs)
+                    + 1,
+                    "fields": [],
+                }
+            manifests.append(
+                _write_manifest(
+                    path, "manifest-del", snap_id, seq,
+                    _delete_entry_schema(delete_files), delete_files,
+                    content=1, spec_id=int(unpart.get("spec-id", 0)),
+                )
+            )
+        # v3: a replacement DV supersedes the old entry in the SAME
+        # snapshot — it drops from the re-listed prior manifests
+        parent, ml_path, ml_rows = _write_manifest_list(
+            path, meta, snap_id, manifests, branch=branch,
+            superseded=superseded,
+        )
+        summary = _snapshot_summary(
+            "overwrite" if added_files else "delete",
+            ml_rows,
+            _parent_summary(meta, parent),
+            added_data_files=len(added_files),
+            added_records=sum(int(d["record_count"]) for d in added_files),
+            added_delete_files=len(delete_files),
+            added_position_deletes=sum(
+                int(d["record_count"]) for d in delete_files
+            ),
+            # NO deleted-records: the spec reserves that key for
+            # records in removed DATA files; a MoR delete removes no
+            # data file, and stamping the logical count here
+            # double-counts for consumers aggregating deleted-records
+            # (r15 ADVICE — spark-iceberg's SnapshotSummary reports
+            # only added-delete-files / added-position-deletes)
+            added_files_size=sum(
+                int(d.get("file_size_in_bytes", 0) or 0)
+                for d in added_files + delete_files
+            ),
+        )
+        new_meta = _add_snapshot(
+            meta, snap_id, seq, int(time.time() * 1000), ml_path,
+            summary, parent, branch=branch, schema_id=schema_id,
+            lineage=lineage,
+        )
+        if evolved_fields is not None:
+            # the schema widens ATOMICALLY with the row changes (the
+            # Delta evolve_schema twin): new schema-id, name-stable
+            # old field ids, fresh ids for additions
+            new_meta.update(evolved)
+            new_meta.pop("schema", None)
+        if new_spec is not None:
+            new_meta["partition-specs"] = specs + [new_spec]
+        return new_meta
+
+    return _commit_metadata(
+        path, build, staged=added_files + delete_files
     )
 
 

@@ -45,10 +45,7 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 import time
-import urllib.parse
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -817,8 +814,7 @@ def _merge_delta(
                         F.col("t.__base").alias("__base"),
                         F.col("t.__ri").alias("__ri"),
                     ),
-                    F.lit(True), adds_by_base, lines, planned, now_ms,
-                    staged,
+                    adds_by_base, lines, planned, now_ms, staged,
                 )
             if upd_tags and acted is not None:
                 # updated post-images keep their stable id; the commit
@@ -1041,42 +1037,6 @@ def _merge_delta(
             acted_cache.unpersist()
 
 
-def _spec_pcols(meta: dict, fields: list[dict], verb: str) -> list[dict]:
-    """The default partition spec as [{name, source, transform,
-    src_type, result_type}] for the DML staging path. ALL spec
-    transforms the writer supports (identity, bucket[N], truncate[W],
-    year/month/day — round-11: the r10 identity-only gate lifted by
-    reusing :func:`iceberg_io._stage_partition_expr`'s kernels);
-    ``hour``/``void`` complete the vocabulary in r13."""
-    from census_asc5_data_pipeline_spark.sources.iceberg_io import (
-        _transform_result_type,
-    )
-
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
-    spec = next(
-        s
-        for s in specs
-        if s.get("spec-id", 0) == meta.get("default-spec-id", 0)
-    )
-    by_id = {f["id"]: f for f in fields}
-    out = []
-    for f in spec.get("fields", []):
-        tr = f.get("transform", "identity")
-        s_f = by_id[f["source-id"]]
-        out.append(
-            {
-                "name": f["name"],
-                "source": s_f["name"],
-                "transform": tr,
-                "src_type": s_f["type"],
-                "result_type": _transform_result_type(tr, s_f["type"]),
-            }
-        )
-    return out
-
-
 def _merge_iceberg(
     spark, path, source, on, matched, nmbs, not_matched,
     evolve_schema=False, branch=None,
@@ -1099,12 +1059,7 @@ def _merge_iceberg(
     )
     branch_head = ice._branch_head(meta, branch)
     schema, fields = ice._schema_of(meta)
-    defaulted = (
-        [f for f in fields if f.get("initial-default") is not None]
-        if fv >= 3
-        else []
-    )
-    pcols = _spec_pcols(meta, fields, "MERGE")
+    pcols = ice._spec_pcols(meta, fields)
     evolved_fields = None
     extra_sp: list[T.StructField] = []
     if evolve_schema:
@@ -1164,56 +1119,14 @@ def _merge_iceberg(
             session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
         ),
     )
-    abs_of_base: dict[str, str] = {}
-    for dd in cand:
-        ap = os.path.abspath(ice._local(dd["file_path"]))
-        base = os.path.basename(ap)
-        if base in abs_of_base and abs_of_base[base] != ap:
-            raise ValueError(
-                f"duplicate data-file basename {base!r} — cannot "
-                "address positions unambiguously"
-            )
-        abs_of_base[base] = ap
-    old_schema = (
-        T.StructType(schema.fields[: len(fields)])
-        if evolved_fields
-        else schema
+    scan, abs_of_base = ice._row_level_scan(
+        spark,
+        T.StructType(schema.fields[: len(fields)]),
+        fields, cand, delete_fs, fv, lineage=fv >= 3,
     )
-    if cand:
-        if defaulted:
-            scan = ice._scan_with_defaults(
-                spark, old_schema, fields, cand, delete_fs,
-                defaulted, keep_pos=True, lineage=True,
-            ).drop("_last_updated_sequence_number")
-        elif fv >= 3:
-            scan = ice._lineage_scan(
-                spark, old_schema, fields, cand, delete_fs,
-                keep_pos=True,
-            ).drop("_last_updated_sequence_number")
-        else:
-            scan = ice._scan_with_deletes(
-                spark, old_schema, fields, cand, delete_fs,
-                keep_pos=True,
-            )
-        for f in extra_sp:
-            # pre-evolution files scan NULL for the added columns
-            scan = scan.withColumn(f.name, F.lit(None).cast(f.dataType))
-    else:
-        scan = spark.createDataFrame(
-            [],
-            T.StructType(
-                schema.fields
-                + (
-                    [T.StructField("_row_id", T.LongType())]
-                    if fv >= 3
-                    else []
-                )
-                + [
-                    T.StructField("__base", T.StringType()),
-                    T.StructField("__ri", T.LongType()),
-                ]
-            ),
-        )
+    for f in extra_sp:
+        # pre-evolution files scan NULL for the added columns
+        scan = scan.withColumn(f.name, F.lit(None).cast(f.dataType))
     tagged, inserts, card_check = _plan_merge(
         scan, source, on, matched, nmbs, not_matched, list(schema.fields)
     )
@@ -1233,7 +1146,7 @@ def _merge_iceberg(
         inserts = ins_cache = inserts.persist()
     try:
         return _merge_iceberg_commit(
-            spark, path, cur_v, meta, fv, pcols, schema, matched, nmbs,
+            spark, path, cur_v, meta, fv, schema, matched, nmbs,
             tagged, inserts, card_check, evolved_fields, branch,
             delete_fs, abs_of_base,
         )
@@ -1243,10 +1156,12 @@ def _merge_iceberg(
 
 
 def _merge_iceberg_commit(
-    spark, path, cur_v, meta, fv, pcols, schema, matched, nmbs,
+    spark, path, cur_v, meta, fv, schema, matched, nmbs,
     tagged, inserts, card_check, evolved_fields, branch, delete_fs,
     abs_of_base,
 ) -> int | None:
+    from census_asc5_data_pipeline_spark.sources import iceberg_io as ice
+
     del_tags = _delete_tags(matched, nmbs)
     upd_tags = _update_tags(matched, nmbs)
     act_tags = del_tags + upd_tags
@@ -1280,341 +1195,20 @@ def _merge_iceberg_commit(
             inserts if new_rows is None else new_rows.unionByName(inserts)
         )
 
-    pos_df = None
-    if retired is not None:
-        base_df = F.broadcast(
-            spark.createDataFrame(
-                sorted(abs_of_base.items()),
-                "__base string, __abs string",
-            )
-        )
-        pos_df = (
+    return ice._commit_row_level(
+        path, cur_v, meta, "MERGE",
+        None if retired is None else ice._positions(
+            spark,
             retired.select(
                 F.col("t.__base").alias("__base"),
                 F.col("t.__ri").alias("__ri"),
-            )
-            .join(base_df, "__base")
-            .select(
-                F.col("__abs").alias("file_path"),
-                F.col("__ri").alias("pos"),
-            )
-        )
-        if fv < 3:
-            # v2 parquet position-delete files must each be sorted by
-            # (file_path, pos); cluster per file with a HASH exchange
-            # — NOT repartitionByRange, whose boundary-sampling pass
-            # re-executes the subtree and double-counts the
-            # cardinality observe() riding it (r17) — and AQE
-            # coalesces small deletes to one file. (v3 skips the
-            # shuffle entirely: the DV grouping below is its own
-            # aggregate and _stage_dv_files sorts per blob.)
-            pos_df = pos_df.repartition("file_path").sortWithinPartitions(
-                "file_path", "pos"
-            )
-    return _commit_iceberg_mor(
-        spark, path, cur_v, meta, pos_df, new_rows, pcols,
+            ),
+            abs_of_base,
+            fv,
+        ),
+        new_rows,
         evolved_fields=evolved_fields, branch=branch,
         existing_deletes=delete_fs, precommit_check=card_check,
-    )
-
-
-def _commit_iceberg_mor(
-    spark, path, cur_v, meta, pos_df, new_rows, pcols=None,
-    evolved_fields=None, branch=None, existing_deletes=None,
-    precommit_check=None,
-) -> int | None:
-    """ONE merge-on-read Iceberg snapshot: ``pos_df`` (file_path, pos —
-    already sorted) stages as a content=1 position-delete file,
-    ``new_rows`` as new data files; both manifests share the new
-    sequence number (position deletes name explicit OLD paths, so the
-    same-sequence new data is untouched per the spec's
-    delete_seq >= data_seq rule). Shared by :func:`merge_into` and
-    :func:`update_where` on Iceberg. ``branch`` (round-13 WAP):
-    the snapshot's parent + inherited manifests come from the branch
-    head, ``refs[branch]`` advances, and main (current-snapshot-id /
-    snapshot-log) does not move. Returns the snapshot id, or None
-    when there is nothing to commit."""
-    from census_asc5_data_pipeline_spark.sources import iceberg_io as ice
-
-    import pyarrow.parquet as pq
-
-    pcols = pcols or []
-    if branch is not None and evolved_fields is not None:
-        raise NotImplementedError(
-            "schema evolution on a BRANCH write is out of scope — "
-            "current-schema-id is table-global"
-        )
-    fv = int(meta.get("format-version", 2))
-    delete_files: list[dict] = []
-    dv_entry_schema: dict | None = None
-    dv_superseded: list[tuple[str, int]] = []
-    added_files: list[dict] = []
-    staging = os.path.join(path, "data", f".staging-{uuid.uuid4().hex}")
-    try:
-        if pos_df is not None and fv >= 3:
-            # v3: the retirements commit as Puffin deletion vectors,
-            # one blob per touched data file (iceberg_io's shared
-            # staging; positions ride the driver, O(matched rows))
-            hit = (
-                pos_df.groupBy("file_path")
-                .agg(F.collect_list("pos").alias("pos"))
-                .collect()
-            )
-            # MERGE's cardinality observe() pair fired during the
-            # position collect — validate before anything stages
-            if precommit_check is not None:
-                precommit_check()
-                precommit_check = None
-            if hit:
-                delete_files, dv_entry_schema, dv_superseded = (
-                    ice._stage_dv_files(
-                        path, meta, cur_v,
-                        [(r["file_path"], list(r["pos"])) for r in hit],
-                        existing_deletes or [],
-                    )
-                )
-        elif pos_df is not None:
-            pos_df.write.mode("overwrite").parquet(staging)
-            # MERGE's cardinality observe() pair fired during the
-            # position staging write — validate before any file moves
-            if precommit_check is not None:
-                precommit_check()
-                precommit_check = None
-            for fn in sorted(os.listdir(staging)):
-                if not fn.endswith(".parquet") or fn.startswith("."):
-                    continue
-                nrows = int(
-                    pq.ParquetFile(
-                        os.path.join(staging, fn)
-                    ).metadata.num_rows
-                )
-                if not nrows:
-                    continue
-                dst = os.path.join(
-                    path, "data", f"pos-delete-{uuid.uuid4().hex}.parquet"
-                )
-                shutil.move(os.path.join(staging, fn), dst)
-                delete_files.append(
-                    {
-                        "content": 1,
-                        "file_path": os.path.abspath(dst),
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": nrows,
-                        "file_size_in_bytes": os.path.getsize(dst),
-                    }
-                )
-        if new_rows is not None:
-            # foreign required=true fields bind MERGE/UPDATE images
-            # too — validate before anything stages (r12, the
-            # delta-side _check_constraints twin)
-            ice._check_required(
-                new_rows,
-                evolved_fields
-                if evolved_fields is not None
-                else ice._schema_of(meta, allow_renames=True)[1],
-                "MERGE",
-            )
-            shutil.rmtree(staging, ignore_errors=True)
-            # the write_iceberg staging shape: a DERIVED __pt_ column
-            # evaluates the spec field's transform (identity clone,
-            # bucket = spec murmur3, truncate, year/month/day) and
-            # drives the layout, so the source column stays IN the
-            # data file (iceberg files carry all columns per spec) and
-            # an update that moves a row across partitions lands it in
-            # the right directory automatically
-            out_df = ice._with_field_ids(
-                new_rows,
-                evolved_fields
-                if evolved_fields is not None
-                else ice._schema_of(meta, allow_renames=True)[1],
-            )
-            writer_cols = []
-            for pf in pcols:
-                out_df = out_df.withColumn(
-                    f"__pt_{pf['name']}",
-                    ice._stage_partition_expr(
-                        pf["transform"], pf["source"], pf["src_type"]
-                    ),
-                )
-                writer_cols.append(f"__pt_{pf['name']}")
-            w = out_df.write.mode("overwrite")
-            if writer_cols:
-                w = w.partitionBy(*writer_cols)
-            w.parquet(staging)
-            for root, _dirs, fnames in os.walk(staging):
-                for fn in sorted(fnames):
-                    if not fn.endswith(".parquet") or fn.startswith("."):
-                        continue
-                    srcp = os.path.join(root, fn)
-                    nrows = int(pq.ParquetFile(srcp).metadata.num_rows)
-                    if not nrows:
-                        continue
-                    rel = os.path.relpath(srcp, staging)
-                    pv: dict[str, str | None] = {}
-                    for comp in rel.split(os.sep)[:-1]:
-                        if "=" in comp:
-                            k, _, v = comp.partition("=")
-                            v = urllib.parse.unquote(v)
-                            pv[k.removeprefix("__pt_")] = (
-                                None
-                                if v == "__HIVE_DEFAULT_PARTITION__"
-                                else v
-                            )
-                    dst_rel = os.path.join(
-                        os.path.dirname(rel.replace("__pt_", "")),
-                        f"part-{uuid.uuid4().hex}.parquet",
-                    )
-                    dst = os.path.join(path, "data", dst_rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    shutil.move(srcp, dst)
-                    part_rec: dict = {}
-                    for pf in pcols:
-                        raw = pv.get(pf["name"])
-                        if raw is None:
-                            part_rec[pf["name"]] = None
-                        elif pf["result_type"] in ("int", "long"):
-                            part_rec[pf["name"]] = int(raw)
-                        else:
-                            part_rec[pf["name"]] = raw
-                    added_files.append(
-                        {
-                            "content": 0,
-                            "file_path": os.path.abspath(dst),
-                            "file_format": "PARQUET",
-                            "partition": part_rec,
-                            "record_count": nrows,
-                            "file_size_in_bytes": os.path.getsize(dst),
-                            **ice.iceberg_bounds.file_column_metrics(
-                                dst,
-                                evolved_fields
-                                or ice._schema_of(meta)[1],
-                            ),
-                        }
-                    )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    if not delete_files and not added_files:
-        return None
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
-    default_spec_id = meta.get("default-spec-id", 0)
-    # a position-delete file spanning partitions is GLOBAL per spec —
-    # it belongs to an unpartitioned spec; register one if the table
-    # only has partitioned specs
-    new_specs = list(specs)
-    delete_spec_id = default_spec_id
-    if delete_files and pcols:
-        unpart = next(
-            (s for s in specs if not s.get("fields")), None
-        )
-        if unpart is None:
-            unpart = {
-                "spec-id": max(s.get("spec-id", 0) for s in specs) + 1,
-                "fields": [],
-            }
-            new_specs = specs + [unpart]
-        delete_spec_id = unpart["spec-id"]
-    entry_schemas = {
-        0: ice._entry_schema_for(
-            [(pf["name"], pf["result_type"]) for pf in pcols],
-            row_lineage=fv >= 3,
-        ),
-        1: dv_entry_schema or ice._entry_schema_for([]),
-    }
-    spec_ids = {0: default_spec_id, 1: delete_spec_id}
-    new_sid = meta.get("current-schema-id", 0)
-    evolved_schemas = None
-    if evolved_fields is not None:
-        prev_schemas = meta.get("schemas") or (
-            [dict(meta["schema"], **{"schema-id": 0})]
-            if "schema" in meta
-            else []
-        )
-        new_sid = (
-            max((sc.get("schema-id", 0) for sc in prev_schemas), default=0)
-            + 1
-        )
-        evolved_schemas = prev_schemas + [
-            {
-                "type": "struct",
-                "schema-id": new_sid,
-                "fields": evolved_fields,
-            }
-        ]
-    planned_v = cur_v
-
-    def build(cur_v: int, meta: dict) -> dict:
-        # the positions retire rows of the planned version's live set
-        if cur_v != planned_v:
-            raise ValueError(
-                "concurrent commit landed during MERGE planning — "
-                "aborting without committing"
-            )
-        snap_id = cur_v + 1
-        seq = int(meta.get("last-sequence-number", cur_v)) + 1
-        # fresh first_row_id blocks above next-row-id (spec: assigned
-        # to every added data file; rows with a materialized _row_id
-        # — the updated images — simply never consult theirs)
-        lineage = (
-            ice._assign_row_ids(meta, added_files)
-            if fv >= 3 and added_files
-            else None
-        )
-        manifests = [
-            ice._write_manifest(
-                path, f"manifest-merge{content}", snap_id, seq,
-                entry_schemas[content], files_, content=content,
-                spec_id=spec_ids[content],
-            )
-            for content, files_ in ((0, added_files), (1, delete_files))
-            if files_
-        ]
-        # v3: a replacement DV supersedes the old entry in the SAME
-        # snapshot — it drops from the re-listed prior manifests
-        parent, ml_path, ml_rows = ice._write_manifest_list(
-            path, meta, snap_id, manifests, branch=branch,
-            superseded=dv_superseded,
-        )
-        summary = ice._snapshot_summary(
-            "overwrite",
-            ml_rows,
-            ice._parent_summary(meta, parent),
-            added_data_files=len(added_files),
-            added_records=sum(
-                int(dd["record_count"]) for dd in added_files
-            ),
-            added_delete_files=len(delete_files),
-            added_position_deletes=sum(
-                int(dd["record_count"]) for dd in delete_files
-            ),
-            added_files_size=sum(
-                int(dd.get("file_size_in_bytes", 0) or 0)
-                for dd in added_files + delete_files
-            ),
-        )
-        new_meta = ice._add_snapshot(
-            meta, snap_id, seq, int(time.time() * 1000), ml_path,
-            summary, parent, branch=branch, schema_id=new_sid,
-            lineage=lineage,
-        )
-        if evolved_schemas is not None:
-            # the schema widens ATOMICALLY with the row changes (the
-            # Delta evolve_schema twin): new schema-id, name-stable old
-            # field ids, fresh ids for additions
-            new_meta["schemas"] = evolved_schemas
-            new_meta["current-schema-id"] = new_sid
-            new_meta["last-column-id"] = max(
-                f["id"] for f in evolved_fields
-            )
-            new_meta.pop("schema", None)
-        if new_specs != specs:
-            new_meta["partition-specs"] = new_specs
-        return new_meta
-
-    return ice._commit_metadata(
-        path, build, staged=added_files + delete_files
     )
 
 
@@ -1637,31 +1231,14 @@ _WHEN_RE = re.compile(
 
 
 def _split_top(text: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` outside parentheses/quotes."""
-    out, depth, cur, q = [], 0, [], None
-    for ch in text:
-        if q:
-            cur.append(ch)
-            if ch == q:
-                q = None
-            continue
-        if ch in "'\"":
-            q = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return [s for s in out if s]
+    """Split on ``sep`` outside parentheses, quotes and backticks."""
+    out, last = [], 0
+    for i, ch, depth in _top_level(text):
+        if ch == sep and not depth:
+            out.append(text[last:i])
+            last = i + 1
+    out.append(text[last:])
+    return [s.strip() for s in out if s.strip()]
 
 
 def merge_into_sql(
@@ -1960,19 +1537,24 @@ def update_where(
     branch: str | None = None,
 ) -> int | None:
     """Row-level ``UPDATE <table> SET ... WHERE <predicate>`` — the
-    third DML verb beside ``delete_*_where`` and :func:`merge_into`.
-    ``predicate`` and the SET expressions are Spark SQL over the
-    table's columns (no aliases; there is no source relation).
+    third DML verb beside ``delete_*_where`` and :func:`merge_into`,
+    and a DELETE with a post-image: each format runs both through one
+    row-level path. ``predicate`` and the SET expressions are Spark
+    SQL over the table's columns (no aliases; there is no source
+    relation).
 
-    - **Delta** ``mode='cow'``: the files holding matches are
-      rewritten with the SET applied (untouched files never read);
-      ``mode='dv'`` (delta-spark's DV-era UPDATE shape): old positions
-      are DV-retired and the updated rows append as new files in the
-      SAME commit — O(matched rows), no file rewrite. With CDF on,
-      both modes stage update_preimage/update_postimage rows.
-    - **Iceberg**: merge-on-read — ONE snapshot carrying a position
-      delete of the matched rows + their updated images as new data
-      files (:func:`_commit_iceberg_mor`).
+    - **Delta** (``delta_io._row_level_delta``, after the SET,
+      generated-column and identity checks): ``mode='cow'`` rewrites
+      the files holding matches with the SET applied (files whose
+      stats prove no match are never read); ``mode='dv'``
+      (delta-spark's DV-era UPDATE shape) DV-retires the old positions
+      and appends the updated rows as new files in the SAME commit —
+      O(matched rows), no file rewrite. With CDF on, both modes stage
+      update_preimage/update_postimage rows.
+    - **Iceberg** (``iceberg_io._commit_row_level``): merge-on-read —
+      ONE snapshot retiring the matched rows (parquet position deletes
+      on v2, deletion vectors on v3) and adding their updated images
+      as new data files; v3 images keep their ``_row_id``.
 
     Returns the committed version/snapshot id, or None when nothing
     matched."""
@@ -2006,210 +1588,37 @@ def _set_cols(sets, fields, pred=None):
 
 
 def _update_delta(spark, path, predicate, sets, mode) -> int | None:
-    import json
-
     from census_asc5_data_pipeline_spark.sources import delta_io as d
 
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"unsupported mode {mode!r} (cow|dv)")
-    # candidate selection through the distributed plane above the
-    # checkpoint threshold (r14, the delete_delta_where discipline):
-    # only stats-surviving adds reach the driver
-    pruned = d._replay_pruned_spark(spark, path, None, None, predicate)
-    if pruned is not None:
-        protocol, meta, _cand_list, _tx = pruned
-        adds = {a["path"]: a for a in _cand_list}
-    else:
-        protocol, meta, adds, _tx = d._replay(spark, path, None)
-    d._writer_gate(protocol, meta, "UPDATE")
-    physical_of = d._column_mapping(meta)
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = list(meta.get("partitionColumns") or [])
-    # row tracking (r16): preserve stable ids through the rewrite and
-    # expose _row_id to the WHERE predicate (the _merge_delta shape)
-    meta, rt_meta_line, mat_id, mat_cv = d._rt_preserve_plan(protocol, meta)
-    rt_preserve = mat_id is not None
-    gens = d._generated_columns(meta)
-    bad_gen = {n for n, _e, _t in gens} & set(sets)
-    if bad_gen:
-        raise ValueError(
-            f"cannot SET generated column(s) {sorted(bad_gen)} — they "
-            "are recomputed from their generation expression"
-        )
-    bad_ident = {
-        n for n, _d, _s, _st, _h, _a in d._identity_columns(meta)
-    } & set(sets)
-    if bad_ident:
-        raise ValueError(
-            f"cannot SET identity column(s) {sorted(bad_ident)} — "
-            "their values are writer-allocated"
-        )
-    for c in sets:
-        if c not in schema.fieldNames():
-            raise ValueError(f"SET column {c!r} not in the table schema")
-    if not adds and pruned is None:
-        return None
-    # stats-based candidate pruning (r13, the delete_delta_where
-    # discipline): files whose stats prove the WHERE matches nothing
-    # are neither read nor rewritten; the distributed plane (r14)
-    # already pruned when it engaged
-    from census_asc5_data_pipeline_spark.sources import delta_stats
-
-    cand = list(adds.values())
-    if pruned is None:
-        atoms = delta_stats.parse_skip_predicate(predicate)
-        if atoms is not None:
-            cand = delta_stats.skip_files(
-                cand, atoms, schema, pcols, physical_of,
-                session_tz=spark.conf.get(
-                    "spark.sql.session.timeZone", "UTC"
-                ),
+    def image(meta, schema):
+        # the SET checks run against the replayed table, before any scan
+        gens = d._generated_columns(meta)
+        bad_gen = {n for n, _e, _t in gens} & set(sets)
+        if bad_gen:
+            raise ValueError(
+                f"cannot SET generated column(s) {sorted(bad_gen)} — they "
+                "are recomputed from their generation expression"
             )
-    if not cand:
-        return None
-    scan = d._scan_adds(
-        spark,
-        path,
-        schema,
-        pcols,
-        [(None, a) for a in cand],
-        keep_pos=True,
-        physical_of=physical_of,
-        extra_long_cols=[mat_id, mat_cv] if rt_preserve else [],
-    )
-    if rt_preserve:
-        scan = d._rt_stable_cols(spark, scan, cand, meta)
-    pred = F.coalesce(F.expr(predicate), F.lit(False))
-    # statement-scoped matched persist (r17): the matched rows feed
-    # the constraint aggregate, the per-file hit counts / DV retire,
-    # and the CDF pre-image staging — each a separate action that
-    # re-scanned every candidate file on an uncached frame. Bounded
-    # by the predicate's match count; released in the finally.
-    matched = scan.filter(pred).persist()
-    adds_by_base = d._adds_by_base(adds)
-    now_ms = int(time.time() * 1000)
-    lines = [d._commit_info("UPDATE", {"predicate": predicate}, now_ms)]
-    if rt_meta_line:
-        lines.append(rt_meta_line)
-    planned: dict[str, dict | None] = {}
-    staged: list[str] = []  # files this commit wrote
-    try:
-        updated = d._regenerate(
-            matched.select(
-                _set_cols(sets, schema.fields)
-                + (
-                    [
-                        F.col("_row_id").alias(mat_id),
-                        F.lit(None).cast("long").alias(mat_cv),
-                    ]
-                    if rt_preserve
-                    else []
+        bad_ident = {
+            n for n, _d, _s, _st, _h, _a in d._identity_columns(meta)
+        } & set(sets)
+        if bad_ident:
+            raise ValueError(
+                f"cannot SET identity column(s) {sorted(bad_ident)} — "
+                "their values are writer-allocated"
+            )
+        for c in sets:
+            if c not in schema.fieldNames():
+                raise ValueError(
+                    f"SET column {c!r} not in the table schema"
                 )
-            ),
+        return lambda frame, pred, extra: d._regenerate(
+            frame.select(_set_cols(sets, schema.fields, pred) + extra),
             meta,
             gens,
         )
-        d._check_constraints(updated, meta, "UPDATE")
-        if mode == "dv":
-            # retire the old positions, append the updated images — the
-            # delta-spark DV UPDATE commit shape
-            n_upd = d._dv_retire(
-                spark, path, protocol, matched, F.lit(True), adds_by_base,
-                lines, planned, now_ms, staged,
-            )
-            if not n_upd:
-                return None
-            staged_add_lines = d._stage_adds_mapped(
-                updated, path, pcols, physical_of,
-                stats_cols=d._stats_cols_of(meta),
-                field_ids=d._mapping_ids(meta),
-            )
-            staged += d._staged_paths(staged_add_lines)
-            lines.extend(staged_add_lines)
-        else:
-            # per-file matched-row counts ride the SAME shuffle the old
-            # distinct() took (r15: operationMetrics)
-            hit_counts = {
-                r["__base"]: int(r["n"])
-                for r in matched
-                .groupBy("__base")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            touched = sorted(hit_counts)
-            if not touched:
-                return None
-            n_upd = sum(hit_counts.values())
-            rewritten = d._regenerate(
-                scan.filter(F.col("__base").isin(touched)).select(
-                    _set_cols(sets, schema.fields, pred=pred)
-                    + (
-                        [
-                            F.col("_row_id").alias(mat_id),
-                            # updated rows reset to the new commit
-                            # version (null materialized); copied rows
-                            # keep their original
-                            F.when(pred, F.lit(None).cast("long"))
-                            .otherwise(F.col("__rt_cv"))
-                            .cast("long")
-                            .alias(mat_cv),
-                        ]
-                        if rt_preserve
-                        else []
-                    )
-                ),
-                meta,
-                gens,
-            )
-            staged_add_lines = d._stage_adds_mapped(
-                rewritten, path, pcols, physical_of,
-                stats_cols=d._stats_cols_of(meta),
-                field_ids=d._mapping_ids(meta),
-            )
-            staged += d._staged_paths(staged_add_lines)
-            lines.extend(staged_add_lines)
-            for base in sorted(touched):
-                a = adds_by_base[base]
-                planned[a["path"]] = a.get("deletionVector")
-                lines.append({"remove": d._remove_action(a, now_ms)})
-        if (meta.get("configuration") or {}).get(
-            "delta.enableChangeDataFeed"
-        ) == "true":
-            pre = matched.select(
-                [F.col(f.name) for f in schema.fields]
-            ).withColumn("_change_type", F.lit("update_preimage"))
-            post = updated.select(
-                [F.col(f"`{f.name}`") for f in schema.fields]
-            ).withColumn("_change_type", F.lit("update_postimage"))
-            cdc_lines = d._stage_cdc_mapped(
-                pre.unionByName(post), path, pcols, physical_of,
-                field_ids=d._mapping_ids(meta),
-            )
-            staged += d._staged_paths(cdc_lines)
-            lines.extend(cdc_lines)
-        c = d._commit_counts(lines)
-        dv_pairs = c["dv_adds"] if mode == "dv" else 0
-        d._stamp_op_metrics(
-            lines,
-            numUpdatedRows=n_upd,
-            numCopiedRows=(
-                max(0, c["add_rows"] - n_upd)
-                if mode == "cow" and c["add_rows"] is not None
-                else (0 if mode == "dv" else None)
-            ),
-            numAddedFiles=c["adds"] - dv_pairs,
-            numRemovedFiles=c["removes"] - dv_pairs,
-            numDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
-            numAddedChangeFiles=c["cdc"],
-        )
 
-        def build(_v: int):
-            d._check_planned(spark, path, planned, "UPDATE")
-            return protocol, meta, lines
-
-        return d._commit_delta(spark, path, build, staged=staged)
-    finally:
-        matched.unpersist()
+    return d._row_level_delta(spark, path, predicate, mode, image)
 
 
 def _update_iceberg(spark, path, predicate, sets, branch=None) -> int | None:
@@ -2221,107 +1630,37 @@ def _update_iceberg(spark, path, predicate, sets, branch=None) -> int | None:
     fv = ice._format_version_gate(
         meta, "UPDATE", write=True, v3_write_ok=True, defaults_ok=True,
     )
-    branch_head = ice._branch_head(meta, branch)
     schema, fields = ice._schema_of(meta)
-    defaulted = (
-        [f for f in fields if f.get("initial-default") is not None]
-        if fv >= 3
-        else []
-    )
-    pcols = _spec_pcols(meta, fields, "UPDATE")
     for c in sets:
         if c not in schema.fieldNames():
             raise ValueError(f"SET column {c!r} not in the table schema")
-    # bounds-based candidate pruning (r13, the _update_delta
-    # discipline): files whose manifest metrics prove the WHERE
-    # matches nothing are neither scanned nor position-deleted;
-    # r14: partition-predicate atoms additionally skip WHOLE DATA
-    # MANIFESTS via the manifest-list field summaries before any
-    # Avro decodes (delete manifests always decode)
-    from census_asc5_data_pipeline_spark.sources import delta_stats as dsk
-
-    atoms = dsk.parse_skip_predicate(predicate)
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    pruner = (
-        ice._manifest_summary_pruner(meta, fields, atoms, session_tz=tz)
-        if atoms is not None
-        else None
+    cand, delete_fs = ice._dml_candidates(
+        spark, path, meta, fields, predicate, branch
     )
-    data_files, delete_fs = ice._snapshot_files(
-        path, meta, branch_head, spark=spark, manifest_pruner=pruner
+    if not cand:
+        return None
+    scan, abs_of_base = ice._row_level_scan(
+        spark, schema, fields, cand, delete_fs, fv, lineage=fv >= 3
     )
-    if not data_files:
-        return None
-    if atoms is not None:
-        data_files = ice._skip_by_bounds(
-            data_files, atoms, fields, meta, session_tz=tz
-        )
-    if not data_files:
-        return None
-    abs_of_base: dict[str, str] = {}
-    for dd in data_files:
-        ap = os.path.abspath(ice._local(dd["file_path"]))
-        base = os.path.basename(ap)
-        if base in abs_of_base and abs_of_base[base] != ap:
-            raise ValueError(
-                f"duplicate data-file basename {base!r} — cannot "
-                "address positions unambiguously"
-            )
-        abs_of_base[base] = ap
-    if defaulted:
-        scan = ice._scan_with_defaults(
-            spark, schema, fields, data_files, delete_fs, defaulted,
-            keep_pos=True, lineage=True,
-        ).drop("_last_updated_sequence_number")
-    elif fv >= 3:
-        scan = ice._lineage_scan(
-            spark, schema, fields, data_files, delete_fs,
-            keep_pos=True,
-        ).drop("_last_updated_sequence_number")
-    else:
-        scan = ice._scan_with_deletes(
-            spark, schema, fields, data_files, delete_fs, keep_pos=True
-        )
-    pred = F.coalesce(F.expr(predicate), F.lit(False))
     # statement-scoped matched persist (r17): the matched rows feed
-    # the position-delete staging, the updated-image staging and the
+    # the position staging, the updated-image staging and the
     # required-field validation — each a separate action that re-ran
     # the full delete-aware/lineage scan on an uncached frame.
     # Bounded by the predicate's match count; released in the finally.
-    matched = scan.filter(pred).persist()
+    matched = scan.filter(
+        F.coalesce(F.expr(predicate), F.lit(False))
+    ).persist()
     try:
-        base_df = F.broadcast(
-            spark.createDataFrame(
-                sorted(abs_of_base.items()), "__base string, __abs string"
-            )
-        )
-        pos_df = (
-            matched.select("__base", "__ri")
-            .join(base_df, "__base")
-            .select(
-                F.col("__abs").alias("file_path"),
-                F.col("__ri").alias("pos"),
-            )
-        )
-        if fv < 3:
-            # each v2 parquet position-delete FILE stays sorted by
-            # (file_path, pos) per spec: hash-cluster per file + sort
-            # within partitions (AQE coalesces a small delete back to
-            # one file; a 100 TB-scale delete spreads over many). v3
-            # skips the shuffle — the DV grouping in the commit is its
-            # own aggregate and _stage_dv_files sorts per blob.
-            pos_df = pos_df.repartition(
-                "file_path"
-            ).sortWithinPartitions("file_path", "pos")
-        new_rows = matched.select(
-            _set_cols(sets, schema.fields)
-            # updated rows keep their identity; the dropped null
-            # _last_updated_sequence_number inherits the new file's
-            # sequence number on read
-            + ([F.col("_row_id")] if fv >= 3 else [])
-        )
-        return _commit_iceberg_mor(
-            spark, path, cur_v, meta, pos_df, new_rows, pcols,
+        return ice._commit_row_level(
+            path, cur_v, meta, "UPDATE",
+            ice._positions(spark, matched, abs_of_base, fv),
+            matched.select(
+                _set_cols(sets, schema.fields)
+                # updated rows keep their identity; the dropped null
+                # _last_updated_sequence_number inherits the new
+                # file's sequence number on read
+                + ([F.col("_row_id")] if fv >= 3 else [])
+            ),
             branch=branch, existing_deletes=delete_fs,
         )
     finally:
@@ -2329,10 +1668,24 @@ def _update_iceberg(spark, path, predicate, sets, branch=None) -> int | None:
 
 
 _UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<target>[\w.]+)\s+SET\s+(?P<sets>.*?)"
-    r"(?:\s+WHERE\s+(?P<pred>.*?))?\s*$",
+    r"^\s*UPDATE\s+(?P<target>[\w.]+)\s+SET\s+(?P<rest>.*?)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+_WHERE_RE = re.compile(r"WHERE\b", re.IGNORECASE)
+
+
+def _split_where(text: str) -> tuple[str, str | None]:
+    """``text`` split at its first top-level ``WHERE`` keyword —
+    outside quoted strings, backticked identifiers and parentheses —
+    as (head, predicate), or (text, None) when there is none."""
+    for i, _ch, depth in _top_level(text):
+        if (
+            not depth
+            and _WHERE_RE.match(text, i)
+            and not (i and (text[i - 1].isalnum() or text[i - 1] == "_"))
+        ):
+            return text[:i].strip(), text[i + len("WHERE"):].strip()
+    return text, None
 _INSERT_RE = re.compile(
     r"^\s*INSERT\s+(?:(?P<into>INTO)|(?P<over>OVERWRITE))\s+"
     r"(?:TABLE\s+)?(?P<target>[\w.]+)\s*"
@@ -3021,14 +2374,7 @@ def _show_create_table(
             + (" NOT NULL" if f.get("required") else "")
             for f in fields
         ]
-        specs = meta.get("partition-specs") or (
-            [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-        )
-        sid = int(meta.get("default-spec-id", 0))
-        spec = next(
-            (s for s in specs if int(s.get("spec-id", 0)) == sid),
-            {"fields": []},
-        )
+        spec = ice._default_spec(meta)
         pby = []
         for pf in spec.get("fields", []):
             src = by_id.get(pf["source-id"], {}).get(
@@ -3101,14 +2447,7 @@ def _describe_sql(
             return d.describe_detail(spark, path)
         cur_v, meta = ice._current_metadata(path)
         _sch, fields = ice._schema_of(meta, allow_renames=True)
-        specs = meta.get("partition-specs") or (
-            [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-        )
-        sid = int(meta.get("default-spec-id", 0))
-        spec = next(
-            (s for s in specs if int(s.get("spec-id", 0)) == sid),
-            {"fields": []},
-        )
+        spec = ice._default_spec(meta)
         row = (
             "iceberg",
             str(meta.get("table-uuid") or ""),
@@ -3142,12 +2481,9 @@ def _describe_sql(
         _v, meta = ice._current_metadata(path)
         _sch, fields = ice._schema_of(meta, allow_renames=True)
         by_id = {f["id"]: f for f in fields}
-        specs = meta.get("partition-specs") or (
-            [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-        )
         psrc = {
             by_id[pf["source-id"]]["name"]
-            for s in specs
+            for s in ice._partition_specs(meta)
             for pf in s.get("fields", [])
             if pf.get("transform", "identity") == "identity"
             and pf["source-id"] in by_id
@@ -3796,12 +3132,18 @@ def dml_sql(
         if not m:
             raise ValueError(f"cannot parse UPDATE statement: {sql!r}")
         fmt, path = _resolve(m.group("target"))
+        set_list, pred = _split_where(m.group("rest"))
         sets = {}
-        for item in _split_top(m.group("sets")):
-            k, _, v = item.partition("=")
-            sets[k.strip()] = v.strip()
-        pred = m.group("pred") or "true"
-        return update_where(spark, fmt, path, pred, sets)
+        for item in _split_top(set_list):
+            eq = next(
+                (i for i, ch, _d in _top_level(item) if ch == "="),
+                len(item),
+            )
+            k = item[:eq].strip()
+            if len(k) > 1 and k[0] == k[-1] == "`":
+                k = k[1:-1].replace("``", "`")
+            sets[k] = item[eq + 1:].strip()
+        return update_where(spark, fmt, path, pred or "true", sets)
     if head == "DELETE":
         m = _DELETE_RE.match(text)
         if not m:

@@ -11,7 +11,9 @@ put-if-absent link, so no commit is ever silently overwritten.
   ``add`` names;
 - the claim primitive is called from exactly one place per format;
 - the Delta log plane opens a commit JSON and writes the
-  ``_last_checkpoint`` pointer in one place each.
+  ``_last_checkpoint`` pointer in one place each;
+- row-level DML plans its position scan and stages Iceberg files in
+  one place per format.
 """
 
 from __future__ import annotations
@@ -426,3 +428,31 @@ def test_one_commit_reader_and_pointer_writer():
         ("delta_io", "_ict_of_commit"),
     ]
     assert writers == [("delta_io", "_publish_last_checkpoint")]
+
+
+def test_one_row_level_path_per_format():
+    """Row-level DML plans and stages through one path per format.
+    The position scan (``_scan_adds(..., keep_pos=True)``) is called
+    only by ``delta_io._row_level_delta`` (DELETE and UPDATE) and
+    ``merge._merge_delta``, besides the ``_row_tracking_scan`` read;
+    and an Iceberg file reaches ``data/`` (``shutil.move``) only
+    through ``iceberg_io._stage_files``."""
+    keep_pos, movers = [], []
+    for module in ("delta_io", "iceberg_io", "merge"):
+        for name, fn in _functions(module):
+            for n in _own_nodes(fn):
+                if _callee(n) == "_scan_adds" and any(
+                    kw.arg == "keep_pos"
+                    and isinstance(kw.value, ast.Constant)
+                    and kw.value.value is True
+                    for kw in n.keywords
+                ):
+                    keep_pos.append((module, name))
+                if module != "delta_io" and _callee(n) == "move":
+                    movers.append((module, name))
+    assert sorted(keep_pos) == [
+        ("delta_io", "_row_level_delta"),
+        ("delta_io", "_row_tracking_scan"),
+        ("merge", "_merge_delta"),
+    ]
+    assert movers == [("iceberg_io", "_stage_files")]

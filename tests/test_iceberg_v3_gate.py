@@ -255,8 +255,8 @@ def _mk_v3_dv_table(spark, path: str):
         "content_offset": int(blob_meta["offset"]),
         "content_size_in_bytes": int(blob_meta["length"]),
     }
-    ice._commit_delete_snapshot(
-        path, cur_v, [dv_entry], schema, "concurrent commit"
+    ice._commit_row_level(
+        path, cur_v, meta, "DELETE", delete_files=[dv_entry]
     )
     cur_v2, meta2 = ice._current_metadata(path)
     meta3 = dict(meta2)
