@@ -112,13 +112,3 @@ def avg_scaled(int_sum: Column, n: Column, scale: int) -> Column:
         int_sum.cast("double") * F.lit(float(scale)) / n + F.lit(0.5)
     ).cast("bigint")
 
-
-# ------------------------------------------------------------- hashing
-
-
-def seeded_hash64(col: Column, seed: int | str) -> Column:
-    """Deterministic 64-bit hash under a named seed.
-
-    ``xxhash64`` takes no seed parameter, so the seed is mixed in as a
-    prefix — one JVM hash call per row, no Python."""
-    return F.xxhash64(F.concat(F.lit(f"{seed}\x1f"), col))

@@ -67,12 +67,13 @@ How this reader maps it to Spark — scale notes:
   instead of silently mis-reading.
 - Row-level DML has one path, :func:`_row_level_delta`: DELETE
   (:func:`delete_delta_where`) is its case without a post-image,
-  UPDATE (``merge.update_where``) its case with the SET image. It
-  prunes candidates by stats, scans them once with row positions,
-  and either rewrites the touched files (copy-on-write) or retires
-  the matched positions behind a deletion vector, then stages the
-  CDF images and commits once. MERGE (``merge._merge_delta``) keeps
-  its own plan over the same primitives.
+  UPDATE (``merge.update_where``) adds the SET image, and MERGE
+  (``merge.merge_into``) adds a per-row clause tag and inserted
+  rows. It picks candidates (the predicate's stats, or the MERGE
+  source's key range), scans them once with row positions, and
+  either rewrites the touched files (copy-on-write) or retires the
+  acted-on positions behind a deletion vector, then stages the
+  post-images, inserts and CDF images and commits once.
 
 The writer emits protocol (1, 2), metaData with the Spark schema
 JSON (Delta's ``schemaString`` IS Spark's ``StructType.json()``),
@@ -2133,39 +2134,13 @@ def read_delta(
         # stats skipping in executors; only the residual row filter
         # remains
         _protocol, meta, live, _txns = pruned
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        pcols = list(meta.get("partitionColumns") or [])
-        physical_of = _column_mapping(meta)
-        if not live:
-            out = spark.createDataFrame([], _strip_meta(schema))
-            if row_tracking:
-                out = out.withColumn(
-                    "_row_id", F.lit(None).cast("long")
-                ).withColumn(
-                    "_row_commit_version", F.lit(None).cast("long")
-                )
-            return out.filter(F.expr(predicate)) if predicate else out
-        out = (
-            _row_tracking_scan(
-                spark, path, schema, pcols, live, meta, physical_of
-            )
-            if row_tracking
-            else _scan_adds(
-                spark,
-                path,
-                schema,
-                pcols,
-                [(None, a) for a in live],
-                physical_of=physical_of,
-            )
-        )
-        return out.filter(F.expr(predicate)) if predicate else out
-    _protocol, meta, adds, _txns = _replay(spark, path, version)
+    else:
+        _protocol, meta, adds, _txns = _replay(spark, path, version)
+        live = list(adds.values())
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     pcols = list(meta.get("partitionColumns") or [])
     physical_of = _column_mapping(meta)
-    live = list(adds.values())
-    if partition_filter:
+    if pruned is None and partition_filter:
         unknown = set(partition_filter) - set(pcols)
         if unknown:
             raise ValueError(
@@ -2183,7 +2158,7 @@ def read_delta(
                 for k, v in partition_filter.items()
             )
         ]
-    if predicate:
+    if pruned is None and predicate:
         atoms = delta_stats.parse_skip_predicate(predicate)
         if atoms is not None:
             live = delta_stats.skip_files(
@@ -2251,27 +2226,12 @@ def _row_tracking_scan(
     already anti-joined away, and their ids are simply absent —
     row ids survive deletes without renumbering, the feature's
     point)."""
-    conf = meta.get("configuration") or {}
-    if str(conf.get("delta.enableRowTracking", "")).lower() != "true":
+    if not _rt_enabled(meta):
         raise ValueError(
             "row_tracking=True needs delta.enableRowTracking=true — "
             "ids are not stable (or not assigned) before the property "
             "is enabled, so materializing them would fabricate values"
         )
-    missing = sorted(
-        a["path"] for a in live if a.get("baseRowId") is None
-    )
-    if missing:
-        raise ValueError(
-            f"{len(missing)} live file(s) carry no baseRowId (e.g. "
-            f"{missing[0]!r}) — row ids cannot be materialized for "
-            "them; backfill the table with a tracking writer first"
-        )
-    mat_id = conf.get("delta.rowTracking.materializedRowIdColumnName")
-    mat_cv = conf.get(
-        "delta.rowTracking.materializedRowCommitVersionColumnName"
-    )
-    extra = [c for c in (mat_id, mat_cv) if c]
     scan = _scan_adds(
         spark,
         path,
@@ -2280,38 +2240,11 @@ def _row_tracking_scan(
         [(None, a) for a in live],
         physical_of=physical_of,
         keep_pos=True,
-        extra_long_cols=extra,
+        extra_long_cols=[c for c in _rt_mat_names(meta) if c],
     )
-    rt_rows = [
-        (
-            os.path.basename(urllib.parse.unquote(a["path"])),
-            int(a["baseRowId"]),
-            int(a["defaultRowCommitVersion"])
-            if a.get("defaultRowCommitVersion") is not None
-            else None,
-        )
-        for a in live
-    ]
-    rt_df = spark.createDataFrame(
-        rt_rows, "__rtbase string, __brid long, __drcv long"
-    )
-    out = scan.join(
-        F.broadcast(rt_df),
-        scan["__base"] == rt_df["__rtbase"],
-        "left",
-    )
-    row_id = F.col("__brid") + F.col("__ri")
-    rcv = F.col("__drcv")
-    if mat_id:
-        row_id = F.coalesce(F.col(f"`{mat_id}`"), row_id)
-    if mat_cv:
-        rcv = F.coalesce(F.col(f"`{mat_cv}`"), rcv)
-    return out.select(
+    return _rt_stable_cols(spark, scan, live, meta).select(
         [F.col(f.name) for f in schema.fields]
-        + [
-            row_id.cast("long").alias("_row_id"),
-            rcv.cast("long").alias("_row_commit_version"),
-        ]
+        + [F.col("_row_id"), F.col("__rt_cv").alias("_row_commit_version")]
     )
 
 
@@ -2490,20 +2423,21 @@ def _rt_stable_cols(
     spark: SparkSession, scan: DataFrame, cand: list[dict], meta: dict
 ) -> DataFrame:
     """Attach ``_row_id`` / ``__rt_cv`` (stable id, ORIGINAL commit
-    version) to a keep_pos rewrite scan over ``cand`` — materialized
-    column wins, else baseRowId + position; the same resolution as
-    the read path, kept joinable so DML predicates and MERGE
-    conditions can reference ``_row_id`` and rewrites can preserve
-    it. Raises when a live candidate lacks baseRowId (enabled-table
-    invariant, mirrors :func:`_row_tracking_scan`)."""
+    version) to a keep_pos scan over ``cand`` — materialized column
+    wins, else baseRowId + position. The row-tracking read
+    (:func:`_row_tracking_scan`) projects them; row-level DML keeps
+    them joinable, so predicates and MERGE conditions can reference
+    ``_row_id`` and rewrites can preserve it. Raises when a live
+    candidate lacks baseRowId (the enabled-table invariant)."""
     missing = sorted(
         a["path"] for a in cand if a.get("baseRowId") is None
     )
     if missing:
         raise ValueError(
             f"{len(missing)} live file(s) carry no baseRowId (e.g. "
-            f"{missing[0]!r}) — stable row ids cannot be preserved; "
-            "backfill with enable_row_tracking first"
+            f"{missing[0]!r}) — row ids cannot be materialized or "
+            "preserved for them; backfill the table with "
+            "enable_row_tracking first"
         )
     mat_id, mat_cv = _rt_mat_names(meta)
     rt_rows = [
@@ -4727,18 +4661,17 @@ def _dv_retire(
     planned: dict[str, dict | None],
     now_ms: int,
     staged: list[str],
-) -> int:
-    """DV-retire every row of ``matched`` (a keep_pos scan's rows):
-    write the merged roaring sidecars (their path appended to
-    ``staged``), append the protocol-upgrade (when needed) and the
-    remove + DV-re-add actions to ``lines``, record the expected
-    pre-commit DV state in ``planned``. Shared by
-    :func:`_row_level_delta` (DV-mode DELETE and UPDATE) and
-    ``merge._merge_delta``. Returns the number of retired rows — 0
-    (falsy) when nothing matched, so callers skip the commit; the
-    count feeds operationMetrics (numDeletedRows / numUpdatedRows)
-    with no extra job, since the matched positions already pass
-    through the driver — O(matched rows), the documented DV trade."""
+) -> dict[str, int]:
+    """DV-retire every row of ``matched`` (a keep_pos scan's rows)
+    for :func:`_row_level_delta`: write the merged roaring sidecars
+    (their path appended to ``staged``), append the protocol-upgrade
+    (when needed) and the remove + DV-re-add actions to ``lines``,
+    record the expected pre-commit DV state in ``planned``. Returns
+    the retired rows per file basename — empty when nothing matched;
+    a DV-mode DELETE or UPDATE takes its touched files and row
+    metric from it with no extra job, since the matched positions
+    already pass through the driver — O(matched rows), the
+    documented DV trade."""
     from census_asc5_data_pipeline_spark.sources.deletion_vectors import (
         dv_relative_path,
         read_dv_positions,
@@ -4751,7 +4684,7 @@ def _dv_retire(
         .collect()
     )
     if not hits:
-        return 0
+        return {}
     merged: dict[str, list[int]] = {}
     for r in hits:
         a = adds_by_base[r["__base"]]
@@ -4783,7 +4716,7 @@ def _dv_retire(
         new_add["dataChange"] = True
         new_add["deletionVector"] = descs[base]
         lines.append({"add": new_add})
-    return sum(len(r["pos"]) for r in hits)
+    return {r["__base"]: len(r["pos"]) for r in hits}
 
 
 def delete_delta_where(
@@ -4837,139 +4770,295 @@ def _row_level_delta(
     predicate: str,
     mode: str,
     image=None,
+    merge=None,
 ) -> int | None:
-    """The one row-level DML commit: DELETE (``image`` None) and
-    UPDATE (``merge.update_where``) share every step — stats
-    candidates (from the distributed plane above
-    ``_SPARK_PRUNE_THRESHOLD``, so only surviving adds reach the
-    driver), one keep_pos scan of the candidates, the matched rows,
-    then either a CoW rewrite of each touched file (its survivors,
-    or its rows with the SET applied) or a DV retire of the matched
-    positions plus the post-images appended as new files, the CDF
-    images, operationMetrics and one :func:`_commit_delta`.
+    """The one row-level DML commit. DELETE (no ``image``), UPDATE
+    (``merge.update_where``, an ``image``) and MERGE (``merge``, an
+    ``image`` and a per-row action) share every step: candidates, one
+    keep_pos scan of them, the per-(action, file) counts, then either
+    a CoW rewrite of each touched file (its rows minus the deleted
+    ones, the post-image applied) or a DV retire of the acted-on
+    positions plus the post-images appended as new files, the
+    inserted rows, the constraint check, the CDF images,
+    operationMetrics and one :func:`_commit_delta`.
 
-    ``image(meta, schema)`` validates an UPDATE against the replayed
+    ``image(meta, schema)`` validates the SETs against the replayed
     table and returns ``post(frame, pred, extra)``: ``frame``'s
     post-image over the schema columns with the SET applied where
-    ``pred`` holds (every row when ``pred`` is None), ``extra``
-    (the row-tracking pair) appended."""
+    ``pred`` holds (every row when ``pred`` is None; a MERGE applies
+    each row's clause), ``extra`` (the row-tracking pair) appended.
+
+    ``merge`` (``merge._DeltaMerge``) brings a MERGE's own steps:
+    schema evolution, source-key candidates, the ``__action`` tag of
+    every target row and the inserts (identity, generated columns,
+    their count). ``predicate`` is then the ON condition: recorded,
+    not pruned by. DELETE and UPDATE prune candidates by
+    ``predicate``'s stats (on the distributed plane above
+    ``_SPARK_PRUNE_THRESHOLD``, so only surviving adds reach the
+    driver) and act on the rows it matches.
+
+    Each verb keeps its commit: DELETE records ``mode``, UPDATE lists
+    its rewrites before the files they replace (DELETE and MERGE
+    after), and the metric names differ (``numDeletedRows`` vs
+    ``numTargetRowsDeleted``). An UPDATE checks constraints on its
+    post-images, a MERGE on every row it writes."""
     if mode not in ("cow", "dv"):
         raise ValueError(f"unsupported mode {mode!r} (cow|dv)")
-    op = "DELETE" if image is None else "UPDATE"
-    pruned = _replay_pruned_spark(spark, path, None, None, predicate)
+    op = "MERGE" if merge else "DELETE" if image is None else "UPDATE"
+    pruned = (
+        None if merge
+        else _replay_pruned_spark(spark, path, None, None, predicate)
+    )
     if pruned is not None:
         protocol, meta, cand, _tx = pruned
         adds = {a["path"]: a for a in cand}
     else:
         protocol, meta, adds, _tx = _replay(spark, path, None)
         cand = list(adds.values())
-    _writer_gate(protocol, meta, op)
+    _writer_gate(protocol, meta, merge.gate if merge else op)
     physical_of = _column_mapping(meta)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     pcols = list(meta.get("partitionColumns") or [])
+    # row tracking (r16): on an ENABLED table every written row keeps
+    # its stable id through the materialized columns (a changed row's
+    # commit version resets to this commit's), and the scan exposes
+    # ``_row_id`` so predicates and ON conditions may target stable ids
+    meta, rt_meta_line, mat_id, mat_cv = _rt_preserve_plan(protocol, meta)
+    widened = False
+    if merge:
+        meta, schema, physical_of, widened = merge.evolve(
+            meta, schema, physical_of
+        )
     post = image(meta, schema) if image is not None else None
-    if pruned is None and cand:
+
+    def skip(files, atoms):
+        return delta_stats.skip_files(
+            files, atoms, schema, pcols, physical_of,
+            session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
+        )
+
+    if merge:
+        if not cand and not merge.inserting:
+            return None
+        live = cand
+
+        def has_stats(col: str) -> bool:
+            phys = (physical_of or {}).get(col, col)
+            for a in live:
+                st = a.get("stats")
+                try:
+                    st = json.loads(st) if isinstance(st, str) else st
+                except ValueError:
+                    continue
+                if isinstance(st, dict) and phys in (
+                    st.get("minValues") or {}
+                ):
+                    return True
+            return col in pcols
+
+        cand = merge.candidates(
+            list(schema.fields), live, has_stats,
+            lambda atoms: skip(live, atoms),
+        )
+    elif pruned is None and cand:
         # stats-based candidate pruning (r13): files whose min/max/null
         # stats PROVE no row matches are neither read nor rewritten
         atoms = delta_stats.parse_skip_predicate(predicate)
         if atoms is not None:
-            cand = delta_stats.skip_files(
-                cand, atoms, schema, pcols, physical_of,
-                session_tz=spark.conf.get(
-                    "spark.sql.session.timeZone", "UTC"
-                ),
-            )
-    if not cand:
+            cand = skip(cand, atoms)
+    if not cand and not merge:
         return None
-    # row tracking (r16): on an ENABLED table every written row keeps
-    # its stable id through the materialized columns (a changed row's
-    # commit version resets to this commit's), and the scan exposes
-    # ``_row_id`` so the predicate itself may target stable ids
-    meta, rt_meta_line, mat_id, mat_cv = _rt_preserve_plan(protocol, meta)
-    scan = _scan_adds(
-        spark,
-        path,
-        schema,
-        pcols,
-        [(None, a) for a in cand],
-        keep_pos=True,
-        physical_of=physical_of,
-        extra_long_cols=[mat_id, mat_cv] if mat_id else [],
-    )
-    if mat_id:
-        scan = _rt_stable_cols(spark, scan, cand, meta)
+    if cand:
+        scan = _scan_adds(
+            spark,
+            path,
+            schema,
+            pcols,
+            [(None, a) for a in cand],
+            keep_pos=True,
+            physical_of=physical_of,
+            extra_long_cols=[mat_id, mat_cv] if mat_id else [],
+        )
+        if mat_id:
+            scan = _rt_stable_cols(spark, scan, cand, meta)
+    else:
+        # a MERGE into no candidate file matches nothing; it inserts
+        scan = spark.createDataFrame(
+            [],
+            T.StructType(
+                schema.fields
+                + [
+                    T.StructField("__base", T.StringType()),
+                    T.StructField("__ri", T.LongType()),
+                ]
+            ),
+        )
+        if mat_id:
+            scan = scan.withColumn(
+                "_row_id", F.lit(None).cast("long")
+            ).withColumn("__rt_cv", F.lit(None).cast("long"))
+    scan = scan.alias("t")
 
     def rt(cv):
         return (
-            [F.col("_row_id").alias(mat_id), cv.cast("long").alias(mat_cv)]
+            [F.col("t._row_id").alias(mat_id), cv.cast("long").alias(mat_cv)]
             if mat_id
             else []
         )
 
-    pred = F.coalesce(F.expr(predicate), F.lit(False))
-    matched = scan.filter(pred)
-    if post is not None:
-        # statement-scoped persist (r17): an UPDATE's matched rows feed
-        # the constraint aggregate, the hit counts or DV retire and the
-        # image and CDF staging, each of which re-scanned every
-        # candidate on an uncached frame. Bounded by the match count;
-        # released in the finally (a DELETE reads them once, or twice
-        # with CDF, where caching costs a job)
-        matched = matched.persist()
-    adds_by_base = _adds_by_base(adds)
-    now_ms = int(time.time() * 1000)
-    params = {"predicate": predicate}
-    if post is None:
-        params["mode"] = mode
-    lines: list[dict] = [_commit_info(op, params, now_ms)]
-    if rt_meta_line:
-        lines.append(rt_meta_line)
-    planned: dict[str, dict | None] = {}  # path -> expected current DV
-    staged: list[str] = []  # files this commit wrote
-    removes: list[dict] = []
+    if merge:
+        # every target row left-joined with the source, tagged with
+        # the first clause it meets; the cardinality check rides the
+        # first action over it (the counts below)
+        tagged, card_check = merge.tag(scan, list(schema.fields))
+        del_tags, upd_tags = merge.del_tags, merge.upd_tags
+        tag = F.col("__action")
+        is_del, is_upd = tag.isin(del_tags), tag.isin(upd_tags)
+        acted = (
+            tagged.where(tag.isin(del_tags + upd_tags))
+            if cand and (del_tags or upd_tags)
+            else None
+        )
+    else:
+        tagged, card_check = scan, None
+        tag = F.lit(op)
+        pred = F.coalesce(F.expr(predicate), F.lit(False))
+        del_tags, upd_tags = ([op], []) if post is None else ([], [op])
+        is_del, is_upd = (pred, None) if post is None else (None, pred)
+        acted = scan.filter(pred)
+
+    def only(tags):
+        """The acted rows whose action is one of ``tags``."""
+        return acted if not merge else acted.where(tag.isin(tags))
+
+    cdf = (meta.get("configuration") or {}).get(
+        "delta.enableChangeDataFeed"
+    ) == "true"
+    # a CoW MERGE without CDF reads its acted rows only for the counts
+    reread = post is not None and acted is not None and (
+        not merge or mode == "dv" or cdf
+    )
+    if reread:
+        # statement-scoped persist (r17): the acted rows feed the
+        # counts or DV retire, the post-images, the CDF images and (an
+        # UPDATE's) constraint check, each of which re-scanned every
+        # candidate on an uncached frame. Bounded by the acted rows;
+        # released in the finally. A DELETE reads them once, or twice
+        # with CDF, where caching costs a job
+        acted = acted.persist()
     try:
-        images = None
-        if post is not None:
-            images = post(matched, None, rt(F.lit(None)))
+        # the updated rows' post-images: an UPDATE's constraint check,
+        # the DV-mode rewrite and the CDF postimages
+        images = (
+            post(only(upd_tags), None, rt(F.lit(None)))
+            if upd_tags and reread
+            else None
+        )
+        if images is not None and not merge:
             _check_constraints(images, meta, op)
-        if mode == "dv":
-            n_rows = _dv_retire(
-                spark, path, protocol, matched, adds_by_base, lines,
-                planned, now_ms, staged,
-            )
-            if not n_rows:
-                return None
-            rewrite = images
-        else:
-            # per-file matched-row counts ride the SAME shuffle the old
-            # distinct() took (r15: operationMetrics) — touched files
-            # and the row metric from one job
-            hit_counts = {
-                r["__base"]: int(r["n"])
-                for r in matched.groupBy("__base")
+        adds_by_base = _adds_by_base(adds)
+        now_ms = int(time.time() * 1000)
+        planned: dict[str, dict | None] = {}  # path -> expected current DV
+        staged: list[str] = []  # files this commit wrote
+        retired: list[dict] = []  # DV protocol upgrade + re-add pairs
+        touched: list[str] = []
+        n_del = n_upd = n_ins = 0
+        # per-(action, file) counts ride the SAME shuffle the old
+        # distinct() took (r15: operationMetrics): touched files and
+        # row metrics from one job. DV-mode DELETE / UPDATE skip it:
+        # their DV retire collects the same positions
+        counted = merge is not None or mode == "cow"
+        if counted and acted is not None:
+            for r in (
+                acted.groupBy(tag.alias("__action"), F.col("t.__base"))
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
-            }
-            if not hit_counts:
-                return None
-            n_rows = sum(hit_counts.values())
-            touched = sorted(hit_counts)
-            rows = scan.filter(F.col("__base").isin(touched))
+            ):
+                touched.append(r["__base"])
+                n_del += int(r["n"]) if r["__action"] in del_tags else 0
+                n_upd += int(r["n"]) if r["__action"] in upd_tags else 0
+            touched = sorted(set(touched))
+            if card_check is not None:
+                card_check()
+        ins = staged_ins = None
+        checks: list[tuple[str, str]] = []
+        hwm: dict[str, int] = {}
+        if merge:
+            ins, staged_ins, n_ins, checks, hwm = merge.new_rows(
+                bool(touched), cdf, meta
+            )
+        if mode == "dv" and acted is not None and (touched or not counted):
+            # DV-retire every acted-on row (update pre-images AND
+            # deletes): untouched rows of touched files stay in place
+            hits = _dv_retire(
+                spark, path, protocol, acted, adds_by_base, retired,
+                planned, now_ms, staged,
+            )
+            if not counted:
+                touched = sorted(hits)
+                n_del, n_upd = (
+                    (sum(hits.values()), 0) if del_tags
+                    else (0, sum(hits.values()))
+                )
+        if not touched and not n_ins and not widened:
+            # a row-level no-op that widens no schema commits nothing;
+            # an evolving MERGE still commits its widened metaData
+            return None
+        lines: list[dict] = [
+            _commit_info(
+                op,
+                {"predicate": predicate}
+                if op != "DELETE"
+                else {"predicate": predicate, "mode": mode},
+                now_ms,
+            )
+        ]
+        if widened or hwm:
+            # schema evolution and/or the advanced identity high water
+            # mark land with the rows in ONE metaData action
+            new_meta = (
+                dict(meta, schemaString=schema.json()) if widened else meta
+            )
+            if hwm:
+                new_meta = _stamp_identity_hwm(new_meta, hwm)
+            lines.append(_meta_action(new_meta))
+        elif rt_meta_line:
+            lines.append(rt_meta_line)
+        lines += retired
+        removes: list[dict] = []
+        rewrite = images if mode == "dv" else None
+        if mode == "cow" and touched:
+            rows = tagged.where(F.col("t.__base").isin(touched))
+            if is_del is not None:
+                rows = rows.where(~is_del)
+            # copied rows keep their id AND commit version; changed
+            # rows keep their id and take this commit's version
+            cv = F.col("t.__rt_cv")
+            if is_upd is not None:
+                cv = F.when(is_upd, F.lit(None)).otherwise(cv)
             rewrite = (
-                rows.filter(~pred).select(
-                    [F.col(f.name) for f in schema.fields]
-                    + rt(F.col("__rt_cv"))
-                )
+                rows.select([F.col(f.name) for f in schema.fields] + rt(cv))
                 if post is None
-                else post(
-                    rows, pred,
-                    rt(F.when(pred, F.lit(None)).otherwise(F.col("__rt_cv"))),
-                )
+                else post(rows, is_upd, rt(cv))
             )
             for base in touched:
                 a = adds_by_base[base]
                 planned[a["path"]] = a.get("deletionVector")
                 removes.append({"remove": _remove_action(a, now_ms)})
+        if staged_ins is not None:
+            if mat_id:
+                # fresh rows materialize NULL — they take the new
+                # file's baseRowId + position on read (kept off the
+                # CDF images)
+                staged_ins = staged_ins.withColumn(
+                    mat_id, F.lit(None).cast("long")
+                ).withColumn(mat_cv, F.lit(None).cast("long"))
+            rewrite = (
+                staged_ins if rewrite is None
+                else rewrite.unionByName(staged_ins)
+            )
+        if merge and rewrite is not None:
+            _check_constraints(rewrite, meta, op, extra=checks)
         new_adds = (
             _stage_adds_mapped(
                 rewrite, path, pcols, physical_of,
@@ -4980,64 +5069,98 @@ def _row_level_delta(
             else []
         )
         staged += _staged_paths(new_adds)
-        # an UPDATE lists its rewrites ahead of the files they
-        # replace, a DELETE after them
-        lines += new_adds + removes if post is not None else removes + new_adds
-        if (meta.get("configuration") or {}).get(
-            "delta.enableChangeDataFeed"
-        ) == "true":
+        lines += new_adds + removes if op == "UPDATE" else removes + new_adds
+        if n_ins is None:
+            n_ins = merge.inserted()
+        if cdf:
             # CDF on: the commit also stages the changed rows' images
             # as change-data files (spec §Add CDC File) — read_delta_cdf
             # then emits exactly these instead of deriving retract /
             # re-insert noise from the remove/add pairs
-            changes = matched.select(
-                [F.col(f.name) for f in schema.fields]
-            ).withColumn(
-                "_change_type",
-                F.lit("delete" if post is None else "update_preimage"),
-            )
+            pre = [F.col(f"t.{f.name}").alias(f.name) for f in schema.fields]
+            parts = []
+            if del_tags and acted is not None:
+                parts.append(
+                    only(del_tags).select(pre)
+                    .withColumn("_change_type", F.lit("delete"))
+                )
             if images is not None:
-                changes = changes.unionByName(
+                parts.append(
+                    only(upd_tags).select(pre)
+                    .withColumn("_change_type", F.lit("update_preimage"))
+                )
+                parts.append(
                     images.select(
                         [F.col(f"`{f.name}`") for f in schema.fields]
                     ).withColumn("_change_type", F.lit("update_postimage"))
                 )
-            cdc = _stage_cdc_mapped(
-                changes, path, pcols, physical_of,
-                field_ids=_mapping_ids(meta),
-            )
-            staged += _staged_paths(cdc)
-            lines.extend(cdc)
+            if ins is not None and n_ins:
+                parts.append(ins.withColumn("_change_type", F.lit("insert")))
+            if parts:
+                changes = parts[0]
+                for p_ in parts[1:]:
+                    changes = changes.unionByName(p_)
+                cdc = _stage_cdc_mapped(
+                    changes, path, pcols, physical_of,
+                    field_ids=_mapping_ids(meta),
+                )
+                staged += _staged_paths(cdc)
+                lines.extend(cdc)
         c = _commit_counts(lines)
         # a DV remove+re-add pair masks rows in the SAME data file —
         # delta-spark counts neither side as a file added/removed
         dv_pairs = c["dv_adds"] if mode == "dv" else 0
+        # the unchanged rows a CoW rewrite carries; DV mode copies
+        # nothing (positions are masked in place)
+        copied = (
+            None if c["add_rows"] is None
+            else 0 if mode == "dv"
+            else max(0, c["add_rows"] - n_upd - n_ins)
+        )
+        dvs = dv_pairs if mode == "dv" else None
         _stamp_op_metrics(
             lines,
-            numRemovedFiles=c["removes"] - dv_pairs,
-            numAddedFiles=c["adds"] - dv_pairs,
-            **{f"num{'Deleted' if post is None else 'Updated'}Rows": n_rows},
-            # the unchanged rows a CoW rewrite carries; DV mode copies
-            # nothing (positions are masked in place)
-            numCopiedRows=(
-                0
-                if mode == "dv"
-                else None
-                if c["add_rows"] is None
-                else max(0, c["add_rows"] - (0 if post is None else n_rows))
+            **(
+                {
+                    "numTargetRowsInserted": n_ins,
+                    "numTargetRowsUpdated": n_upd,
+                    "numTargetRowsDeleted": n_del,
+                    "numTargetRowsCopied": copied,
+                    "numOutputRows": c["add_rows"],
+                    "numTargetFilesAdded": c["adds"] - dv_pairs,
+                    "numTargetFilesRemoved": c["removes"] - dv_pairs,
+                    "numTargetDeletionVectorsAdded": dvs,
+                    "numTargetChangeFilesAdded": c["cdc"],
+                }
+                if merge
+                else {
+                    "numRemovedFiles": c["removes"] - dv_pairs,
+                    "numAddedFiles": c["adds"] - dv_pairs,
+                    f"num{'Deleted' if del_tags else 'Updated'}Rows": (
+                        n_del + n_upd
+                    ),
+                    "numCopiedRows": copied,
+                    "numDeletionVectorsAdded": dvs,
+                    "numAddedChangeFiles": c["cdc"],
+                }
             ),
-            numDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
-            numAddedChangeFiles=c["cdc"],
         )
 
-        def build(_v: int):
-            _check_planned(spark, path, planned, op)
+        def build(v: int):
+            if not hwm:
+                _check_planned(spark, path, planned, op)
+                return protocol, meta, lines
+            # the identity re-check needs the metaData at v - 1: a
+            # full replay, whose live set the planned check reuses
+            _p2, m2, live_now, _t2 = _replay(spark, path, v - 1)
+            _check_planned(spark, path, planned, op, live_now)
+            merge.recheck(m2)
             return protocol, meta, lines
 
         return _commit_delta(spark, path, build, staged=staged)
     finally:
-        if matched.is_cached:
-            matched.unpersist()
+        if acted is not None and acted.is_cached:
+            acted.unpersist()
 
 
 def commit_operation_metrics(path: str, version: int) -> dict:

@@ -2986,7 +2986,6 @@ def write_iceberg(
         df,
         fields=ice_fields,
         pcols=pcols,
-        keep_empty=True,
         extra={"sort_order_id": _so_id} if _so_id else None,
     )
 

@@ -9,10 +9,11 @@ API-parity gap). Two layers:
   executed Spark-first and committed through the native table-format
   writers:
 
-  * **Delta**: copy-on-write, the ``delete_delta_where(mode='cow')``
-    shape — ONLY the files containing matched rows are rewritten
-    (untouched files are never read), inserts stage as new files, and
-    the commit removes/adds atomically. With
+  * **Delta**: the third case of ``delta_io._row_level_delta``,
+    beside DELETE and UPDATE — copy-on-write rewrites ONLY the files
+    containing acted-on rows (untouched files are never read), DV
+    mode retires them behind deletion vectors; inserts stage as new
+    files, and the commit removes/adds atomically. With
     ``delta.enableChangeDataFeed=true`` the same commit stages spec
     change-data files carrying ``delete`` / ``update_preimage`` /
     ``update_postimage`` / ``insert`` rows.
@@ -45,7 +46,6 @@ from __future__ import annotations
 
 import os
 import re
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -459,6 +459,9 @@ def merge_into(
     ``not_matched_by_source`` is the delta-spark extension — ordered
     update/delete clauses applied to TARGET rows with no source match
     (expressions may reference ``t.*`` only — there is no source row).
+    Delta runs through ``delta_io._row_level_delta``, the DELETE /
+    UPDATE commit path, as its case with a per-row clause tag and
+    inserted rows (:class:`_DeltaMerge` holds MERGE's own steps).
     Delta ``mode``: ``'cow'`` rewrites the matched files; ``'dv'``
     retires acted-on rows via deletion vectors and appends update
     post-images + inserts — no data file rewritten, O(acted + inserted
@@ -525,516 +528,251 @@ def merge_into(
             source.unpersist()
 
 
+def _refuse_sets(meta: dict, names) -> None:
+    """Generated and identity columns take no SET — UPDATE's ``sets``
+    and MERGE's clause SETs alike: a generated column is recomputed
+    from its expression, an identity value is allocated by the
+    writer."""
+    from census_asc5_data_pipeline_spark.sources import delta_io as d
+
+    for kind, cols, why in (
+        (
+            "generated", [n for n, _e, _t in d._generated_columns(meta)],
+            "they are recomputed from their generation expression",
+        ),
+        (
+            "identity", [i[0] for i in d._identity_columns(meta)],
+            "their values are writer-allocated",
+        ),
+    ):
+        bad = set(cols) & set(names)
+        if bad:
+            raise ValueError(
+                f"cannot SET {kind} column(s) {sorted(bad)} — {why}"
+            )
+
+
 def _merge_delta(
     spark, path, source, on, matched, nmbs, not_matched, mode="cow",
     evolve_schema=False,
 ) -> int | None:
-    import json
-
     from census_asc5_data_pipeline_spark.sources import delta_io as d
 
-    protocol, meta, adds, _tx = d._replay(spark, path, None)
-    # insert-only merges never remove or modify committed rows, so
-    # they remain legal on delta.appendOnly tables; anything with a
-    # MATCHED / NOT MATCHED BY SOURCE clause is a row modification
-    d._writer_gate(
-        protocol, meta, "MERGE" if (matched or nmbs) else "WRITE"
-    )
-    gens = d._generated_columns(meta)
-    gen_names = {n for n, _e, _t in gens}
-    nm_list = (
-        [(None, not_matched)]
-        if isinstance(not_matched, dict)
-        else list(not_matched or [])
-    )
-    idents = d._identity_columns(meta)
-    ident_names = {i[0] for i in idents}
-    identity_basis = {n: h for n, _d, _s, _st, h, _a in idents}
-    if ident_names:
-        # r14 (r13 verdict #3): MERGE supports identity tables —
-        # insert-clause rows flow through _apply_identity's
-        # checkpoint+count+mapInPandas kernel below; SET on the
-        # identity column keeps refusing (system-allocated values)
-        for _tag, _cond, sets_ in _all_clauses(matched, nmbs):
-            bad = ident_names & set(sets_ or {})
-            if bad:
-                raise ValueError(
-                    f"cannot SET identity column(s) {sorted(bad)} — "
-                    "identity values are system-allocated"
-                )
-        for name in sorted(ident_names):
-            supplied = [name in vals for _c, vals in nm_list]
-            if supplied and any(supplied) and not all(supplied):
-                raise ValueError(
-                    f"identity column {name!r} must be supplied by "
-                    "ALL insert clauses or NONE — mixed clauses "
-                    "would interleave explicit values with "
-                    "allocation"
-                )
-    if gen_names:
-        for _tag, _cond, sets_ in _all_clauses(matched, nmbs):
-            bad = gen_names & set(sets_ or {})
-            if bad:
-                raise ValueError(
-                    f"cannot SET generated column(s) {sorted(bad)} — "
-                    "they are recomputed from their generation "
-                    "expression"
-                )
-        for name in sorted(gen_names):
-            supplied = [name in vals for _c, vals in nm_list]
-            if supplied and any(supplied) and not all(supplied):
-                raise ValueError(
-                    f"generated column {name!r} must be supplied by "
-                    "ALL insert clauses or NONE — mixed clauses would "
-                    "leave unsupplied rows NULL instead of computed"
-                )
-    physical_of = d._column_mapping(meta)
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = list(meta.get("partitionColumns") or [])
-    # row tracking (r16): on an ENABLED table the target scan exposes
-    # ``_row_id`` (so ON / clause conditions may join on stable ids —
-    # the foreign-tracking-table merge case) and every rewritten or
-    # updated row carries its id forward through the materialized
-    # columns; inserts materialize NULL and take fresh base ids
-    meta, rt_meta_line, mat_id, mat_cv = d._rt_preserve_plan(protocol, meta)
-    rt_preserve = mat_id is not None
-    extra_fields: list[T.StructField] = []
-    evolve_conf: dict[str, str] | None = None
-    if evolve_schema:
+    plan = _DeltaMerge(source, on, matched, nmbs, not_matched, evolve_schema)
+    try:
+        return d._row_level_delta(spark, path, on, mode, plan.image, plan)
+    finally:
+        if plan.cache is not None:
+            plan.cache.unpersist()
+
+
+class _DeltaMerge:
+    """A Delta MERGE's own steps inside ``delta_io._row_level_delta``,
+    which scans, counts, retires or rewrites, stages and commits it:
+    schema evolution, the source-key candidates, the ``__action`` tag
+    of every target row (:func:`_plan_merge`), the post-image of each
+    clause's SET, and the inserts — identity allocation, generated
+    columns and their count. The core calls :meth:`evolve`,
+    :meth:`image`, :meth:`candidates`, :meth:`tag` and
+    :meth:`new_rows` in that order; each reads what the one before
+    recorded."""
+
+    def __init__(self, source, on, matched, nmbs, not_matched, evolve_schema):
+        self.source, self.on = source, on
+        self.matched, self.nmbs, self.not_matched = matched, nmbs, not_matched
+        self.nm_list = (
+            [(None, not_matched)]
+            if isinstance(not_matched, dict)
+            else list(not_matched or [])
+        )
+        self.evolve_schema = evolve_schema
+        # insert-only merges never remove or modify committed rows, so
+        # they remain legal on delta.appendOnly tables; anything with a
+        # MATCHED / NOT MATCHED BY SOURCE clause is a row modification
+        self.gate = "MERGE" if (matched or nmbs) else "WRITE"
+        self.inserting = not_matched is not None
+        self.del_tags = _delete_tags(matched, nmbs)
+        self.upd_tags = _update_tags(matched, nmbs)
+        self.inserts = self.cache = self.rows = self._obs = None
+        self.gens, self.idents, self.basis = [], [], {}
+
+    def evolve(self, meta, schema, physical_of):
+        """Check that identity and generated columns are supplied by
+        all insert clauses or none, then add the source columns the
+        target lacks when evolving. Returns (meta, schema,
+        physical_of, widened)."""
+        from census_asc5_data_pipeline_spark.sources import delta_io as d
+
+        gen_names = [n for n, _e, _t in d._generated_columns(meta)]
+        idents = d._identity_columns(meta)
+        self.basis = {n: h for n, _d, _s, _st, h, _a in idents}
+        self.idents = sorted(i[0] for i in idents)
+        for kind, names, why in (
+            (
+                "identity", self.idents,
+                "mixed clauses would interleave explicit values with "
+                "allocation",
+            ),
+            (
+                "generated", sorted(gen_names),
+                "mixed clauses would leave unsupplied rows NULL instead "
+                "of computed",
+            ),
+        ):
+            for name in names:
+                supplied = [name in vals for _c, vals in self.nm_list]
+                if any(supplied) and not all(supplied):
+                    raise ValueError(
+                        f"{kind} column {name!r} must be supplied by ALL "
+                        f"insert clauses or NONE — {why}"
+                    )
         new_srcs = [
             f
-            for f in source.schema.fields
+            for f in self.source.schema.fields
             if f.name not in schema.fieldNames()
-        ]
-        if new_srcs and physical_of:
-            # column-mapped evolution (r16 — the overwriteSchema
-            # remint's additive twin): each NEW column mints a fresh
-            # physicalName + columnMapping.id ABOVE maxColumnId (ids
-            # never reused), maxColumnId bumps in the same commit,
-            # and staging maps the new logical names through the
-            # extended mapping
-            conf0 = meta.get("configuration") or {}
-            next_id = int(
-                conf0.get("delta.columnMapping.maxColumnId", "0") or 0
-            )
-            physical_of = dict(physical_of)
-            for f in new_srcs:
-                import uuid as _uuid
+        ] if self.evolve_schema else []
+        if not new_srcs:
+            return meta, schema, physical_of, False
+        if not physical_of:
+            extra = [T.StructField(f.name, f.dataType, True) for f in new_srcs]
+            return meta, T.StructType(schema.fields + extra), physical_of, True
+        # column-mapped evolution (r16 — the overwriteSchema remint's
+        # additive twin): each NEW column mints a fresh physicalName +
+        # columnMapping.id ABOVE maxColumnId (ids never reused),
+        # maxColumnId bumps in the same commit, and staging maps the
+        # new logical names through the extended mapping
+        import uuid
 
-                next_id += 1
-                phys = f"col-{_uuid.uuid4()}"
-                physical_of[f.name] = phys
-                extra_fields.append(
-                    T.StructField(
-                        f.name,
-                        f.dataType,
-                        True,
-                        {
-                            "delta.columnMapping.id": next_id,
-                            "delta.columnMapping.physicalName": phys,
-                        },
-                    )
+        conf0 = meta.get("configuration") or {}
+        next_id = int(conf0.get("delta.columnMapping.maxColumnId", "0") or 0)
+        physical_of = dict(physical_of)
+        extra = []
+        for f in new_srcs:
+            next_id += 1
+            phys = f"col-{uuid.uuid4()}"
+            physical_of[f.name] = phys
+            extra.append(
+                T.StructField(
+                    f.name,
+                    f.dataType,
+                    True,
+                    {
+                        "delta.columnMapping.id": next_id,
+                        "delta.columnMapping.physicalName": phys,
+                    },
                 )
-            evolve_conf = {
-                **conf0,
-                "delta.columnMapping.maxColumnId": str(next_id),
-            }
-            meta = dict(meta, configuration=evolve_conf)
-        else:
-            extra_fields = [
-                T.StructField(f.name, f.dataType, True)
-                for f in new_srcs
-            ]
-        if extra_fields:
-            schema = T.StructType(schema.fields + extra_fields)
-    if not adds and not_matched is None:
-        return None
-    from census_asc5_data_pipeline_spark.sources import delta_stats
-
-    live = list(adds.values())
-
-    def has_stats(col: str) -> bool:
-        phys = (physical_of or {}).get(col, col)
-        for a in live:
-            st = a.get("stats")
-            try:
-                st = json.loads(st) if isinstance(st, str) else st
-            except ValueError:
-                continue
-            if isinstance(st, dict) and phys in (st.get("minValues") or {}):
-                return True
-        return col in pcols
-
-    cand = _merge_candidates(
-        source, on, nmbs, list(schema.fields), live, has_stats,
-        lambda atoms: delta_stats.skip_files(
-            live, atoms, schema, pcols, physical_of,
-            session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
-        ),
-    )
-    scan = d._scan_adds(
-        spark,
-        path,
-        schema,
-        pcols,
-        [(None, a) for a in cand],
-        keep_pos=True,
-        physical_of=physical_of,
-        extra_long_cols=[mat_id, mat_cv] if rt_preserve else [],
-    ) if cand else spark.createDataFrame(
-        [],
-        T.StructType(
-            schema.fields
-            + [
-                T.StructField("__base", T.StringType()),
-                T.StructField("__ri", T.LongType()),
-            ]
-        ),
-    )
-    if rt_preserve:
-        scan = (
-            d._rt_stable_cols(spark, scan, cand, meta)
-            if cand
-            else scan.withColumn(
-                "_row_id", F.lit(None).cast("long")
-            ).withColumn("__rt_cv", F.lit(None).cast("long"))
-        )
-    tagged, inserts, card_check = _plan_merge(
-        scan, source, on, matched, nmbs, not_matched, list(schema.fields)
-    )
-    cdf = (meta.get("configuration") or {}).get(
-        "delta.enableChangeDataFeed"
-    ) == "true"
-    # the commit body is a closure (r17) so the statement-scoped
-    # caches below are released on EVERY exit path — no-op returns,
-    # cardinality/constraint raises, the commit itself — without
-    # threading two dozen locals through a helper signature.
-    # ``inserts`` binds as a default arg because the identity path
-    # rebinds it inside the closure.
-    def _commit_body(inserts=inserts):
-        nonlocal ins_cache
-        # per-(action, file) matched-row counts ride the SAME shuffle the
-        # old distinct() took (r15: operationMetrics) — touched files AND
-        # numTargetRowsUpdated/Deleted from one job, which is also the
-        # action the cardinality observe() pair rides (r17) AND, in DV
-        # mode or with CDF, the materialization of the statement-scoped
-        # `acted` cache every later acted-row consumer (DV retire,
-        # post-images, CDC delete/update images) reads instead of
-        # re-scanning the candidates
-        act_rows = (
-            acted.groupBy(
-                F.col("__action"), F.col("t.__base").alias("__base")
             )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-            if acted is not None
-            else []
+        meta = dict(
+            meta,
+            configuration={
+                **conf0, "delta.columnMapping.maxColumnId": str(next_id),
+            },
         )
-        if card_check is not None:
-            card_check()
-        touched = sorted({r["__base"] for r in act_rows})
-        n_upd = sum(int(r["n"]) for r in act_rows if r["__action"] in upd_tags)
-        n_del = sum(int(r["n"]) for r in act_rows if r["__action"] in del_tags)
-        # the insert count rides an observe() on the staging write's
-        # insert branch (n_ins None until then) unless a decision before
-        # that write needs it: the no-op return when no file is
-        # touched, identity allocation, generated-column checks and the
-        # CDF insert images
-        count_first = inserts is not None and bool(
-            not touched or ident_names or gens or cdf
+        return meta, T.StructType(schema.fields + extra), physical_of, True
+
+    def image(self, meta, schema):
+        """The post-image builder: each row takes its winning clause's
+        SET, generated columns recomputed."""
+        from census_asc5_data_pipeline_spark.sources import delta_io as d
+
+        _refuse_sets(
+            meta,
+            {c for _t, _c, sets in _all_clauses(self.matched, self.nmbs)
+             for c in sets or {}},
         )
-        if count_first or inserts is not None and d._table_constraints(meta):
-            # statement-scoped inserts persist (r17): read again by the
-            # staging write after the count or the constraint aggregate
-            # (and by the identity allocation and the CDC union) — each
-            # re-running the anti-join on an uncached frame. Bounded by
-            # the (already persisted) source; released in the finally.
-            inserts = ins_cache = inserts.persist()
-        n_ins = (
-            inserts.count() if count_first else 0 if inserts is None else None
+        gens = d._generated_columns(meta)
+        self.gens = gens
+        cols = _rewritten_cols(self.matched, self.nmbs, list(schema.fields))
+        return lambda frame, _pred, extra: d._regenerate(
+            frame.select(cols + extra), meta, gens
         )
-        if not touched and not n_ins and not extra_fields:
-            # row-level no-op AND no schema widening: nothing to commit.
-            # With evolve_schema extra columns the widened metaData still
-            # commits below (r11 ADVICE: a caller relying on the evolved
-            # schema for a follow-up write must not silently see the old
-            # one), just with no add/remove actions.
-            return None
-        identity_updates: dict[str, int] = {}
-        if inserts is not None and n_ins and ident_names:
-            # insert-clause allocation (r14): clauses that DON'T name the
-            # identity column projected it as NULL — drop it so
-            # _apply_identity sees it missing and allocates gap-free;
+
+    def candidates(self, fields, live, has_stats, prune):
+        return _merge_candidates(
+            self.source, self.on, self.nmbs, fields, live, has_stats, prune
+        )
+
+    def tag(self, scan, fields):
+        """``(tagged, card_check)`` of :func:`_plan_merge`; the inserts
+        are kept for :meth:`new_rows`."""
+        tagged, self.inserts, card_check = _plan_merge(
+            scan, self.source, self.on, self.matched, self.nmbs,
+            self.not_matched, fields,
+        )
+        return tagged, card_check
+
+    def new_rows(self, touched, cdf, meta):
+        """The inserts: ``(rows, staged, n, checks, hwm)`` — ``rows``
+        with identity values allocated and generated columns computed
+        (the CDF insert images), ``staged`` the same rows to write,
+        ``n`` their count (None while it rides an ``observe()`` on the
+        staging write: see :meth:`inserted`), the checks of generated
+        columns an insert clause supplies, and the advanced identity
+        high water marks. ``n`` is counted first when a decision
+        before the write needs it: the no-op return when no file is
+        touched, identity allocation, generated columns and the CDF
+        insert images."""
+        from census_asc5_data_pipeline_spark.sources import delta_io as d
+
+        ins = self.inserts
+        if ins is None:
+            return None, None, 0, [], {}
+        count_first = not touched or bool(self.idents or self.gens) or cdf
+        if count_first or d._table_constraints(meta):
+            # statement-scoped persist (r17): read again by the staging
+            # write after the count or the constraint aggregate (and by
+            # the identity allocation and the CDC union). Bounded by the
+            # (already persisted) source; released by _merge_delta
+            ins = self.cache = ins.persist()
+        n = ins.count() if count_first else None
+        if n == 0:
+            return None, None, 0, [], {}
+        hwm: dict[str, int] = {}
+        if self.idents:
+            # clauses that DON'T name the identity column projected it
+            # as NULL — drop it so _apply_identity allocates gap-free;
             # clauses that DO name it pass explicit values through the
             # same ALWAYS-refusal / BY DEFAULT hwm-ratchet rules as
-            # INSERT. Update post-images keep their existing values (SET
-            # refused above), so only inserts allocate.
+            # INSERT. Update post-images keep their values (SET refused)
+            fields = ins.columns
             unsupplied = [
-                n
-                for n in sorted(ident_names)
-                if not any(n in vals for _c, vals in nm_list)
+                c for c in self.idents
+                if not any(c in vals for _c, vals in self.nm_list)
             ]
-            alloc_src = inserts.drop(*unsupplied) if unsupplied else inserts
-            alloc_out, identity_updates = d._apply_identity(
-                alloc_src, meta, "MERGE"
-            )
-            inserts = alloc_out.select(
-                [F.col(f"`{f.name}`") for f in schema.fields]
-            )
-        now_ms = int(time.time() * 1000)
-        lines = [d._commit_info("MERGE", {"predicate": on}, now_ms)]
-        if extra_fields or identity_updates or rt_meta_line:
-            # schema evolution, the advanced identity high water mark
-            # and/or freshly-minted materialized row-id column names
-            # commit atomically with the row changes in ONE metaData
-            # action (old files' missing columns read NULL on scan; the
-            # hwm must land with its allocated rows, per spec)
-            meta_commit = (
-                dict(meta, schemaString=schema.json())
-                if extra_fields
-                else dict(meta)
-            )
-            if identity_updates:
-                meta_commit = d._stamp_identity_hwm(
-                    meta_commit, identity_updates
-                )
-            lines.append({"metaData": meta_commit})
-        adds_by_base = d._adds_by_base({a["path"]: a for a in cand})
-        planned: dict[str, dict | None] = {}
-        staged: list[str] = []  # files this commit wrote
-        staged_rows: DataFrame | None = None
-        if mode == "dv":
-            # DV-retire every acted-on row (update pre-images AND deletes)
-            # and stage only the post-images — untouched rows of touched
-            # files stay in place behind the deletion vector
-            if touched:
-                d._dv_retire(
-                    spark, path, protocol,
-                    acted.select(
-                        F.col("t.__base").alias("__base"),
-                        F.col("t.__ri").alias("__ri"),
-                    ),
-                    adds_by_base, lines, planned, now_ms, staged,
-                )
-            if upd_tags and acted is not None:
-                # updated post-images keep their stable id; the commit
-                # version resets to THIS commit (null materialized value
-                # → the new file's defaultRowCommitVersion on read)
-                staged_rows = d._regenerate(
-                    acted.where(F.col("__action").isin(upd_tags)).select(
-                        _rewritten_cols(matched, nmbs, list(schema.fields))
-                        + (
-                            [
-                                F.col("t._row_id").alias(mat_id),
-                                F.lit(None).cast("long").alias(mat_cv),
-                            ]
-                            if rt_preserve
-                            else []
-                        )
-                    ),
-                    meta,
-                    gens,
-                )
-        elif touched:
-            kept = d._regenerate(
-                tagged.where(
-                    F.col("t.__base").isin(touched)
-                    & ~F.col("__action").isin(del_tags)
-                ).select(
-                    _rewritten_cols(matched, nmbs, list(schema.fields))
-                    + (
-                        [
-                            F.col("t._row_id").alias(mat_id),
-                            # copied rows keep id AND original commit
-                            # version; updated rows keep id, new version
-                            F.when(
-                                F.col("__action").isin(upd_tags),
-                                F.lit(None).cast("long"),
-                            )
-                            .otherwise(F.col("t.__rt_cv"))
-                            .cast("long")
-                            .alias(mat_cv),
-                        ]
-                        if rt_preserve
-                        else []
-                    )
-                ),
-                meta,
-                gens,
-            )
-            staged_rows = kept
-            for base in sorted(touched):
-                a = adds_by_base[base]
-                planned[a["path"]] = a.get("deletionVector")
-                lines.append({"remove": d._remove_action(a, now_ms)})
-        ins_checks: list[tuple[str, str]] = []
-        if inserts is not None and n_ins and gens:
-            # insert clauses that SUPPLY a generated column are validated
-            # (the check rides the constraint aggregate; regenerated
-            # post-images satisfy it by construction); unsupplied ones
-            # are computed from the generation expression
-            for name, expr, dtype in gens:
-                if any(name in vals for _c, vals in nm_list):
-                    ins_checks.append(
-                        (
-                            f"GENERATED {name}",
-                            f"`{name}` <=> CAST(({expr}) AS "
-                            f"{dtype.simpleString()})",
-                        )
-                    )
-                else:
-                    inserts = inserts.withColumn(
-                        name, F.expr(expr).cast(dtype)
-                    )
-        obs_ins = None
-        if inserts is not None and n_ins != 0:
-            staged_ins = inserts
-            if n_ins is None:
-                from pyspark.sql import Observation
-
-                obs_ins = Observation()
-                staged_ins = staged_ins.observe(
-                    obs_ins, F.count(F.lit(1)).alias("n")
-                )
-            if rt_preserve:
-                # fresh rows materialize NULL — they take the new file's
-                # baseRowId + position on read (kept off the CDF images)
-                staged_ins = staged_ins.withColumn(
-                    mat_id, F.lit(None).cast("long")
-                ).withColumn(mat_cv, F.lit(None).cast("long"))
-            staged_rows = (
-                staged_ins
-                if staged_rows is None
-                else staged_rows.unionByName(staged_ins)
-            )
-        if staged_rows is not None:
-            d._check_constraints(staged_rows, meta, "MERGE", extra=ins_checks)
-            staged_add_lines = d._stage_adds_mapped(
-                staged_rows, path, pcols, physical_of,
-                stats_cols=d._stats_cols_of(meta),
-                field_ids=d._mapping_ids(meta),
-            )
-            staged += d._staged_paths(staged_add_lines)
-            lines.extend(staged_add_lines)
-        if obs_ins is not None:
-            n_ins = _obs_n(obs_ins)
-            if n_ins is None:  # metrics dropped by AQE (empty branch)
-                n_ins = inserts.count()
-        if cdf:
-            cdc_parts = []
-            tcols = [
-                F.col(f"t.{f.name}").alias(f.name) for f in schema.fields
-            ]
-            if del_tags and acted is not None:
-                cdc_parts.append(
-                    acted.where(F.col("__action").isin(del_tags))
-                    .select(tcols)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-            if upd_tags and acted is not None:
-                upd = acted.where(F.col("__action").isin(upd_tags))
-                cdc_parts.append(
-                    upd.select(tcols).withColumn(
-                        "_change_type", F.lit("update_preimage")
+            ins, hwm = d._apply_identity(ins.drop(*unsupplied), meta, "MERGE")
+            ins = ins.select([F.col(f"`{c}`") for c in fields])
+        checks: list[tuple[str, str]] = []
+        for name, expr, dtype in self.gens:
+            # a supplied generated column is validated (the check rides
+            # the constraint aggregate), an unsupplied one computed
+            if any(name in vals for _c, vals in self.nm_list):
+                checks.append(
+                    (
+                        f"GENERATED {name}",
+                        f"`{name}` <=> CAST(({expr}) AS "
+                        f"{dtype.simpleString()})",
                     )
                 )
-                cdc_parts.append(
-                    d._regenerate(
-                        upd.select(
-                            _rewritten_cols(
-                                matched, nmbs, list(schema.fields)
-                            )
-                        ),
-                        meta,
-                        gens,
-                    ).withColumn("_change_type", F.lit("update_postimage"))
-                )
-            if inserts is not None and n_ins:
-                cdc_parts.append(
-                    inserts.withColumn("_change_type", F.lit("insert"))
-                )
-            if cdc_parts:
-                cdc = cdc_parts[0]
-                for p_ in cdc_parts[1:]:
-                    cdc = cdc.unionByName(p_)
-                cdc_lines = d._stage_cdc_mapped(
-                    cdc, path, pcols, physical_of,
-                    field_ids=d._mapping_ids(meta),
-                )
-                staged += d._staged_paths(cdc_lines)
-                lines.extend(cdc_lines)
-        c = d._commit_counts(lines)
-        dv_pairs = c["dv_adds"] if mode == "dv" else 0
-        copied = None
-        if c["add_rows"] is not None:
-            # CoW rewrites carry kept + updated + inserted rows; what's
-            # neither updated nor inserted was copied through. DV mode
-            # stages only post-images + inserts — nothing is copied.
-            copied = (
-                max(0, c["add_rows"] - n_upd - n_ins)
-                if mode == "cow"
-                else 0
-            )
-        d._stamp_op_metrics(
-            lines,
-            numTargetRowsInserted=n_ins,
-            numTargetRowsUpdated=n_upd,
-            numTargetRowsDeleted=n_del,
-            numTargetRowsCopied=copied,
-            numOutputRows=c["add_rows"],
-            # a DV remove+re-add pair masks rows in the same data file —
-            # neither side counts as a file added/removed (delta-spark)
-            numTargetFilesAdded=c["adds"] - dv_pairs,
-            numTargetFilesRemoved=c["removes"] - dv_pairs,
-            numTargetDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
-            numTargetChangeFilesAdded=c["cdc"],
-        )
-
-        def build(v: int):
-            if identity_updates:
-                # the hwm comparison needs the metaData at v - 1 — a
-                # full replay; the non-identity path fetches only the
-                # planned adds
-                _p2, m2, live, _t2 = d._replay(spark, path, v - 1)
-                d._check_planned(spark, path, planned, "MERGE", live)
-                d._check_identity_basis(m2, identity_basis, "MERGE")
             else:
-                d._check_planned(spark, path, planned, "MERGE")
-            return protocol, meta, lines
+                ins = ins.withColumn(name, F.expr(expr).cast(dtype))
+        self.rows = staged = ins
+        if n is None:
+            from pyspark.sql import Observation
 
-        return d._commit_delta(spark, path, build, staged=staged)
+            self._obs = Observation()
+            staged = ins.observe(self._obs, F.count(F.lit(1)).alias("n"))
+        return ins, staged, n, checks, hwm
 
-    ins_cache = None
-    if not cand:
-        # no candidate file (an EMPTY target, or none whose stats admit
-        # a source key) cannot match any source row: the cardinality
-        # rule is vacuously satisfied and nothing can be acted on —
-        # skip the probe fallback AND the acted-rows machinery (r17)
-        card_check = None
-    del_tags = _delete_tags(matched, nmbs)
-    upd_tags = _update_tags(matched, nmbs)
-    act_tags = del_tags + upd_tags
-    acted = (
-        tagged.where(F.col("__action").isin(act_tags))
-        if act_tags and cand
-        else None
-    )
-    # statement-scoped acted-rows persist (r17): the DV retire /
-    # post-image staging and the CDC delete/update images each re-ran
-    # the candidate-scan join for the same acted subset. CoW without
-    # CDF reads it once (the metrics collect), so it is not cached.
-    # Bounded by the matched-row count; materialized by the metrics
-    # collect, released in the finally.
-    acted_cache = None
-    if acted is not None and (mode == "dv" or cdf):
-        acted = acted_cache = acted.persist()
-    try:
-        return _commit_body()
-    finally:
-        if ins_cache is not None:
-            ins_cache.unpersist()
-        if acted_cache is not None:
-            acted_cache.unpersist()
+    def inserted(self) -> int:
+        """The insert count the staging write observed."""
+        n = _obs_n(self._obs)
+        return self.rows.count() if n is None else n
+
+    def recheck(self, meta) -> None:
+        """Abort when identity values were allocated since planning."""
+        from census_asc5_data_pipeline_spark.sources import delta_io as d
+
+        d._check_identity_basis(meta, self.basis, "MERGE")
 
 
 def _merge_iceberg(
@@ -1592,26 +1330,13 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
 
     def image(meta, schema):
         # the SET checks run against the replayed table, before any scan
-        gens = d._generated_columns(meta)
-        bad_gen = {n for n, _e, _t in gens} & set(sets)
-        if bad_gen:
-            raise ValueError(
-                f"cannot SET generated column(s) {sorted(bad_gen)} — they "
-                "are recomputed from their generation expression"
-            )
-        bad_ident = {
-            n for n, _d, _s, _st, _h, _a in d._identity_columns(meta)
-        } & set(sets)
-        if bad_ident:
-            raise ValueError(
-                f"cannot SET identity column(s) {sorted(bad_ident)} — "
-                "their values are writer-allocated"
-            )
+        _refuse_sets(meta, sets)
         for c in sets:
             if c not in schema.fieldNames():
                 raise ValueError(
                     f"SET column {c!r} not in the table schema"
                 )
+        gens = d._generated_columns(meta)
         return lambda frame, pred, extra: d._regenerate(
             frame.select(_set_cols(sets, schema.fields, pred) + extra),
             meta,

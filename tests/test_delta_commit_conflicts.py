@@ -13,7 +13,8 @@ put-if-absent link, so no commit is ever silently overwritten.
 - the Delta log plane opens a commit JSON and writes the
   ``_last_checkpoint`` pointer in one place each;
 - row-level DML plans its position scan and stages Iceberg files in
-  one place per format.
+  one place per format; Delta DELETE, UPDATE and MERGE commit through
+  one function.
 """
 
 from __future__ import annotations
@@ -433,26 +434,46 @@ def test_one_commit_reader_and_pointer_writer():
 def test_one_row_level_path_per_format():
     """Row-level DML plans and stages through one path per format.
     The position scan (``_scan_adds(..., keep_pos=True)``) is called
-    only by ``delta_io._row_level_delta`` (DELETE and UPDATE) and
-    ``merge._merge_delta``, besides the ``_row_tracking_scan`` read;
-    and an Iceberg file reaches ``data/`` (``shutil.move``) only
-    through ``iceberg_io._stage_files``."""
-    keep_pos, movers = [], []
-    for module in ("delta_io", "iceberg_io", "merge"):
+    only by ``delta_io._row_level_delta`` (DELETE, UPDATE and MERGE),
+    besides the ``_row_tracking_scan`` read; the DV retire and the
+    change-data stager have that one caller; ``merge`` calls none of
+    the Delta row-level primitives; and an Iceberg file reaches
+    ``data/`` (``shutil.move``) only through
+    ``iceberg_io._stage_files``."""
+    primitives = {
+        "_scan_adds", "_dv_retire", "_stage_adds_mapped",
+        "_stage_cdc_mapped", "_stamp_op_metrics", "_commit_delta",
+    }
+    modules = sorted(
+        p.stem for p in Path(d.__file__).parent.glob("*.py")
+        if p.stem != "__init__"
+    )
+    keep_pos, movers, merge_calls = [], [], []
+    callers: dict[str, set] = {"_dv_retire": set(), "_stage_cdc_mapped": set()}
+    for module in modules:
         for name, fn in _functions(module):
             for n in _own_nodes(fn):
-                if _callee(n) == "_scan_adds" and any(
+                callee = _callee(n)
+                if callee == "_scan_adds" and any(
                     kw.arg == "keep_pos"
                     and isinstance(kw.value, ast.Constant)
                     and kw.value.value is True
                     for kw in n.keywords
                 ):
                     keep_pos.append((module, name))
-                if module != "delta_io" and _callee(n) == "move":
+                if callee in callers:
+                    callers[callee].add((module, name))
+                if module == "merge" and callee in primitives:
+                    merge_calls.append((name, callee))
+                if module in ("iceberg_io", "merge") and callee == "move":
                     movers.append((module, name))
     assert sorted(keep_pos) == [
         ("delta_io", "_row_level_delta"),
         ("delta_io", "_row_tracking_scan"),
-        ("merge", "_merge_delta"),
     ]
+    assert callers == {
+        "_dv_retire": {("delta_io", "_row_level_delta")},
+        "_stage_cdc_mapped": {("delta_io", "_row_level_delta")},
+    }
+    assert merge_calls == []
     assert movers == [("iceberg_io", "_stage_files")]

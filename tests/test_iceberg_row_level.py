@@ -135,3 +135,32 @@ def test_update_sql_splits_where_outside_quotes(spark, tmp_path, fmt):
         (1, "a WHERE b", 7),
         (2, "y", 0),
     ]
+
+
+def test_write_commits_no_empty_data_files(spark, tmp_path):
+    """A write registers only the parts holding rows: a 1-row append
+    of a 2-partition frame adds one data file with record_count 1,
+    and a 0-row create and append still commit and read back their
+    schema."""
+    p = str(tmp_path / "t")
+    empty = spark.createDataFrame([], "k long, v string")
+    ice.write_iceberg(empty, p)
+    ice.write_iceberg(empty, p)
+    out = ice.read_iceberg(spark, p)
+    assert out.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert out.count() == 0
+    one = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, "a")], 2), "k long, v string"
+    )
+    ice.write_iceberg(one, p)
+    _v, meta = ice._current_metadata(p)
+    added = [
+        e
+        for m in _manifest_list_entries(p)
+        if m["added_snapshot_id"] == meta["current-snapshot-id"]
+        for e in read_container_generic(ice._local(m["manifest_path"]))[1]
+    ]
+    assert [e["data_file"]["record_count"] for e in added] == [1]
+    assert [tuple(r) for r in ice.read_iceberg(spark, p).collect()] == [
+        (1, "a")
+    ]

@@ -1,7 +1,9 @@
 """Delta commit parity between two checkouts of the engine.
 
 Runs every Delta commit verb once — write (create / append /
-overwrite), DELETE / UPDATE / MERGE in CoW and DV mode, OPTIMIZE, SET
+overwrite), DELETE / UPDATE / MERGE in CoW and DV mode (MERGE also
+with every clause kind, with schema evolution, and into an identity +
+generated-column table), OPTIMIZE, SET
 TBLPROPERTIES, domain metadata, ADD / RENAME / DROP COLUMNS, ALTER
 COLUMN TYPE, CLUSTER BY, RESTORE, row-tracking enablement, shallow
 and deep CLONE — on a plain table and on a column-mapped +
@@ -70,6 +72,7 @@ sys.path.insert(0, root)
 os.chdir(root)
 
 from pyspark.sql import SparkSession  # noqa: E402
+from pyspark.sql import types as T  # noqa: E402
 
 spark = (
     SparkSession.builder.master("local[2]")
@@ -77,6 +80,11 @@ spark = (
     .config("spark.ui.enabled", "false")
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.sql.session.timeZone", "UTC")
+    # AQE re-plans a join over a freshly cached frame from its runtime
+    # size, so a CDF MERGE's change-file layout varies between
+    # identical runs (6 or 7 cdc files for the same statement); off,
+    # every run lays its files out alike
+    .config("spark.sql.adaptive.enabled", "false")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
@@ -223,10 +231,40 @@ def scenario(tag, conf):
             mode=mode,
         )
         src = df([(9, 90.0, 1), (101, 1.0, 1)])
+    # every clause kind: a delete, a conditional update, a NOT MATCHED
+    # BY SOURCE update (it scans every file) and a conditional insert
+    # list, whose second clause catches what the first skips
+    for mode, lo in (("cow", 10), ("dv", 13)):
+        S(
+            m.merge_into, spark, "delta", p,
+            df([
+                (lo, -1.0, 0), (lo + 1, 110.0, 1), (lo + 2, 120.0, 0),
+                (lo + 92, 2.0, 0), (lo + 93, -3.0, 1),
+            ]),
+            "t.k = s.k",
+            matched=[
+                ("delete", "s.v < 0"), ("update", "s.g = 1", {"v": "s.v"}),
+            ],
+            not_matched=[
+                ("s.v > 0", {"k": "s.k", "v": "s.v", "g": "s.g"}),
+                (None, {"k": "s.k", "v": "0.0", "g": "s.g"}),
+            ],
+            not_matched_by_source=[("update", "t.k >= 25", {"v": "t.v + 1"})],
+            mode=mode,
+        )
     S(d.optimize_delta, spark, p)
     S(
         d.write_delta, df([(i, 0.0, 0) for i in range(3)]), p,
         mode="overwrite",
+    )
+    S(
+        m.merge_into, spark, "delta", p,
+        df([(1, 160.0, 0, "x"), (106, 6.0, 1, "y")],
+           "k long, v double, g int, extra string"),
+        "t.k = s.k",
+        matched=[("update", None, {"v": "s.v", "extra": "s.extra"})],
+        not_matched={"k": "s.k", "v": "s.v", "g": "s.g", "extra": "s.extra"},
+        evolve_schema=True,
     )
     S(
         d.set_delta_properties, spark, p,
@@ -254,7 +292,38 @@ def scenario(tag, conf):
         c = os.path.join(work, f"{tag}_clone_{shallow}")
         S(d.clone_delta, spark, p, c, shallow=shallow, version=2)
         out_[f"{tag}_clone_{shallow}"] = dump(c)
+    out_.update(idgen_scenario(f"{tag}_idgen", conf))
     return out_
+
+
+def idgen_scenario(tag, conf):
+    """MERGE into a table with an identity column ``k`` and a column
+    ``h`` generated from ``v``: updates regenerate ``h``, inserts
+    allocate ``k`` and compute ``h``, in CoW and in DV mode."""
+    p = os.path.join(work, tag)
+    sch = T.StructType([
+        T.StructField("k", T.LongType(), False, {
+            "delta.identity.start": 1,
+            "delta.identity.step": 1,
+            "delta.identity.allowExplicitInsert": False,
+        }),
+        T.StructField("v", T.DoubleType(), True),
+        T.StructField(
+            "h", T.DoubleType(), True, {"delta.generationExpression": "v * 2"}
+        ),
+    ])
+    S(d.write_delta, spark.createDataFrame([], sch), p, configuration=conf)
+    S(d.write_delta, df([(float(i),) for i in range(10)], "v double"), p)
+    for mode, k in (("cow", 2), ("dv", 3)):
+        S(
+            m.merge_into, spark, "delta", p,
+            df([(k, 20.0 + k), (100 + k, 1.0)], "k long, v double"),
+            "t.k = s.k",
+            matched=[("update", None, {"v": "s.v"})],
+            not_matched={"v": "s.v"},
+            mode=mode,
+        )
+    return {tag: dump(p)}
 
 
 def ckpt_scenario(tag, policy, distributed, part_rows=None):
