@@ -43,6 +43,16 @@ the log goes through them:
   :func:`create_checkpoint` (classic, multipart and V2 layouts), with
   ``_last_checkpoint`` flipped only by :func:`_publish_last_checkpoint`.
 
+The log plane is driver-native below ``_SPARK_PRUNE_THRESHOLD``:
+checkpoint parquet is read (:func:`_parquet_actions`, the same dicts
+a Spark ``Row.asDict(recursive=True)`` gives) and written
+(:func:`_write_parquet_file`) with pyarrow, so replaying and
+checkpointing a small table launch no Spark job. Small driver-side
+frames (partition values, DV positions, row-tracking bases) are built
+from Arrow tables (:func:`_arrow_df`): a list ``createDataFrame``
+starts a Python worker. Above the threshold the distributed plane
+keeps the checkpoint's adds in Spark.
+
 How this reader maps it to Spark — scale notes:
 
 - The log is METADATA scale (O(files) tiny rows): replayed
@@ -155,6 +165,98 @@ def _json_lines(fp: str):
                 yield json.loads(line)
 
 
+def _map_fix(t):
+    """A function taking a pyarrow ``to_pylist`` value of type ``t``
+    to its ``Row.asDict(recursive=True)`` form — maps, which pyarrow
+    returns as lists of key/value pairs, as dicts — or None when ``t``
+    holds no map and the value is already in that form."""
+    import pyarrow as pa
+
+    if pa.types.is_map(t):
+        fv = _map_fix(t.item_type)
+        return lambda x: None if x is None else {
+            k: (fv(v) if fv else v) for k, v in x
+        }
+    if pa.types.is_struct(t):
+        subs = [
+            (t.field(i).name, _map_fix(t.field(i).type))
+            for i in range(t.num_fields)
+        ]
+        subs = [(n, f) for n, f in subs if f]
+        if not subs:
+            return None
+
+        def fix(x):
+            if x is not None:
+                for n, f in subs:
+                    x[n] = f(x[n])
+            return x
+
+        return fix
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        fe = _map_fix(t.value_type)
+        if fe is None:
+            return None
+        return lambda x: None if x is None else [fe(e) for e in x]
+    return None
+
+
+def _parquet_actions(files: list[str]) -> list[dict]:
+    """The rows of the checkpoint parquet ``files`` as action dicts,
+    read with pyarrow on the driver (no Spark job): per row what
+    ``Row.asDict(recursive=True)`` returns over a Spark read of the
+    same file — every column of the file's schema, nulls kept,
+    structs and maps as dicts."""
+    import pyarrow.parquet as pq
+
+    out: list[dict] = []
+    for f in files:
+        t = pq.ParquetFile(f).read()
+        rows = t.to_pylist()
+        for name, fix in zip(t.schema.names, map(_map_fix, t.schema.types)):
+            if fix is not None:
+                for r in rows:
+                    r[name] = fix(r[name])
+        out.extend(rows)
+    return out
+
+
+def _arrow_table(rows: list, schema: T.StructType):
+    """``rows`` (dicts, or tuples in field order) as a pyarrow Table of
+    the Spark ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    return pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+
+
+def _arrow_df(
+    spark: SparkSession, rows: list, schema: T.StructType
+) -> DataFrame:
+    """A small driver-held frame built through Arrow. A list
+    ``createDataFrame`` parallelizes pickled rows, and its first action
+    starts a Python worker (~0.3 s warm, ~2 s cold); an Arrow table
+    reaches the JVM as a local relation, which no worker reads."""
+    return spark.createDataFrame(_arrow_table(rows, schema), schema)
+
+
+def _write_parquet_file(rows: list, schema: T.StructType, dest: str) -> None:
+    """``rows`` as one parquet file of ``schema`` at ``dest``, written
+    with pyarrow on the driver beside ``dest`` and moved into place
+    with ``os.replace``."""
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(
+        os.path.dirname(dest), f".tmp-{uuid.uuid4().hex}.parquet"
+    )
+    pq.write_table(_arrow_table(rows, schema), tmp)
+    os.replace(tmp, dest)
+
+
 def _commit_actions(path: str, version: int):
     """The actions of commit ``version``, in file order — the one
     reader of a commit JSON (only ``_ict_of_commit``'s bounded head
@@ -255,21 +357,18 @@ def _resolve_checkpoint(
 
 
 def _checkpoint_manifest(
-    spark: SparkSession, path: str, version: int, files: list[str]
+    path: str, version: int, files: list[str]
 ) -> tuple[list[dict], list[str]]:
     """(actions, sidecar paths) of the checkpoint ``files`` at
     ``version``: a V2 json manifest parses line by line, any parquet
-    form through one Spark read. ``sidecar`` actions resolve to
-    paths under ``_delta_log/_sidecars/`` (which must exist) and
-    ``checkpointMetadata`` must name ``version``; neither appears in
-    the returned actions."""
+    form through :func:`_parquet_actions`. ``sidecar`` actions
+    resolve to paths under ``_delta_log/_sidecars/`` (which must
+    exist) and ``checkpointMetadata`` must name ``version``; neither
+    appears in the returned actions."""
     if files[0].endswith(".json"):
         rows = list(_json_lines(files[0]))
     else:
-        rows = [
-            r.asDict(recursive=True)
-            for r in spark.read.parquet(*files).collect()
-        ]
+        rows = _parquet_actions(files)
     out: list[dict] = []
     sidecars: list[str] = []
     for d in rows:
@@ -301,9 +400,7 @@ def _checkpoint_manifest(
     return out, sidecars
 
 
-def _checkpoint_actions(
-    spark: SparkSession, path: str, version: int
-) -> list[dict] | None:
+def _checkpoint_actions(path: str, version: int) -> list[dict] | None:
     """Every action dict the checkpoint at ``version`` carries, with
     V2 sidecars resolved: a V2 manifest (json or parquet) holds
     protocol/metaData/txn inline plus ``sidecar`` actions pointing
@@ -316,13 +413,8 @@ def _checkpoint_actions(
     res = _resolve_checkpoint(path, version)
     if res is None:
         return None
-    out, sidecars = _checkpoint_manifest(spark, path, version, res[1])
-    if sidecars:
-        out.extend(
-            r.asDict(recursive=True)
-            for r in spark.read.parquet(*sidecars).collect()
-        )
-    return out
+    out, sidecars = _checkpoint_manifest(path, version, res[1])
+    return out + _parquet_actions(sidecars)
 
 
 def _data_file_path(table_path: str, raw_path: str) -> str:
@@ -588,7 +680,7 @@ def _replay(
     txns: dict[str, int] = {}
     start = 0
     cp = (
-        _checkpoint_actions(spark, path, ckpt)
+        _checkpoint_actions(path, ckpt)
         if ckpt is not None and ckpt <= version
         else None
     )
@@ -991,7 +1083,7 @@ def _last_checkpoint_size(path: str) -> int | None:
 
 
 def _ckpt_file_action_plan(
-    spark: SparkSession, path: str, version: int
+    path: str, version: int
 ) -> tuple[list[dict] | None, list[str]] | None:
     """(driver-held non-file action dicts | None, parquet files
     holding the checkpoint's file actions) for the DISTRIBUTED
@@ -1007,7 +1099,7 @@ def _ckpt_file_action_plan(
     kind, files = res
     if kind in ("classic", "multipart"):
         return None, files
-    metas, sidecars = _checkpoint_manifest(spark, path, version, files)
+    metas, sidecars = _checkpoint_manifest(path, version, files)
     if not sidecars:
         return None
     return metas, sidecars
@@ -1017,12 +1109,13 @@ def _distributed_base(
     spark: SparkSession, path: str, version: int | None
 ) -> tuple[
     dict, dict, dict[str, int], list[str],
-    list[tuple[list[dict], list[dict]]],
+    list[tuple[list[dict], list[dict]]], int,
 ] | None:
     """The shared start of the distributed metadata plane:
     (protocol, metaData, txns, parquet files holding the checkpoint's
-    file actions, the JSON tail's per-commit (removes, adds)) at
-    ``version`` (None = the newest commit JSON). None whenever the
+    file actions, the JSON tail's per-commit (removes, adds), the
+    checkpoint's file-action count by its ``_last_checkpoint`` size)
+    at ``version`` (None = the newest commit JSON). None whenever the
     plane doesn't apply: no checkpoint at/below the target, fewer
     actions than ``_SPARK_PRUNE_THRESHOLD``, or a checkpoint form
     :func:`_ckpt_file_action_plan` leaves to the driver. The tail
@@ -1044,10 +1137,13 @@ def _distributed_base(
     n_actions = _last_checkpoint_size(path)
     if n_actions is None or n_actions < _SPARK_PRUNE_THRESHOLD:
         return None
-    plan = _ckpt_file_action_plan(spark, path, ckpt)
+    plan = _ckpt_file_action_plan(path, ckpt)
     if plan is None:
         return None
     meta_rows, add_files = plan
+    # a V2 pointer's size also counts the checkpointMetadata line and
+    # one line per sidecar
+    n_lines = 0 if meta_rows is None else len(add_files) + 1
     t_proto, t_meta, txns, tail = _read_tail(
         path, versions, ckpt + 1, target
     )
@@ -1064,7 +1160,8 @@ def _distributed_base(
         _fold_txn(txns, app, tv)
     if not meta:
         raise ValueError(f"Delta log at {path!r} has no metaData action")
-    return protocol, meta, txns, add_files, tail
+    n_files = max(0, n_actions - len(meta_rows) - n_lines)
+    return protocol, meta, txns, add_files, tail, n_files
 
 
 def _tail_overlay(
@@ -1121,7 +1218,7 @@ def _replay_pruned_spark(
     base = _distributed_base(spark, path, version)
     if base is None:
         return None
-    protocol, meta, txns, add_files, tail = base
+    protocol, meta, txns, add_files, tail, _n = base
     _reader_gate(protocol, meta, path)
 
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -1296,19 +1393,21 @@ def _normalize_add_df(adds_df: DataFrame) -> DataFrame:
 
 def _live_adds_df(
     spark: SparkSession, path: str, target: int
-) -> tuple[dict, dict, dict[str, int], DataFrame] | None:
-    """(protocol, metaData, txns, live-adds DataFrame) at ``target``
-    WITHOUT materializing the prior checkpoint's add set in the
-    driver — the WRITE half of the distributed metadata plane (r14):
-    checkpoint compaction of a million-add table streams prior adds
-    from parquet to parquet; only tail-touched paths (exact
-    ``_replay`` overlay semantics) and the tiny protocol/meta/txn
-    rows pass through Python. None = the plane doesn't apply (see
+) -> tuple[dict, dict, dict[str, int], DataFrame, int] | None:
+    """(protocol, metaData, txns, live-adds DataFrame, its estimated
+    row count) at ``target`` WITHOUT materializing the prior
+    checkpoint's add set in the driver — the WRITE half of the
+    distributed metadata plane (r14): checkpoint compaction of a
+    million-add table streams prior adds from parquet to parquet;
+    only tail-touched paths (exact ``_replay`` overlay semantics) and
+    the tiny protocol/meta/txn rows pass through Python. The estimate
+    is the prior checkpoint's file actions plus the tail's net adds,
+    with no Spark job. None = the plane doesn't apply (see
     :func:`_distributed_base`) — caller uses the driver path."""
     base = _distributed_base(spark, path, target)
     if base is None:
         return None
-    protocol, meta, txns, add_files, tail = base
+    protocol, meta, txns, add_files, tail, n_files = base
     overlay, live_df = _tail_overlay(
         _normalize_add_df(
             spark.read.parquet(*add_files)
@@ -1319,12 +1418,14 @@ def _live_adds_df(
     )
     if overlay:
         live_df = live_df.unionByName(
-            spark.createDataFrame(
+            _arrow_df(
+                spark,
                 [_ckpt_add_row(a) for a in overlay.values()],
                 _add_struct_type(),
             )
         )
-    return protocol, meta, txns, live_df
+    n_est = n_files + sum(len(a) - len(r) for r, a in tail)
+    return protocol, meta, txns, live_df, n_est
 
 
 def _live_subset(
@@ -2172,7 +2273,7 @@ def read_delta(
                 ),
             )
     if not live:
-        out = spark.createDataFrame([], _strip_meta(schema))
+        out = _arrow_df(spark, [], _strip_meta(schema))
         if row_tracking:
             out = out.withColumn(
                 "_row_id", F.lit(None).cast("long")
@@ -2419,6 +2520,26 @@ def _rt_domain_action(hwm: int) -> dict:
     )
 
 
+def _rt_base_df(spark: SparkSession, adds: list[dict]) -> DataFrame:
+    """(__rtbase, __brid, __drcv): each add's data-file basename with
+    its baseRowId and defaultRowCommitVersion — the O(files) side of
+    the row-tracking broadcast join."""
+    return _arrow_df(
+        spark,
+        [
+            (
+                os.path.basename(urllib.parse.unquote(a["path"])),
+                int(a["baseRowId"]),
+                int(a["defaultRowCommitVersion"])
+                if a.get("defaultRowCommitVersion") is not None
+                else None,
+            )
+            for a in adds
+        ],
+        T.StructType.fromDDL("__rtbase string, __brid long, __drcv long"),
+    )
+
+
 def _rt_stable_cols(
     spark: SparkSession, scan: DataFrame, cand: list[dict], meta: dict
 ) -> DataFrame:
@@ -2440,19 +2561,7 @@ def _rt_stable_cols(
             "enable_row_tracking first"
         )
     mat_id, mat_cv = _rt_mat_names(meta)
-    rt_rows = [
-        (
-            os.path.basename(urllib.parse.unquote(a["path"])),
-            int(a["baseRowId"]),
-            int(a["defaultRowCommitVersion"])
-            if a.get("defaultRowCommitVersion") is not None
-            else None,
-        )
-        for a in cand
-    ]
-    rt_df = spark.createDataFrame(
-        rt_rows, "__rtbase string, __brid long, __drcv long"
-    )
+    rt_df = _rt_base_df(spark, cand)
     out = scan.join(
         F.broadcast(rt_df),
         scan["__base"] == rt_df["__rtbase"],
@@ -2497,8 +2606,8 @@ def _dv_positions_df(
             for base, desc in sorted(dv_by_base.items())
             for p in read_dv_positions(path, desc)
         ]
-        return spark.createDataFrame(
-            rows, "__pbase string, __pos long"
+        return _arrow_df(
+            spark, rows, T.StructType.fromDDL("__pbase string, __pos long")
         )
     specs = [
         (base, json.dumps(desc))
@@ -2671,7 +2780,7 @@ def _scan_adds(
         + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols]
         + [T.StructField("__cv", T.LongType())]
     )
-    pv_df = spark.createDataFrame(pv_rows, pv_schema).withColumn(
+    pv_df = _arrow_df(spark, pv_rows, pv_schema).withColumn(
         "__matched", F.lit(True)
     )
     cols = [
@@ -2773,7 +2882,7 @@ def read_delta_changes(
         + [T.StructField("_commit_version", T.LongType())]
     )
     if not tagged:
-        return spark.createDataFrame([], out_schema), last
+        return _arrow_df(spark, [], out_schema), last
     # a file RE-ADDED within the range (DV delete re-commits the same
     # path) must emit once per add with its own version/DV state; one
     # scan can't yield the same physical file twice, so waves split on
@@ -3013,7 +3122,7 @@ def read_delta_cdf(
                 .select(sel)
             )
     if not parts:
-        return spark.createDataFrame([], out_schema), last
+        return _arrow_df(spark, [], out_schema), last
     out = parts[0]
     for p_ in parts[1:]:
         out = out.unionByName(p_)
@@ -3671,6 +3780,16 @@ def _check_identity_basis(
         )
 
 
+def _drop_staged(path: str, staged) -> None:
+    """Delete the files an aborted commit staged (log-relative paths,
+    as ``staged`` holds them); a file already gone is skipped."""
+    for p_ in staged:
+        try:
+            os.remove(_data_file_path(path, p_))
+        except FileNotFoundError:
+            pass
+
+
 def _commit_delta(
     spark: SparkSession, path: str, build, *, staged=()
 ) -> int:
@@ -3707,11 +3826,7 @@ def _commit_delta(
         try:
             built = build(v)
         except Exception:
-            for p_ in fresh_paths:
-                try:
-                    os.remove(_data_file_path(path, p_))
-                except FileNotFoundError:
-                    pass
+            _drop_staged(path, fresh_paths)
             raise
         if built is None:
             return v - 1
@@ -4883,7 +4998,8 @@ def _row_level_delta(
             scan = _rt_stable_cols(spark, scan, cand, meta)
     else:
         # a MERGE into no candidate file matches nothing; it inserts
-        scan = spark.createDataFrame(
+        scan = _arrow_df(
+            spark,
             [],
             T.StructType(
                 schema.fields
@@ -4946,6 +5062,8 @@ def _row_level_delta(
         # released in the finally. A DELETE reads them once, or twice
         # with CDF, where caching costs a job
         acted = acted.persist()
+    staged: list[str] = []  # files this commit wrote
+    committing = False
     try:
         # the updated rows' post-images: an UPDATE's constraint check,
         # the DV-mode rewrite and the CDF postimages
@@ -4959,7 +5077,6 @@ def _row_level_delta(
         adds_by_base = _adds_by_base(adds)
         now_ms = int(time.time() * 1000)
         planned: dict[str, dict | None] = {}  # path -> expected current DV
-        staged: list[str] = []  # files this commit wrote
         retired: list[dict] = []  # DV protocol upgrade + re-add pairs
         touched: list[str] = []
         n_del = n_upd = n_ins = 0
@@ -5157,7 +5274,16 @@ def _row_level_delta(
             merge.recheck(m2)
             return protocol, meta, lines
 
+        committing = True
         return _commit_delta(spark, path, build, staged=staged)
+    except Exception:
+        # a statement refused before its commit (a CHECK constraint,
+        # a cardinality or identity error) leaves nothing it staged;
+        # once committing, _commit_delta owns the cleanup — a failure
+        # after the claim must not delete committed files
+        if not committing:
+            _drop_staged(path, staged)
+        raise
     finally:
         if acted is not None and acted.is_cached:
             acted.unpersist()
@@ -5416,6 +5542,7 @@ def _write_checkpoint(
     adds: dict[str, dict] | None,
     live_df: DataFrame | None,
     policy: str | None,
+    n_est: int = 0,
 ) -> int:
     """The one checkpoint WRITE behind :func:`create_checkpoint`. The
     live adds come as driver dicts (``adds``, from :func:`_replay`) or
@@ -5441,7 +5568,11 @@ def _write_checkpoint(
     Multipart parts and V2 sidecars shard at ``_CKPT_PART_ROWS`` adds
     (capped at 64 files, r15 verdict #5), so a 100 TB table's
     checkpoint is neither a single-writer nor a single-reader
-    bottleneck. Every file lands via tmp + atomic rename;
+    bottleneck; the distributed plane sizes the shards by ``n_est``
+    (see :func:`_live_adds_df`) and takes the exact count for the
+    pointer from an ``observe()`` on the write. The driver layouts
+    are pyarrow writes of ``_CKPT_SCHEMA`` — no Spark job and no
+    Python worker. Every file lands via tmp + atomic rename;
     ``_last_checkpoint`` flips last."""
     # unknown writerFeatures may imply log actions _replay does not
     # model; a checkpoint written here would silently drop them —
@@ -5464,36 +5595,60 @@ def _write_checkpoint(
             "upgrades the protocol in the same commit"
         )
     header = _ckpt_header(protocol, meta, txns, domains)
+    log = _log_dir(path)
     if live_df is not None:
-        n_adds = live_df.count()
         add_col = F.struct(
             *[F.col(sf.name) for sf in _add_struct_type().fields]
         ).alias("add")
+        # the exact add count rides the write as an observe() — no
+        # count job of its own
+        from pyspark.sql import Observation
+
+        from census_asc5_data_pipeline_spark.sources.merge import _obs_n
+
+        obs = Observation()
+        live_adds = live_df.select(add_col).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        )
     else:
         add_rows = [
             {"add": _ckpt_add_row(a)}
             for a in sorted(adds.values(), key=lambda a: a["path"])
         ]
-        n_adds = len(add_rows)
-    nparts = max(1, min(64, (n_adds // _CKPT_PART_ROWS) + 1))
-    log = _log_dir(path)
+        n_est = len(add_rows)
+    nparts = max(1, min(64, (n_est // _CKPT_PART_ROWS) + 1))
+
+    def n_adds() -> int:
+        """The add count, once the adds are written."""
+        if live_df is None:
+            return len(add_rows)
+        n = _obs_n(obs)
+        # AQE can drop the observed subtree of an empty frame
+        return live_df.count() if n is None else n
+
     if pol == "v2":
         side_dir = os.path.join(log, "_sidecars")
         os.makedirs(side_dir, exist_ok=True)
-        side_src = (
-            live_df.select(add_col)
-            if live_df is not None
-            else spark.createDataFrame(
-                add_rows, T.StructType([_CKPT_SCHEMA["add"]])
+        if live_df is not None:
+            sides = _publish_parts(
+                live_adds.repartition(nparts),
+                os.path.join(side_dir, f".tmp-{uuid.uuid4().hex}"),
+                lambda i, n: os.path.join(
+                    side_dir, f"{uuid.uuid4().hex}.parquet"
+                ),
             )
-        )
-        sides = _publish_parts(
-            side_src.repartition(nparts),
-            os.path.join(side_dir, f".tmp-{uuid.uuid4().hex}"),
-            lambda i, n: os.path.join(
-                side_dir, f"{uuid.uuid4().hex}.parquet"
-            ),
-        )
+        else:
+            # dealt round-robin into nparts shards, as a repartition
+            # deals them; an empty table still writes one sidecar
+            shards = [add_rows[i::nparts] for i in range(nparts)]
+            sides = []
+            for shard in [sh for sh in shards if sh] or [[]]:
+                sides.append(
+                    os.path.join(side_dir, f"{uuid.uuid4().hex}.parquet")
+                )
+                _write_parquet_file(
+                    shard, T.StructType([_CKPT_SCHEMA["add"]]), sides[-1]
+                )
         now_ms = int(time.time() * 1000)
         lines = [
             {"checkpointMetadata": {"version": v, "tags": {}}}
@@ -5517,26 +5672,22 @@ def _write_checkpoint(
             man_tmp,
             os.path.join(log, f"{v:020d}.checkpoint.{uuid.uuid4()}.json"),
         )
-        pointer = {"version": v, "size": len(lines) + n_adds}
+        pointer = {"version": v, "size": len(lines) + n_adds()}
     elif live_df is None:
         rows = header + add_rows
-        _publish_parts(
-            spark.createDataFrame(rows, _CKPT_SCHEMA).coalesce(1),
-            _checkpoint_file(path, v) + f".tmp-{uuid.uuid4().hex}",
-            lambda i, n: _checkpoint_file(path, v),
-        )
+        _write_parquet_file(rows, _CKPT_SCHEMA, _checkpoint_file(path, v))
         pointer = {"version": v, "size": len(rows)}
     else:
-        full_adds = live_df.select(
+        full_adds = live_adds.select(
             *[
-                add_col
+                F.col("add")
                 if f.name == "add"
                 else F.lit(None).cast(f.dataType).alias(f.name)
                 for f in _CKPT_SCHEMA.fields
             ]
         )
         parts = _publish_parts(
-            spark.createDataFrame(header, _CKPT_SCHEMA)
+            _arrow_df(spark, header, _CKPT_SCHEMA)
             .unionByName(full_adds)
             .repartition(nparts),
             _checkpoint_file(path, v) + f".mp-tmp-{uuid.uuid4().hex}",
@@ -5545,7 +5696,9 @@ def _write_checkpoint(
             ),
         )
         pointer = {
-            "version": v, "size": n_adds + len(header), "parts": len(parts),
+            "version": v,
+            "size": n_adds() + len(header),
+            "parts": len(parts),
         }
     _publish_last_checkpoint(path, pointer)
     return v
@@ -5578,9 +5731,10 @@ def create_checkpoint(
     # → multipart; v2 → sharded sidecars, r15)
     dist = _live_adds_df(spark, path, v)
     if dist is not None:
-        protocol, meta, txns, live_df = dist
+        protocol, meta, txns, live_df, n_est = dist
         return _write_checkpoint(
-            spark, path, v, protocol, meta, txns, None, live_df, policy
+            spark, path, v, protocol, meta, txns, None, live_df, policy,
+            n_est,
         )
     protocol, meta, adds, txns = _replay(spark, path, v)
     return _write_checkpoint(
@@ -5821,7 +5975,7 @@ def optimize_delta(
     )
     files_total: int | None = None
     if dist is not None:
-        _p, meta, _txns_d, live_df = dist
+        _p, meta, _txns_d, live_df, _n = dist
         _writer_gate(_p, meta, "OPTIMIZE")
         pcols = list(meta.get("partitionColumns") or [])
         kcols = [
@@ -5862,7 +6016,8 @@ def optimize_delta(
                 "version": None,
             }
         if pcols:
-            keys_df = spark.createDataFrame(
+            keys_df = _arrow_df(
+                spark,
                 todo_keys,
                 T.StructType(
                     [
@@ -6000,21 +6155,7 @@ def optimize_delta(
                 "left_anti",
             )
         if rt_preserve:
-            rt_rows = [
-                (
-                    os.path.basename(
-                        urllib.parse.unquote(a["path"])
-                    ),
-                    int(a["baseRowId"]),
-                    int(a["defaultRowCommitVersion"])
-                    if a.get("defaultRowCommitVersion") is not None
-                    else None,
-                )
-                for a in files
-            ]
-            rt_df = spark.createDataFrame(
-                rt_rows, "__rtbase string, __brid long, __drcv long"
-            )
+            rt_df = _rt_base_df(spark, files)
             src = src.join(
                 F.broadcast(rt_df),
                 F.col("__base") == F.col("__rtbase"),

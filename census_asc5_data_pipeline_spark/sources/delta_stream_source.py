@@ -108,17 +108,11 @@ def _log_meta(path: str):
         # classic, multipart and V2 (sidecar) checkpoints all resolve
         # through _resolve_checkpoint; metaData is always INLINE in a
         # v2 manifest (spec), so sidecars never need opening here
-        import pyarrow.parquet as pq
-
         res = delta_io._resolve_checkpoint(path, ckpt)
         if res is not None:
-            kind, files = res
-            if kind == "v2" and files[0].endswith(".json"):
-                rows = list(delta_io._json_lines(files[0]))
-            else:
-                rows = []
-                for f in files:
-                    rows.extend(pq.read_table(f).to_pylist())
+            rows, _sidecars = delta_io._checkpoint_manifest(
+                path, ckpt, res[1]
+            )
             for row in rows:
                 if row.get("metaData"):
                     meta = row["metaData"]

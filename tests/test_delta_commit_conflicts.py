@@ -290,6 +290,36 @@ def test_aborted_dv_delete_keeps_live_files(spark, tmp_path, monkeypatch):
     ]
 
 
+def test_refused_dv_merge_leaves_no_staged_file(spark, tmp_path):
+    """A DV-mode MERGE refused by a CHECK constraint writes its
+    deletion-vector file before the constraint check; the abort
+    deletes it, so no new file is left under the table."""
+    p = str(tmp_path / "t")
+    d.write_delta(_df(spark, 0, 10), p)
+    d.set_delta_properties(spark, p, {"delta.constraints.pos": "v >= 0"})
+
+    def files():
+        return {
+            os.path.join(root, f)
+            for root, _dirs, fs in os.walk(p)
+            for f in fs
+        }
+
+    before = files()
+    with pytest.raises(ValueError, match="pos"):
+        merge_into(
+            spark, "delta", p,
+            spark.createDataFrame([(3, -1.0)], "k long, v double"),
+            "t.k = s.k",
+            matched=[("update", None, {"v": "s.v"})],
+            mode="dv",
+        )
+    assert files() == before
+    assert sorted(r.k for r in d.read_delta(spark, p).collect()) == list(
+        range(10)
+    )
+
+
 def _call_sites(name: str) -> list[tuple[str, str]]:
     """(module, innermost enclosing function) of every call to
     ``name`` in the package source, one entry per call."""
