@@ -2752,11 +2752,10 @@ def _scan_adds(
         [F.col("__base"), F.col("__ri")] if keep_pos else []
     )
     if not pcols and not with_version:
-        return df.select(
-            [F.col(f.name) for f in schema.fields]
-            + [F.col(f.name) for f in extra_fields]
-            + pos_cols
-        )
+        # the scan already holds the schema columns, the extras and (when
+        # kept) the positions, in that order: a projection naming them
+        # costs a py4j call per column and an eager analysis per read
+        return df.drop("__base", "__ri") if dv_by_base and not keep_pos else df
     def _pv_key(c: str) -> str:
         return physical_of[c] if physical_of else c
 
